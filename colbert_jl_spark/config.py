@@ -58,32 +58,11 @@ class EngineConfig:
     block_size: int = 128
     num_index_partitions: int = 32
     # floor on docs per doc-range bucket: below this, more buckets only add
-    # per-group overhead (each (term,bucket) is a pandas group at build and
-    # each (qid,bucket) one at query time). 50k docs ≈ a few MB of postings
-    # per head-term group — comfortably Arrow-batch sized.
+    # per-group overhead (each (qid,bucket) is a pandas group at query
+    # time, and each (term,bucket) group starts a new block run at build).
+    # 50k docs ≈ a few MB of postings per head-term group.
     min_bucket_docs: int = 50_000
     salt_buckets: int = 8
-    # Block storage format; all three are served by the same WAND executor
-    # and rank-identity gated (tests/test_wand.py parametrizes formats):
-    # "varint":   hand-packed delta+varint bytes built in applyInPandas —
-    #             the custom-codec path. DEFAULT, by measurement (r3,
-    #             960k docs pinned to 4 cores, best-of-2 each, recorded in
-    #             BASELINE.md): blocks stage 19.2-19.4 s vs columnar's
-    #             21.4-25.4 s — the numpy sort+pack beats the JVM
-    #             window+collect_list formulation here because the per-
-    #             posting window functions pay row_number/lag over every
-    #             posting while the pandas groups amortize to C loops.
-    # "packed":   PForDelta-style fixed-width bit-packing with exception
-    #             patching (functions/codec.py pack_stream) — the
-    #             capability analogue of the reference's true bit-packing
-    #             (residual.jl:400-441 _packbits/_unpackbits).
-    # "columnar": 100% JVM encode (window + per-block collect_list),
-    #             parquet page encodings do the bit-packing. Keeps the
-    #             whole build Python-free (no Arrow transport of posting
-    #             rows) — the format of choice for clusters whose policy
-    #             forbids Python executors; ~10% slower end-to-end on the
-    #             measured box.
-    block_format: str = "varint"
     # explicit term-hash directory fan-out for the dictionary + block
     # tables; None (default) sizes it to the data in the build driver
     # (~2M postings per partition dir, clamped to [4, 4096])
@@ -109,4 +88,13 @@ class EngineConfig:
         against."""
         raw = dict(raw)
         raw["stopwords"] = tuple(raw.get("stopwords", STOPWORDS))
+        # block payloads have one format, delta + varint (functions/codec.py);
+        # plans written while other formats existed name theirs here, and
+        # decoding those blocks as varint would corrupt them silently
+        fmt = raw.pop("block_format", "varint")
+        if fmt != "varint":
+            raise ValueError(
+                f"index blocks use the {fmt!r} block format, which this engine "
+                "no longer reads; rebuild the index (only 'varint' is supported)"
+            )
         return cls(**raw)

@@ -19,7 +19,8 @@ the block for single-pass scoring at 10^12-doc scale.
 
 All functions are numpy-vectorized (no per-element Python loops over
 postings; the only loop is over the ≤10 varint byte positions) so they run
-at Arrow-batch speed inside pandas UDFs.
+at Arrow-batch speed inside Python UDFs; ``encode_blocks`` packs every
+block of an Arrow batch in one pass (operators/codec_blocks.py).
 """
 
 from __future__ import annotations
@@ -29,37 +30,29 @@ import numpy as np
 _MAX_VARINT_BYTES = 10  # 63 bits / 7
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-encode a uint64 array. Vectorized: loops over the ≤10 byte
-    slots, not over values."""
+def varint_pack(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """LEB128 bytes of a uint64 array (uint8 array) plus each value's byte
+    count. Vectorized: loops over the ≤10 byte slots, not over values."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = v.size
-    if n == 0:
-        return b""
-    # byte groups: slot j holds bits [7j, 7j+7)
-    slots = np.empty((_MAX_VARINT_BYTES, n), dtype=np.uint8)
-    shifted = v.copy()
-    for j in range(_MAX_VARINT_BYTES):
-        slots[j] = (shifted & np.uint64(0x7F)).astype(np.uint8)
-        shifted = shifted >> np.uint64(7)
-    # exact byte count: index of highest nonzero 7-bit group + 1 (min 1)
-    exact = np.zeros(n, dtype=np.int64)
-    rem = v.copy()
-    for j in range(_MAX_VARINT_BYTES):
-        exact = np.where(rem != 0, j + 1, exact)
-        rem = rem >> np.uint64(7)
-    nbytes = np.maximum(exact, 1)
-
-    total = int(nbytes.sum())
-    out = np.empty(total, dtype=np.uint8)
-    offsets = np.concatenate(([0], np.cumsum(nbytes)[:-1]))
-    val_idx = np.repeat(np.arange(n), nbytes)
-    within = np.arange(total) - np.repeat(offsets, nbytes)
-    byte_vals = slots[within, val_idx]
+    nbytes = np.ones(v.size, dtype=np.int64)
+    for j in range(1, _MAX_VARINT_BYTES):
+        wide = v >= np.uint64(1 << (7 * j))
+        if not wide.any():
+            break
+        nbytes += wide
+    val_idx = np.repeat(np.arange(v.size), nbytes)
+    within = np.arange(val_idx.size) - (np.cumsum(nbytes) - nbytes)[val_idx]
+    out = (
+        (v[val_idx] >> (np.uint64(7) * within.astype(np.uint64))) & np.uint64(0x7F)
+    ).astype(np.uint8)
     # continuation bit on every byte except the last of each value
-    is_last = within == (nbytes[val_idx] - 1)
-    out[:] = np.where(is_last, byte_vals, byte_vals | 0x80)
-    return out.tobytes()
+    out[within < nbytes[val_idx] - 1] |= 0x80
+    return out, nbytes
+
+
+def varint_encode(values: np.ndarray) -> bytes:
+    """LEB128-encode a uint64 array."""
+    return varint_pack(values)[0].tobytes()
 
 
 def varint_decode(buf: bytes) -> np.ndarray:
@@ -102,6 +95,30 @@ def encode_block(docids: np.ndarray, tfs: np.ndarray, doclens: np.ndarray) -> by
     return varint_encode(inter)
 
 
+def encode_blocks(
+    docids: np.ndarray, tfs: np.ndarray, doclens: np.ndarray, starts: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """encode_block over many blocks in one vectorized pass.
+
+    ``starts`` holds the ascending first-row index of every block
+    (``starts[0] == 0``); docids increase strictly within a block. Returns
+    ``(data, offsets)``: block i is ``data[offsets[i]:offsets[i + 1]]``,
+    byte-identical to ``encode_block`` of its rows — each block's first
+    gap is re-anchored to its absolute docid."""
+    d = np.asarray(docids, dtype=np.uint64)
+    starts = np.asarray(starts, dtype=np.int64)
+    gaps = np.empty_like(d)
+    gaps[1:] = d[1:] - d[:-1]  # wraps across block starts; overwritten next
+    gaps[starts] = d[starts]
+    inter = np.empty(d.size * 3, dtype=np.uint64)
+    inter[0::3] = gaps
+    inter[1::3] = np.asarray(tfs, dtype=np.uint64)
+    inter[2::3] = np.asarray(doclens, dtype=np.uint64)
+    data, nbytes = varint_pack(inter)
+    value_offsets = np.concatenate(([0], np.cumsum(nbytes)))
+    return data, value_offsets[np.append(3 * starts, inter.size)]
+
+
 def decode_block(buf: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Inverse of encode_block → (docids int64, tfs int64, doclens int64)."""
     inter = varint_decode(buf)
@@ -113,133 +130,6 @@ def decode_block(buf: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     doclens = inter[2::3].astype(np.int64)
     docids = np.cumsum(gaps)
     return docids, tfs, doclens
-
-
-# ---------------------------------------------------------------------------
-# Fixed-width bit-packing with exceptions (PForDelta-style) — the third
-# block format ("packed"). True bit-level packing like the reference's
-# _packbits/_unpackbits (reference src/indexing/codecs/residual.jl:400-441),
-# upgraded with FastPFor-style exception patching: the base width covers
-# the 90th-percentile value; outliers are stored verbatim and patched on
-# decode, so one huge d-gap doesn't inflate the whole block's width.
-# ---------------------------------------------------------------------------
-
-_PFD_MAGIC = b"PFD1"
-
-
-def _bit_lengths(v: np.ndarray) -> np.ndarray:
-    """Exact bit length per uint64 (vectorized; loops over ≤64 shift
-    levels, never over values — float log2 is WRONG above 2^53)."""
-    bl = np.zeros(v.size, dtype=np.uint8)
-    tmp = v.copy()
-    while tmp.any():
-        bl[tmp != 0] += 1
-        tmp = tmp >> np.uint64(1)
-    return bl
-
-
-def pack_stream(values: np.ndarray) -> bytes:
-    """One value stream → <width u8><n_exceptions u32><packed low bits>
-    <exception positions u32[]><exception values u64[]>."""
-    import struct
-
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = v.size
-    if n == 0:
-        return struct.pack("<BI", 0, 0)
-    bl = _bit_lengths(v)
-    # width covering (at least) 90% of values: the ceil-90th order statistic
-    width = int(np.sort(bl)[max(0, -(-9 * n // 10) - 1)])
-    exc_idx = np.flatnonzero(bl > width)
-    if width == 0:
-        packed = b""
-    else:
-        bits = (
-            (v[:, None] >> np.arange(width, dtype=np.uint64)[None, :])
-            & np.uint64(1)
-        ).astype(np.uint8)
-        packed = np.packbits(bits.reshape(-1), bitorder="little").tobytes()
-    return (
-        struct.pack("<BI", width, exc_idx.size)
-        + packed
-        + exc_idx.astype(np.uint32).tobytes()
-        + v[exc_idx].tobytes()
-    )
-
-
-def unpack_stream(buf: bytes, off: int, n: int) -> tuple[np.ndarray, int]:
-    """Inverse of pack_stream; returns (values uint64[n], next offset)."""
-    import struct
-
-    width, n_exc = struct.unpack_from("<BI", buf, off)
-    off += 5
-    if n == 0:
-        return np.empty(0, dtype=np.uint64), off
-    if width == 0:
-        vals = np.zeros(n, dtype=np.uint64)
-    else:
-        nbytes = (n * width + 7) // 8
-        bits = np.unpackbits(
-            np.frombuffer(buf, dtype=np.uint8, count=nbytes, offset=off),
-            bitorder="little",
-        )[: n * width].reshape(n, width)
-        vals = np.sum(
-            bits.astype(np.uint64) << np.arange(width, dtype=np.uint64)[None, :],
-            axis=1,
-            dtype=np.uint64,
-        )
-        off += nbytes
-    if n_exc:
-        exc_idx = np.frombuffer(buf, dtype=np.uint32, count=n_exc, offset=off)
-        off += 4 * n_exc
-        exc_val = np.frombuffer(buf, dtype=np.uint64, count=n_exc, offset=off)
-        off += 8 * n_exc
-        vals[exc_idx] = exc_val
-    return vals, off
-
-
-def encode_block_packed(
-    docids: np.ndarray, tfs: np.ndarray, doclens: np.ndarray
-) -> bytes:
-    """Pack one posting block with PForDelta streams: d-gaps, tfs and
-    doclens each bit-packed independently (their value ranges differ by
-    orders of magnitude, so per-stream widths beat the interleaved varint
-    on dense postings). Same logical content as encode_block."""
-    import struct
-
-    d = np.asarray(docids, dtype=np.uint64)
-    if d.size == 0:
-        return b""
-    gaps = np.empty_like(d)
-    gaps[0] = d[0]
-    gaps[1:] = d[1:] - d[:-1]
-    return (
-        _PFD_MAGIC
-        + struct.pack("<I", d.size)
-        + pack_stream(gaps)
-        + pack_stream(np.asarray(tfs, dtype=np.uint64))
-        + pack_stream(np.asarray(doclens, dtype=np.uint64))
-    )
-
-
-def decode_block_packed(buf: bytes) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Inverse of encode_block_packed → (docids, tfs, doclens) int64."""
-    import struct
-
-    if not buf:
-        empty = np.empty(0, dtype=np.int64)
-        return empty, empty.copy(), empty.copy()
-    assert buf[:4] == _PFD_MAGIC, "not a packed block"
-    (n,) = struct.unpack_from("<I", buf, 4)
-    off = 8
-    gaps, off = unpack_stream(buf, off, n)
-    tfs, off = unpack_stream(buf, off, n)
-    dls, off = unpack_stream(buf, off, n)
-    return (
-        np.cumsum(gaps.astype(np.int64)),
-        tfs.astype(np.int64),
-        dls.astype(np.int64),
-    )
 
 
 def bm25_idf(df: np.ndarray | float, n_docs: int) -> np.ndarray | float:

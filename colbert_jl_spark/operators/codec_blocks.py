@@ -15,8 +15,15 @@ Scale/skew design:
   salted-merge shape from SURVEY.md §4 with RANGE salt, which keeps every
   block's docid span disjoint per (term, bucket) and globally mergeable
   by first_docid.
-* Block encode runs in ``applyInPandas`` (Arrow batches, numpy codec) —
-  the only Python in the build, vectorized end to end.
+* Block encode is ONE ``mapInArrow`` pass: the narrow posting rows are
+  hash-partitioned on (tid, bucket) and sorted by (tid, bucket, doc_id)
+  within each partition, and every Arrow batch is encoded in one go with
+  numpy segment ops — group and block starts from key changes, d-gaps
+  re-anchored at each block start, one varint pass per batch cut into
+  payloads by an offsets array, block maxima by ``np.maximum.reduceat``.
+  No Python call or pandas frame per (term, bucket) group; the only
+  per-group state is the open tail carried across batch boundaries. One
+  payload format: delta + varint (functions/codec.py).
 * The block table is written partitioned by ``term_bucket =
   pmod(xxhash64(term), P)`` so query-time term lookups prune to P⁻¹ of
   the files (the engine's analogue of the reference reading only nprobe
@@ -29,14 +36,15 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from colbert_jl_spark.config import EngineConfig
 from colbert_jl_spark.functions.codec import (
-    block_max_score,
-    encode_block,
-    encode_block_packed,
+    bm25_partial,
+    decode_block,
+    encode_blocks,
 )
 from colbert_jl_spark.functions.tokenizer import terms_col
 
@@ -169,40 +177,102 @@ _ENC_SCHEMA = (
     "tid long, bucket long, block_id long, first_docid long, last_docid long, "
     "n_docs long, max_tf_norm double, payload binary"
 )
+_ENC_ARROW_SCHEMA = pa.schema(
+    [
+        (c, pa.int64())
+        for c in ("tid", "bucket", "block_id", "first_docid", "last_docid", "n_docs")
+    ]
+    + [("max_tf_norm", pa.float64()), ("payload", pa.binary())]
+)
+_POSTING_COLS = ("tid", "bucket", "doc_id", "tf", "doclen")
 
 
-def _make_block_encoder(
-    block_size: int, avgdl: float, k1: float, b: float, encode_fn=encode_block
+def _encode_run(
+    cols: list, base_block_id: int, block_size: int, avgdl: float,
+    k1: float, b: float, final: bool,
 ):
-    def encode_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        tid = int(pdf["tid"].iloc[0])
-        bucket = int(pdf["bucket"].iloc[0])
-        docids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        tfs = pdf["tf"].to_numpy(dtype=np.int64)
-        dls = pdf["doclen"].to_numpy(dtype=np.int64)
-        rows = []
-        for i, start in enumerate(range(0, len(docids), block_size)):
-            sl = slice(start, start + block_size)
-            d, t, l = docids[sl], tfs[sl], dls[sl]
-            rows.append(
-                {
-                    "tid": tid,
-                    "bucket": bucket,
-                    "block_id": i,
-                    "first_docid": int(d[0]),
-                    "last_docid": int(d[-1]),
-                    "n_docs": len(d),
-                    # idf-independent block max (idf multiplied on post-agg
-                    # dictionary join; a 1-ulp assoc difference is absorbed
-                    # by WAND's 5e-6 pruning margin)
-                    "max_tf_norm": block_max_score(t, l, 1.0, avgdl, k1, b),
-                    "payload": encode_fn(d, t, l),
-                }
-            )
-        return pd.DataFrame(rows)
+    """Encode a (tid, bucket, doc_id)-sorted run of posting rows.
 
-    return encode_group
+    ``cols`` are the int64 arrays of ``_POSTING_COLS``. The run's first
+    group starts at a block boundary and continues that group's numbering
+    at ``base_block_id``. Unless ``final``, the open tail — the last
+    group's partial last block, possibly empty — is not encoded: it is
+    returned as the carry ``(rows, (tid, bucket), block_id)`` for the next
+    batch to extend. Returns ``(record batch or None, carry or None)``."""
+    tid, bucket, doc, tf, dl = cols
+    n = doc.size
+    new_group = np.ones(n, dtype=bool)
+    new_group[1:] = (tid[1:] != tid[:-1]) | (bucket[1:] != bucket[:-1])
+    gidx = np.cumsum(new_group) - 1
+    rank = np.arange(n) - np.flatnonzero(new_group)[gidx]
+    block_id = rank // block_size
+    block_id[gidx == 0] += base_block_id
+    starts = np.flatnonzero(rank % block_size == 0)
+    cut, carry = n, None
+    if not final:
+        key = (tid[-1], bucket[-1])
+        if n - starts[-1] < block_size:  # partial last block stays open
+            cut = int(starts[-1])
+            starts = starts[:-1]
+            carry = ([c[cut:] for c in cols], key, int(block_id[cut]))
+        else:
+            carry = ([c[:0] for c in cols], key, int(block_id[-1]) + 1)
+    if not starts.size:
+        return None, carry
+    ends = np.append(starts[1:], cut)
+    data, offsets = encode_blocks(doc[:cut], tf[:cut], dl[:cut], starts)
+    payload = pa.BinaryArray.from_buffers(
+        pa.binary(),
+        starts.size,
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)],
+    )
+    # idf-independent block max (idf multiplied on the post-agg dictionary
+    # join; a 1-ulp assoc difference is absorbed by WAND's 5e-6 margin)
+    max_tf_norm = np.maximum.reduceat(
+        bm25_partial(tf[:cut], dl[:cut], 1.0, avgdl, k1, b), starts
+    )
+    batch = pa.RecordBatch.from_arrays(
+        [
+            tid[starts], bucket[starts], block_id[starts], doc[starts],
+            doc[ends - 1], ends - starts, max_tf_norm, payload,
+        ],
+        schema=_ENC_ARROW_SCHEMA,
+    )
+    return batch, carry
+
+
+def _make_block_encoder(block_size: int, avgdl: float, k1: float, b: float):
+    """One partition's sorted posting batches → block rows, streaming.
+
+    Groups and blocks may straddle Arrow batches; only the open tail (at
+    most one partial block plus its group's next block_id) is carried into
+    the next batch, so memory stays O(batch) even for a head-term group
+    spanning many batches."""
+
+    def encode_partition(batches):
+        carry = None
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            cols = [
+                batch.column(c).to_numpy(zero_copy_only=False).astype(np.int64)
+                for c in _POSTING_COLS
+            ]
+            base = 0
+            if carry is not None:
+                rows, key, carry_base = carry
+                if rows[0].size:
+                    cols = [np.concatenate(p) for p in zip(rows, cols)]
+                    base = carry_base
+                elif (cols[0][0], cols[1][0]) == key:
+                    base = carry_base
+            out, carry = _encode_run(cols, base, block_size, avgdl, k1, b, False)
+            if out is not None:
+                yield out
+        if carry is not None and carry[0][0].size:
+            yield _encode_run(carry[0], carry[2], block_size, avgdl, k1, b, True)[0]
+
+    return encode_partition
 
 
 def posting_blocks(
@@ -216,7 +286,7 @@ def posting_blocks(
     count_obs: tuple | None = None,
 ) -> DataFrame:
     """postings (term, doc_id, tf, doclen) + dictionary (term, df) →
-    block table (BLOCK_SCHEMA), varint payload format.
+    block table (BLOCK_SCHEMA).
 
     ``bucket_size`` defaults to ceil(n_docs / num_index_partitions) —
     the plan-derived chunk sizing, analogue of setup()'s num_chunks math
@@ -229,17 +299,24 @@ def posting_blocks(
 
     The per-posting shuffle into the encoder is dictionary-encoded: it
     carries (tid, bucket, doc_id, tf, doclen) only; term/df/idf join back
-    on the block-level output (see _narrow_posting_rows)."""
+    on the block-level output (see _narrow_posting_rows). The encoder is
+    one ``mapInArrow`` pass over each partition's (tid, bucket, doc_id)-
+    sorted rows (see _make_block_encoder)."""
     if bucket_size is None:
         bucket_size = max(
             cfg.min_bucket_docs, -(-n_docs // cfg.num_index_partitions)
         )
     if salt is None:
         salt = collision_free_tid_salt(dictionary)
-    rows = _narrow_posting_rows(postings_dl, bucket_size, salt)
-    encode_fn = encode_block_packed if cfg.block_format == "packed" else encode_block
-    encoder = _make_block_encoder(cfg.block_size, avgdl, cfg.k1, cfg.b, encode_fn)
-    encoded = rows.groupBy("tid", "bucket").applyInPandas(encoder, _ENC_SCHEMA)
+    encoded = (
+        _narrow_posting_rows(postings_dl, bucket_size, salt)
+        .repartition("tid", "bucket")
+        .sortWithinPartitions("tid", "bucket", "doc_id")
+        .mapInArrow(
+            _make_block_encoder(cfg.block_size, avgdl, cfg.k1, cfg.b),
+            _ENC_SCHEMA,
+        )
+    )
     if count_obs is not None:
         # ride-along collision evidence (see plans/build.py blocks stage):
         # block-row counts before/after the dictionary join, observed
@@ -257,144 +334,24 @@ def posting_blocks(
     return out
 
 
-COLUMNAR_BLOCK_SCHEMA = (
-    "term string, df long, idf double, bucket long, block_id long, "
-    "first_docid long, last_docid long, n_docs long, max_score double, "
-    "doc_gaps array<long>, tfs array<int>, doclens array<int>"
-)
-
-
-def posting_blocks_columnar(
-    postings_dl: DataFrame,
-    dictionary: DataFrame,
-    n_docs: int,
-    avgdl: float,
-    cfg: EngineConfig = EngineConfig(),
-    bucket_size: int | None = None,
-    salt: int | None = None,
-    count_obs: tuple | None = None,
-) -> DataFrame:
-    """Columnar block table — the 100% JVM encode path (optional format;
-    the measured default is "varint", see config.py block_format).
-
-    Same logical layout as the varint format (d-gapped docids + tf +
-    doclen per ≤block_size run, skip pointers, exact block-max score) but
-    stored as parquet ARRAY columns instead of hand-packed bytes:
-    collect_list → sort_array → slice-into-blocks → zip_with d-gaps, all
-    Catalyst expressions. Parquet's own DELTA_BINARY_PACKED/RLE page
-    encodings then do the bit-packing the reference does by hand
-    (reference src/indexing/codecs/residual.jl:518-604) — measured, the
-    applyInPandas variant moves EVERY posting row through Arrow→pandas
-    and that transport alone dominates the stage (~2/3 of wall time) and
-    caps scaling; this path shuffles once and never leaves the JVM.
-
-    The varint codec (functions/codec.py + posting_blocks) remains the
-    custom-codec capability demo and the wire format for non-parquet
-    sinks; both formats are served by the same WAND executor.
-
-    Round 2: the per-posting shuffle is DICTIONARY-ENCODED — rows carry
-    (tid=xxhash64(term, salt), bucket, doc_id, tf:int, doclen:int), no
-    strings, no df/idf (the idf factor moves outside the max; see tf_norm
-    below). Measured ~30% fewer shuffle bytes on the 960k-doc scaling
-    corpus; collision safety is an explicit vocab-scale check
-    (collision_free_tid_salt)."""
-    if bucket_size is None:
-        bucket_size = max(
-            cfg.min_bucket_docs, -(-n_docs // cfg.num_index_partitions)
-        )
-    from pyspark.sql import Window
-
-    k1, b = cfg.k1, cfg.b
-    bs = cfg.block_size
-    if salt is None:
-        salt = collision_free_tid_salt(dictionary)
-    narrow = _narrow_posting_rows(postings_dl, bucket_size, salt)
-    # Window formulation keeps every per-posting computation UNBOXED inside
-    # whole-stage codegen (row_number/lag/scalar BM25 partial); only the
-    # final <=block_size collect_list touches array objects. A
-    # collect-the-whole-run-then-slice formulation boxes every posting into
-    # array-of-struct elements and is ~2x slower at scale (measured).
-    w = Window.partitionBy("tid", "bucket").orderBy("doc_id")
-    tfd, dld = F.col("tf").cast("double"), F.col("doclen").cast("double")
-    # idf-free per-posting partial: idf is a per-TERM constant, so
-    # max(idf * x) == idf * max(x) — the dictionary joins back on the
-    # block-level rows (~1/block_size the posting count), never per posting
-    tf_norm = (tfd * F.lit(k1 + 1.0)) / (
-        tfd + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dld / F.lit(float(avgdl)))
-    )
-    rows = (
-        narrow.withColumn("rn", F.row_number().over(w) - 1)
-        # gap vs the previous posting in the SAME bucket run; the decoder
-        # re-anchors each block at its first_docid skip pointer, so the
-        # block's first gap value never matters
-        .withColumn("gap", F.col("doc_id") - F.coalesce(F.lag("doc_id").over(w), F.lit(0)))
-        .withColumn("tf_norm", tf_norm)
-        .withColumn("block_id", F.floor(F.col("rn") / bs))
-    )
-    agged = rows.groupBy("tid", "bucket", "block_id").agg(
-        F.min("doc_id").alias("first_docid"),
-        F.max("doc_id").alias("last_docid"),
-        F.count("*").alias("n_docs"),
-        F.max("tf_norm").alias("max_tf_norm"),
-        F.sort_array(
-            F.collect_list(F.struct("doc_id", "gap", "tf", "doclen"))
-        ).alias("chunk"),
-    )
-    if count_obs is not None:
-        # ride-along collision evidence — see posting_blocks
-        agged = agged.observe(count_obs[0], F.count(F.lit(1)).alias("n"))
-    out = agged.join(_dict_tid(dictionary, n_docs, salt), "tid").select(
-        "term", "df", "idf", "bucket", "block_id",
-        "first_docid", "last_docid", "n_docs",
-        (F.col("idf") * F.col("max_tf_norm")).alias("max_score"),
-        F.transform("chunk", lambda x: x["gap"]).alias("doc_gaps"),
-        F.transform("chunk", lambda x: x["tf"].cast("int")).alias("tfs"),
-        F.transform("chunk", lambda x: x["doclen"].cast("int")).alias("doclens"),
-    )
-    if count_obs is not None:
-        out = out.observe(count_obs[1], F.count(F.lit(1)).alias("n"))
-    return out
-
-
-def blocks_to_postings(
-    blocks: DataFrame, cfg: EngineConfig = EngineConfig()
-) -> DataFrame:
-    """Inverse of the block encoders: block rows → the posting stream
+def blocks_to_postings(blocks: DataFrame) -> DataFrame:
+    """Inverse of the block encoder: block rows → the posting stream
     (term, doc_id, tf, doclen). Used by minor compaction
     (streaming/ingest.minor_compact) to re-encode range-overlapping
     segments — decode runs distributed in mapInPandas over exactly the
-    rows the caller pruned to, never the whole table. Handles both the
-    payload formats (varint/packed bytes) and the columnar array layout."""
-    import numpy as np
-
-    from colbert_jl_spark.functions.codec import (
-        decode_block,
-        decode_block_packed,
-    )
-
-    decoder = decode_block_packed if cfg.block_format == "packed" else decode_block
-    is_columnar = "doc_gaps" in blocks.columns
-    cols = ["term", "first_docid"] + (
-        ["doc_gaps", "tfs", "doclens"] if is_columnar else ["payload"]
-    )
+    rows the caller pruned to, never the whole table."""
 
     def explode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             parts = []
             for r in pdf.itertuples():
-                if is_columnar:
-                    d = np.asarray(r.doc_gaps, dtype=np.int64).cumsum()
-                    d += int(r.first_docid) - d[0]
-                    t = np.asarray(r.tfs, dtype=np.int64)
-                    l = np.asarray(r.doclens, dtype=np.int64)
-                else:
-                    d, t, l = decoder(bytes(r.payload))
+                d, t, l = decode_block(bytes(r.payload))
                 parts.append(
                     pd.DataFrame(
                         {
                             "term": r.term,
                             "doc_id": d,
-                            "tf": t.astype("int64"),
+                            "tf": t,
                             "doclen": l.astype("int32"),
                         }
                     )
@@ -402,8 +359,21 @@ def blocks_to_postings(
             if parts:
                 yield pd.concat(parts, ignore_index=True)
 
-    return blocks.select(*cols).mapInPandas(
+    return blocks.select("term", "payload").mapInPandas(
         explode_batches, "term string, doc_id long, tf long, doclen int"
+    )
+
+
+def lineage_by_bucket(blocks: DataFrame) -> DataFrame:
+    """Per doc-bucket build metrics of a block table: postings emitted,
+    blocks and payload bytes written, and terms seen. A term is counted by
+    its block 0 — each (term, bucket) group has exactly one — so the
+    aggregate needs no distinct stage."""
+    return blocks.groupBy("bucket").agg(
+        F.sum("n_docs").alias("postings_emitted"),
+        F.count("*").alias("blocks_written"),
+        F.sum(F.length("payload")).alias("bytes_compressed"),
+        F.sum((F.col("block_id") == 0).cast("long")).alias("terms_seen"),
     )
 
 

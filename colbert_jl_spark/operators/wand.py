@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from colbert_jl_spark.config import EngineConfig
-from colbert_jl_spark.functions.codec import decode_block, decode_block_packed
+from colbert_jl_spark.functions.codec import decode_block
 
 _INF = np.iinfo(np.int64).max
 # wider than the 0.5e-6 rounding half-step of the 6-decimal output, so
@@ -128,27 +128,17 @@ class _TermCursor:
 
     __slots__ = (
         "qtf", "idf", "firsts", "lasts", "maxes", "payloads",
-        "bi", "docids", "tfs", "dls", "pos", "ub", "total", "decoder",
+        "bi", "docids", "tfs", "dls", "pos", "ub", "total",
     )
 
-    def __init__(
-        self, qtf: float, idf: float, blocks: pd.DataFrame, decoder=decode_block
-    ):
+    def __init__(self, qtf: float, idf: float, blocks: pd.DataFrame):
         blocks = blocks.sort_values("first_docid")
-        self.decoder = decoder
         self.qtf = qtf
         self.idf = idf
         self.firsts = blocks["first_docid"].to_numpy(dtype=np.int64)
         self.lasts = blocks["last_docid"].to_numpy(dtype=np.int64)
         self.maxes = blocks["max_score"].to_numpy(dtype=np.float64)
-        if "payload" in blocks.columns:
-            # varint format: lazy byte decode per block
-            self.payloads = blocks["payload"].tolist()
-        else:
-            # columnar format: (doc_gaps, tfs, doclens) array columns
-            self.payloads = list(
-                zip(blocks["doc_gaps"], blocks["tfs"], blocks["doclens"])
-            )
+        self.payloads = blocks["payload"].tolist()  # decoded lazily
         self.bi = 0
         self.docids = None
         self.pos = 0
@@ -167,7 +157,7 @@ class _TermCursor:
         logical block (see class docstring). The merged block's max bound
         is the max over constituent block maxima — a valid (if coarser)
         upper bound for any posting inside it."""
-        parts = [self._decode(i) for i in range(len(self.payloads))]
+        parts = [decode_block(bytes(p)) for p in self.payloads]
         d = np.concatenate([p[0] for p in parts])
         t = np.concatenate([p[1] for p in parts])
         l = np.concatenate([p[2] for p in parts])
@@ -181,20 +171,11 @@ class _TermCursor:
         self.bi = 0
         self.pos = 0
 
-    def _decode(self, bi: int):
-        p = self.payloads[bi]
-        if isinstance(p, (bytes, bytearray)):
-            return self.decoder(bytes(p))
-        gaps, tfs, dls = p
-        d = np.asarray(gaps, dtype=np.int64).cumsum()
-        # re-anchor at the block's skip pointer: the first gap is
-        # relative to the previous BLOCK's last doc (or arbitrary)
-        d += self.firsts[bi] - d[0]
-        return d, np.asarray(tfs, dtype=np.int64), np.asarray(dls, dtype=np.int64)
-
     def _ensure_decoded(self) -> None:
         if self.docids is None and self.bi < len(self.payloads):
-            self.docids, self.tfs, self.dls = self._decode(self.bi)
+            self.docids, self.tfs, self.dls = decode_block(
+                bytes(self.payloads[self.bi])
+            )
             self.pos = 0
 
     def cur(self) -> int:
@@ -288,7 +269,7 @@ def _empty_out(emit_rank: bool) -> pd.DataFrame:
 
 def _wand_one_group(
     pdf: pd.DataFrame, k: int, k1: float, b: float, avgdl: float,
-    decoder=decode_block, emit_rank: bool = False,
+    emit_rank: bool = False,
 ) -> pd.DataFrame:
     """Block-max WAND with WINDOW-BATCHED scoring: pivot selection and
     block skipping stay per-decision Python (they touch ~|query terms|
@@ -308,7 +289,7 @@ def _wand_one_group(
     for term, grp in pdf.groupby("term", sort=False):
         cursors.append(
             _TermCursor(
-                float(grp["qtf"].iloc[0]), float(grp["idf"].iloc[0]), grp, decoder
+                float(grp["qtf"].iloc[0]), float(grp["idf"].iloc[0]), grp
             )
         )
 
@@ -542,13 +523,10 @@ def wand_topk(
         # planner would have inserted implicitly; the groupBy below reuses
         # this partitioning, so there is never a second one.
         matched = matched.repartition("qid", "bucket")
-    # payload decoder is chosen from config, NOT sniffed from bytes — a
-    # varint stream can begin with any byte sequence
-    decoder = decode_block_packed if cfg.block_format == "packed" else decode_block
     if fused:
         ranked = matched.groupBy(*group_cols).applyInPandas(
             lambda pdf: _wand_one_group(
-                pdf, k, cfg.k1, cfg.b, avgdl, decoder, emit_rank=True
+                pdf, k, cfg.k1, cfg.b, avgdl, emit_rank=True
             ),
             WAND_RANKED_SCHEMA,
         )
@@ -556,7 +534,7 @@ def wand_topk(
             "qid", "rank", "doc_id", F.round("score", 6).alias("score")
         )
     per_bucket = matched.groupBy(*group_cols).applyInPandas(
-        lambda pdf: _wand_one_group(pdf, k, cfg.k1, cfg.b, avgdl, decoder),
+        lambda pdf: _wand_one_group(pdf, k, cfg.k1, cfg.b, avgdl),
         WAND_OUT_SCHEMA,
     )
     w = Window.partitionBy("qid").orderBy(
@@ -571,7 +549,7 @@ def wand_topk(
 
 def _intersect_one_group(
     pdf: pd.DataFrame, k: int, k1: float, b: float, avgdl: float,
-    decoder=decode_block, emit_rank: bool = False,
+    emit_rank: bool = False,
 ) -> pd.DataFrame:
     """Skip-pointer posting-list INTERSECTION with BM25 scoring — the
     conjunctive executor the north rule names explicitly. Zig-zag shape:
@@ -591,7 +569,7 @@ def _intersect_one_group(
     for term, grp in pdf.groupby("term", sort=False):
         cursors.append(
             _TermCursor(
-                float(grp["qtf"].iloc[0]), float(grp["idf"].iloc[0]), grp, decoder
+                float(grp["qtf"].iloc[0]), float(grp["idf"].iloc[0]), grp
             )
         )
     empty = _empty_out(emit_rank)
@@ -696,11 +674,10 @@ def wand_intersect_topk(
     if not single_qid:
         # see wand_topk: keep batched groups spread across tasks
         matched = matched.repartition("qid", "bucket")
-    decoder = decode_block_packed if cfg.block_format == "packed" else decode_block
     if fused:
         ranked = matched.groupBy(*group_cols).applyInPandas(
             lambda pdf: _intersect_one_group(
-                pdf, k, cfg.k1, cfg.b, avgdl, decoder, emit_rank=True
+                pdf, k, cfg.k1, cfg.b, avgdl, emit_rank=True
             ),
             WAND_RANKED_SCHEMA,
         )
@@ -708,7 +685,7 @@ def wand_intersect_topk(
             "qid", "rank", "doc_id", F.round("score", 6).alias("score")
         )
     per_bucket = matched.groupBy(*group_cols).applyInPandas(
-        lambda pdf: _intersect_one_group(pdf, k, cfg.k1, cfg.b, avgdl, decoder),
+        lambda pdf: _intersect_one_group(pdf, k, cfg.k1, cfg.b, avgdl),
         WAND_OUT_SCHEMA,
     )
     w = Window.partitionBy("qid").orderBy(
@@ -731,7 +708,6 @@ def wand_intersect_inline(
     from colbert_jl_spark.operators.bm25 import query_terms
     from colbert_jl_spark.operators.codec_blocks import (
         posting_blocks,
-        posting_blocks_columnar,
         term_postings_with_doclen,
     )
     from colbert_jl_spark.operators.docstats import corpus_stats, doclens
@@ -743,10 +719,7 @@ def wand_intersect_inline(
     # it every probe would re-run the whole tokenize pipeline (ADVICE r2)
     pdl = term_postings_with_doclen(docs, cfg).cache()
     dictionary = term_df(pdl.select("term", "doc_id", "tf")).cache()
-    encode = (
-        posting_blocks_columnar if cfg.block_format == "columnar" else posting_blocks
-    )
-    blocks = encode(pdl, dictionary, stats["n_docs"], stats["avgdl"], cfg)
+    blocks = posting_blocks(pdl, dictionary, stats["n_docs"], stats["avgdl"], cfg)
     qt = query_terms(queries, cfg)
     return wand_intersect_topk(blocks, qt, cfg, stats["avgdl"])
 
@@ -765,7 +738,6 @@ def wand_topk_inline(
     from colbert_jl_spark.operators.bm25 import query_terms
     from colbert_jl_spark.operators.codec_blocks import (
         posting_blocks,
-        posting_blocks_columnar,
         term_postings_with_doclen,
     )
     from colbert_jl_spark.operators.docstats import corpus_stats, doclens
@@ -775,9 +747,6 @@ def wand_topk_inline(
     # cache rationale: see wand_intersect_inline (collision-salt probes)
     pdl = term_postings_with_doclen(docs, cfg).cache()
     dictionary = term_df(pdl.select("term", "doc_id", "tf")).cache()
-    encode = (
-        posting_blocks_columnar if cfg.block_format == "columnar" else posting_blocks
-    )
-    blocks = encode(pdl, dictionary, stats["n_docs"], stats["avgdl"], cfg)
+    blocks = posting_blocks(pdl, dictionary, stats["n_docs"], stats["avgdl"], cfg)
     qt = query_terms(queries, cfg)
     return wand_topk(blocks, qt, cfg, stats["avgdl"])

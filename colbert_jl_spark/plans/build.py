@@ -221,8 +221,8 @@ class IndexBuilder:
         batch would then be re-read as "new" by the next incremental
         compaction and double-counted."""
         from colbert_jl_spark.operators.codec_blocks import (
+            lineage_by_bucket,
             posting_blocks,
-            posting_blocks_columnar,
             with_term_partition,
         )
         from colbert_jl_spark.operators.postings import term_df
@@ -403,11 +403,6 @@ class IndexBuilder:
             try:
                 plan["term_partitions"] = term_partitions
                 write_plan(self.index_path, plan)
-                encode = (
-                    posting_blocks_columnar
-                    if self.cfg.block_format == "columnar"
-                    else posting_blocks
-                )
                 # tid-collision safety WITHOUT the up-front probe jobs:
                 # the check rides the blocks write itself. Two observed
                 # counts — block rows before and after the dictionary
@@ -428,7 +423,7 @@ class IndexBuilder:
                 for attempt in range(2):
                     obs_pre = Observation(f"blocks_pre_join_{attempt}")
                     obs_join = Observation(f"blocks_post_join_{attempt}")
-                    blocks = encode(
+                    blocks = posting_blocks(
                         postings,
                         dic.select("term", "df"),
                         plan["n_docs"],
@@ -493,19 +488,12 @@ class IndexBuilder:
         # -- stage: lineage (per doc-bucket build metrics) -------------------
         if "lineage" not in _load_stages(self.index_path):
             blocks = spark.read.parquet(os.path.join(self.index_path, "blocks"))
-            if "payload" in blocks.columns:  # varint format: exact bytes
-                byte_col = F.length("payload")
-            else:  # columnar: logical in-memory bytes (parquet packs further)
-                byte_col = F.col("n_docs") * F.lit(16)
             from pyspark.sql import Observation
 
             obs_lin = Observation("lineage_buckets")
-            lineage = blocks.groupBy("bucket").agg(
-                F.sum("n_docs").alias("postings_emitted"),
-                F.count("*").alias("blocks_written"),
-                F.sum(byte_col).alias("bytes_compressed"),
-                F.countDistinct("term").alias("terms_seen"),
-            ).observe(obs_lin, F.count(F.lit(1)).alias("n_buckets"))
+            lineage = lineage_by_bucket(blocks).observe(
+                obs_lin, F.count(F.lit(1)).alias("n_buckets")
+            )
             self._write(lineage, os.path.join(self.index_path, "lineage"))
             # record the doc-bucket count in the plan (one lineage row per
             # bucket): IndexReader's fused-path gate reads it as metadata
@@ -594,7 +582,10 @@ class IndexReader:
         self.spark = spark
         self.index_path = index_path
         self._load_plan()
-        self.cfg = cfg or EngineConfig.from_plan_config(self.plan["config"])
+        # parsed even when cfg is given: it refuses a plan whose blocks use
+        # a format this engine cannot decode
+        plan_cfg = EngineConfig.from_plan_config(self.plan["config"])
+        self.cfg = cfg or plan_cfg
 
     def _plan_stamp(self) -> tuple:
         """Change stamp for plan.json: (inode, mtime_ns, size). Every plan
@@ -913,10 +904,6 @@ class IndexReader:
         import numpy as np
         import pandas as pd
 
-        from colbert_jl_spark.functions.codec import (
-            decode_block,
-            decode_block_packed,
-        )
         from colbert_jl_spark.functions.hashing import spark_pmod_hash
         from colbert_jl_spark.functions.tokenizer import py_terms
         from colbert_jl_spark.operators.wand import (
@@ -969,11 +956,6 @@ class IndexReader:
         qpdf = pd.DataFrame(qt_rows, columns=["qid", "term", "qtf"])
         n_terms = qpdf.groupby("qid")["term"].nunique()
         matched = bpdf.merge(qpdf, on="term") if len(bpdf) else bpdf
-        decoder = (
-            decode_block_packed
-            if self.cfg.block_format == "packed"
-            else decode_block
-        )
         avgdl = self.plan["avgdl"]
         parts = []
         if len(matched):
@@ -982,13 +964,13 @@ class IndexReader:
                     grp = grp.assign(n_terms=int(n_terms[qid]))
                     parts.append(
                         _intersect_one_group(
-                            grp, k, self.cfg.k1, self.cfg.b, avgdl, decoder
+                            grp, k, self.cfg.k1, self.cfg.b, avgdl
                         )
                     )
                 else:
                     parts.append(
                         _wand_one_group(
-                            grp, k, self.cfg.k1, self.cfg.b, avgdl, decoder
+                            grp, k, self.cfg.k1, self.cfg.b, avgdl
                         )
                     )
         cand = (

@@ -330,7 +330,10 @@ class DedupIndex:
             if prior_labels is not None
             else None
         )
-        wave_ids = wave_docs.select(F.col("doc_id").alias("node"))
+        # distinct on every wave, the first included: a doc_id repeated
+        # inside the wave then shows as a label-count shortfall and is
+        # refused by the re-ingestion guard below
+        wave_ids = wave_docs.select(F.col("doc_id").alias("node")).distinct()
         if prior_kv is None:
             sub_nodes = wave_ids
             sub_edges = new_pairs
@@ -458,9 +461,9 @@ class DedupIndex:
                 f"wave {wave} rewrote {rewritten} label rows where "
                 f"{expected} were expected ({prior_aff} prior rows in the "
                 f"affected partitions + {n_wave} wave docs): the wave "
-                "re-ingests doc_id(s) already in the state — doc_ids must "
-                "be unique across waves; the update was aborted before "
-                "commit"
+                "re-ingests doc_id(s) — repeated inside the wave or already "
+                "in the state; doc_ids must be unique within and across "
+                "waves; the update was aborted before commit"
             )
         prior_total = st.get("n_labels")
         if prior_total is None and st["labels_dir"]:

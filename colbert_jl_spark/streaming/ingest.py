@@ -209,33 +209,9 @@ def _invalidate_positions(index_path: str, plan: dict | None = None) -> None:
     # honoring the {current, previous} retention contract stated on
     # IndexReader.
     #
-    # ADVICE r6: "a cycle old" had no TIME bound — two invalidations in
-    # quick succession could reclaim the first one's trash under a reader
-    # mid-scan. Trash reclamation is now AGE-GATED: each trash dir is
-    # touched at rename time (rename preserves content mtime, so the
-    # touch stamps the trashing moment) and only dirs older than
-    # POSITIONS_TRASH_GRACE_SEC are removed; younger ones survive and
-    # numbering continues past them.
-    import shutil
-    import time as _time
-
-    now = _time.time()
-    live_trash_ids = []
-    for entry in os.listdir(index_path):
-        if entry.startswith("positions.trash"):
-            p = os.path.join(index_path, entry)
-            try:
-                age = now - os.path.getmtime(p)
-            except OSError:
-                age = POSITIONS_TRASH_GRACE_SEC + 1.0
-            if age > POSITIONS_TRASH_GRACE_SEC:
-                shutil.rmtree(p, ignore_errors=True)
-            else:
-                try:
-                    live_trash_ids.append(int(entry.rsplit(".", 1)[1]))
-                except ValueError:
-                    pass
-    trash_n = 1 + max(live_trash_ids, default=-1)
+    # Trash reclamation is AGE-GATED (see _reclaim_positions_trash);
+    # younger trash survives and numbering continues past it.
+    trash_n = 1 + max(_reclaim_positions_trash(index_path), default=-1)
 
     def _trash(src: str) -> None:
         nonlocal trash_n
@@ -254,8 +230,39 @@ def _invalidate_positions(index_path: str, plan: dict | None = None) -> None:
             _trash(os.path.join(index_path, entry))
 
 
+def _reclaim_positions_trash(index_path: str) -> list[int]:
+    """Remove ``positions.trash.N`` dirs older than
+    POSITIONS_TRASH_GRACE_SEC; return the N of the younger ones, which
+    survive. Every site that reclaims trash goes through here: an
+    in-flight scan that resolved a just-superseded plan may still read a
+    young trash dir. Each trash dir is touched when renamed aside (rename
+    keeps the content mtime), so its mtime is the trashing moment."""
+    import shutil
+    import time
+
+    now = time.time()
+    young = []
+    for entry in os.listdir(index_path):
+        if not entry.startswith("positions.trash"):
+            continue
+        p = os.path.join(index_path, entry)
+        try:
+            age = now - os.path.getmtime(p)
+        except OSError:
+            age = POSITIONS_TRASH_GRACE_SEC + 1.0
+        if age > POSITIONS_TRASH_GRACE_SEC:
+            shutil.rmtree(p, ignore_errors=True)
+        else:
+            try:
+                young.append(int(entry.rsplit(".", 1)[1]))
+            except ValueError:
+                pass
+    return young
+
+
 def _gc_positions_dirs(index_path: str, keep: set) -> None:
-    """Remove positions version/trash dirs not in ``keep`` (by name).
+    """Remove positions version dirs not in ``keep`` (by name), and trash
+    past its grace period.
 
     The bare pre-versioning ``positions`` dir counts as a version too
     (ADVICE r5): once ``compact_positions`` repoints plan.json to
@@ -266,12 +273,9 @@ def _gc_positions_dirs(index_path: str, keep: set) -> None:
     for entry in os.listdir(index_path):
         if entry in keep or entry.endswith(".tmp"):
             continue
-        if (
-            entry == "positions"
-            or entry.startswith("positions.v")
-            or entry.startswith("positions.trash")
-        ):
+        if entry == "positions" or entry.startswith("positions.v"):
             shutil.rmtree(os.path.join(index_path, entry), ignore_errors=True)
+    _reclaim_positions_trash(index_path)
 
 
 def _positions_raw_complete(index_path: str, batch_ids) -> bool:
@@ -361,8 +365,8 @@ def compact_streamed_index(
     {mode, batches_compacted, postings_read, docs_added}.
     """
     from colbert_jl_spark.operators.codec_blocks import (
+        lineage_by_bucket,
         posting_blocks,
-        posting_blocks_columnar,
         with_term_partition,
     )
     from colbert_jl_spark.operators.postings import term_df
@@ -404,15 +408,15 @@ def compact_streamed_index(
             stages.pop(s, None)
             shutil.rmtree(os.path.join(index_path, s), ignore_errors=True)
         # stale versioned dictionary/blocks dirs from prior incremental or
-        # minor-compaction epochs
+        # minor-compaction epochs; positions trash only past its grace
         for entry in os.listdir(index_path):
             if (
                 entry.startswith("dictionary.v")
                 or entry.startswith("blocks.v")
                 or entry.startswith("positions.v")
-                or entry.startswith("positions.trash")
             ):
                 shutil.rmtree(os.path.join(index_path, entry), ignore_errors=True)
+        _reclaim_positions_trash(index_path)
         with open(stage_file, "w") as f:
             json.dump(stages, f)
         _mark_stage(index_path, "postings", {"streamed": True})
@@ -459,8 +463,8 @@ def compact_streamed_index(
         }
         return plan
     # the INDEX's persisted config governs the incremental encode — a
-    # caller-supplied cfg with a different block_format would append
-    # delta blocks the reader decodes with the wrong codec
+    # caller-supplied cfg with a different block_size or BM25 constants
+    # would append delta blocks inconsistent with the rest of the index
     cfg = EngineConfig.from_plan_config(plan["config"])
 
     # write-ahead marker: cleared only by the final state commit below
@@ -605,11 +609,6 @@ def compact_streamed_index(
 
         # delta blocks: encode ONLY new postings with the plan's frozen
         # bucket_size/term_partitions, attach merged df/idf, append
-        encode = (
-            posting_blocks_columnar
-            if cfg.block_format == "columnar"
-            else posting_blocks
-        )
         from colbert_jl_spark.operators.codec_blocks import (
             collision_free_tid_salt,
         )
@@ -624,7 +623,7 @@ def compact_streamed_index(
             dic, delta_dic.select("term"), affected
         ).cache()
         probe_terms = int(dic_delta.count())
-        delta_blocks = encode(
+        delta_blocks = posting_blocks(
             new_postings,
             dic_delta.select("term", "df"),
             plan["n_docs"],
@@ -654,16 +653,7 @@ def compact_streamed_index(
 
         # delta lineage rows (same shape as the batch stage, one generation
         # of rows per compaction — sums stay exact across generations)
-        if "payload" in delta_blocks.columns:
-            byte_col = F.length("payload")
-        else:
-            byte_col = F.col("n_docs") * F.lit(16)
-        lineage = delta_blocks.groupBy("bucket").agg(
-            F.sum("n_docs").alias("postings_emitted"),
-            F.count("*").alias("blocks_written"),
-            F.sum(byte_col).alias("bytes_compressed"),
-            F.countDistinct("term").alias("terms_seen"),
-        )
+        lineage = lineage_by_bucket(delta_blocks)
         lineage.write.mode("append").parquet(os.path.join(index_path, "lineage"))
         # new docs may open new doc-range buckets; refresh the plan's
         # bucket count (distinct: lineage accrues one row-generation per
@@ -762,8 +752,8 @@ def minor_compact(
          hand a concurrent query a FileNotFoundError window).
 
     The codec configuration comes from the INDEX's plan.json (like
-    IndexReader), never from a caller argument — decoding packed or
-    columnar blocks with the wrong format would corrupt them. A crashed
+    IndexReader), never from a caller argument — re-encoding under another
+    block_size or BM25 constants would corrupt the block metadata. A crashed
     prior compaction (``in_progress`` marker set) must be recovered by
     compact_streamed_index first: re-blocking half-written deltas would
     launder duplicated postings into clean-looking segments.
@@ -775,7 +765,6 @@ def minor_compact(
         blocks_to_postings,
         collision_free_tid_salt,
         posting_blocks,
-        posting_blocks_columnar,
         with_term_partition,
     )
     from colbert_jl_spark.plans.build import write_plan
@@ -839,7 +828,7 @@ def minor_compact(
         )
         keep = marked.where(F.col("_redo").isNull()).drop("_redo")
         redo = marked.where(F.col("_redo")).drop("_redo")
-        postings = blocks_to_postings(redo, cfg)
+        postings = blocks_to_postings(redo)
         from colbert_jl_spark.plans.build import IndexReader
 
         # restrict the re-encode's dictionary view (collision probe + tid
@@ -851,12 +840,7 @@ def minor_compact(
             overlapping.select("term"),
             set(tbs),
         )
-        encode = (
-            posting_blocks_columnar
-            if cfg.block_format == "columnar"
-            else posting_blocks
-        )
-        fresh = encode(
+        fresh = posting_blocks(
             postings,
             dic.select("term", "df"),
             plan["n_docs"],

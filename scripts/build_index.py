@@ -4,7 +4,7 @@
     spark-submit --py-files colbert_jl_spark.zip scripts/build_index.py \
         --input  <pages-or-documents path/table> \
         --index  <index root> \
-        [--format pages|documents] [--force] [--block-format varint|packed|columnar]
+        [--format pages|documents] [--force]
 
 On a cluster, --input is an Iceberg/parquet pages table
 (url, warc_ts, html, text, lang); the html→text extraction and build
@@ -31,7 +31,6 @@ def main() -> int:
     ap.add_argument("--input", required=True)
     ap.add_argument("--index", required=True)
     ap.add_argument("--format", choices=("pages", "documents"), default="documents")
-    ap.add_argument("--block-format", choices=("varint", "packed", "columnar"), default="varint")
     ap.add_argument("--force", action="store_true", help="rebuild from scratch")
     ap.add_argument("--positions", action="store_true",
                     help="also build the optional positional stage "
@@ -49,8 +48,7 @@ def main() -> int:
     if args.format == "pages":
         docs = docs_from_pages(docs)
 
-    cfg = EngineConfig(block_format=args.block_format)
-    builder = IndexBuilder(args.index, cfg)
+    builder = IndexBuilder(args.index, EngineConfig())
     plan = builder.build(docs, force=args.force)
     if args.positions:
         builder.build_positions(docs)

@@ -22,16 +22,24 @@ def index_dir(tmp_path):
     return str(tmp_path / "idx")
 
 
-@pytest.mark.parametrize("fmt", ["varint", "packed", "columnar"])
+@pytest.mark.parametrize("fmt", ["varint"])
 def test_build_search_matches_oracle(spark, docs01, index_dir, fmt):
     # min_bucket_docs=64 → multiple doc-range buckets even at 500 docs, so
-    # the persisted path exercises the multi-bucket merge; parametrized over
-    # block formats because the PERSISTED path re-derives the payload
-    # decoder from plan.json's config round-trip (not from the in-memory cfg)
-    cfg = EngineConfig(block_size=32, min_bucket_docs=64, block_format=fmt)
+    # the persisted path exercises the multi-bucket merge; the reader
+    # re-derives its config from plan.json's round-trip (not the in-memory
+    # cfg). plan.json is rewritten to name its block format, as plans built
+    # while several formats existed do: such a varint index must still load
+    # and search identically.
+    cfg = EngineConfig(block_size=32, min_bucket_docs=64)
     builder = IndexBuilder(index_dir, cfg)
     plan = builder.build(docs01)
     assert plan["n_docs"] == docs01.count()
+    plan_path = os.path.join(index_dir, "plan.json")
+    with open(plan_path) as f:
+        on_disk = json.load(f)
+    on_disk["config"]["block_format"] = fmt
+    with open(plan_path, "w") as f:
+        json.dump(on_disk, f)
 
     reader = IndexReader(spark, index_dir)
     report = reader.validate()
@@ -252,6 +260,37 @@ def test_lineage_metrics(spark, docs01, index_dir):
     assert (lin["bytes_compressed"] > 0).all()
     total_postings = int(lin["postings_emitted"].sum())
     assert total_postings == reader.dictionary.toPandas()["df"].sum()
+    # terms_seen counts block-0 rows: equal to the distinct terms per bucket
+    from pyspark.sql import functions as F
+
+    distinct_terms = {
+        r.bucket: r.n
+        for r in reader.blocks.groupBy("bucket")
+        .agg(F.countDistinct("term").alias("n"))
+        .collect()
+    }
+    assert dict(zip(lin["bucket"], lin["terms_seen"])) == distinct_terms
+
+
+def test_plan_with_other_block_format_refused(spark, docs001, index_dir):
+    """Plans written while the packed/columnar block formats existed name
+    their format in config: "varint" still loads, any other format is
+    refused by name instead of being decoded with the varint codec."""
+    IndexBuilder(index_dir, EngineConfig(block_size=32)).build(docs001)
+    plan_path = os.path.join(index_dir, "plan.json")
+    with open(plan_path) as f:
+        plan = json.load(f)
+    assert EngineConfig.from_plan_config(
+        {**plan["config"], "block_format": "varint"}
+    ) == EngineConfig.from_plan_config(plan["config"])
+    for fmt in ("packed", "columnar"):
+        with pytest.raises(ValueError, match=fmt):
+            EngineConfig.from_plan_config({**plan["config"], "block_format": fmt})
+    plan["config"]["block_format"] = "packed"
+    with open(plan_path, "w") as f:
+        json.dump(plan, f)
+    with pytest.raises(ValueError, match="packed"):
+        IndexReader(spark, index_dir, EngineConfig(block_size=32))
 
 
 def test_blocks_stage_shuffle_sizing_restores_conf(spark, docs01, index_dir):

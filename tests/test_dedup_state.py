@@ -201,6 +201,25 @@ def test_reingesting_existing_doc_id_refused(spark, tmp_path):
     assert got == {0, 1, 2, 3, 4}
 
 
+def test_first_wave_with_repeated_doc_id_refused(spark, tmp_path):
+    """A first wave that holds one doc_id twice (a url crawled twice)
+    used to commit two label rows for that doc; it must be refused before
+    commit like a re-ingest across waves, leaving no labels. The same
+    wave without the repeat then commits as wave 1."""
+    from colbert_jl_spark.streaming.dedup_state import DedupIndex
+
+    idx = DedupIndex(str(tmp_path / "dedup"), n=3, threshold=0.7, cfg=CFG)
+    recrawl = spark.createDataFrame(_ROWS[0:3] + [_ROWS[1]], SCHEMA)
+    with pytest.raises(ValueError, match="repeated inside the wave"):
+        idx.update(spark, recrawl)
+    assert idx._state() is None
+    assert idx.labels(spark).count() == 0
+
+    idx.update(spark, spark.createDataFrame(_ROWS[0:3], SCHEMA))
+    assert idx._state()["waves"] == [1]
+    assert sorted(r.doc_id for r in idx.labels(spark).collect()) == [0, 1, 2]
+
+
 def test_lsh_constant_drift_refused(spark, tmp_path, monkeypatch):
     """VERDICT r6 'What's wrong' #2: the LSH constants are pinned in
     state.json at commit; reopening the state under an engine whose

@@ -119,7 +119,6 @@ def test_blocks_shuffle_is_dictionary_encoded(spark, docs001):
     strings are moving per posting again."""
     from colbert_jl_spark.operators.codec_blocks import (
         posting_blocks,
-        posting_blocks_columnar,
         term_postings_with_doclen,
     )
     from colbert_jl_spark.operators.postings import term_df
@@ -127,22 +126,21 @@ def test_blocks_shuffle_is_dictionary_encoded(spark, docs001):
     cfg = EngineConfig()
     pdl = term_postings_with_doclen(docs001, cfg)
     dic = term_df(pdl.select("term", "doc_id", "tf"))
-    for encode in (posting_blocks, posting_blocks_columnar):
-        plan = _plan(encode(pdl, dic, 500, 50.0, cfg, bucket_size=100))
-        assert "hashpartitioning(tid#" in plan, plan
-        # the only term-keyed operations allowed are the block-level
-        # dictionary join AFTER aggregation (AQE may plan it as broadcast
-        # or shuffle); the per-posting exchange must never carry term
-        posting_exchanges = [
-            l for l in plan.splitlines()
-            if "hashpartitioning(term#" in l and "Exchange" in l
-        ]
-        for line in posting_exchanges:
-            # a term-keyed exchange may only sit on the (small) dictionary
-            # or post-agg side — never below the encoder. The encoder input
-            # is the window/groupBy on (tid, bucket); assert no term-keyed
-            # exchange ALSO carries the per-posting doc_id column.
-            assert "doc_id" not in line, line
+    plan = _plan(posting_blocks(pdl, dic, 500, 50.0, cfg, bucket_size=100))
+    assert "hashpartitioning(tid#" in plan, plan
+    # the only term-keyed operations allowed are the block-level
+    # dictionary join AFTER encoding (AQE may plan it as broadcast or
+    # shuffle); the per-posting exchange must never carry term
+    posting_exchanges = [
+        l for l in plan.splitlines()
+        if "hashpartitioning(term#" in l and "Exchange" in l
+    ]
+    for line in posting_exchanges:
+        # a term-keyed exchange may only sit on the (small) dictionary or
+        # block-level side — never below the encoder, whose input is
+        # partitioned on (tid, bucket); assert no term-keyed exchange ALSO
+        # carries the per-posting doc_id column.
+        assert "doc_id" not in line, line
 
 
 def test_graded_lsh_queries_never_cross_join(spark):

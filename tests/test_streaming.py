@@ -1013,3 +1013,31 @@ def test_positions_trash_reclamation_is_age_gated(spark, docs001, tmp_path):
     _invalidate_positions(idx)
     assert os.path.isdir(t0)  # numbering restarted: the NEW trash
     assert not os.path.exists(t1)
+
+
+def test_major_compaction_keeps_young_positions_trash(spark, docs001, tmp_path):
+    """Every site that reclaims positions trash is age-gated: a major
+    compaction run within the grace period of an invalidation keeps the
+    young trash dir (a reader may still be mid-scan on it) and reclaims
+    only trash past the grace period."""
+    from colbert_jl_spark.streaming import ingest
+    from colbert_jl_spark.streaming.ingest import _invalidate_positions
+
+    cfg = EngineConfig(block_size=32)
+    pages_dir = str(tmp_path / "pages_in")
+    idx = str(tmp_path / "stream_idx")
+    pages_from_documents(docs001).write.parquet(pages_dir)
+    stream_pages_to_postings(spark, pages_dir, idx, str(tmp_path / "ckpt"), cfg)
+    compact_streamed_index(spark, idx, cfg)
+
+    os.makedirs(os.path.join(idx, "positions"))  # a stage dir to invalidate
+    _invalidate_positions(idx)
+    young = os.path.join(idx, "positions.trash.0")
+    old = os.path.join(idx, "positions.trash.1")
+    os.makedirs(old)
+    past = os.path.getmtime(old) - ingest.POSITIONS_TRASH_GRACE_SEC - 60
+    os.utime(old, (past, past))
+
+    compact_streamed_index(spark, idx, cfg, full=True)
+    assert os.path.isdir(young), "young trash was reclaimed under a reader"
+    assert not os.path.exists(old)
