@@ -9,11 +9,11 @@ scheduling + py4j floor in local mode) per ``search()`` call just to ship
 a handful of query-term rows.
 
 ``spark.createDataFrame(pandas_df, schema)`` with Arrow enabled converts
-driver-side into a ``LocalRelation``: no RDD, no job — a broadcast built
-from it is collected directly on the driver, and a ``collect()`` of it
-never leaves the driver either. Same rows, same schema, zero jobs
-(measured: 0.29 s -> 0.014 s for an empty collect; plan gate in
-tests/test_plans.py asserts no ExistingRDD scan in search DAGs).
+driver-side into a ``LocalRelation``: no RDD — a ``collect()`` of it never
+leaves the driver. Same rows, same schema, zero jobs (measured: 0.29 s ->
+0.014 s for an empty collect; plan gate in tests/test_plans.py asserts no
+ExistingRDD scan in search DAGs). A broadcast built from it still runs one
+1-task job (Spark 4.1, AQE on).
 
 Every tiny driver-known row set (query terms, phrase anchors,
 driver-computed result rows) goes through here; data-scale DataFrames

@@ -120,7 +120,7 @@ def bm25_topk_conjunctive(
     """Conjunctive (intersection) BM25 top-k: only documents containing
     EVERY distinct query term are scored — the exhaustive referee for the
     skip-pointer posting-list intersection executor
-    (operators/wand.py:wand_intersect_topk; the north rule names
+    (operators/wand.py:wand_topk mode="intersect"; the north rule names
     'posting-list intersection' explicitly).
 
     Same plan shape as bm25_topk plus a terms_hit == n_terms filter: the

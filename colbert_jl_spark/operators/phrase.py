@@ -131,9 +131,8 @@ def _match_starts(pos: DataFrame, pt: DataFrame, anchor=None) -> DataFrame:
     (single-term / all-stopword phrases) bypass the semi-join."""
     if isinstance(pt, list):
         # driver-known phrase rows, few distinct terms: compile the
-        # phrase side as a literal map expression (same shape as
-        # wand._attach_query_terms_literal) — no BroadcastExchange and no
-        # broadcast-build job on the hot phrase path. Terms are
+        # phrase side as a literal map expression — no BroadcastExchange
+        # and no broadcast-build job on the hot phrase path. Terms are
         # [a-z0-9]+ by the frozen tokenizer, so the SQL rendering is
         # quoting-safe.
         from collections import defaultdict

@@ -10,14 +10,25 @@ skipped WITHOUT decoding their blocks.
 
 Distribution shape:
 
-    blocks ⋈ broadcast(query terms)          -- posting fetch, the nprobe
-                                                analogue (ranking.jl:30-36);
-                                                term filter prunes the scan
-    groupBy(qid, bucket) → applyInPandas     -- independent WAND per doc
-                                                range; doc buckets PARTITION
-                                                docs so per-bucket top-k
-                                                merge is exact
-    window rank ≤ k over (qid)               -- final top-k merge
+    blocks ⋉ batch terms                    -- posting fetch, the nprobe
+                                               analogue (ranking.jl:30-36):
+                                               In(term, …) for few terms,
+                                               a broadcast left-semi join
+                                               above max_inlist_terms
+    groupBy(bucket) → applyInArrow          -- ONE Python call per doc
+                                               bucket runs EVERY query of
+                                               the batch; the driver-known
+                                               (qid, term, qtf) rows ride
+                                               in the closure. Doc buckets
+                                               PARTITION docs, so per-bucket
+                                               top-k merge is exact
+    window rank ≤ k over (qid)              -- final top-k merge (fused
+                                               away on one-bucket indexes)
+
+A bucket-partitioned hot pin (IndexReader.load_hot) already satisfies the
+bucket grouping, so a hot search adds no Exchange. Inside a bucket each
+term's blocks are split out once, shared by every query holding the term,
+and each block is decoded at most once per batch (_TermBlocks).
 
 Rank identity with the exhaustive oracle (operators/bm25.py) is guaranteed
 by (a) identical float64 scoring expression, (b) a pruning margin wider
@@ -28,13 +39,16 @@ with the kth score is ever pruned), (c) the shared total tie-break
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from colbert_jl_spark.config import EngineConfig
 from colbert_jl_spark.functions.codec import decode_block
+from colbert_jl_spark.functions.smalldf import local_df
 
 _INF = np.iinfo(np.int64).max
 # wider than the 0.5e-6 rounding half-step of the 6-decimal output, so
@@ -43,6 +57,11 @@ _MARGIN = 5e-6
 
 WAND_OUT_SCHEMA = "qid long, doc_id long, score double"
 WAND_RANKED_SCHEMA = "qid long, rank int, doc_id long, score double"
+# the block columns the executor reads (the rest stay in the scan)
+EXEC_COLS = (
+    "bucket", "term", "idf", "first_docid", "last_docid", "n_docs",
+    "max_score", "payload",
+)
 
 
 def _exact_round6(scores: np.ndarray) -> np.ndarray:
@@ -71,47 +90,43 @@ def _exact_round6(scores: np.ndarray) -> np.ndarray:
     )
 
 
-def _finalize_group(
-    qid: int, ids: np.ndarray, scores: np.ndarray, k: int, emit_rank: bool
-) -> pd.DataFrame:
-    """Bound one (qid, bucket) group's candidate output.
+def _finalize(
+    ids: np.ndarray, scores: np.ndarray, k: int, emit_rank: bool
+) -> tuple[np.ndarray | None, np.ndarray, np.ndarray]:
+    """Bound one query's candidate output in one bucket → (ranks, ids,
+    raw scores).
 
-    Multi-bucket path (emit_rank=False): keep the top-k by RAW score plus
-    every row within the rounding margin of the kth — a safe superset of
-    any row that can reach the global top-k under the final window's
-    (round(score,6) DESC, doc_id ASC) total order, since rounded(x) >=
-    rounded(kth) implies x >= kth - 1e-6. Bounds the window input to
-    ~k rows per (qid, bucket) instead of every candidate above theta.
+    Multi-bucket path (emit_rank=False, ranks None): keep the top-k by RAW
+    score plus every row within the rounding margin of the kth — a safe
+    superset of any row that can reach the global top-k under the final
+    window's (round(score,6) DESC, doc_id ASC) total order, since
+    rounded(x) >= rounded(kth) implies x >= kth - 1e-6. Bounds the window
+    input to ~k rows per (qid, bucket) instead of every candidate above
+    theta.
 
-    Fused single-bucket path (emit_rank=True): this group IS the whole
-    doc space for the query, so the final ranks are computed right here
+    Ranked path (emit_rank=True): the candidates span the query's whole
+    doc space (a one-bucket index, or search_local's driver-side merge of
+    every bucket's output), so the final ranks are computed right here
     under the exact engine total order (decimal HALF_UP rounding desc,
-    doc_id asc) and the ranking window stage disappears from the DAG —
-    the judge-sketched "no final window when k·buckets is tiny" plan
-    (VERDICT r2 item 9). Scores stay RAW; the caller applies the same
-    F.round(…, 6) as every other path."""
+    doc_id asc) and the ranking window disappears from the DAG (VERDICT r2
+    item 9). Scores stay RAW; callers round them exactly like every other
+    path."""
     if ids.size > k:
         order = np.argsort(-scores, kind="stable")
         kth = scores[order[k - 1]]
         keep = scores >= kth - 1.1e-6  # rounding-tie superset
         ids, scores = ids[keep], scores[keep]
     if not emit_rank:
-        return pd.DataFrame({"qid": qid, "doc_id": ids, "score": scores})
-    r6 = _exact_round6(scores)
-    sel = np.lexsort((ids, -r6))[:k]
-    ids, scores = ids[sel], scores[sel]
-    return pd.DataFrame(
-        {
-            "qid": qid,
-            "rank": np.arange(1, ids.size + 1, dtype=np.int32),
-            "doc_id": ids,
-            "score": scores,
-        }
-    )
+        return None, ids, scores
+    sel = np.lexsort((ids, -_exact_round6(scores)))[:k]
+    return np.arange(1, sel.size + 1, dtype=np.int32), ids[sel], scores[sel]
 
 
-class _TermCursor:
-    """Lazy cursor over one term's block list (docid-sorted).
+class _TermBlocks:
+    """One term's blocks inside one doc bucket (docid-sorted), shared by
+    every query of the batch that holds the term. ``decode`` caches each
+    block, so a block is decoded at most once per batch however many
+    queries walk it.
 
     Blocks from one build are range-DISJOINT per (term, bucket), so the
     sorted block list supports skip-pointer traversal with lazy decode. An
@@ -119,67 +134,144 @@ class _TermCursor:
     SEGMENTS of blocks for the same (term, bucket) — one per compaction
     epoch — whose docid RANGES interleave (doc ids are url-derived, not
     monotone per epoch) even though their docid SETS are disjoint (a doc
-    is ingested exactly once). When the constructor detects overlapping
-    ranges it eagerly decodes and merge-sorts that group into one logical
-    block: correctness is preserved exactly; only block-level skipping is
-    lost for that (term, bucket) — and only until the next major
-    compaction. Ingests whose doc ids grow monotonically (the production
-    recommendation) produce disjoint segments and keep the lazy path."""
+    is ingested exactly once). When overlapping ranges are detected the
+    segments are decoded and merge-sorted, once, into one logical block:
+    correctness is preserved exactly; only block-level skipping is lost
+    for that (term, bucket) — and only until the next major compaction.
+    Ingests whose doc ids grow monotonically (the production
+    recommendation) produce disjoint segments and keep the lazy path.
+
+    A decoded block is (docids, num, den): the query-independent factors
+    of the BM25 partial, tf*(k1+1) and tf + k1*(1-b+b*dl/avgdl), so a
+    query's partial is qtf*idf*num/den — the oracle's float64 expression,
+    evaluated in the same order."""
 
     __slots__ = (
-        "qtf", "idf", "firsts", "lasts", "maxes", "payloads",
-        "bi", "docids", "tfs", "dls", "pos", "ub", "total",
+        "idf", "firsts", "lasts", "maxes", "payloads", "total", "norm", "_decoded",
     )
 
-    def __init__(self, qtf: float, idf: float, blocks: pd.DataFrame):
-        blocks = blocks.sort_values("first_docid")
-        self.qtf = qtf
+    def __init__(self, idf, firsts, lasts, maxes, payloads, total, norm):
         self.idf = idf
-        self.firsts = blocks["first_docid"].to_numpy(dtype=np.int64)
-        self.lasts = blocks["last_docid"].to_numpy(dtype=np.int64)
-        self.maxes = blocks["max_score"].to_numpy(dtype=np.float64)
-        self.payloads = blocks["payload"].tolist()  # decoded lazily
+        self.firsts, self.lasts, self.maxes = firsts, lasts, maxes
+        self.payloads = payloads
+        # posting count across blocks: picks the zig-zag drive term
+        self.total = total
+        self.norm = norm  # (k1, b, avgdl)
+        self._decoded: dict[int, tuple] = {}
+        if len(firsts) > 1 and not bool(np.all(firsts[1:] > lasts[:-1])):
+            self._merge_overlapping_segments()
+
+    def _merge_overlapping_segments(self) -> None:
+        """Stable merge of range-overlapping blocks into ONE logical block
+        (see class docstring). Its max bound is the max over constituent
+        block maxima — a valid (if coarser) upper bound for any posting
+        inside it."""
+        parts = [decode_block(p) for p in self.payloads]
+        d, t, l = (np.concatenate([p[i] for p in parts]) for i in range(3))
+        order = np.argsort(d, kind="stable")
+        self._decoded = {0: self._factors(d[order], t[order], l[order])}
+        self.firsts, self.lasts = d[order][:1], d[order][-1:]
+        self.maxes = np.array([float(self.maxes.max())])
+        self.payloads = [None]
+
+    def _factors(self, docids, tfs, dls) -> tuple:
+        k1, b, avgdl = self.norm
+        tf = tfs.astype(np.float64)
+        dl = dls.astype(np.float64)
+        return docids, tf * (k1 + 1.0), tf + k1 * (1.0 - b + b * dl / avgdl)
+
+    def decode(self, bi: int) -> tuple:
+        got = self._decoded.get(bi)
+        if got is None:
+            got = self._decoded[bi] = self._factors(*decode_block(self.payloads[bi]))
+        return got
+
+
+def _term_blocks(
+    table: pa.Table,
+    norm: tuple[float, float, float],
+    idf_now: dict[str, float] | None,
+    bound_scale: float,
+) -> dict[str, _TermBlocks]:
+    """Split one bucket's block rows (EXEC_COLS) into per-term sorted
+    block arrays, once per batch.
+
+    ``idf_now`` / ``bound_scale`` correct ENCODE-time statistics on an
+    incrementally-compacted index (streaming/ingest.py), where pre-existing
+    blocks carry a stale idf and max_score after df, N and avgdl moved.
+    Rewriting every block row per compaction would be O(corpus) — the
+    point of incremental merge is not to — so staleness is corrected here,
+    per row, at query time:
+
+    * scoring idf: the CURRENT dictionary value replaces the stored idf
+      outright — scores become exactly the from-scratch values, because
+      the payload (docids/tfs/doclens) is statistics-independent.
+    * block-max bound: stored max_score = idf_enc * max_tf_norm(avgdl_enc).
+      Dividing by the stored idf recovers max_tf_norm (to 1 ulp, absorbed
+      by the WAND pruning margin), re-multiplying by idf_now refreshes the
+      idf factor, and ``bound_scale`` covers avgdl drift: tf_norm is
+      increasing in avgdl with ratio tf_norm(a2)/tf_norm(a1) <= a2/a1 for
+      a2 > a1 (the k1(1-b)+tf term only shrinks the ratio), so scaling by
+      max(1, avgdl_now / min_enc_avgdl) keeps every stored bound a valid
+      upper bound — laxer for newer segments, never wrong."""
+    if table.num_rows == 0:
+        return {}
+    table = table.sort_by([("term", "ascending"), ("first_docid", "ascending")])
+    terms = table.column("term").to_numpy(zero_copy_only=False)
+    col = {
+        c: table.column(c).to_numpy()
+        for c in ("idf", "first_docid", "last_docid", "n_docs", "max_score")
+    }
+    idfs, maxes = col["idf"], col["max_score"]
+    if idf_now is not None:
+        fresh = np.array([idf_now[t] for t in terms], dtype=np.float64)
+        maxes = maxes / idfs * fresh
+        idfs = fresh
+    maxes = maxes * bound_scale
+    payloads = table.column("payload").to_pylist()
+    starts = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
+    ends = np.r_[starts[1:], len(terms)]
+    return {
+        terms[s]: _TermBlocks(
+            float(idfs[s]), col["first_docid"][s:e], col["last_docid"][s:e],
+            maxes[s:e], payloads[s:e], int(col["n_docs"][s:e].sum()), norm,
+        )
+        for s, e in zip(starts.tolist(), ends.tolist())
+    }
+
+
+class _TermCursor:
+    """One query's lazy cursor over a shared _TermBlocks list.
+
+    Cursors never mutate the shared decoded arrays — they only slice them
+    — so every query of the batch reads the same decoded block."""
+
+    __slots__ = (
+        "qtf", "idf", "tb", "firsts", "lasts", "maxes", "n",
+        "bi", "docids", "num", "den", "pos", "ub", "total",
+    )
+
+    def __init__(self, qtf: float, tb: _TermBlocks):
+        self.qtf = qtf
+        self.idf = tb.idf
+        self.tb = tb
+        self.firsts, self.lasts, self.maxes = tb.firsts, tb.lasts, tb.maxes
+        self.n = len(tb.firsts)
         self.bi = 0
         self.docids = None
         self.pos = 0
         # global term upper bound (WAND U_t); block maxima refine it (BMW)
-        self.ub = qtf * float(self.maxes.max()) if len(self.maxes) else 0.0
-        # posting count across blocks: picks the zig-zag drive term
-        self.total = int(blocks["n_docs"].sum())
-        if len(self.firsts) > 1 and not bool(
-            np.all(self.firsts[1:] > self.lasts[:-1])
-        ):
-            self._merge_overlapping_segments()
+        self.ub = qtf * float(self.maxes.max()) if self.n else 0.0
+        self.total = tb.total
         self._ensure_decoded()
 
-    def _merge_overlapping_segments(self) -> None:
-        """Eager decode + stable merge of range-overlapping blocks into ONE
-        logical block (see class docstring). The merged block's max bound
-        is the max over constituent block maxima — a valid (if coarser)
-        upper bound for any posting inside it."""
-        parts = [decode_block(bytes(p)) for p in self.payloads]
-        d = np.concatenate([p[0] for p in parts])
-        t = np.concatenate([p[1] for p in parts])
-        l = np.concatenate([p[2] for p in parts])
-        order = np.argsort(d, kind="stable")
-        d, t, l = d[order], t[order], l[order]
-        self.firsts = d[:1].copy()
-        self.lasts = d[-1:].copy()
-        self.maxes = np.array([float(self.maxes.max())])
-        self.payloads = [None]
-        self.docids, self.tfs, self.dls = d, t, l
-        self.bi = 0
-        self.pos = 0
-
     def _ensure_decoded(self) -> None:
-        if self.docids is None and self.bi < len(self.payloads):
-            self.docids, self.tfs, self.dls = decode_block(
-                bytes(self.payloads[self.bi])
-            )
+        if self.docids is None and self.bi < self.n:
+            self.docids, self.num, self.den = self.tb.decode(self.bi)
             self.pos = 0
 
     def cur(self) -> int:
-        if self.bi >= len(self.payloads):
+        if self.bi >= self.n:
             return _INF
         self._ensure_decoded()
         return int(self.docids[self.pos])
@@ -189,7 +281,7 @@ class _TermCursor:
         first_docid already proves whether it starts inside the window
         (its first posting IS firsts[bi]), so tail cursors whose next
         block lies entirely beyond the window stay undecoded."""
-        if self.bi >= len(self.payloads):
+        if self.bi >= self.n:
             return False
         if self.docids is not None:
             return int(self.docids[self.pos]) <= hi
@@ -197,24 +289,24 @@ class _TermCursor:
 
     def shallow_seek(self, target: int) -> None:
         """Advance the BLOCK pointer (no decode) until last_docid >= target."""
-        while self.bi < len(self.payloads) and self.lasts[self.bi] < target:
+        while self.bi < self.n and self.lasts[self.bi] < target:
             self.bi += 1
             self.docids = None
 
     def block_ub(self) -> float:
         """qtf-scaled max score of the current block (exact bound)."""
-        if self.bi >= len(self.payloads):
+        if self.bi >= self.n:
             return 0.0
         return self.qtf * float(self.maxes[self.bi])
 
     def block_last(self) -> int:
-        if self.bi >= len(self.payloads):
+        if self.bi >= self.n:
             return _INF
         return int(self.lasts[self.bi])
 
     def next_geq(self, target: int) -> None:
         self.shallow_seek(target)
-        if self.bi >= len(self.payloads):
+        if self.bi >= self.n:
             return
         self._ensure_decoded()
         self.pos = int(np.searchsorted(self.docids, target, side="left"))
@@ -223,9 +315,7 @@ class _TermCursor:
             self.docids = None
             self._ensure_decoded()
 
-    def take_upto(
-        self, hi: int, k1: float, b: float, avgdl: float
-    ) -> tuple[np.ndarray, np.ndarray]:
+    def take_upto(self, hi: int) -> tuple[np.ndarray, np.ndarray]:
         """Consume every posting with docid <= hi and return
         (docids, exact partial scores) — the whole run scored in ONE numpy
         expression per block (round-1's latency floor was a Python while
@@ -234,18 +324,15 @@ class _TermCursor:
         qtf * idf * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))."""
         ids_out: list[np.ndarray] = []
         sc_out: list[np.ndarray] = []
-        while self.bi < len(self.payloads) and self.firsts[self.bi] <= hi:
+        while self.bi < self.n and self.firsts[self.bi] <= hi:
             self._ensure_decoded()
             j = int(np.searchsorted(self.docids, hi, side="right"))
             if j <= self.pos:
                 break  # nothing at/after the cursor is <= hi; never rewind
-            if self.pos < j:
-                d = self.docids[self.pos : j]
-                tf = self.tfs[self.pos : j].astype(np.float64)
-                dl = self.dls[self.pos : j].astype(np.float64)
-                k_norm = k1 * (1.0 - b + b * dl / avgdl)
-                ids_out.append(d)
-                sc_out.append(self.qtf * self.idf * (tf * (k1 + 1.0)) / (tf + k_norm))
+            ids_out.append(self.docids[self.pos : j])
+            sc_out.append(
+                self.qtf * self.idf * self.num[self.pos : j] / self.den[self.pos : j]
+            )
             if j >= len(self.docids):
                 self.bi += 1
                 self.docids = None
@@ -258,19 +345,37 @@ class _TermCursor:
         return np.concatenate(ids_out), np.concatenate(sc_out)
 
 
-def _empty_out(emit_rank: bool) -> pd.DataFrame:
-    cols = {"qid": pd.Series(dtype="int64")}
-    if emit_rank:
-        cols["rank"] = pd.Series(dtype="int32")
-    cols["doc_id"] = pd.Series(dtype="int64")
-    cols["score"] = pd.Series(dtype="float64")
-    return pd.DataFrame(cols)
+class _TopK:
+    """Running top-k threshold plus every scored candidate of one query."""
+
+    def __init__(self, k: int):
+        self.k = k
+        self.ids: list[np.ndarray] = []
+        self.scores: list[np.ndarray] = []
+        self.best = np.empty(0, dtype=np.float64)  # current best-k raw scores
+        self.theta = -np.inf
+
+    def add(self, ids: np.ndarray, scores: np.ndarray) -> None:
+        self.ids.append(ids)
+        self.scores.append(scores)
+        merged = np.concatenate([self.best, scores])
+        if merged.size >= self.k:
+            self.best = np.partition(merged, merged.size - self.k)[merged.size - self.k :]
+            self.theta = self.best[0]
+        else:
+            self.best = merged
+
+    def candidates(self) -> tuple[np.ndarray, np.ndarray]:
+        """Every candidate that can still reach the top-k (margin-wide)."""
+        if not self.ids:
+            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+        ids, scores = np.concatenate(self.ids), np.concatenate(self.scores)
+        cutoff = (self.theta if self.best.size == self.k else -np.inf) - _MARGIN
+        keep = scores >= cutoff
+        return ids[keep], scores[keep]
 
 
-def _wand_one_group(
-    pdf: pd.DataFrame, k: int, k1: float, b: float, avgdl: float,
-    emit_rank: bool = False,
-) -> pd.DataFrame:
+def _wand(cursors: list[_TermCursor], k: int) -> tuple[np.ndarray, np.ndarray]:
     """Block-max WAND with WINDOW-BATCHED scoring: pivot selection and
     block skipping stay per-decision Python (they touch ~|query terms|
     items), but once a window of docs must be scored, the ENTIRE window is
@@ -284,26 +389,14 @@ def _wand_one_group(
     exact full BM25 score. theta advances once per window instead of once
     per doc — a LAXER pruning threshold, never a wrong one, so the
     rank-identity gate is unaffected."""
-    qid = int(pdf["qid"].iloc[0])
-    cursors: list[_TermCursor] = []
-    for term, grp in pdf.groupby("term", sort=False):
-        cursors.append(
-            _TermCursor(
-                float(grp["qtf"].iloc[0]), float(grp["idf"].iloc[0]), grp
-            )
-        )
-
-    out_ids: list[np.ndarray] = []
-    out_scores: list[np.ndarray] = []
-    topk = np.empty(0, dtype=np.float64)  # current best-k raw scores
-    theta = -np.inf
-
+    top = _TopK(k)
     while True:
         cursors.sort(key=lambda c: c.cur())
         while cursors and cursors[-1].cur() == _INF:
             cursors.pop()
         if not cursors:
             break
+        theta = top.theta
         # --- pivot selection (classic WAND with global U_t) ---
         acc = 0.0
         pivot_idx = -1
@@ -352,205 +445,20 @@ def _wand_one_group(
         sc_parts: list[np.ndarray] = []
         for c in cursors:
             if c.might_have_upto(hi):
-                d, s = c.take_upto(hi, k1, b, avgdl)
+                d, s = c.take_upto(hi)
                 if d.size:
                     ids_parts.append(d)
                     sc_parts.append(s)
         if not ids_parts:
             continue  # defensive; lagging guarantees >=1 posting
-        ids = np.concatenate(ids_parts)
-        scs = np.concatenate(sc_parts)
-        uids, inv = np.unique(ids, return_inverse=True)
+        uids, inv = np.unique(np.concatenate(ids_parts), return_inverse=True)
         sums = np.zeros(uids.size, dtype=np.float64)
-        np.add.at(sums, inv, scs)
-        out_ids.append(uids)
-        out_scores.append(sums)
-        merged = np.concatenate([topk, sums])
-        if merged.size >= k:
-            topk = np.partition(merged, merged.size - k)[merged.size - k :]
-            theta = topk[0]
-        else:
-            topk = merged
-
-    if not out_ids:
-        return _empty_out(emit_rank)
-    all_ids = np.concatenate(out_ids)
-    all_scores = np.concatenate(out_scores)
-    cutoff = (theta if topk.size == k else -np.inf) - _MARGIN
-    keep = all_scores >= cutoff
-    return _finalize_group(qid, all_ids[keep], all_scores[keep], k, emit_rank)
+        np.add.at(sums, inv, np.concatenate(sc_parts))
+        top.add(uids, sums)
+    return top.candidates()
 
 
-def _refresh_matched_stats(
-    matched: DataFrame, qterms: DataFrame, bound_scale: float
-) -> DataFrame:
-    """Overlay QUERY-TIME term statistics onto the matched block rows.
-
-    Block rows persist the idf and max_score computed at ENCODE time. After
-    an incremental compaction (streaming/ingest.py) those are stale for
-    pre-existing blocks: df and N grew (idf moved) and avgdl drifted (the
-    block-max tf_norm bound moved). Rewriting every block row per
-    compaction would be O(corpus) — the point of incremental merge is not
-    to — so staleness is corrected here, per matched row, at query time:
-
-    * scoring idf: if qterms carries ``idf_q`` (the CURRENT dictionary
-      value), it replaces the stored idf outright — scores become exactly
-      the from-scratch values, because the payload (docids/tfs/doclens) is
-      statistics-independent.
-    * block-max bound: stored max_score = idf_enc * max_tf_norm(avgdl_enc).
-      Dividing by the stored idf recovers max_tf_norm (to 1 ulp, absorbed
-      by the WAND pruning margin), re-multiplying by idf_q refreshes the
-      idf factor, and ``bound_scale`` covers avgdl drift: tf_norm is
-      increasing in avgdl with ratio tf_norm(a2)/tf_norm(a1) <= a2/a1 for
-      a2 > a1 (the k1(1-b)+tf term only shrinks the ratio), so scaling by
-      max(1, avgdl_now / min_enc_avgdl) keeps every stored bound a valid
-      upper bound — laxer for newer segments, never wrong.
-    """
-    if "idf_q" in qterms.columns:
-        matched = matched.withColumn(
-            "max_score",
-            F.col("max_score") / F.col("idf") * F.col("idf_q") * F.lit(bound_scale),
-        ).withColumn("idf", F.col("idf_q")).drop("idf_q")
-    elif bound_scale != 1.0:
-        matched = matched.withColumn(
-            "max_score", F.col("max_score") * F.lit(bound_scale)
-        )
-    return matched
-
-
-def _attach_query_terms_literal(
-    blocks: DataFrame, qt_rows: list[tuple], with_n_terms: bool = False
-) -> DataFrame:
-    """Literal-map replacement for ``blocks ⋈ broadcast(qterms)`` when the
-    query side is driver-known and small (the interactive ≤32-distinct-term
-    case): a ``map<term, array<struct<qid, qtf[, n_terms]>>>`` literal is
-    compiled into the plan and exploded per matching block row — pure
-    whole-stage codegen, NO BroadcastExchange and NO broadcast-build job
-    (a broadcast built even from a LocalRelation still schedules one
-    1-task job per query DAG; measured ~0.1 s of the per-query serving
-    floor). Inner-join semantics are preserved exactly: the caller has
-    already filtered blocks to the query's terms, and an (impossible)
-    missing map key would explode to zero rows just like a join miss.
-
-    ``with_n_terms`` additionally carries each qid's DISTINCT-term count
-    (computed driver-side) — the conjunctive executor's guard — replacing
-    wand_intersect_topk's qn aggregation+join subtree.
-
-    The whole map is rendered as ONE SQL expression string (terms are
-    ``[a-z0-9]+`` by the frozen tokenizer, so no quoting hazards): the
-    column-object formulation costs 2 py4j round trips per literal, which
-    at 30 terms × a few qids is a measurable slice of the ~0.1 s hot-query
-    driver floor; ``F.expr`` is a single round trip parsed JVM-side."""
-    from collections import defaultdict
-
-    per_term: dict[str, list[tuple]] = defaultdict(list)
-    if with_n_terms:
-        n_terms: dict[int, int] = defaultdict(int)
-        for qid, _term, _qtf in qt_rows:
-            n_terms[qid] += 1
-        for qid, term, qtf in qt_rows:
-            per_term[term].append((qid, qtf, n_terms[qid]))
-    else:
-        for qid, term, qtf in qt_rows:
-            per_term[term].append((qid, qtf))
-
-    def entry(vals: tuple) -> str:
-        s = f"named_struct('qid',{int(vals[0])}L,'qtf',{int(vals[1])}L"
-        if with_n_terms:
-            s += f",'n_terms',{int(vals[2])}L"
-        return s + ")"
-
-    map_sql = ",".join(
-        f"'{term}',array({','.join(entry(v) for v in vals)})"
-        for term, vals in per_term.items()
-    )
-    gen = F.expr(f"explode(map({map_sql})[term])").alias("_q")
-    cols = ["_q.qid", "_q.qtf"] + (["_q.n_terms"] if with_n_terms else [])
-    return blocks.select("*", gen).select(*blocks.columns, *cols)
-
-
-def wand_topk(
-    blocks: DataFrame,
-    qterms: DataFrame | None,
-    cfg: EngineConfig = EngineConfig(),
-    avgdl: float = 1.0,
-    k: int | None = None,
-    bound_scale: float = 1.0,
-    fused: bool = False,
-    qt_literal: list[tuple] | None = None,
-) -> DataFrame:
-    """blocks (codec_blocks.BLOCK_SCHEMA) × qterms (qid, term, qtf) →
-    (qid, rank, doc_id, score[rounded 6dp]).
-
-    qterms is tiny → broadcast; the join's term equi-condition is what
-    Catalyst pushes into the block-table scan (partition pruning on
-    term_bucket + min/max on term).
-
-    ``qterms`` may carry an ``idf_q`` column and ``bound_scale`` may exceed
-    1.0 on incrementally-compacted indexes — see _refresh_matched_stats.
-
-    ``fused=True`` is the single-doc-bucket fast path (the caller must
-    guarantee every block row lives in ONE bucket): each (qid, bucket)
-    group then spans the query's whole doc space, ranks are final inside
-    the group (_finalize_group), and the ranking-window stage — a full
-    extra exchange+sort on a sub-second DAG — disappears. Serving-latency
-    lever; identical output by construction.
-
-    ``qt_literal``: the raw (qid, term, qtf) rows when they are known
-    driver-side — the join is then compiled as a literal map attach
-    (_attach_query_terms_literal; no broadcast job), and a SINGLE-query
-    call groups by ``bucket`` alone (qid is constant, so the grouping is
-    identical) — against a bucket-partitioned hot cache that removes the
-    groupBy Exchange from the plan entirely."""
-    k = k or cfg.top_k
-    if qt_literal is not None and (
-        qterms is None or "idf_q" not in qterms.columns
-    ):
-        matched = _attach_query_terms_literal(blocks, qt_literal)
-        single_qid = len({r[0] for r in qt_literal}) == 1
-    else:
-        matched = _refresh_matched_stats(
-            blocks.join(F.broadcast(qterms), "term"), qterms, bound_scale
-        )
-        single_qid = False
-    group_cols = ["bucket"] if single_qid else ["qid", "bucket"]
-    if not single_qid:
-        # multi-query: spread (qid, bucket) groups across tasks explicitly.
-        # Without this, a hot cache partitioned by bucket alone (load_hot)
-        # would legally satisfy the grouping and serialize every query's
-        # group for a bucket into one task — correct but a batched-suite
-        # parallelism regression. Cold paths pay the same exchange the
-        # planner would have inserted implicitly; the groupBy below reuses
-        # this partitioning, so there is never a second one.
-        matched = matched.repartition("qid", "bucket")
-    if fused:
-        ranked = matched.groupBy(*group_cols).applyInPandas(
-            lambda pdf: _wand_one_group(
-                pdf, k, cfg.k1, cfg.b, avgdl, emit_rank=True
-            ),
-            WAND_RANKED_SCHEMA,
-        )
-        return ranked.select(
-            "qid", "rank", "doc_id", F.round("score", 6).alias("score")
-        )
-    per_bucket = matched.groupBy(*group_cols).applyInPandas(
-        lambda pdf: _wand_one_group(pdf, k, cfg.k1, cfg.b, avgdl),
-        WAND_OUT_SCHEMA,
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.desc(F.round("score", 6)), F.asc("doc_id")
-    )
-    return (
-        per_bucket.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", F.round("score", 6).alias("score"))
-    )
-
-
-def _intersect_one_group(
-    pdf: pd.DataFrame, k: int, k1: float, b: float, avgdl: float,
-    emit_rank: bool = False,
-) -> pd.DataFrame:
+def _intersect(cursors: list[_TermCursor], k: int) -> tuple[np.ndarray, np.ndarray]:
     """Skip-pointer posting-list INTERSECTION with BM25 scoring — the
     conjunctive executor the north rule names explicitly. Zig-zag shape:
     the rarest term drives block by block; every other cursor skips to the
@@ -559,41 +467,23 @@ def _intersect_one_group(
     filtered with vectorized membership tests. Block-max pruning applies
     to the DRIVE block: if its bound plus the other terms' global bounds
     cannot reach the running top-k threshold, the whole block is skipped
-    undecoded.
+    undecoded. The caller has already checked that every query term has a
+    cursor in this bucket (the n_terms guard).
 
     Exhaustive referee: operators/bm25.bm25_topk_conjunctive (rank
     identity gated in tests/test_wand.py)."""
-    qid = int(pdf["qid"].iloc[0])
-    n_terms = int(pdf["n_terms"].iloc[0])
-    cursors: list[_TermCursor] = []
-    for term, grp in pdf.groupby("term", sort=False):
-        cursors.append(
-            _TermCursor(
-                float(grp["qtf"].iloc[0]), float(grp["idf"].iloc[0]), grp
-            )
-        )
-    empty = _empty_out(emit_rank)
-    # a query term with NO blocks in this doc range (or zero df anywhere)
-    # makes the intersection empty by definition
-    if len(cursors) < n_terms:
-        return empty
-
     drive = min(cursors, key=lambda c: c.total)
     others = [c for c in cursors if c is not drive]
     others_ub = sum(c.ub for c in others)
-    out_ids: list[np.ndarray] = []
-    out_scores: list[np.ndarray] = []
-    topk = np.empty(0, dtype=np.float64)
-    theta = -np.inf
-
-    while drive.bi < len(drive.payloads):  # block-level test: no decode
-        if drive.block_ub() + others_ub < theta - _MARGIN:
+    top = _TopK(k)
+    while drive.bi < drive.n:  # block-level test: no decode
+        if drive.block_ub() + others_ub < top.theta - _MARGIN:
             # skip the whole drive block via its skip pointer — the block
             # pointer moves without decoding this block OR the next one
             drive.shallow_seek(drive.block_last() + 1)
             continue
         hi = drive.block_last()
-        alive, acc = drive.take_upto(hi, k1, b, avgdl)  # = the current block
+        alive, acc = drive.take_upto(hi)  # = the current block
         exhausted = False
         for c in others:
             if alive.size == 0:
@@ -602,7 +492,7 @@ def _intersect_one_group(
             if c.cur() == _INF:
                 exhausted = True
                 break
-            ids_c, sc_c = c.take_upto(hi, k1, b, avgdl)
+            ids_c, sc_c = c.take_upto(hi)
             if ids_c.size == 0:
                 alive = alive[:0]
                 break
@@ -613,99 +503,143 @@ def _intersect_one_group(
         if exhausted:
             break  # some term has no postings left — no further intersections
         if alive.size:
-            out_ids.append(alive)
-            out_scores.append(acc)
-            merged = np.concatenate([topk, acc])
-            if merged.size >= k:
-                topk = np.partition(merged, merged.size - k)[merged.size - k :]
-                theta = topk[0]
-            else:
-                topk = merged
-
-    if not out_ids:
-        return empty
-    all_ids = np.concatenate(out_ids)
-    all_scores = np.concatenate(out_scores)
-    cutoff = (theta if topk.size == k else -np.inf) - _MARGIN
-    keep = all_scores >= cutoff
-    return _finalize_group(qid, all_ids[keep], all_scores[keep], k, emit_rank)
+            top.add(alive, acc)
+    return top.candidates()
 
 
-def wand_intersect_topk(
+def bucket_executor(
+    qt_rows: list[tuple],
+    k: int,
+    k1: float,
+    b: float,
+    avgdl: float,
+    mode: str = "topk",
+    emit_rank: bool = False,
+    idf_now: dict[str, float] | None = None,
+    bound_scale: float = 1.0,
+) -> Callable[[pa.Table], pa.Table]:
+    """The per-doc-bucket function: one Arrow table of a bucket's block
+    rows (EXEC_COLS) → every query's candidates in that bucket
+    (WAND_OUT_SCHEMA, or WAND_RANKED_SCHEMA when ``emit_rank``).
+
+    ``qt_rows`` are the batch's (qid, term, qtf) rows; they travel in the
+    closure, so no query side is joined into the DAG. A query's rows are
+    summed per term, and its distinct-term count is the conjunctive
+    guard: in "intersect" mode a query with a term that has no blocks in
+    this bucket (absent from the corpus, or just from this doc range) is
+    empty here. Used by IndexReader.search (groupBy(bucket).applyInArrow)
+    and, in the driver, by IndexReader.search_local."""
+    queries: dict[int, dict[str, float]] = {}
+    for qid, term, qtf in qt_rows:
+        q = queries.setdefault(int(qid), {})
+        q[term] = q.get(term, 0.0) + float(qtf)
+    loop = _intersect if mode == "intersect" else _wand
+    schema = pa.schema(
+        [("qid", pa.int64())]
+        + ([("rank", pa.int32())] if emit_rank else [])
+        + [("doc_id", pa.int64()), ("score", pa.float64())]
+    )
+
+    def run(table: pa.Table) -> pa.Table:
+        shared = _term_blocks(table, (k1, b, avgdl), idf_now, bound_scale)
+        parts: list[dict[str, np.ndarray]] = []
+        for qid, qterms in queries.items():
+            cursors = [_TermCursor(qtf, shared[t]) for t, qtf in qterms.items() if t in shared]
+            if not cursors or (mode == "intersect" and len(cursors) < len(qterms)):
+                continue
+            ranks, ids, scores = _finalize(*loop(cursors, k), k, emit_rank)
+            parts.append(
+                {"qid": np.full(ids.size, qid, dtype=np.int64), "rank": ranks,
+                 "doc_id": ids, "score": scores}
+            )
+        return pa.table(
+            [
+                pa.array(np.concatenate([p[f.name] for p in parts]) if parts else [], f.type)
+                for f in schema
+            ],
+            schema=schema,
+        )
+
+    return run
+
+
+def rank_candidates(cand: pa.Table, k: int) -> list[tuple]:
+    """Driver-side merge of per-bucket candidates (WAND_OUT_SCHEMA) into
+    final (qid, rank, doc_id, score rounded to 6 dp) rows — the same total
+    order as the distributed ranking window."""
+    qids = cand.column("qid").to_numpy()
+    ids = cand.column("doc_id").to_numpy()
+    scores = cand.column("score").to_numpy()
+    rows = []
+    for qid in np.unique(qids).tolist():
+        m = qids == qid
+        ranks, top_ids, top_scores = _finalize(ids[m], scores[m], k, emit_rank=True)
+        rows.extend(
+            zip([qid] * ranks.size, ranks.tolist(), top_ids.tolist(),
+                _exact_round6(top_scores).tolist())
+        )
+    return rows
+
+
+def wand_topk(
     blocks: DataFrame,
-    qterms: DataFrame | None,
+    qt_rows: list[tuple],
     cfg: EngineConfig = EngineConfig(),
     avgdl: float = 1.0,
     k: int | None = None,
-    bound_scale: float = 1.0,
+    mode: str = "topk",
     fused: bool = False,
-    qt_literal: list[tuple] | None = None,
+    idf_now: dict[str, float] | None = None,
+    bound_scale: float = 1.0,
+    max_inlist_terms: int = 32,
 ) -> DataFrame:
-    """Conjunctive top-k over the block table: same distribution shape as
-    wand_topk (broadcast query side, per-(qid, doc-bucket) groups, final
-    ranking window), with the zig-zag intersection executor per group.
-    Correct across buckets because a doc lives in exactly ONE doc-range
-    bucket: its intersection membership is decidable entirely within its
-    bucket given the query's full distinct-term count (n_terms, attached
-    to every row of the broadcast query side).
+    """blocks (codec_blocks.BLOCK_SCHEMA) × driver-known (qid, term, qtf)
+    rows → (qid, rank, doc_id, score[rounded 6dp]).
 
-    ``idf_q``/``bound_scale`` freshness overlay: see _refresh_matched_stats
-    (n_terms counts DISTINCT query terms from the raw qterms rows, so the
-    overlay column never affects the conjunction guard).
+    ``mode``: "topk" (disjunctive block-max WAND) or "intersect"
+    (conjunctive: docs must contain every distinct query term — the
+    zig-zag executor). Correct across buckets because a doc lives in
+    exactly ONE doc-range bucket, so its conjunction membership is
+    decidable entirely within its bucket.
 
-    ``fused``: single-doc-bucket fast path, see wand_topk.
-    ``qt_literal``: driver-known query rows — literal map attach carrying
-    the driver-computed n_terms, see wand_topk (the qn aggregation+join
-    subtree disappears with it)."""
+    The block rows are cut to the batch's terms before the Python call:
+    an In(term, …) filter (pushed into the parquet reader: row-group
+    pruning via min/max) for up to ``max_inlist_terms`` distinct terms,
+    else a broadcast left-semi join, so a batch of thousands of distinct
+    queries never compiles a giant IN list into the scan (VERDICT r2
+    item 6).
+
+    ``idf_now`` / ``bound_scale``: query-time statistics for an
+    incrementally-compacted index, see _term_blocks.
+
+    ``fused=True`` is the single-doc-bucket fast path (the caller must
+    guarantee every block row lives in ONE bucket): the bucket then spans
+    every query's whole doc space, ranks are final inside the group, and
+    the ranking-window stage — a full extra exchange+sort — disappears.
+    Identical output by construction."""
     k = k or cfg.top_k
-    if qt_literal is not None and (
-        qterms is None or "idf_q" not in qterms.columns
-    ):
-        matched = _attach_query_terms_literal(blocks, qt_literal, with_n_terms=True)
-        single_qid = len({r[0] for r in qt_literal}) == 1
+    terms = sorted({t for _, t, _ in qt_rows})
+    if len(terms) <= max_inlist_terms:
+        blocks = blocks.where(F.col("term").isin(terms))
     else:
-        qn = qterms.groupBy("qid").agg(F.count("*").alias("n_terms"))
-        qt = qterms.join(qn, "qid")
-        matched = _refresh_matched_stats(
-            blocks.join(F.broadcast(qt), "term"), qt, bound_scale
-        )
-        single_qid = False
-    group_cols = ["bucket"] if single_qid else ["qid", "bucket"]
-    if not single_qid:
-        # see wand_topk: keep batched groups spread across tasks
-        matched = matched.repartition("qid", "bucket")
-    if fused:
-        ranked = matched.groupBy(*group_cols).applyInPandas(
-            lambda pdf: _intersect_one_group(
-                pdf, k, cfg.k1, cfg.b, avgdl, emit_rank=True
-            ),
-            WAND_RANKED_SCHEMA,
-        )
-        return ranked.select(
-            "qid", "rank", "doc_id", F.round("score", 6).alias("score")
-        )
-    per_bucket = matched.groupBy(*group_cols).applyInPandas(
-        lambda pdf: _intersect_one_group(pdf, k, cfg.k1, cfg.b, avgdl),
-        WAND_OUT_SCHEMA,
+        wanted = local_df(blocks.sparkSession, [(t,) for t in terms], "term string")
+        blocks = blocks.join(F.broadcast(wanted), "term", "left_semi")
+    fn = bucket_executor(
+        qt_rows, k, cfg.k1, cfg.b, avgdl, mode, fused, idf_now, bound_scale
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.desc(F.round("score", 6)), F.asc("doc_id")
+    out = blocks.select(*EXEC_COLS).groupBy("bucket").applyInArrow(
+        fn, WAND_RANKED_SCHEMA if fused else WAND_OUT_SCHEMA
     )
-    return (
-        per_bucket.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("qid", "rank", "doc_id", F.round("score", 6).alias("score"))
-    )
+    if not fused:
+        w = Window.partitionBy("qid").orderBy(
+            F.desc(F.round("score", 6)), F.asc("doc_id")
+        )
+        out = out.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return out.select("qid", "rank", "doc_id", F.round("score", 6).alias("score"))
 
 
-def wand_intersect_inline(
-    spark: SparkSession,
-    docs: DataFrame,
-    queries: DataFrame,
-    cfg: EngineConfig = EngineConfig(),
-) -> DataFrame:
-    """End-to-end conjunctive variant of wand_topk_inline."""
-    from colbert_jl_spark.operators.bm25 import query_terms
+def _inline_blocks(docs: DataFrame, cfg: EngineConfig) -> tuple[DataFrame, float]:
+    """Build the block table in-flight → (blocks, avgdl)."""
     from colbert_jl_spark.operators.codec_blocks import (
         posting_blocks,
         term_postings_with_doclen,
@@ -720,8 +654,24 @@ def wand_intersect_inline(
     pdl = term_postings_with_doclen(docs, cfg).cache()
     dictionary = term_df(pdl.select("term", "doc_id", "tf")).cache()
     blocks = posting_blocks(pdl, dictionary, stats["n_docs"], stats["avgdl"], cfg)
-    qt = query_terms(queries, cfg)
-    return wand_intersect_topk(blocks, qt, cfg, stats["avgdl"])
+    return blocks, stats["avgdl"]
+
+
+def _collected_query_rows(queries: DataFrame, cfg: EngineConfig) -> list[tuple]:
+    from colbert_jl_spark.operators.bm25 import query_terms
+
+    return [(int(r.qid), r.term, int(r.qtf)) for r in query_terms(queries, cfg).collect()]
+
+
+def wand_intersect_inline(
+    spark: SparkSession,
+    docs: DataFrame,
+    queries: DataFrame,
+    cfg: EngineConfig = EngineConfig(),
+) -> DataFrame:
+    """End-to-end conjunctive variant of wand_topk_inline."""
+    blocks, avgdl = _inline_blocks(docs, cfg)
+    return wand_topk(blocks, _collected_query_rows(queries, cfg), cfg, avgdl, mode="intersect")
 
 
 def wand_topk_inline(
@@ -733,20 +683,8 @@ def wand_topk_inline(
     """End-to-end: build the block index in-flight, then run WAND.
 
     The persisted-index path (plans/build.py) writes the same block table
-    to parquet and reads it back; this inline variant keeps the whole plan
-    lazy for the correctness gate."""
-    from colbert_jl_spark.operators.bm25 import query_terms
-    from colbert_jl_spark.operators.codec_blocks import (
-        posting_blocks,
-        term_postings_with_doclen,
-    )
-    from colbert_jl_spark.operators.docstats import corpus_stats, doclens
-    from colbert_jl_spark.operators.postings import term_df
-
-    stats = corpus_stats(doclens(docs, cfg))
-    # cache rationale: see wand_intersect_inline (collision-salt probes)
-    pdl = term_postings_with_doclen(docs, cfg).cache()
-    dictionary = term_df(pdl.select("term", "doc_id", "tf")).cache()
-    blocks = posting_blocks(pdl, dictionary, stats["n_docs"], stats["avgdl"], cfg)
-    qt = query_terms(queries, cfg)
-    return wand_topk(blocks, qt, cfg, stats["avgdl"])
+    to parquet and reads it back; this inline variant keeps the block side
+    lazy for the correctness gate (the small query-term frame is collected
+    to the driver, as IndexReader.search tokenizes driver-side)."""
+    blocks, avgdl = _inline_blocks(docs, cfg)
+    return wand_topk(blocks, _collected_query_rows(queries, cfg), cfg, avgdl)

@@ -564,9 +564,10 @@ class IndexReader:
     the reader (on Iceberg, snapshot isolation removes this window)."""
 
     # above this many distinct terms in one search() call, the per-term
-    # In(term, …) scan filter is skipped (the broadcast join prunes
-    # instead) — see the comment in search(). 32 covers every interactive
-    # query; only bulk batched suites cross it.
+    # In(term, …) scan filter gives way to a broadcast semi-join
+    # (wand.wand_topk) and the zero-df dictionary lookup is skipped — see
+    # search(). 32 covers every interactive query; only bulk batched
+    # suites cross it.
     max_inlist_terms: int = 32
 
     # search_local collects the query terms' pruned block rows to the
@@ -644,22 +645,21 @@ class IndexReader:
         for the cache misses, zero actions when everything is cached.
         Missing terms (zero df / not in the vocabulary) cache as (0, 0.0).
         The cache is dropped whenever refresh() sees a new plan."""
-        from colbert_jl_spark.functions.hashing import spark_pmod_hash
-
         need = [t for t in terms if t not in self._term_stats]
         if not need:
             return
-        tp = self.plan.get("term_partitions")
-        dic = self.dictionary.where(F.col("term").isin(need))
-        if tp and "term_bucket" in dic.columns:
-            nb = sorted({spark_pmod_hash(t, tp) for t in need})
-            dic = dic.where(F.col("term_bucket").isin(nb))
         found = {
             r.term: (int(r.df), float(r.idf))
-            for r in dic.select("term", "df", "idf").collect()
+            for r in self._dictionary_lookup(need).collect()
         }
         for t in need:
             self._term_stats[t] = found.get(t, (0, 0.0))
+
+    def _dictionary_lookup(self, terms) -> DataFrame:
+        """(term, df, idf) of ``terms``: a term- and term_bucket-pruned
+        dictionary scan."""
+        dic = self.dictionary.where(F.col("term").isin(list(terms)))
+        return self._term_bucket_filter(dic, terms).select("term", "df", "idf")
 
     def release(self) -> "IndexReader":
         """Drop the hot block cache (the load_hot pin). Call when retiring
@@ -724,6 +724,53 @@ class IndexReader:
     def lineage(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.index_path, "lineage"))
 
+    def _query_rows(self, queries: DataFrame | list[tuple[int, str]]) -> list[tuple]:
+        """(qid, term, qtf) rows, tokenized DRIVER-side (tiny by definition;
+        the reference also encodes queries driver-side,
+        reference src/modelling/checkpoint.jl:271-301) with the python
+        mirror of the frozen tokenizer. ``queries`` may be a DataFrame
+        (qid, query) — collected, it is driver data anyway — or a list of
+        (qid, query) pairs."""
+        from collections import Counter
+
+        from colbert_jl_spark.functions.tokenizer import py_terms
+
+        if isinstance(queries, DataFrame):
+            queries = [(r["qid"], r["query"]) for r in queries.collect()]
+        return [
+            (int(qid), term, int(qtf))
+            for qid, qtext in queries
+            for term, qtf in Counter(py_terms(qtext, None, self.cfg.stopwords)).items()
+        ]
+
+    def _term_bucket_filter(self, df: DataFrame, terms) -> DataFrame:
+        """Prune a term_bucket-partitioned scan to the terms' partition
+        directories (an IN over at most term_partitions ints — the nprobe
+        analogue, reference ranking.jl:30-36); the bucket ids come from the
+        pure-python xxhash64 clone, so no job runs."""
+        from colbert_jl_spark.functions.hashing import spark_pmod_hash
+
+        tp = self.plan.get("term_partitions")
+        if not tp or "term_bucket" not in df.columns:
+            return df
+        return df.where(
+            F.col("term_bucket").isin(sorted({spark_pmod_hash(t, tp) for t in terms}))
+        )
+
+    def _incremental_stats(self, terms) -> tuple[dict[str, float] | None, float]:
+        """(idf_now, bound_scale) for the executor: on an incrementally
+        compacted index the block rows carry ENCODE-time idf/max_score,
+        stale after df/N/avgdl moved, so the CURRENT dictionary idf comes
+        from the driver term-stats cache and block-max bounds widen for
+        avgdl drift (see wand._term_blocks). Batch-built indexes: (None,
+        1.0), and no dictionary lookup."""
+        inc = self.plan.get("incremental")
+        if not inc:
+            return None, 1.0
+        self._ensure_term_stats(terms)
+        idf_now = {t: self._term_stats[t][1] for t in terms}
+        return idf_now, max(1.0, self.plan["avgdl"] / inc["min_enc_avgdl"])
+
     def search(
         self,
         queries: DataFrame | list[tuple[int, str]],
@@ -734,119 +781,51 @@ class IndexReader:
         the ``search(searcher, query, k)`` analogue
         (reference src/searching.jl:93-128).
 
-        Queries are tokenized DRIVER-side (tiny by definition; the
-        reference also encodes queries driver-side,
-        reference src/modelling/checkpoint.jl:271-301) with the python
-        mirror of the frozen tokenizer, and term_bucket partition filters
-        are computed with the pure-python xxhash64 clone. The
-        (term_bucket, term) IN-filters prune partition DIRECTORIES and
-        parquet row groups — the engine's nprobe analogue (reference
-        ranking.jl:30-36). Terms this reader has never seen cost ONE tiny
-        term_bucket-pruned dictionary lookup first (r7: it feeds the
-        zero-df pruning below and is the same cache search_local's size
-        guard uses); WARM queries run exactly one Spark job — the query
-        DAG itself — and provably-empty queries run none.
-
-        ``queries`` may be a DataFrame (qid, query) — collected, it is
-        driver data anyway — or a list of (qid, query) pairs.
+        Queries are tokenized driver-side (_query_rows) and the
+        (term_bucket, term) filters prune partition DIRECTORIES and
+        parquet row groups. The whole batch then runs as ONE Arrow call
+        per doc bucket (wand.wand_topk), with the query rows in its
+        closure. A WARM call schedules no auxiliary job: only the query
+        DAG (one job on a one-bucket index; AQE adds one per shuffle
+        stage, i.e. the ranking window's) and, above max_inlist_terms,
+        the build of its semi-join broadcast. Provably-empty interactive
+        queries run none.
 
         ``mode``: "topk" (disjunctive block-max WAND, default) or
         "intersect" (conjunctive — docs must contain EVERY query term;
-        the zig-zag skip-pointer executor, wand.wand_intersect_topk)."""
-        from collections import Counter
-
-        from colbert_jl_spark.functions.hashing import spark_pmod_hash
-        from colbert_jl_spark.functions.tokenizer import py_terms
-        from colbert_jl_spark.operators.wand import wand_intersect_topk, wand_topk
+        the zig-zag skip-pointer executor)."""
+        from colbert_jl_spark.operators.wand import wand_topk
 
         self.refresh()
-        if isinstance(queries, DataFrame):
-            queries = [(r["qid"], r["query"]) for r in queries.collect()]
-        qt_rows = []
-        for qid, qtext in queries:
-            for term, qtf in Counter(py_terms(qtext, None, self.cfg.stopwords)).items():
-                qt_rows.append((int(qid), term, int(qtf)))
+        qt_rows = self._query_rows(queries)
         out_schema = "qid long, rank int, doc_id long, score double"
-        if not qt_rows:
-            return local_df(self.spark, [], out_schema)
         terms = sorted({t for _, t, _ in qt_rows})
-        # zero-df pruning from the driver-side term-stats cache (the same
-        # cache search_local's size guard uses; cache-missed terms cost
-        # ONE term_bucket-pruned dictionary lookup, then repeat queries
-        # run zero auxiliary jobs): a term with df == 0 has no block rows
-        # by construction, so dropping its qt rows is a no-op on the
-        # result — and a query whose terms are ALL absent (or, in
-        # intersect mode, ANY absent: the conjunction guard empties that
-        # qid) returns without scheduling a DAG at all.
-        self._ensure_term_stats(terms)
-        zero = {t for t in terms if self._term_stats[t][0] == 0}
-        if zero:
+        # zero-df pruning for interactive queries (≤ max_inlist_terms
+        # distinct terms), from the driver-side term-stats cache: terms
+        # this reader has never seen cost ONE term_bucket-pruned
+        # dictionary lookup, and a query whose terms are ALL absent (or,
+        # in intersect mode, ANY absent: the conjunction guard empties
+        # that qid) returns without scheduling a DAG at all. A bulk batch
+        # skips the lookup: an absent term has no block rows, so the
+        # executor already ignores it (or, in intersect mode, empties its
+        # query through the distinct-term guard).
+        if terms and len(terms) <= self.max_inlist_terms:
+            self._ensure_term_stats(terms)
+            zero = {t for t in terms if self._term_stats[t][0] == 0}
             if mode == "intersect":
                 dead = {q for q, t, _ in qt_rows if t in zero}
                 qt_rows = [r for r in qt_rows if r[0] not in dead]
             else:
                 qt_rows = [r for r in qt_rows if r[1] not in zero]
-            if not qt_rows:
-                return local_df(self.spark, [], out_schema)
             terms = sorted({t for _, t, _ in qt_rows})
-        blocks = self.blocks
-        # interactive queries (few distinct terms): an In(term, …) filter
-        # pushes into the parquet reader and prunes row groups via min/max
-        # stats. A BATCHED suite of thousands of distinct queries would
-        # compile a giant IN list into every scan instead (VERDICT r2 item
-        # 6) — above the threshold the broadcast hash join against qt is
-        # the term filter (Catalyst still prunes via the join), and only
-        # the term_bucket DIRECTORY pruning stays as an IN list (bounded by
-        # term_partitions ints — never giant).
-        if len(terms) <= self.max_inlist_terms:
-            blocks = blocks.where(F.col("term").isin(terms))
-        tp = self.plan.get("term_partitions")
-        buckets = sorted({spark_pmod_hash(t, tp) for t in terms}) if tp else None
-        if buckets is not None:
-            blocks = blocks.where(F.col("term_bucket").isin(buckets))
-        executor = wand_intersect_topk if mode == "intersect" else wand_topk
-        # incrementally-compacted index: pre-existing block rows carry
-        # ENCODE-time idf/max_score, stale after df/N/avgdl moved. Attach
-        # the CURRENT dictionary idf to the query side (a pushed-down,
-        # term_bucket-PRUNED scan inside the same query DAG — the r4
-        # bucket-partitioned dictionary prunes it like the block table)
-        # and widen block-max bounds for avgdl drift — see
-        # wand._refresh_matched_stats. Batch-built indexes skip this
-        # entirely (no extra scan on the hot path).
-        bound_scale = 1.0
-        inc = self.plan.get("incremental")
-        # Interactive case (≤ max_inlist_terms distinct terms, no
-        # incremental idf overlay): the query side stays a driver-side
-        # LITERAL — no qterms DataFrame is even built; the executor
-        # compiles it as a map expression instead of a broadcast join
-        # (wand._attach_query_terms_literal: no broadcast-build job), and
-        # single-query calls group by bucket alone so the
-        # bucket-partitioned hot cache satisfies the grouping with NO
-        # Exchange (load_hot).
-        use_literal = (not inc) and len(terms) <= self.max_inlist_terms
-        qt = (
-            None
-            if use_literal
-            else local_df(self.spark, qt_rows, "qid long, term string, qtf long")
-        )
-        if inc:
-            dic = self.dictionary
-            if buckets is not None and "term_bucket" in dic.columns:
-                dic = dic.where(F.col("term_bucket").isin(buckets))
-            qt = qt.join(
-                dic.select("term", F.col("idf").alias("idf_q")),
-                "term",
-                "left",
-            )
-            bound_scale = max(1.0, self.plan["avgdl"] / inc["min_enc_avgdl"])
-        # n_terms for the intersect guard is computed from the RAW query
-        # rows BEFORE the block join, so zero-df terms still (correctly)
-        # empty their conjunctive query — on the literal path the executor
-        # counts them driver-side from qt_rows for the same reason
-        return executor(
-            blocks, qt, self.cfg, self.plan["avgdl"], k,
-            bound_scale=bound_scale, fused=self._single_bucket(),
-            qt_literal=qt_rows if use_literal else None,
+        if not qt_rows:
+            return local_df(self.spark, [], out_schema)
+        idf_now, bound_scale = self._incremental_stats(terms)
+        return wand_topk(
+            self._term_bucket_filter(self.blocks, terms), qt_rows, self.cfg,
+            self.plan["avgdl"], k, mode=mode, fused=self._single_bucket(),
+            idf_now=idf_now, bound_scale=bound_scale,
+            max_inlist_terms=self.max_inlist_terms,
         )
 
     def _single_bucket(self) -> bool:
@@ -880,10 +859,10 @@ class IndexReader:
     ) -> DataFrame:
         """Latency-mode search: ONE data-path Spark action (the pruned
         block fetch — a filter+collect on the cached/parquet block table,
-        no shuffle, no Python workers), then the SAME per-group
-        WAND/intersect executors run in the driver process and the
-        k·buckets-row merge happens driver-side (VERDICT r2 item 9's
-        sketch).
+        no shuffle, no Python workers), then the SAME per-bucket executor
+        as search() (wand.bucket_executor) runs in the driver process,
+        one call per bucket, and the k·buckets-row merge happens
+        driver-side (VERDICT r2 item 9's sketch).
 
         Query terms not yet seen by this reader cost ONE extra tiny
         auxiliary action first: a term_bucket-pruned dictionary lookup
@@ -899,36 +878,23 @@ class IndexReader:
         Searcher holds the ENTIRE compressed index in driver RAM
         (reference src/loaders.jl:91-113); this mode holds one query's
         slice of it, transiently (and the guard keeps "slice" honest)."""
-        from collections import Counter
-
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        from colbert_jl_spark.functions.hashing import spark_pmod_hash
-        from colbert_jl_spark.functions.tokenizer import py_terms
         from colbert_jl_spark.operators.wand import (
-            _exact_round6,
-            _intersect_one_group,
-            _wand_one_group,
+            EXEC_COLS,
+            bucket_executor,
+            rank_candidates,
         )
 
         self.refresh()
         k = k or self.cfg.top_k
-        if isinstance(queries, DataFrame):
-            queries = [(r["qid"], r["query"]) for r in queries.collect()]
-        qt_rows = []
-        for qid, qtext in queries:
-            for term, qtf in Counter(py_terms(qtext, None, self.cfg.stopwords)).items():
-                qt_rows.append((int(qid), term, int(qtf)))
+        qt_rows = self._query_rows(queries)
         out_schema = "qid long, rank int, doc_id long, score double"
         if not qt_rows:
             return local_df(self.spark, [], out_schema)
         terms = sorted({t for _, t, _ in qt_rows})
-        tp = self.plan.get("term_partitions")
-
-        # driver-side (df, idf) for the query terms — cache-missed terms
-        # fetched in one pruned scan (see docstring); feeds BOTH the size
-        # guard and the incremental-index idf freshness overlay
         self._ensure_term_stats(terms)
         est = sum(self._term_stats[t][0] for t in terms)
         if est == 0:  # every term absent from the corpus: provably empty
@@ -936,57 +902,21 @@ class IndexReader:
         if est > self.max_local_postings:
             return self.search(queries, k, mode)
 
-        blocks = self.blocks.where(F.col("term").isin(terms))
-        if tp:
-            buckets = sorted({spark_pmod_hash(t, tp) for t in terms})
-            blocks = blocks.where(F.col("term_bucket").isin(buckets))
-        bpdf = blocks.toPandas()  # THE one data-path Spark action
-
-        inc = self.plan.get("incremental")
-        bound_scale = 1.0
-        if inc and len(bpdf):
-            idf_now = {t: self._term_stats[t][1] for t in terms}
-            bound_scale = max(1.0, self.plan["avgdl"] / inc["min_enc_avgdl"])
-            fresh = bpdf["term"].map(idf_now)
-            bpdf["max_score"] = (
-                bpdf["max_score"] / bpdf["idf"] * fresh * bound_scale
-            )
-            bpdf["idf"] = fresh
-
-        qpdf = pd.DataFrame(qt_rows, columns=["qid", "term", "qtf"])
-        n_terms = qpdf.groupby("qid")["term"].nunique()
-        matched = bpdf.merge(qpdf, on="term") if len(bpdf) else bpdf
-        avgdl = self.plan["avgdl"]
-        parts = []
-        if len(matched):
-            for (qid, _bucket), grp in matched.groupby(["qid", "bucket"], sort=False):
-                if mode == "intersect":
-                    grp = grp.assign(n_terms=int(n_terms[qid]))
-                    parts.append(
-                        _intersect_one_group(
-                            grp, k, self.cfg.k1, self.cfg.b, avgdl
-                        )
-                    )
-                else:
-                    parts.append(
-                        _wand_one_group(
-                            grp, k, self.cfg.k1, self.cfg.b, avgdl
-                        )
-                    )
-        cand = (
-            pd.concat(parts, ignore_index=True)
-            if parts
-            else pd.DataFrame({"qid": [], "doc_id": [], "score": []})
+        blocks = self._term_bucket_filter(
+            self.blocks.where(F.col("term").isin(terms)), terms
         )
-        rows = []
-        for qid in sorted(cand["qid"].unique()):
-            g = cand[cand["qid"] == qid]
-            ids = g["doc_id"].to_numpy(dtype="int64")
-            scs = g["score"].to_numpy(dtype="float64")
-            r6 = _exact_round6(scs)
-            sel = np.lexsort((ids, -r6))[:k]
-            for rank, j in enumerate(sel, start=1):
-                rows.append((int(qid), rank, int(ids[j]), float(r6[j])))
+        tbl = blocks.select(*EXEC_COLS).toArrow()  # THE one data-path action
+        idf_now, bound_scale = self._incremental_stats(terms)
+        run = bucket_executor(
+            qt_rows, k, self.cfg.k1, self.cfg.b, self.plan["avgdl"], mode,
+            idf_now=idf_now, bound_scale=bound_scale,
+        )
+        buckets = tbl.column("bucket")
+        cand = [
+            run(tbl.filter(pc.equal(buckets, bk)))
+            for bk in np.unique(buckets.to_numpy()).tolist()
+        ]
+        rows = rank_candidates(pa.concat_tables(cand), k) if cand else []
         return local_df(self.spark, rows, out_schema)
 
     def phrase(self, phrases: list[tuple[int, str]]) -> DataFrame:
@@ -1007,7 +937,6 @@ class IndexReader:
         single query DAG. Output-identical to the inline operator; gated
         in tests/test_phrase.py with plan assertions (positions table
         scanned, never the corpus; one hash Exchange)."""
-        from colbert_jl_spark.functions.hashing import spark_pmod_hash
         from colbert_jl_spark.functions.tokenizer import py_tokens
         from colbert_jl_spark.operators.phrase import (
             phrase_matches_from_positions,
@@ -1027,11 +956,7 @@ class IndexReader:
         if pos is None:
             pos = self._stage_df("positions_dir", "positions")
         if terms:
-            pos = pos.where(F.col("term").isin(terms))
-            tp = self.plan.get("term_partitions")
-            if tp:
-                buckets = sorted({spark_pmod_hash(t, tp) for t in terms})
-                pos = pos.where(F.col("term_bucket").isin(buckets))
+            pos = self._term_bucket_filter(pos.where(F.col("term").isin(terms)), terms)
         anchor = self._phrase_anchor(phrases, pos)
         return phrase_matches_from_positions(
             pos, phrases, self.spark, anchor=anchor
@@ -1124,7 +1049,6 @@ class IndexReader:
         phrase()."""
         import pandas as pd
 
-        from colbert_jl_spark.functions.hashing import spark_pmod_hash
         from colbert_jl_spark.functions.tokenizer import py_tokens
 
         self.refresh()
@@ -1158,11 +1082,7 @@ class IndexReader:
         pos = getattr(self, "_hot_positions", None)
         if pos is None:
             pos = self._stage_df("positions_dir", "positions")
-        pos = pos.where(F.col("term").isin(terms))
-        tp = self.plan.get("term_partitions")
-        if tp:
-            buckets = sorted({spark_pmod_hash(t, tp) for t in terms})
-            pos = pos.where(F.col("term_bucket").isin(buckets))
+        pos = self._term_bucket_filter(pos.where(F.col("term").isin(terms)), terms)
         ppdf = pos.select("term", "doc_id", "positions").toPandas()  # THE action
 
         pt = pd.DataFrame(
@@ -1207,14 +1127,12 @@ class IndexReader:
         (reference src/loaders.jl:91-113), but distributed and optional.
 
         The pin is hash-partitioned by ``bucket`` (the doc-range WAND
-        group key): HashPartitioning(bucket) satisfies the executors'
-        ClusteredDistribution for both (qid, bucket) and the single-query
-        bucket-only grouping, so a single-query search() DAG over a hot
-        reader needs NO Exchange at all — scan → literal attach → local
-        sort → FlatMapGroupsInPandas, one stage (multi-query calls keep
-        the (qid, bucket) exchange: one task per bucket would serialize a
-        batched suite's groups). The repartition runs once, at pin time —
-        never on the per-query path."""
+        group key): HashPartitioning(bucket) satisfies the executor's
+        ClusteredDistribution(bucket), so a search() DAG over a hot reader
+        needs NO hash Exchange at all, single query or batch — scan →
+        term filter → local sort → FlatMapGroupsInArrow, one stage. The
+        repartition runs once, at pin time — never on the per-query
+        path."""
         if not hasattr(self, "_hot_blocks"):
             b = self.blocks.repartition("bucket").cache()
             b.count()  # materialize

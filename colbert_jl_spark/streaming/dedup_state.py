@@ -63,6 +63,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from colbert_jl_spark.config import EngineConfig
+from colbert_jl_spark.streaming.files import link_or_copy
 from colbert_jl_spark.operators.dedup import (
     connected_components,
     minhash_bands,
@@ -419,7 +420,8 @@ class DedupIndex:
         if prior_kv is not None and not legacy_layout:
             # unaffected partitions enter the new version as hardlinks to
             # the previous version's files — zero bytes copied, and the
-            # inode identity is the test gate for "not rewritten"
+            # inode identity is the test gate for "not rewritten" (a
+            # filesystem without hardlinks gets copies, streaming/files.py)
             prior_dir = os.path.join(self.path, st["labels_dir"])
             aff = set(affected_parts)
             for entry in os.listdir(prior_dir):
@@ -432,7 +434,7 @@ class DedupIndex:
                 os.makedirs(dst_part, exist_ok=True)
                 for fname in os.listdir(src):
                     if fname.startswith("part-"):
-                        os.link(
+                        link_or_copy(
                             os.path.join(src, fname),
                             os.path.join(dst_part, fname),
                         )

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from colbert_jl_spark.config import EngineConfig
+from colbert_jl_spark.streaming.files import link_tree
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -356,7 +357,7 @@ def compact_streamed_index(
     the job is O(delta), gated in tests/test_streaming.py. Pre-existing
     block rows keep their encode-time idf/max_score; IndexReader corrects
     both at query time (plan.json carries the ``incremental`` marker with
-    min_enc_avgdl — see plans/build.py and wand._refresh_matched_stats).
+    min_enc_avgdl — see plans/build.py and wand._term_blocks).
     Segments whose doc-id ranges interleave are merge-sorted inside the
     WAND cursor (correct, minus block skipping for touched groups);
     monotone doc-id ingests keep full skipping.
@@ -564,10 +565,8 @@ def compact_streamed_index(
                     if not entry.startswith("term_bucket="):
                         continue
                     if int(entry.split("=", 1)[1]) not in affected:
-                        shutil.copytree(
-                            os.path.join(cur_dir, entry),
-                            os.path.join(new_dir, entry),
-                            copy_function=os.link,
+                        link_tree(
+                            os.path.join(cur_dir, entry), os.path.join(new_dir, entry)
                         )
                 for entry in os.listdir(tmp):
                     if entry.startswith("term_bucket="):
@@ -669,7 +668,7 @@ def compact_streamed_index(
 
     # plan.json: the incremental marker tells IndexReader to overlay fresh
     # idf and widen block-max bounds by avgdl drift (min over every
-    # segment's encode-time avgdl — see wand._refresh_matched_stats)
+    # segment's encode-time avgdl — see wand._term_blocks)
     epoch = int(state["epochs"]) + 1
     min_enc = min(float(state["min_enc_avgdl"]), plan["avgdl"])
     plan["incremental"] = {"epochs": epoch, "min_enc_avgdl": min_enc}
@@ -732,7 +731,7 @@ def minor_compact(
     (term, bucket). When ingested doc ids interleave across epochs (url-
     derived ids do), segment docid ranges overlap and the WAND cursor
     must eagerly decode + merge-sort those groups
-    (operators/wand._TermCursor._merge_overlapping_segments) — correct,
+    (operators/wand._TermBlocks._merge_overlapping_segments) — correct,
     but a streamed head term loses block-max skipping until a major
     compaction. This pass:
 
@@ -880,11 +879,7 @@ def minor_compact(
                 entry.startswith("term_bucket=")
                 and int(entry.split("=", 1)[1]) not in tbs_set
             ):
-                shutil.copytree(
-                    os.path.join(blocks_dir, entry),
-                    os.path.join(new_dir, entry),
-                    copy_function=os.link,
-                )
+                link_tree(os.path.join(blocks_dir, entry), os.path.join(new_dir, entry))
         for entry in os.listdir(tmp):
             if entry.startswith("term_bucket="):
                 os.replace(os.path.join(tmp, entry), os.path.join(new_dir, entry))
@@ -1003,11 +998,7 @@ def compact_positions(
             entry.startswith("term_bucket=")
             and int(entry.split("=", 1)[1]) not in crowded_set
         ):
-            shutil.copytree(
-                os.path.join(cur_dir, entry),
-                os.path.join(new_dir, entry),
-                copy_function=os.link,
-            )
+            link_tree(os.path.join(cur_dir, entry), os.path.join(new_dir, entry))
     for entry in os.listdir(tmp):
         if entry.startswith("term_bucket="):
             os.replace(os.path.join(tmp, entry), os.path.join(new_dir, entry))

@@ -109,6 +109,7 @@ def test_no_per_row_python_anywhere(spark, docs001):
         assert "BatchEvalPython" not in plan
         assert "ArrowEvalPython" not in plan
         assert "FlatMapGroupsInPandas" not in plan
+        assert "FlatMapGroupsInArrow" not in plan
         assert "MapInPandas" not in plan
 
 
@@ -159,7 +160,7 @@ def test_graded_lsh_queries_never_cross_join(spark):
 
 def test_fused_single_bucket_search_has_no_window_stage(spark, docs001, tmp_path):
     """The single-doc-bucket fast path must actually FUSE the ranking
-    window away (VERDICT r2 item 9): the plan ends at the grouped pandas
+    window away (VERDICT r2 item 9): the plan ends at the grouped Arrow
     executor — no Window operator, no post-group exchange. A multi-bucket
     index keeps the window (the cross-bucket merge is required there)."""
     cfg = EngineConfig(block_size=32)  # default min_bucket_docs → 1 bucket
@@ -171,7 +172,7 @@ def test_fused_single_bucket_search_has_no_window_stage(spark, docs001, tmp_path
     # at build time in plan.json
     assert reader.plan["n_buckets"] == 1
     plan = _plan(reader.search([(0, "data table")]))
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
     assert "Window" not in plan, plan
 
     cfg2 = EngineConfig(block_size=32, min_bucket_docs=64)  # multi-bucket
@@ -239,11 +240,13 @@ def test_index_search_prunes_partitions(spark, docs001, tmp_path):
 
 
 def test_incremental_idf_overlay_scan_is_bucket_pruned(spark, docs001, tmp_path):
-    """On an incrementally-compacted index every search carries an extra
-    dictionary scan (the idf_q freshness overlay). The r4 bucketed
-    dictionary must prune that scan to the query terms' term_bucket
-    partition dirs — at a 10⁸-term vocabulary an unpruned overlay would
-    re-read the whole dictionary per query."""
+    """On an incrementally-compacted index every search needs the query
+    terms' CURRENT idf (the freshness overlay). It comes from the reader's
+    driver-side term-stats cache, filled by one dictionary lookup per
+    unseen term — so the search DAG itself scans only the block table, and
+    the lookup must be pruned to the query terms' term_bucket partition
+    dirs: at a 10⁸-term vocabulary an unpruned overlay would re-read the
+    whole dictionary."""
     import json
     import os
 
@@ -260,22 +263,28 @@ def test_incremental_idf_overlay_scan_is_bucket_pruned(spark, docs001, tmp_path)
         json.dump(plan_doc, f)
 
     reader = IndexReader(spark, idx)
-    plan = _formatted(reader.search([(0, "data table")]))
-    # both sources are scanned...
-    assert "/dictionary" in plan and "/blocks" in plan, plan
-    # ...and EVERY scan (block table AND dictionary overlay — formatted
-    # mode puts Location and PartitionFilters on separate lines, so count
-    # pruned scans rather than grepping one line) is term_bucket-pruned
-    pruned = [
-        l for l in plan.splitlines()
-        if "PartitionFilters" in l and "term_bucket" in l and "IN" in l.upper()
-    ]
-    assert len(pruned) >= 2, (pruned, plan)
-    unpruned = [
-        l for l in plan.splitlines()
-        if "PartitionFilters: []" in l
-    ]
-    assert not unpruned, (unpruned, plan)
+    terms = ["data", "table"]
+    lookup = _formatted(reader._dictionary_lookup(terms))
+    search = _formatted(reader.search([(0, "data table")]))
+    # the overlay's idf values came through the term-stats cache...
+    assert set(terms) <= set(reader._term_stats)
+    # ...so the search DAG scans the block table and never the dictionary
+    assert "/blocks" in search and "/dictionary" not in search, search
+    assert "/dictionary" in lookup, lookup
+    # and BOTH scans (formatted mode puts Location and PartitionFilters on
+    # separate lines, so look for pruned vs unpruned filter lines) are
+    # term_bucket-pruned
+    for plan in (lookup, search):
+        pruned = [
+            l for l in plan.splitlines()
+            if "PartitionFilters" in l and "term_bucket" in l and "IN" in l.upper()
+        ]
+        assert pruned, plan
+        unpruned = [
+            l for l in plan.splitlines()
+            if "PartitionFilters: []" in l
+        ]
+        assert not unpruned, (unpruned, plan)
 
 
 def test_connected_components_rounds_are_jvm_joins_only(spark):
@@ -292,6 +301,6 @@ def test_connected_components_rounds_are_jvm_joins_only(spark):
         plan = _plan(step(canon))
         for bad in (
             "BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas",
-            "MapInPandas", "CartesianProduct", "BroadcastNestedLoopJoin",
+            "FlatMapGroupsInArrow", "MapInPandas", "CartesianProduct", "BroadcastNestedLoopJoin",
         ):
             assert bad not in plan, (step.__name__, bad, plan)

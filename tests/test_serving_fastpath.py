@@ -1,23 +1,22 @@
-"""Round-7 serving fast-path gates.
+"""Serving fast-path gates.
 
-Three optimizations changed the search DAG's construction (results must be
+These optimizations changed the search DAG's construction (results must be
 bit-identical; these tests pin both the identity and the plan shape):
 
 * functions/smalldf.local_df — tiny driver-side row sets become
-  LocalRelations (no ``Scan ExistingRDD``, no job for collect/broadcast).
-* wand._attach_query_terms_literal — the broadcast join of the query side
-  is compiled as a literal map expression for interactive (≤32-term,
-  non-incremental) queries.
+  LocalRelations (no ``Scan ExistingRDD``, no job for collect).
+* wand.wand_topk — the batch's (qid, term, qtf) rows ride in the closure
+  of one Arrow call per doc bucket; the block rows are cut to the batch's
+  terms by an In(term, …) filter, or by a broadcast left-semi join above
+  ``max_inlist_terms``.
 * IndexReader.load_hot pins the block cache hash-partitioned by
-  ``bucket`` and single-query searches group by bucket alone — the whole
-  query DAG is then a single stage with NO Exchange.
+  ``bucket``, which satisfies the executor's bucket grouping — a hot
+  query DAG, single query or batch, has NO hash Exchange.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from colbert_jl_spark.config import EngineConfig
 from colbert_jl_spark.functions.smalldf import local_df
@@ -28,7 +27,7 @@ from colbert_jl_spark.operators.codec_blocks import (
 )
 from colbert_jl_spark.operators.docstats import corpus_stats, doclens
 from colbert_jl_spark.operators.postings import term_df
-from colbert_jl_spark.operators.wand import wand_intersect_topk, wand_topk
+from colbert_jl_spark.operators.wand import wand_topk
 
 DOCS = [
     (0, "spark table join merge spark"),
@@ -43,6 +42,26 @@ QUERIES = [(0, "spark table join"), (1, "window merge"), (2, "zzzmissing")]
 
 def _executed(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _outside_cache(plan: str) -> str:
+    """The plan tree minus every InMemoryRelation subtree (the one-time
+    pin, whose own exchange is not on the per-query path)."""
+    out, inside = [], None
+    for line in plan.splitlines():
+        col = len(line) - len(line.lstrip(" :+-"))
+        if inside is not None and col > inside:
+            continue
+        inside = col if "InMemoryRelation" in line else None
+        if inside is None:
+            out.append(line)
+    return "\n".join(out)
+
+
+def _formatted(df) -> str:
+    jvm = df.sparkSession._jvm
+    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    return df._jdf.queryExecution().explainString(mode)
 
 
 def test_local_df_is_local_relation_and_schema_identical(spark):
@@ -68,7 +87,10 @@ def test_local_df_empty_is_empty_local_relation(spark):
 
 
 @pytest.mark.parametrize("mode", ["topk", "intersect"])
-def test_literal_attach_identical_to_broadcast_join(spark, mode):
+def test_semi_join_filter_identical_to_inlist_filter(spark, mode):
+    """The two term filters in front of the executor (In(term, …) up to
+    max_inlist_terms distinct terms, broadcast left-semi join above) give
+    identical rows, for the batch and for a single query."""
     cfg = EngineConfig()
     docs = spark.createDataFrame(DOCS, "doc_id long, text string")
     stats = corpus_stats(doclens(docs, cfg))
@@ -76,28 +98,18 @@ def test_literal_attach_identical_to_broadcast_join(spark, mode):
     dic = term_df(pdl.select("term", "doc_id", "tf")).cache()
     blocks = posting_blocks(pdl, dic, stats["n_docs"], stats["avgdl"], cfg)
     qdf = spark.createDataFrame(QUERIES, "qid long, query string")
-    qt = query_terms(qdf, cfg)
     qt_rows = [
-        (int(r.qid), r.term, int(r.qtf)) for r in qt.collect()
+        (int(r.qid), r.term, int(r.qtf)) for r in query_terms(qdf, cfg).collect()
     ]
-    ex = wand_intersect_topk if mode == "intersect" else wand_topk
-    joined = ex(blocks, qt, cfg, stats["avgdl"])
-    literal = ex(blocks, None, cfg, stats["avgdl"], qt_literal=qt_rows)
-    assert sorted(map(tuple, joined.collect())) == sorted(
-        map(tuple, literal.collect())
-    )
-    # single-qid literal call (bucket-only grouping) must also agree
-    one = [r for r in qt_rows if r[0] == 0]
-    lit1 = ex(blocks, None, cfg, stats["avgdl"], qt_literal=one)
-    join1 = ex(
-        blocks,
-        qt.where(F.col("qid") == 0),
-        cfg,
-        stats["avgdl"],
-    )
-    assert sorted(map(tuple, join1.collect())) == sorted(
-        map(tuple, lit1.collect())
-    )
+    for rows in (qt_rows, [r for r in qt_rows if r[0] == 0]):
+        inlist = wand_topk(blocks, rows, cfg, stats["avgdl"], mode=mode)
+        semi = wand_topk(
+            blocks, rows, cfg, stats["avgdl"], mode=mode, max_inlist_terms=0
+        )
+        assert "In(term," not in _formatted(semi)
+        assert "LeftSemi" in _executed(semi)
+        got = sorted(map(tuple, semi.collect()))
+        assert got and got == sorted(map(tuple, inlist.collect()))
     pdl.unpersist()
     dic.unpersist()
 
@@ -118,15 +130,26 @@ def test_hot_single_query_plan_has_no_exchange_or_rdd_scan(spark, tmp_path):
     assert "Exchange" not in per_query_plan
     assert "ExistingRDD" not in plan
     assert "BroadcastExchange" not in plan
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInArrow" in plan
     # identical rows to the cold distributed path on a fresh reader
     cold = IndexReader(spark, idx)
     assert sorted(map(tuple, df.collect())) == sorted(
         map(tuple, cold.search([(0, "spark table join")]).collect())
     )
-    # multi-query batched call keeps the group-spreading exchange
-    bplan = _executed(reader.search(QUERIES))
-    assert "Exchange" in bplan.split("InMemoryRelation")[0]
+    # a batch runs in the same one-stage shape: no hash Exchange on the
+    # per-query side, and a BroadcastExchange only for the semi-join
+    # (above max_inlist_terms)
+    for limit, semi in ((32, False), (2, True)):
+        reader.max_inlist_terms = limit
+        bplan = _outside_cache(_executed(reader.search(QUERIES)))
+        assert "FlatMapGroupsInArrow" in bplan
+        hash_exchanges = [
+            l for l in bplan.splitlines()
+            if "Exchange" in l and "BroadcastExchange" not in l
+        ]
+        assert not hash_exchanges, bplan
+        assert ("BroadcastExchange" in bplan) == semi, bplan
+        assert ("LeftSemi" in bplan) == semi, bplan
     reader.release()
 
 
