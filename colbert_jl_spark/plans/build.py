@@ -64,6 +64,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from colbert_jl_spark import snapshot
 from colbert_jl_spark.config import EngineConfig
 from colbert_jl_spark.functions.smalldf import local_df
 
@@ -75,6 +76,37 @@ STAGES = ("postings", "plan", "dictionary", "blocks", "lineage")
 # scans pay per-file open+footer cost every query — run minor_compact /
 # compact_positions.
 FILES_PER_BUCKET_CEILING = 8
+
+# the data dirs a plan names, each by its "<stage>_dir" key or else as the
+# bare stage dir; streamed compactions commit new versions of them
+# through snapshot.py
+PLAN_DIRS = ("dictionary", "blocks", "docstats", "lineage", "positions")
+
+
+def plan_dirs(plan: dict) -> set[str]:
+    """The data dirs a plan snapshot names (positions only while the plan
+    carries the stage)."""
+    return {
+        plan.get(f"{s}_dir", s)
+        for s in PLAN_DIRS
+        if s != "positions" or plan.get("positions")
+    }
+
+
+def bucket_file_counts(stage_dir: str) -> dict[int, int]:
+    """Per-``term_bucket=N`` partition data-file counts of a stage dir
+    (driver-side listdir: bucket count is plan.term_partitions ≤ 4096,
+    not data-scale — cheap even on a 100 TB index)."""
+    counts: dict[int, int] = {}
+    if not os.path.isdir(stage_dir):
+        return counts
+    for entry in os.listdir(stage_dir):
+        if entry.startswith("term_bucket="):
+            d = os.path.join(stage_dir, entry)
+            counts[int(entry.split("=", 1)[1])] = sum(
+                1 for f in os.listdir(d) if f.startswith("part-")
+            )
+    return counts
 
 
 def _stage_file(index_path: str) -> str:
@@ -93,25 +125,15 @@ def _mark_stage(index_path: str, stage: str, meta: dict | None = None) -> None:
     done = _load_stages(index_path)
     done[stage] = meta or {}
     done[stage]["completed_at"] = time.time()
-    tmp = _stage_file(index_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(done, f, indent=2, sort_keys=True)
-    os.replace(tmp, _stage_file(index_path))
+    snapshot.write_json(_stage_file(index_path), done)
 
 
 def write_plan(index_path: str, plan: dict) -> None:
-    """Atomic plan.json commit (tmp write + rename). Every plan rewrite —
-    build stages, compactions, the positions stage — goes through here: a
-    concurrent IndexReader.refresh() re-reads plan.json on every search,
-    and an in-place truncate-and-write would expose half-written JSON.
-    The rename also gives the file a fresh inode, which is what refresh()
-    keys its change detection on (mtime alone can collide within one
-    filesystem timestamp granule)."""
-    p = os.path.join(index_path, "plan.json")
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(plan, f, indent=2, sort_keys=True)
-    os.replace(tmp, p)
+    """Atomic plan.json write (tmp write + rename) for the batch build's
+    stages: a concurrent IndexReader.refresh() re-reads plan.json on every
+    search, and an in-place truncate-and-write would expose half-written
+    JSON. Streamed compactions commit through snapshot.commit instead."""
+    snapshot.write_json(os.path.join(index_path, "plan.json"), plan)
 
 
 def _atomic_write(df: DataFrame, final_dir: str, partition_by: str | None = None) -> None:
@@ -463,24 +485,10 @@ class IndexBuilder:
             # r6): without a per-bucket coalesce the blocks stage lands up
             # to data_sp files per bucket, so a fresh healthy index built
             # at high parallelism would otherwise fail validate()'s
-            # default ceiling. Driver-side listdir — bucket count is
-            # ≤4096, never data-scale.
-            observed = 0
-            blocks_dir = os.path.join(self.index_path, "blocks")
-            if os.path.isdir(blocks_dir):
-                for entry in os.listdir(blocks_dir):
-                    if entry.startswith("term_bucket="):
-                        d = os.path.join(blocks_dir, entry)
-                        observed = max(
-                            observed,
-                            sum(
-                                1
-                                for f in os.listdir(d)
-                                if f.startswith("part-")
-                            ),
-                        )
+            # default ceiling.
+            observed = bucket_file_counts(os.path.join(self.index_path, "blocks"))
             plan["max_files_per_bucket"] = max(
-                FILES_PER_BUCKET_CEILING, observed
+                [FILES_PER_BUCKET_CEILING, *observed.values()]
             )
             write_plan(self.index_path, plan)
             _mark_stage(self.index_path, "blocks")
@@ -519,21 +527,21 @@ class IndexBuilder:
         derive from the stoplisted postings table, because phrase
         semantics keep stopword position slots.
 
-        Run AFTER build() (needs plan.json's term_partitions); skipped if
-        already marked, resumable like every stage. plan.json records
+        Run AFTER build() (needs plan.json's term_partitions); skipped while
+        the stage is marked and the plan names it. plan.json records
         {"positions": true} so readers can gate without a filesystem
         probe. Streamed indexes: ingest with ``positions=True``
         (streaming/ingest.stream_pages_to_postings) and the compactors
         MAINTAIN this stage (full rebuilds it from the per-batch raw
         captures, incremental appends the delta); an ingest WITHOUT the
-        capture invalidates it on compaction so phrase() raises a clear
-        error instead of silently missing new documents."""
+        capture drops it from the plan on compaction, so phrase() raises a
+        clear error instead of silently missing new documents."""
         from colbert_jl_spark.operators.codec_blocks import with_term_partition
         from colbert_jl_spark.operators.phrase import token_position_lists
 
-        if "positions" in _load_stages(self.index_path):
-            return
         plan = self.plan()
+        if "positions" in _load_stages(self.index_path) and plan.get("positions"):
+            return
         pl = with_term_partition(
             token_position_lists(docs, self.cfg), plan["term_partitions"]
         )
@@ -553,15 +561,16 @@ class IndexReader:
     docstats and blocks stay distributed parquet scans with pushed-down
     term filters.
 
-    Version-retention contract (ADVICE r4): compactions commit dictionary/
-    blocks/positions as VERSIONED dirs and keep exactly {current,
-    previous} — a reader is safe across ONE compaction it slept through
-    (refresh() re-resolves on the next call), and a reader that pauses
-    between refresh() and the scan while TWO compactions land gets one
-    transparent refresh-and-retry (_stage_df) before the error surfaces.
-    Queries already returned as lazy DataFrames can still fail at action
-    time if their version is GC'd mid-flight — re-issue the query through
-    the reader (on Iceberg, snapshot isolation removes this window)."""
+    Snapshot rule (snapshot.py): plan.json names every data dir the reader
+    reads — dictionary, blocks, docstats, lineage and positions — and the
+    reader resolves each one only through the plan it loaded. Streamed
+    compactions never change a dir a plan names: they assemble new version
+    dirs and commit a new plan with one rename, so a query sees exactly
+    one snapshot, old or new. A dir the committed plan stops naming stays
+    on disk for snapshot.GRACE_SEC, so a query (lazy DataFrames included)
+    whose plan was loaded before a commit finishes within that grace. The
+    exceptions run alone: the batch IndexBuilder and a major compaction
+    rewrite the bare stage dirs in place."""
 
     # above this many distinct terms in one search() call, the per-term
     # In(term, …) scan filter gives way to a broadcast semi-join
@@ -603,6 +612,9 @@ class IndexReader:
         self._plan_stamp_seen = self._plan_stamp()
         with open(p) as f:
             self.plan = json.load(f)
+        # stage path → its DataFrame, for this plan snapshot: the dirs it
+        # names never change, so their file listing and schema stay exact
+        self._stage_dfs: dict[str, DataFrame] = {}
         # driver-side (term → (df, idf)) cache: filled lazily by
         # search_local's dictionary lookup, invalidated whenever the plan
         # snapshot moves (ADVICE r3: the idf_now collect ran per query on
@@ -610,25 +622,17 @@ class IndexReader:
         self._term_stats: dict[str, tuple[int, float]] = {}
 
     def refresh(self) -> "IndexReader":
-        """Re-validate the plan snapshot against plan.json on disk.
+        """Move to the committed snapshot if plan.json changed on disk.
 
-        Called automatically at the top of every search entry point
-        (ADVICE r3, medium): a reader that outlives an incremental
-        compaction (streaming/ingest.py) would otherwise serve the NEW
-        delta blocks under the OLD plan — no idf overlay, an understated
-        bound_scale (over-pruning can silently drop correct top-k rows),
-        and a stale n_buckets can emit per-bucket duplicate ranks on the
-        fused path. A plan.json change (detected by the (inode, mtime_ns,
-        size) stamp — see _plan_stamp) reloads the plan, drops every
-        plan-derived cache (_n_buckets, the term-stats cache) and re-pins
-        the hot block cache.
-
-        Consistency boundary (documented, not closed): the compactor
-        appends delta blocks BEFORE committing plan.json, so a query that
-        starts inside that window can see delta blocks under the old plan.
-        The window is one plan-file write wide; on Iceberg the block append
-        and metadata commit are one transaction and the window vanishes.
-        Single-writer compaction is assumed throughout."""
+        Called at the top of every search entry point, so a reader that
+        outlives a compaction serves the new snapshot on its next call. A
+        change (the (inode, mtime_ns, size) stamp, see _plan_stamp)
+        reloads the plan and drops everything derived from the old one:
+        the stage DataFrames, _n_buckets, the term-stats cache, and the hot
+        pins, which are re-pinned. Under the snapshot rule (class
+        docstring) the old and new snapshots share no mutable dir, so a
+        query never mixes them: data a compaction wrote appears only with
+        the plan that names it."""
         if self._plan_stamp() == self._plan_stamp_seen:
             return self
         self._load_plan()
@@ -686,19 +690,18 @@ class IndexReader:
         return os.path.join(self.index_path, self.plan.get(plan_key, default))
 
     def _stage_df(self, plan_key: str, default: str) -> DataFrame:
-        """Scan a versioned stage dir resolved through the plan snapshot,
-        with ONE refresh-and-retry if the dir vanished underneath us:
-        version GC keeps {current, previous}, so a reader that pauses
-        between refresh() and the scan while two compactions land can
-        hold a deleted path (ADVICE r4) — the retry re-resolves through
-        the NEW plan; a second failure is a real error."""
-        path = os.path.join(self.index_path, self.plan.get(plan_key, default))
-        if not os.path.isdir(path):
+        """Scan of a stage dir resolved through the plan snapshot, built
+        once per snapshot (parquet schema inference is a Spark job). A
+        reader that held its plan past the GC grace may find the dir gone:
+        it moves to the committed snapshot once; a second miss is a real
+        error."""
+        path = self._stage_dir(plan_key, default)
+        if path not in self._stage_dfs and not os.path.isdir(path):
             self.refresh()
-            path = os.path.join(
-                self.index_path, self.plan.get(plan_key, default)
-            )
-        return self.spark.read.parquet(path)
+            path = self._stage_dir(plan_key, default)
+        if path not in self._stage_dfs:
+            self._stage_dfs[path] = self.spark.read.parquet(path)
+        return self._stage_dfs[path]
 
     @property
     def dictionary(self) -> DataFrame:
@@ -718,11 +721,11 @@ class IndexReader:
 
     @property
     def docstats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_path, "docstats"))
+        return self._stage_df("docstats_dir", "docstats")
 
     @property
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.index_path, "lineage"))
+        return self._stage_df("lineage_dir", "lineage")
 
     def _query_rows(self, queries: DataFrame | list[tuple[int, str]]) -> list[tuple]:
         """(qid, term, qtf) rows, tokenized DRIVER-side (tiny by definition;
@@ -1149,28 +1152,11 @@ class IndexReader:
 
     @property
     def blocks(self) -> DataFrame:
-        """Resolved via plan.json's ``blocks_dir`` (default "blocks"):
-        minor compaction commits a versioned ``blocks.v{k}`` dir and
-        repoints the plan — refresh() picks the new version up on the
-        next search."""
+        """Resolved via plan.json's ``blocks_dir`` (default "blocks"), or
+        the hot pin."""
         if hasattr(self, "_hot_blocks"):
             return self._hot_blocks
         return self._stage_df("blocks_dir", "blocks")
-
-    def _bucket_file_counts(self, stage_dir: str) -> dict[int, int]:
-        """Per-``term_bucket=N`` partition data-file counts for a stage dir
-        (driver-side listdir: bucket count is plan.term_partitions ≤ 4096,
-        not data-scale — cheap even on a 100 TB index)."""
-        counts: dict[int, int] = {}
-        if not os.path.isdir(stage_dir):
-            return counts
-        for entry in os.listdir(stage_dir):
-            if entry.startswith("term_bucket="):
-                d = os.path.join(stage_dir, entry)
-                counts[int(entry.split("=", 1)[1])] = sum(
-                    1 for f in os.listdir(d) if f.startswith("part-")
-                )
-        return counts
 
     def validate(self, max_files_per_bucket: int | None = None) -> dict:
         """Cross-stage invariants — the _check_all_files_are_saved analogue
@@ -1210,10 +1196,10 @@ class IndexReader:
             if max_files_per_bucket is not None
             else self.plan.get("max_files_per_bucket", FILES_PER_BUCKET_CEILING)
         )
-        blk_counts = self._bucket_file_counts(
+        blk_counts = bucket_file_counts(
             self._stage_dir("blocks_dir", "blocks")
         )
-        dic_counts = self._bucket_file_counts(
+        dic_counts = bucket_file_counts(
             self._stage_dir("dictionary_dir", "dictionary")
         )
         report["max_files_per_bucket"] = ceiling
@@ -1226,7 +1212,7 @@ class IndexReader:
             and report["dictionary_files_per_bucket_max"] <= ceiling
         )
         if self.plan.get("positions"):
-            pos_counts = self._bucket_file_counts(
+            pos_counts = bucket_file_counts(
                 self._stage_dir("positions_dir", "positions")
             )
             report["positions_files_per_bucket_max"] = max(

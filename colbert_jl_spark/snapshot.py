@@ -1,0 +1,157 @@
+"""Snapshot commits for every piece of mutable index and dedup state.
+
+A manifest — an index's ``plan.json``, a dedup state's ``state.json`` —
+names every data dir a reader reads, and a reader resolves paths only
+through the manifest it loaded. Data dirs are immutable once a manifest
+names them. Three functions are the whole write protocol (Iceberg's data
+files, metadata swap and expire_snapshots, without the jar):
+
+* ``assemble`` turns a staging dir a writer filled with new files into
+  the next version ``<stage>.v{k}`` of a stage: every partition of the
+  current version it does not replace is carried over by link_or_copy,
+  and the new files come in with the staging dir's rename. No dir a manifest names changes.
+* ``commit`` writes the new manifest as a tmp file and renames it over
+  the old one: the one atomic step. The dirs the new manifest stops
+  naming are retired at that moment (their mtime is stamped).
+* ``gc`` removes a dir no manifest names once it has been retired for
+  ``GRACE_SEC``, so a reader that loaded the previous manifest just before
+  a commit can finish its scans. Dirs a crashed writer left behind were
+  never named and age from when they were written.
+
+A writer that dies before the manifest rename leaves the old snapshot
+whole, and a retry builds the same new one under fresh version names.
+One writer at a time is assumed.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import re
+import shutil
+import time
+from typing import Callable, Iterable
+
+# how long a retired dir outlives the commit that stopped naming it
+GRACE_SEC = 300.0
+
+_VERSION = re.compile(r"(?P<stage>.+?)(?:\.v(?P<k>\d+))?(?:\.tmp)?$")
+
+
+def _parse(entry: str) -> tuple[str, int]:
+    """(stage, version) of a dir name; the bare stage dir is version 1."""
+    m = _VERSION.match(entry)
+    return m["stage"], int(m["k"] or 1)
+
+
+def link_or_copy(src: str, dst: str) -> str:
+    """Hardlink ``src`` as ``dst``: a new version shares the bytes of every
+    file it carries over. Where the filesystem refuses links (object-store
+    and FUSE mounts, FAT, paths across devices) the file is copied with its
+    metadata instead: the same bytes, at the cost of the copy. An existing
+    ``dst`` is an error either way."""
+    try:
+        os.link(src, dst)
+    except FileExistsError:
+        raise
+    except OSError:
+        shutil.copy2(src, dst)
+    return dst
+
+
+def staging(root: str, stage: str) -> str:
+    """Path of a fresh staging dir ``<stage>.v{k}.tmp`` for the next
+    version of ``stage``. k is above every version on disk (named, retired,
+    or left by a crash), so a version name is never reused."""
+    k = max(
+        (_parse(e)[1] for e in os.listdir(root) if _parse(e)[0] == stage),
+        default=0,
+    )
+    return os.path.join(root, f"{stage}.v{k + 1}.tmp")
+
+
+def assemble(
+    root: str, tmp: str, current: str | None = None, replace: Iterable = ()
+) -> str:
+    """Make the staging dir ``tmp`` (from ``staging``, filled by a writer)
+    the immutable version dir it names and return that dir's name.
+
+    Every file of ``current`` (a dir name under ``root``; None for a
+    version written whole) is linked into it first, except the
+    ``col=value`` partitions whose value is in ``replace`` and the files
+    the writer already wrote under the same name (``_SUCCESS``). An empty
+    ``replace`` appends the new files to the current version."""
+    if current is not None:
+        src = os.path.join(root, current)
+        dropped = {str(v) for v in replace}
+        for dirpath, dirs, files in os.walk(src):
+            rel = os.path.relpath(dirpath, src)
+            if rel == ".":
+                dirs[:] = [d for d in dirs if d.partition("=")[2] not in dropped]
+            os.makedirs(os.path.join(tmp, rel), exist_ok=True)
+            for f in files:
+                dst = os.path.join(tmp, rel, f)
+                if not os.path.exists(dst):
+                    link_or_copy(os.path.join(dirpath, f), dst)
+    new = tmp[: -len(".tmp")]
+    os.rename(tmp, new)
+    return os.path.basename(new)
+
+
+def load(root: str, name: str) -> dict | None:
+    """The committed manifest ``name`` under ``root``, or None."""
+    try:
+        with open(os.path.join(root, name)) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def write_json(path: str, obj: dict) -> None:
+    """Replace the JSON file ``path`` atomically: tmp write, then rename
+    (a reader never sees half a file, and the new inode is the change
+    stamp IndexReader.refresh keys on)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=2, sort_keys=True)
+    os.replace(tmp, path)
+
+
+def commit(
+    root: str,
+    name: str,
+    manifest: dict,
+    stages: tuple,
+    named: Callable[[dict | None], set],
+    previous: dict | None = None,
+) -> None:
+    """Make ``manifest`` the committed snapshot ``name`` under ``root``.
+
+    ``named(manifest)`` is the set of dirs a manifest names, ``stages``
+    the stage names whose dirs the GC may reclaim, and ``previous`` the
+    snapshot being replaced (default: the one on disk). In order: the GC
+    (keeping what either snapshot names), the retirement stamp on the
+    dirs only ``previous`` names, then the manifest write whose rename is
+    the commit. A failure at any step leaves ``previous`` committed."""
+    if previous is None:
+        previous = load(root, name)
+    old, new = (named(previous) if previous else set()), named(manifest)
+    gc(root, stages, old | new)
+    for d in old - new:
+        path = os.path.join(root, d)
+        if os.path.isdir(path):
+            os.utime(path, None)
+    write_json(os.path.join(root, name), manifest)
+
+
+def gc(root: str, stages: tuple, keep: set) -> None:
+    """Remove every version dir of ``stages`` under ``root`` (bare,
+    ``.v{k}`` or staging) that is not in ``keep`` and was retired, or
+    last written, more than GRACE_SEC ago."""
+    now = time.time()
+    for entry in os.listdir(root):
+        path = os.path.join(root, entry)
+        if entry in keep or _parse(entry)[0] not in stages or not os.path.isdir(path):
+            continue
+        if now - os.path.getmtime(path) > GRACE_SEC:
+            shutil.rmtree(path)

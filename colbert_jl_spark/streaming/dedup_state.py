@@ -10,8 +10,8 @@ joining its bands against the persisted band table with bucket pruning.
 
 ``DedupIndex`` is that persistent state. Layout under ``path/``::
 
-    state.json                  — atomic commit point (committed wave
-                                  ids, labels dir pointer, parameters)
+    state.json                  — the manifest (snapshot.py): committed
+                                  wave ids, the labels dir, parameters
     signatures/wave={w}/        — (doc_id, sig) per wave, append-only
     bands/wave={w}/band_bucket={b}/
                                 — (doc_id, band_id, band_hash) per wave,
@@ -22,9 +22,7 @@ joining its bands against the persisted band table with bucket pruning.
     pairs/wave={w}/             — verified (doc_a, doc_b, jaccard) pairs
                                   DISCOVERED by wave w (≥1 endpoint in w)
     labels.v{k}/                — (doc_id, component_id) for the whole
-                                  corpus, versioned-swap like the index's
-                                  dictionary/blocks stages ({current,
-                                  previous} retained, older GC'd)
+                                  corpus, one immutable version per wave
 
 Why the union of per-wave pair tables equals a from-scratch run: LSH
 candidate generation is deterministic (same seeded permutations, same
@@ -36,10 +34,15 @@ Jaccard both ways. Row-count gated in tests: a wave computes exactly
 persisted band table (partition-pruned), and its component update
 touches only delta docs + members of components adjacent to new edges.
 
-Crash safety: every wave write lands in a ``*.tmp`` dir renamed into
-place, and readers trust ONLY waves listed in state.json (written last,
-via os.replace). A wave dir orphaned by a crash is invisible and is
-overwritten by the retried update.
+Snapshot rule: state.json is the only thing an update changes in place,
+by one atomic rename (snapshot.commit), and readers resolve everything
+through it — the wave tables filtered to its committed wave ids, the
+labels through its ``labels_dir``. An update writes its wave dirs (which
+no reader trusts until committed) and assembles a new labels version
+beside the current one; a crash or refusal before the rename leaves the
+previous state exactly as it was, the retry overwrites the orphaned wave
+dirs, and a labels version the state stops naming is removed by the GC
+only after snapshot.GRACE_SEC.
 
 Scale notes (100 TB): per-wave compute is O(|wave| shingles) for
 signatures + O(colliding-bucket rows) for the candidate join + the
@@ -47,23 +50,22 @@ candidate-bounded exact verification — never O(corpus). The labels
 WRITE is partition-local since r7: labels.v{k} is hash-partitioned by
 lpart = pmod(doc_id, N_LABEL_PARTS); a wave rewrites only the
 partitions holding affected docs (prior rows read through a
-partition-pruned scan) and hardlinks every other partition's files into
-the new version unchanged — O(affected-partition rows) per wave instead
-of O(corpus), same versioned-swap protocol. The component COMPUTATION is
-bounded to affected components via star contraction.
+partition-pruned scan) and carries every other partition's files into
+the new version by link (snapshot.assemble) — O(affected-partition rows)
+per wave instead of O(corpus). The component COMPUTATION is bounded to
+affected components via star contraction.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from colbert_jl_spark import snapshot
 from colbert_jl_spark.config import EngineConfig
-from colbert_jl_spark.streaming.files import link_or_copy
 from colbert_jl_spark.operators.dedup import (
     connected_components,
     minhash_bands,
@@ -78,6 +80,15 @@ N_BAND_BUCKETS = 64
 # the layout, unlike the LSH constants, is self-describing via the lpart
 # partition column, but pinning it keeps every wave using one value)
 N_LABEL_PARTS = 64
+
+
+def _count(obs: Observation) -> int:
+    """The row count an Observation saw. A plan whose scan was pruned to no
+    partition at all runs no task and reports no metrics: that is 0 rows."""
+    try:
+        return int(obs.get["n"] or 0)
+    except Py4JJavaError:
+        return 0
 
 
 def _lsh_params() -> dict:
@@ -136,19 +147,8 @@ class DedupIndex:
                     "engine version"
                 )
 
-    # -- state.json ------------------------------------------------------
     def _state(self) -> dict | None:
-        try:
-            with open(os.path.join(self.path, "state.json")) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
-
-    def _commit(self, state: dict) -> None:
-        tmp = os.path.join(self.path, "state.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(state, f, indent=2, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path, "state.json"))
+        return snapshot.load(self.path, "state.json")
 
     # -- readers ---------------------------------------------------------
     def _committed(self, spark: SparkSession, sub: str) -> DataFrame | None:
@@ -177,8 +177,7 @@ class DedupIndex:
         """(doc_id, component_id) for every document seen so far; equals
         a from-scratch dedup_clusters run (gated in tests). The keep
         filter is doc_id == component_id. The on-disk lpart partition
-        column (r7 partitioned-rewrite layout) is projected away — the
-        logical schema is identical for legacy and partitioned dirs."""
+        column is projected away."""
         st = self._state()
         if st is None:
             return spark.createDataFrame([], "doc_id long, component_id long")
@@ -214,8 +213,14 @@ class DedupIndex:
             "threshold": self.threshold,
             "waves": [],
             "labels_dir": None,
-            "labels_version": 0,
         }
+        if st["labels_dir"] and "label_parts" not in st:
+            raise ValueError(
+                f"dedup state at {self.path} uses the pre-r7 unpartitioned "
+                "labels layout (no lpart partitions, no n_labels); this "
+                "engine does not migrate it — rebuild the state from its "
+                "waves at a fresh path"
+            )
         wave = (max(st["waves"]) + 1) if st["waves"] else 1
 
         # ---- 1. delta signatures + bands (THE delta-bounded compute) ---
@@ -229,8 +234,8 @@ class DedupIndex:
             self.cfg,
         ).observe(sig_obs, F.count(F.lit(1)).alias("n"))
         self._write_wave(sigs, "signatures", wave)
-        n_sigs = int(sig_obs.get["n"] or 0)
-        n_wave = int(wave_obs.get["n"] or 0)
+        n_sigs = _count(sig_obs)
+        n_wave = _count(wave_obs)
 
         delta_bands = minhash_bands(
             spark.read.parquet(
@@ -310,35 +315,25 @@ class DedupIndex:
         # ---- 4. affected-components-only label update ------------------
         # labels.v{k} is hash-partitioned by lpart = pmod(doc_id, P)
         # (VERDICT r6 next-round #2): a wave REWRITES only the partitions
-        # that hold affected docs and HARDLINKS every other partition's
-        # files into the new version unchanged (inode-identical), so the
-        # per-wave labels write drops from O(corpus) rows to
-        # O(affected-partition rows) under the same versioned-swap
-        # protocol. Legacy unpartitioned labels dirs migrate to the
-        # partitioned layout on their next update (one full rewrite).
-        P = int(st.get("label_parts") or N_LABEL_PARTS)
+        # that hold affected docs and the new version carries every other
+        # partition's files over by link (inode-identical), so the per-wave
+        # labels write is O(affected-partition rows), not O(corpus).
+        P = int(st.get("label_parts", N_LABEL_PARTS))
         lpart = F.pmod(F.col("doc_id"), F.lit(P)).cast("int")
         prior_labels = (
             spark.read.parquet(os.path.join(self.path, st["labels_dir"]))
             if st["labels_dir"]
             else None
         )
-        legacy_layout = (
-            prior_labels is not None and "lpart" not in prior_labels.columns
-        )
-        prior_kv = (
-            prior_labels.select("doc_id", "component_id")
-            if prior_labels is not None
-            else None
-        )
         # distinct on every wave, the first included: a doc_id repeated
         # inside the wave then shows as a label-count shortfall and is
         # refused by the re-ingestion guard below
         wave_ids = wave_docs.select(F.col("doc_id").alias("node")).distinct()
-        if prior_kv is None:
+        if prior_labels is None:
             sub_nodes = wave_ids
             sub_edges = new_pairs
         else:
+            prior_kv = prior_labels.select("doc_id", "component_id")
             touched = (
                 new_pairs.select(F.col("doc_a").alias("doc_id"))
                 .unionByName(new_pairs.select(F.col("doc_b").alias("doc_id")))
@@ -379,8 +374,10 @@ class DedupIndex:
             .select(F.col("node").alias("doc_id"), "component_id")
             .localCheckpoint()
         )
-        if prior_kv is None or legacy_layout:
+        label_obs, prior_aff_obs = Observation(), Observation()
+        if prior_labels is None:
             affected_parts = list(range(P))
+            rewrite = sub_labels
         else:
             affected_parts = sorted(
                 r.p
@@ -388,56 +385,24 @@ class DedupIndex:
                 .distinct()
                 .collect()
             )
-        label_obs, prior_aff_obs = Observation(), Observation()
-        if prior_kv is None:
-            rewrite = sub_labels
-        else:
             # the prior-labels read is PRUNED to the affected partitions
             # (lpart is a partition column of the parquet layout); its
             # row count rides the write as an Observation — no count job
             pruned_prior = (
-                prior_kv
-                if legacy_layout
-                else prior_labels.where(
-                    F.col("lpart").isin(affected_parts)
-                ).select("doc_id", "component_id")
-            ).observe(prior_aff_obs, F.count(F.lit(1)).alias("n"))
+                prior_labels.where(F.col("lpart").isin(affected_parts))
+                .select("doc_id", "component_id")
+                .observe(prior_aff_obs, F.count(F.lit(1)).alias("n"))
+            )
             untouched_aff = pruned_prior.join(
                 sub_nodes.withColumnRenamed("node", "doc_id"),
                 "doc_id",
                 "left_anti",
             )
             rewrite = untouched_aff.unionByName(sub_labels)
-        rewrite = rewrite.withColumn("lpart", lpart).observe(
+        tmp = snapshot.staging(self.path, "labels")
+        rewrite.withColumn("lpart", lpart).observe(
             label_obs, F.count(F.lit(1)).alias("n")
-        )
-
-        new_ver = st["labels_version"] + 1
-        new_labels_dir = f"labels.v{new_ver}"
-        tmp = os.path.join(self.path, new_labels_dir + ".tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
-        rewrite.write.mode("overwrite").partitionBy("lpart").parquet(tmp)
-        if prior_kv is not None and not legacy_layout:
-            # unaffected partitions enter the new version as hardlinks to
-            # the previous version's files — zero bytes copied, and the
-            # inode identity is the test gate for "not rewritten" (a
-            # filesystem without hardlinks gets copies, streaming/files.py)
-            prior_dir = os.path.join(self.path, st["labels_dir"])
-            aff = set(affected_parts)
-            for entry in os.listdir(prior_dir):
-                if not entry.startswith("lpart="):
-                    continue
-                if int(entry.split("=", 1)[1]) in aff:
-                    continue
-                src = os.path.join(prior_dir, entry)
-                dst_part = os.path.join(tmp, entry)
-                os.makedirs(dst_part, exist_ok=True)
-                for fname in os.listdir(src):
-                    if fname.startswith("part-"):
-                        link_or_copy(
-                            os.path.join(src, fname),
-                            os.path.join(dst_part, fname),
-                        )
+        ).write.mode("overwrite").partitionBy("lpart").parquet(tmp)
 
         # ---- re-ingestion guard (ADVICE r6): a wave whose doc_id already
         # exists in the prior labels would be silently relabeled (the doc
@@ -448,17 +413,13 @@ class DedupIndex:
         # costs ZERO extra jobs: the rewritten row count must equal the
         # affected-partition prior rows + wave docs (both observed on the
         # write itself), and any overlap strictly shrinks the distinct
-        # sub_nodes union below that. On mismatch the uncommitted labels
-        # dir is removed and the update aborts — state.json still points
-        # at the previous wave set, so the orphaned wave dirs stay
-        # invisible to readers.
-        rewritten = int(label_obs.get["n"] or 0)
-        prior_aff = (
-            int(prior_aff_obs.get["n"] or 0) if prior_kv is not None else 0
-        )
+        # sub_nodes union below that. On mismatch the update aborts before
+        # anything is assembled or committed: the staged labels and the
+        # wave dirs stay unnamed, invisible to readers.
+        rewritten = _count(label_obs)
+        prior_aff = _count(prior_aff_obs) if prior_labels is not None else 0
         expected = prior_aff + n_wave
         if rewritten != expected:
-            shutil.rmtree(tmp, ignore_errors=True)
             raise ValueError(
                 f"wave {wave} rewrote {rewritten} label rows where "
                 f"{expected} were expected ({prior_aff} prior rows in the "
@@ -467,68 +428,52 @@ class DedupIndex:
                 "in the state; doc_ids must be unique within and across "
                 "waves; the update was aborted before commit"
             )
-        prior_total = st.get("n_labels")
-        if prior_total is None and st["labels_dir"]:
-            prior_total = prior_kv.count()  # legacy pre-r7 state: once
-        n_labels = int(prior_total or 0) + n_wave
-        dst = os.path.join(self.path, new_labels_dir)
-        shutil.rmtree(dst, ignore_errors=True)
-        os.rename(tmp, dst)
+        n_labels = int(st.get("n_labels", 0)) + n_wave
 
-        # ---- 5. atomic commit + labels GC ({current, previous} kept) ---
-        prev_dir = st["labels_dir"]
-        self._commit(
+        # ---- 5. the new labels version + one state.json commit ---------
+        labels_dir = snapshot.assemble(
+            self.path, tmp, st["labels_dir"], affected_parts
+        )
+        snapshot.commit(
+            self.path,
+            "state.json",
             {
                 **st,
                 "waves": st["waves"] + [wave],
-                "labels_dir": new_labels_dir,
-                "labels_version": new_ver,
+                "labels_dir": labels_dir,
+                "labels_version": int(labels_dir.rsplit(".v", 1)[1]),
                 "n_labels": n_labels,
                 "label_parts": P,
                 "lsh": _lsh_params(),
-            }
+            },
+            ("labels",),
+            lambda state: {state["labels_dir"]} - {None},
         )
-        keep = {new_labels_dir, prev_dir}
-        for entry in os.listdir(self.path):
-            if (
-                entry.startswith("labels.v")
-                and not entry.endswith(".tmp")
-                and entry not in keep
-            ):
-                shutil.rmtree(os.path.join(self.path, entry), ignore_errors=True)
 
         return {
             "wave": wave,
             "signatures_computed": n_sigs,
             "delta_band_buckets": delta_buckets,
             "band_rows_scanned": (
-                int(scan_obs.get["n"] or 0) if prior_bands is not None else 0
+                _count(scan_obs) if prior_bands is not None else 0
             ),
-            "n_candidate_pairs": int(cand_obs.get["n"] or 0),
-            "n_new_pairs": int(pair_obs.get["n"] or 0),
-            "cc_nodes": int(node_obs.get["n"] or 0),
+            "n_candidate_pairs": _count(cand_obs),
+            "n_new_pairs": _count(pair_obs),
+            "cc_nodes": _count(node_obs),
             "n_labels": n_labels,
             "label_rows_rewritten": rewritten,
             "label_parts_rewritten": len(affected_parts),
             "label_parts": P,
-            "labels_dir": new_labels_dir,
+            "labels_dir": labels_dir,
         }
 
-    # -- wave-dir writer (tmp → atomic rename) ---------------------------
     def _write_wave(
         self, df: DataFrame, sub: str, wave: int, partition_by: str | None = None
     ) -> None:
-        root = os.path.join(self.path, sub)
-        os.makedirs(root, exist_ok=True)
-        dst = os.path.join(root, f"wave={wave}")
-        # leading "_" keeps a crash-orphaned tmp dir invisible to Spark's
-        # partition discovery over {sub}/wave=* (a literal "wave=5.tmp"
-        # sibling would poison the wave column's type inference)
-        tmp = os.path.join(root, f"_tmp-wave-{wave}")
-        shutil.rmtree(tmp, ignore_errors=True)
+        """Write one wave's rows as ``sub``/wave={wave}. Readers trust only
+        the waves state.json lists, so a crashed try's dir is invisible,
+        and the retry's overwrite replaces it."""
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(partition_by)
-        w.parquet(tmp)
-        shutil.rmtree(dst, ignore_errors=True)  # orphan from a crashed try
-        os.rename(tmp, dst)
+        w.parquet(os.path.join(self.path, sub, f"wave={wave}"))

@@ -28,23 +28,22 @@ transactional append replaces the directory trick in production).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from colbert_jl_spark import snapshot
 from colbert_jl_spark.config import EngineConfig
-from colbert_jl_spark.streaming.files import link_tree
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
 
 # incremental dictionary merge: above this fraction of term_bucket
-# partitions touched by a delta, the bucket-local hardlink assembly is
-# strictly more work than a plain full merge — fall back (the threshold
-# and the chosen mode are recorded in the compaction report)
+# partitions touched by a delta, the merge rewrites every partition
+# instead of carrying the untouched ones over (the threshold and the
+# chosen mode are recorded in the compaction report)
 HEAD_HEAVY_BUCKET_FRACTION = 0.5
 
 
@@ -137,170 +136,55 @@ def _delta_dictionary(
     )
 
 
-def _compact_state_file(index_path: str) -> str:
-    return os.path.join(index_path, "_COMPACT.json")
+def _commit_plan(index_path: str, plan: dict, previous: dict | None = None) -> None:
+    """Commit ``plan`` as the index's snapshot: one plan.json rename makes
+    every new version it names visible at once (snapshot.commit)."""
+    from colbert_jl_spark.plans.build import PLAN_DIRS, plan_dirs
+
+    snapshot.commit(index_path, "plan.json", plan, PLAN_DIRS, plan_dirs, previous)
 
 
-def _load_compact_state(index_path: str) -> dict | None:
-    try:
-        with open(_compact_state_file(index_path)) as f:
-            return json.load(f)
-    except FileNotFoundError:
-        return None
-
-
-# how long an invalidated positions dir survives as positions.trash.N
-# before reclamation (ADVICE r6: bounds the window in which an in-flight
-# scan that resolved a just-superseded plan may still be reading it)
-POSITIONS_TRASH_GRACE_SEC = 300.0
-
-
-def _save_compact_state(index_path: str, state: dict) -> None:
-    tmp = _compact_state_file(index_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(state, f, indent=2, sort_keys=True)
-    os.replace(tmp, _compact_state_file(index_path))
-
-
-def _invalidate_positions(index_path: str, plan: dict | None = None) -> None:
-    """Any compaction that ADDS documents invalidates the optional
-    positional stage: positions derive from the RAW (pre-stoplist) token
-    stream, which cannot be reconstructed from the stoplisted postings the
-    compactor has. Dropping the stage marker + plan key makes
-    IndexReader.phrase() fail loudly with the rebuild instruction
-    (IndexBuilder.build_positions) instead of silently serving phrase
-    results that miss the newly ingested documents.
-
-    Ordering (ADVICE r4): metadata is dropped and COMMITTED first — the
-    stage marker, then plan.json without the positions keys — so a
-    concurrent reader's next refresh() refuses service with the intended
-    RuntimeError; only THEN is the data directory renamed aside as
-    ``positions.trash.*`` (an atomic rename: an in-flight scan holding
-    open file handles keeps reading; new scans go through the refreshed
-    plan) and trash from earlier invalidations GC'd. The old in-place
-    rmtree handed in-flight readers a raw FileNotFoundError."""
-    from colbert_jl_spark.plans.build import _load_stages, write_plan
-
-    stages = _load_stages(index_path)
-    if "positions" in stages:
-        stages.pop("positions")
-        tmp = os.path.join(index_path, "_STAGES.json.tmp")
-        with open(tmp, "w") as f:
-            json.dump(stages, f, indent=2, sort_keys=True)
-        os.replace(tmp, os.path.join(index_path, "_STAGES.json"))
-    if plan is None:
-        try:
-            with open(os.path.join(index_path, "plan.json")) as f:
-                plan = json.load(f)
-        except FileNotFoundError:
-            plan = None
-    committed = "positions"
-    if plan is not None:
-        committed = plan.get("positions_dir", "positions")
-        changed = "positions" in plan or "positions_dir" in plan
-        plan.pop("positions", None)
-        plan.pop("positions_dir", None)
-        if changed:
-            write_plan(index_path, plan)  # readers now refuse loudly
-    # GC order (ADVICE r5): delete only trash from EARLIER invalidations;
-    # every LIVE version dir — the committed current AND the retained
-    # previous version — is renamed aside as positions.trash.N instead
-    # of rmtree'd, so an in-flight scan that resolved either version
-    # through a just-superseded plan keeps reading via its open handles,
-    # honoring the {current, previous} retention contract stated on
-    # IndexReader.
-    #
-    # Trash reclamation is AGE-GATED (see _reclaim_positions_trash);
-    # younger trash survives and numbering continues past it.
-    trash_n = 1 + max(_reclaim_positions_trash(index_path), default=-1)
-
-    def _trash(src: str) -> None:
-        nonlocal trash_n
-        dst = os.path.join(index_path, f"positions.trash.{trash_n}")
-        os.rename(src, dst)
-        os.utime(dst, None)  # stamp the trashing moment for the age gate
-        trash_n += 1
-
-    cur_dir = os.path.join(index_path, committed)
-    if os.path.isdir(cur_dir):
-        _trash(cur_dir)
-    for entry in sorted(os.listdir(index_path)):
-        if entry.endswith(".tmp"):
-            continue
-        if entry == "positions" or entry.startswith("positions.v"):
-            _trash(os.path.join(index_path, entry))
-
-
-def _reclaim_positions_trash(index_path: str) -> list[int]:
-    """Remove ``positions.trash.N`` dirs older than
-    POSITIONS_TRASH_GRACE_SEC; return the N of the younger ones, which
-    survive. Every site that reclaims trash goes through here: an
-    in-flight scan that resolved a just-superseded plan may still read a
-    young trash dir. Each trash dir is touched when renamed aside (rename
-    keeps the content mtime), so its mtime is the trashing moment."""
-    import shutil
-    import time
-
-    now = time.time()
-    young = []
-    for entry in os.listdir(index_path):
-        if not entry.startswith("positions.trash"):
-            continue
-        p = os.path.join(index_path, entry)
-        try:
-            age = now - os.path.getmtime(p)
-        except OSError:
-            age = POSITIONS_TRASH_GRACE_SEC + 1.0
-        if age > POSITIONS_TRASH_GRACE_SEC:
-            shutil.rmtree(p, ignore_errors=True)
-        else:
-            try:
-                young.append(int(entry.rsplit(".", 1)[1]))
-            except ValueError:
-                pass
-    return young
-
-
-def _gc_positions_dirs(index_path: str, keep: set) -> None:
-    """Remove positions version dirs not in ``keep`` (by name), and trash
-    past its grace period.
-
-    The bare pre-versioning ``positions`` dir counts as a version too
-    (ADVICE r5): once ``compact_positions`` repoints plan.json to
-    ``positions.v2`` the original bare dir would otherwise never match
-    any GC prefix and leak a permanent full copy of the stage."""
-    import shutil
-
-    for entry in os.listdir(index_path):
-        if entry in keep or entry.endswith(".tmp"):
-            continue
-        if entry == "positions" or entry.startswith("positions.v"):
-            shutil.rmtree(os.path.join(index_path, entry), ignore_errors=True)
-    _reclaim_positions_trash(index_path)
+def _new_version(
+    index_path: str,
+    plan: dict,
+    stage: str,
+    df: DataFrame,
+    partition_by: str | None = None,
+    replace=(),
+) -> str:
+    """Write ``df`` as the new files of ``stage``'s next version, assemble
+    that version over the plan's current one (the partitions not in
+    ``replace`` are carried over, so an empty ``replace`` appends), and
+    point ``plan`` at it. Readers see it once ``plan`` commits. Returns the
+    new version's path."""
+    tmp = snapshot.staging(index_path, stage)
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(tmp)
+    key = f"{stage}_dir"
+    plan[key] = snapshot.assemble(index_path, tmp, plan.get(key, stage), replace)
+    return os.path.join(index_path, plan[key])
 
 
 def _positions_raw_complete(index_path: str, batch_ids) -> bool:
     """True iff EVERY given batch has a persisted positions_raw dir (the
     ingest ran with positions=True for all of them) — the condition for
     maintaining the positions stage through a compaction instead of
-    invalidating it."""
+    dropping it."""
     return bool(batch_ids) and all(
         os.path.isdir(os.path.join(index_path, "positions_raw", f"batch={b}"))
         for b in batch_ids
     )
 
 
-def _rebuild_positions_from_raw(
+def _raw_positions(
     spark: SparkSession, index_path: str, plan: dict, batch_ids
-) -> dict:
-    """Fold the per-batch positions_raw captures into the queryable
-    ``positions`` stage (term_bucket-partitioned, same layout as
-    IndexBuilder.build_positions writes). Called by the full/major
-    compaction; no-op when any batch lacks its raw capture."""
-    if not _positions_raw_complete(index_path, batch_ids):
-        return plan
+) -> DataFrame:
+    """The batches' positions_raw captures in the positions stage's
+    layout (term_bucket-partitioned, as IndexBuilder.build_positions
+    writes it)."""
     from colbert_jl_spark.operators.codec_blocks import with_term_partition
-    from colbert_jl_spark.plans.build import _atomic_write, _mark_stage, write_plan
 
     raw = spark.read.parquet(
         *[
@@ -308,14 +192,9 @@ def _rebuild_positions_from_raw(
             for b in batch_ids
         ]
     )
-    pl = with_term_partition(
+    return with_term_partition(
         raw.select("term", "doc_id", "positions"), plan["term_partitions"]
     )
-    _atomic_write(pl, os.path.join(index_path, "positions"), "term_bucket")
-    plan["positions"] = True
-    write_plan(index_path, plan)
-    _mark_stage(index_path, "positions")
-    return plan
 
 
 def compact_streamed_index(
@@ -329,149 +208,88 @@ def compact_streamed_index(
     The FIRST compaction (or ``full=True`` — the "major compaction" a
     scheduler runs occasionally to restore per-segment block disjointness
     and reset statistics staleness) builds plan/dictionary/blocks/lineage
-    over all postings via the batch builder.
+    over all postings via the batch builder. A major compaction rewrites
+    the bare stage dirs in place, so it runs alone.
 
     Every later call is INCREMENTAL (VERDICT r2 item 2): it reads ONLY the
-    ``batch=`` posting partitions newer than the last compacted batch_id
-    and
+    ``batch=`` posting partitions newer than the plan's ``last_batch_id``
+    and builds one new snapshot (snapshot.py) from them:
 
-      * appends their (doc_id, doclen) rows to docstats,
-      * updates plan.json additively (n_docs / total_tokens / avgdl /
-        n_empty_docs are running sums),
-      * merges the dictionary additively — df/cf are sums — touching ONLY
-        the term_bucket partitions that contain delta terms (VERDICT r3
-        item 4): untouched partitions are HARDLINKED into a new versioned
-        dictionary dir (byte-identical, gated in tests), and plan.json
-        repoints ``dictionary_dir`` at the new version while the previous
-        version stays on disk for in-flight readers (ADVICE r3: the old
-        rmtree→replace swap left a FileNotFoundError window for concurrent
-        readers). idf is NOT stored (computed from plan.n_docs at read),
-        which is what makes untouched partitions byte-stable at all,
-      * encodes ONLY the new postings into delta blocks with the plan's
-        frozen bucket_size / term_partitions and appends them under the
-        same term_bucket partition dirs (on Iceberg: a transactional
-        append), and
-      * appends per-bucket delta lineage rows.
+      * docstats, blocks and lineage each get a new version: the current
+        version's files carried over by link, the delta's rows added;
+        the delta blocks are encoded with the plan's frozen bucket_size /
+        term_partitions,
+      * the dictionary merges additively — df/cf are sums — into a new
+        version that rewrites ONLY the term_bucket partitions containing
+        delta terms (VERDICT r3 item 4) and carries the others over
+        byte-identical. idf is NOT stored (computed from plan.n_docs at
+        read), which is what makes untouched partitions byte-stable at
+        all. A head-heavy delta only widens the rewritten set to every
+        partition,
+      * the positions stage gets the delta's rows when every new batch
+        captured them, and is otherwise dropped from the plan,
+      * plan.json's running sums (n_docs / total_tokens / avgdl /
+        n_empty_docs) and ``incremental`` marker are updated,
 
-    Nothing proportional to the pre-existing corpus is read or written —
-    the job is O(delta), gated in tests/test_streaming.py. Pre-existing
-    block rows keep their encode-time idf/max_score; IndexReader corrects
-    both at query time (plan.json carries the ``incremental`` marker with
-    min_enc_avgdl — see plans/build.py and wand._term_blocks).
-    Segments whose doc-id ranges interleave are merge-sorted inside the
-    WAND cursor (correct, minus block skipping for touched groups);
-    monotone doc-id ingests keep full skipping.
+    and one plan.json rename commits all of it. Nothing appears to a
+    reader before that rename, and a compaction that dies before it
+    leaves the old snapshot whole: the retry compacts the same batches
+    again.
+
+    Nothing proportional to the pre-existing corpus is read or rewritten
+    (the carried-over files are links) — the job is O(delta), gated in
+    tests/test_streaming.py. Pre-existing block rows keep their
+    encode-time idf/max_score; IndexReader corrects both at query time
+    (plan.json carries the ``incremental`` marker with min_enc_avgdl — see
+    plans/build.py and wand._term_blocks). Segments whose doc-id ranges
+    interleave are merge-sorted inside the WAND cursor (correct, minus
+    block skipping for touched groups); monotone doc-id ingests keep full
+    skipping.
 
     Returns the updated plan with a ``compaction`` report:
     {mode, batches_compacted, postings_read, docs_added}.
     """
     from colbert_jl_spark.operators.codec_blocks import (
+        collision_free_tid_salt,
         lineage_by_bucket,
         posting_blocks,
         with_term_partition,
     )
     from colbert_jl_spark.operators.postings import term_df
-    from colbert_jl_spark.plans.build import (
-        IndexBuilder,
-        _load_stages,
-        _mark_stage,
-        write_plan,
-    )
+    from colbert_jl_spark.plans.build import _load_stages
 
     ingest = spark.read.parquet(os.path.join(index_path, "ingest_log"))
     batch_rows = {int(r.batch_id): r for r in ingest.collect()}
-    state = _load_compact_state(index_path)
+    plan = snapshot.load(index_path, "plan.json")
+    if (
+        full
+        or plan is None
+        or "last_batch_id" not in plan
+        or "blocks" not in _load_stages(index_path)
+    ):
+        return _major_compaction(spark, index_path, cfg, batch_rows, plan)
 
-    # Crash recovery: an incremental compaction appends docstats/blocks/
-    # lineage rows in place, so a compaction killed mid-write would leave
-    # partial deltas that a naive retry DUPLICATES. The in_progress marker
-    # is written before the first delta write and cleared only by the
-    # final state commit; finding it set means the previous compaction
-    # died mid-flight — recover via a major compaction, whose stages
-    # rebuild every derived table wholesale (erasing any partial junk).
-    # On Iceberg the whole delta would be one transaction and this
-    # fallback disappears.
-    if state is not None and state.get("in_progress"):
-        full = True
-
-    if full or state is None or "blocks" not in _load_stages(index_path):
-        # ---- initial / major compaction: full downstream rebuild ----------
-        n_docs = sum(r.n_docs for r in batch_rows.values())
-        stage_file = os.path.join(index_path, "_STAGES.json")
-        import shutil
-
-        stages = _load_stages(index_path)
-        # "positions" is in the drop list too: the rebuilt index has MORE
-        # docs than any existing positions stage saw (the stage dir is
-        # removed here and either rebuilt from positions_raw below or
-        # left absent so phrase() fails loudly)
-        for s in ("plan", "dictionary", "blocks", "lineage", "positions"):
-            stages.pop(s, None)
-            shutil.rmtree(os.path.join(index_path, s), ignore_errors=True)
-        # stale versioned dictionary/blocks dirs from prior incremental or
-        # minor-compaction epochs; positions trash only past its grace
-        for entry in os.listdir(index_path):
-            if (
-                entry.startswith("dictionary.v")
-                or entry.startswith("blocks.v")
-                or entry.startswith("positions.v")
-            ):
-                shutil.rmtree(os.path.join(index_path, entry), ignore_errors=True)
-        _reclaim_positions_trash(index_path)
-        with open(stage_file, "w") as f:
-            json.dump(stages, f)
-        _mark_stage(index_path, "postings", {"streamed": True})
-
-        builder = IndexBuilder(index_path, cfg)
-        # index ONLY the logged batches: a batch whose postings landed but
-        # whose log row hasn't (the sink writes postings first) must wait
-        # for the next compaction, or it would be indexed now AND re-read
-        # as "new" later — double-counted (see finish_from_postings)
-        plan = builder.finish_from_postings(
-            spark, n_docs_total=int(n_docs), batch_ids=sorted(batch_rows)
-        )
-        # when the ingest captured per-batch raw positions, the positions
-        # stage is REBUILT here — phrase queries stay servable on streamed
-        # indexes across major compactions
-        plan = _rebuild_positions_from_raw(
-            spark, index_path, plan, sorted(batch_rows)
-        )
-        _save_compact_state(
-            index_path,
-            {
-                "last_batch_id": max(batch_rows, default=-1),
-                "min_enc_avgdl": plan["avgdl"],
-                "epochs": 1,
-            },
-        )
-        plan["compaction"] = {
-            "mode": "full",
-            "batches_compacted": sorted(batch_rows),
-            "postings_read": int(sum(r.n_postings for r in batch_rows.values())),
-            "docs_added": int(n_docs),
-        }
-        return plan
-
-    # ---- incremental compaction: touch ONLY batches > last_batch_id -------
-    new_ids = sorted(b for b in batch_rows if b > state["last_batch_id"])
-    plan_path = os.path.join(index_path, "plan.json")
-    with open(plan_path) as f:
-        plan = json.load(f)
+    new_ids = sorted(b for b in batch_rows if b > plan["last_batch_id"])
     if not new_ids:
         plan["compaction"] = {
             "mode": "noop", "batches_compacted": [], "postings_read": 0,
             "docs_added": 0,
         }
         return plan
+    dic_dir = os.path.join(index_path, plan.get("dictionary_dir", "dictionary"))
+    tp = plan.get("term_partitions")
+    if not tp or not any(e.startswith("term_bucket=") for e in os.listdir(dic_dir)):
+        raise ValueError(
+            f"the dictionary at {dic_dir} uses the pre-r4 flat layout (no "
+            "term_bucket partitions); incremental compaction does not "
+            "upgrade it — run compact_streamed_index(..., full=True) once"
+        )
     # the INDEX's persisted config governs the incremental encode — a
     # caller-supplied cfg with a different block_size or BM25 constants
     # would append delta blocks inconsistent with the rest of the index
     cfg = EngineConfig.from_plan_config(plan["config"])
+    inc = plan.get("incremental") or {"epochs": 1, "min_enc_avgdl": plan["avgdl"]}
 
-    # write-ahead marker: cleared only by the final state commit below
-    _save_compact_state(
-        index_path, {**state, "in_progress": {"batches": new_ids}}
-    )
     new_postings = spark.read.parquet(
         *[os.path.join(index_path, "postings", f"batch={b}") for b in new_ids]
     ).cache()
@@ -482,7 +300,7 @@ def compact_streamed_index(
             F.count("*").alias("n"), F.sum("doclen").alias("tot")
         ).first()
         docs_added = int(sum(batch_rows[b].n_docs for b in new_ids))
-        seen.write.mode("append").parquet(os.path.join(index_path, "docstats"))
+        _new_version(index_path, plan, "docstats", seen)
         plan["n_docs"] = int(plan["n_docs"]) + docs_added
         plan["n_empty_docs"] = int(plan["n_empty_docs"]) + docs_added - int(row["n"])
         plan["total_tokens"] = int(plan["total_tokens"]) + int(row["tot"] or 0)
@@ -490,127 +308,41 @@ def compact_streamed_index(
             plan["total_tokens"] / plan["n_docs"] if plan["n_docs"] else 0.0
         )
 
-        # dictionary: additive df/cf merge touching ONLY the buckets that
-        # contain delta terms, committed as a new VERSIONED dir (see module
-        # docstring). Swap protocol: merged affected buckets are written to
-        # a tmp dir, untouched buckets are hardlinked from the current
-        # version (same inode — byte-identical by construction), the
-        # assembled dir is renamed to dictionary.v{epoch} and plan.json
-        # repoints at it in the final commit below; the PREVIOUS version
-        # stays on disk for in-flight readers and versions older than that
-        # are GC'd. A crash anywhere before the plan commit leaves the
-        # current version untouched (the in_progress marker then routes
-        # recovery through a major compaction which clears every version).
-        import shutil
-
-        cur_name = plan.get("dictionary_dir", "dictionary")
-        cur_dir = os.path.join(index_path, cur_name)
-        old_dic = spark.read.parquet(cur_dir)
+        # dictionary: additive df/cf merge of the buckets holding delta
+        # terms. Head-heavy delta (VERDICT r4 item 5): when the delta's
+        # vocabulary touches most buckets (coupon collector), carrying the
+        # few others over saves nothing, so every bucket is rewritten.
         delta_dic = term_df(new_postings.select("term", "doc_id", "tf"))
-        new_name = f"dictionary.v{int(state['epochs']) + 1}"
-        new_dir = os.path.join(index_path, new_name)
-        shutil.rmtree(new_dir, ignore_errors=True)
-        tp = plan.get("term_partitions")
-        affected = None
-        merge_report = None
-        if "term_bucket" in old_dic.columns and tp:
-            delta_b = with_term_partition(delta_dic, tp)
-            affected = {
-                int(r.term_bucket)
-                for r in delta_b.select("term_bucket").distinct().collect()
-            }
-            merge_report = {
-                "affected_buckets": len(affected),
-                "term_partitions": int(tp),
-                "head_heavy_threshold": HEAD_HEAVY_BUCKET_FRACTION,
-            }
-            if len(affected) > HEAD_HEAVY_BUCKET_FRACTION * tp:
-                # head-heavy delta (VERDICT r4 item 5): the delta's
-                # vocabulary touches most buckets (coupon collector), so
-                # the bucket-local path would rewrite nearly everything
-                # AND pay per-directory hardlink/replace overhead on top.
-                # A straight full merge into the new version is strictly
-                # cheaper — same reader-safe versioned commit.
-                merge_report["mode"] = "full-rewrite"
-                merged = with_term_partition(
-                    old_dic.select("term", "df", "cf")
-                    .unionByName(delta_b.select("term", "df", "cf"))
-                    .groupBy("term")
-                    .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
-                    tp,
-                )
-                merged.repartition("term_bucket").sortWithinPartitions(
-                    "term"
-                ).write.mode("overwrite").partitionBy(
-                    "term_bucket"
-                ).parquet(new_dir + ".tmp")
-                os.replace(new_dir + ".tmp", new_dir)
-            else:
-                merge_report["mode"] = "bucket-local"
-                merged = with_term_partition(
-                    old_dic.where(F.col("term_bucket").isin(sorted(affected)))
-                    .select("term", "df", "cf")
-                    .unionByName(delta_b.select("term", "df", "cf"))
-                    .groupBy("term")
-                    .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
-                    tp,
-                )
-                tmp = new_dir + ".tmp"
-                # one file per rewritten bucket (see the blocks delta write)
-                merged.repartition("term_bucket").sortWithinPartitions(
-                    "term"
-                ).write.mode("overwrite").partitionBy("term_bucket").parquet(tmp)
-                os.makedirs(new_dir)
-                for entry in os.listdir(cur_dir):
-                    if not entry.startswith("term_bucket="):
-                        continue
-                    if int(entry.split("=", 1)[1]) not in affected:
-                        link_tree(
-                            os.path.join(cur_dir, entry), os.path.join(new_dir, entry)
-                        )
-                for entry in os.listdir(tmp):
-                    if entry.startswith("term_bucket="):
-                        os.replace(
-                            os.path.join(tmp, entry), os.path.join(new_dir, entry)
-                        )
-                shutil.rmtree(tmp)
-        else:
-            # pre-r4 flat dictionary (possibly with a stored idf): upgrade
-            # to the (term, df, cf) format in one full-vocab merge — the
-            # stored idf is dropped so readers compute it fresh from plan
-            merged = (
-                old_dic.select("term", "df", "cf")
-                .unionByName(delta_dic)
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-            )
-            if tp:
-                merged = with_term_partition(merged, tp)
-                tmpw = (
-                    merged.repartition("term_bucket")
-                    .sortWithinPartitions("term")
-                    .write.mode("overwrite")
-                    .partitionBy("term_bucket")
-                )
-                tmpw.parquet(new_dir + ".tmp")
-            else:
-                merged.write.mode("overwrite").parquet(new_dir + ".tmp")
-            os.replace(new_dir + ".tmp", new_dir)
-        plan["dictionary_dir"] = new_name
-        # GC: keep current + previous version; drop everything older
-        keep = {new_name, cur_name}
-        for entry in os.listdir(index_path):
-            if (
-                entry == "dictionary" or entry.startswith("dictionary.v")
-            ) and entry not in keep and not entry.endswith(".tmp"):
-                shutil.rmtree(os.path.join(index_path, entry), ignore_errors=True)
-        dic = spark.read.parquet(new_dir)
-
-        # delta blocks: encode ONLY new postings with the plan's frozen
-        # bucket_size/term_partitions, attach merged df/idf, append
-        from colbert_jl_spark.operators.codec_blocks import (
-            collision_free_tid_salt,
+        delta_b = with_term_partition(delta_dic, tp)
+        affected = {
+            int(r.term_bucket)
+            for r in delta_b.select("term_bucket").distinct().collect()
+        }
+        head_heavy = len(affected) > HEAD_HEAVY_BUCKET_FRACTION * tp
+        replace = set(range(tp)) if head_heavy else affected
+        merged = with_term_partition(
+            spark.read.parquet(dic_dir)
+            .where(F.col("term_bucket").isin(sorted(replace)))
+            .select("term", "df", "cf")
+            .unionByName(delta_b.select("term", "df", "cf"))
+            .groupBy("term")
+            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
+            tp,
         )
+        # one file per rewritten bucket (see the blocks delta write)
+        dic = spark.read.parquet(
+            _new_version(
+                index_path, plan, "dictionary",
+                merged.repartition("term_bucket").sortWithinPartitions("term"),
+                "term_bucket", replace,
+            )
+        )
+        merge_report = {
+            "affected_buckets": len(affected),
+            "term_partitions": int(tp),
+            "head_heavy_threshold": HEAD_HEAVY_BUCKET_FRACTION,
+            "mode": "full-rewrite" if head_heavy else "bucket-local",
+        }
 
         # O(delta) epoch vocabulary (VERDICT r4 item 2): both the tid
         # collision probe and the encoder's dictionary join see only the
@@ -635,8 +367,6 @@ def compact_streamed_index(
             delta_blocks, plan["term_partitions"]
         ).cache()
         postings_read = int(new_postings.count())
-        # in-place APPEND into the current (possibly versioned) blocks
-        # dir is reader-safe: only new files appear, nothing is removed.
         # Repartition ON the partition column first: the encode output's
         # task layout would otherwise land up to shuffle_partitions files
         # per term_bucket per epoch (every future scan pays per-file open
@@ -644,67 +374,56 @@ def compact_streamed_index(
         # waves). The delta is O(delta)-small so this one extra shuffle is
         # bounded, and the within-partition sort keeps parquet row-group
         # min/max stats on `term` tight for the reader's IN-filters.
-        delta_blocks.repartition("term_bucket").sortWithinPartitions(
-            "term", "bucket"
-        ).write.mode("append").partitionBy("term_bucket").parquet(
-            os.path.join(index_path, plan.get("blocks_dir", "blocks"))
+        _new_version(
+            index_path, plan, "blocks",
+            delta_blocks.repartition("term_bucket").sortWithinPartitions(
+                "term", "bucket"
+            ),
+            "term_bucket",
         )
-
         # delta lineage rows (same shape as the batch stage, one generation
-        # of rows per compaction — sums stay exact across generations)
-        lineage = lineage_by_bucket(delta_blocks)
-        lineage.write.mode("append").parquet(os.path.join(index_path, "lineage"))
-        # new docs may open new doc-range buckets; refresh the plan's
-        # bucket count (distinct: lineage accrues one row-generation per
-        # compaction) so the reader's fused-path gate stays job-free
+        # of rows per compaction — sums stay exact across generations);
+        # new docs may open new doc-range buckets, so the plan's bucket
+        # count is refreshed (distinct over the generations) and the
+        # reader's fused-path gate stays job-free
+        lineage = _new_version(
+            index_path, plan, "lineage", lineage_by_bucket(delta_blocks)
+        )
         plan["n_buckets"] = (
-            spark.read.parquet(os.path.join(index_path, "lineage"))
-            .select("bucket").distinct().count()
+            spark.read.parquet(lineage).select("bucket").distinct().count()
         )
         delta_blocks.unpersist()
         dic_delta.unpersist()
     finally:
         new_postings.unpersist()
 
-    # plan.json: the incremental marker tells IndexReader to overlay fresh
-    # idf and widen block-max bounds by avgdl drift (min over every
-    # segment's encode-time avgdl — see wand._term_blocks)
-    epoch = int(state["epochs"]) + 1
-    min_enc = min(float(state["min_enc_avgdl"]), plan["avgdl"])
-    plan["incremental"] = {"epochs": epoch, "min_enc_avgdl": min_enc}
-    if "total_postings" in plan:
-        plan["total_postings"] = int(plan["total_postings"]) + postings_read
-    # positions stage: MAINTAIN it when every delta batch carried a raw
-    # positional capture — the delta rows append under the same
-    # term_bucket partitioning (statistics-free, doc sets disjoint, so a
-    # pure append is exactly correct; covered by the in_progress marker
-    # above). Otherwise drop it so phrase() fails loudly instead of
-    # silently missing the new documents.
+    # positions derive from the RAW (pre-stoplist) token stream, which the
+    # stoplisted postings cannot reconstruct: the stage gets the delta's
+    # rows when every new batch captured them (doc sets are disjoint, so
+    # appending is exact), and the new snapshot otherwise omits it, so
+    # phrase() fails loudly instead of silently missing the new documents
     if plan.get("positions") and _positions_raw_complete(index_path, new_ids):
-        from colbert_jl_spark.operators.codec_blocks import with_term_partition as _wtp
-
-        delta_pos = spark.read.parquet(
-            *[
-                os.path.join(index_path, "positions_raw", f"batch={b}")
-                for b in new_ids
-            ]
-        )
-        _wtp(
-            delta_pos.select("term", "doc_id", "positions"),
-            plan["term_partitions"],
-        ).repartition("term_bucket").sortWithinPartitions(
-            "term", "doc_id"
-        ).write.mode("append").partitionBy("term_bucket").parquet(
-            os.path.join(index_path, plan.get("positions_dir", "positions"))
+        _new_version(
+            index_path, plan, "positions",
+            _raw_positions(spark, index_path, plan, new_ids)
+            .repartition("term_bucket")
+            .sortWithinPartitions("term", "doc_id"),
+            "term_bucket",
         )
     else:
-        _invalidate_positions(index_path, plan)
-    write_plan(index_path, plan)
-    _save_compact_state(
-        index_path,
-        {"last_batch_id": max(batch_rows), "min_enc_avgdl": min_enc,
-         "epochs": epoch},
-    )
+        plan.pop("positions", None)
+        plan.pop("positions_dir", None)
+    # the incremental marker tells IndexReader to overlay fresh idf and
+    # widen block-max bounds by avgdl drift (min over every segment's
+    # encode-time avgdl — see wand._term_blocks)
+    plan["incremental"] = {
+        "epochs": int(inc["epochs"]) + 1,
+        "min_enc_avgdl": min(float(inc["min_enc_avgdl"]), plan["avgdl"]),
+    }
+    if "total_postings" in plan:
+        plan["total_postings"] = int(plan["total_postings"]) + postings_read
+    plan["last_batch_id"] = max(batch_rows)
+    _commit_plan(index_path, plan)
     plan["compaction"] = {
         "mode": "incremental",
         "batches_compacted": new_ids,
@@ -713,8 +432,64 @@ def compact_streamed_index(
         # O(delta) evidence: rows the collision probe / encoder join saw
         # (== the delta vocabulary), and which dictionary merge path ran
         "probe_terms": probe_terms,
-        "probe_buckets": len(affected) if affected is not None else None,
+        "probe_buckets": len(affected),
         "dictionary_merge": merge_report,
+    }
+    return plan
+
+
+def _major_compaction(
+    spark: SparkSession,
+    index_path: str,
+    cfg: EngineConfig,
+    batch_rows: dict,
+    previous: dict | None,
+) -> dict:
+    """The full rebuild behind compact_streamed_index: every derived stage
+    re-runs in the batch builder over all logged batches, writing the bare
+    stage dirs in place (so it runs alone). The positions stage is rebuilt
+    from positions_raw when every batch captured it. The commit retires
+    the dirs ``previous`` named, and the GC reclaims them after its
+    grace."""
+    from colbert_jl_spark.plans.build import (
+        IndexBuilder,
+        _atomic_write,
+        _load_stages,
+        _mark_stage,
+        _stage_file,
+    )
+
+    stages = _load_stages(index_path)
+    for s in ("plan", "dictionary", "blocks", "lineage", "positions"):
+        stages.pop(s, None)
+    snapshot.write_json(_stage_file(index_path), stages)
+    _mark_stage(index_path, "postings", {"streamed": True})
+    batch_ids = sorted(batch_rows)
+    n_docs = int(sum(r.n_docs for r in batch_rows.values()))
+    # index ONLY the logged batches: a batch whose postings landed but
+    # whose log row hasn't (the sink writes postings first) must wait for
+    # the next compaction, or it would be indexed now AND re-read as "new"
+    # later — double-counted (see finish_from_postings)
+    plan = IndexBuilder(index_path, cfg).finish_from_postings(
+        spark, n_docs_total=n_docs, batch_ids=batch_ids
+    )
+    # phrase queries stay servable on streamed indexes across major
+    # compactions when the ingest captured per-batch raw positions
+    if _positions_raw_complete(index_path, batch_ids):
+        _atomic_write(
+            _raw_positions(spark, index_path, plan, batch_ids),
+            os.path.join(index_path, "positions"),
+            "term_bucket",
+        )
+        plan["positions"] = True
+        _mark_stage(index_path, "positions")
+    plan["last_batch_id"] = max(batch_rows, default=-1)
+    _commit_plan(index_path, plan, previous)
+    plan["compaction"] = {
+        "mode": "full",
+        "batches_compacted": batch_ids,
+        "postings_read": int(sum(r.n_postings for r in batch_rows.values())),
+        "docs_added": n_docs,
     }
     return plan
 
@@ -742,20 +517,13 @@ def minor_compact(
          (codec_blocks.blocks_to_postings), re-encodes them with the
          plan's frozen bucket_size into disjoint blocks with CURRENT
          df/idf/avgdl statistics, and
-      3. commits a VERSIONED ``blocks.v{k}`` dir: rewritten term_bucket
-         partitions from the new encode, every other partition hardlinked
-         byte-identical from the current version; plan.json repoints
-         ``blocks_dir`` and the previous version stays on disk for
-         in-flight readers (the same reader-safe protocol as the
-         incremental dictionary merge — an in-place per-dir swap would
-         hand a concurrent query a FileNotFoundError window).
+      3. commits a new blocks version (snapshot.py): the rewritten
+         term_bucket partitions from the new encode, every other
+         partition carried over byte-identical, one plan.json rename.
 
     The codec configuration comes from the INDEX's plan.json (like
     IndexReader), never from a caller argument — re-encoding under another
-    block_size or BM25 constants would corrupt the block metadata. A crashed
-    prior compaction (``in_progress`` marker set) must be recovered by
-    compact_streamed_index first: re-blocking half-written deltas would
-    launder duplicated postings into clean-looking segments.
+    block_size or BM25 constants would corrupt the block metadata.
 
     Returns {mode, groups, rewritten_term_buckets}."""
     from pyspark.sql import Window
@@ -766,28 +534,19 @@ def minor_compact(
         posting_blocks,
         with_term_partition,
     )
-    from colbert_jl_spark.plans.build import write_plan
+    from colbert_jl_spark.plans.build import IndexReader
 
-    state = _load_compact_state(index_path)
-    if state is None:
+    plan = snapshot.load(index_path, "plan.json")
+    if plan is None or "last_batch_id" not in plan:
         raise RuntimeError(
-            "minor_compact applies to streamed indexes (no _COMPACT.json "
-            "here); batch-built indexes are disjoint by construction"
+            "minor_compact applies to streamed indexes (their plan.json "
+            "records the last compacted batch); batch-built indexes are "
+            "disjoint by construction"
         )
-    if state.get("in_progress"):
-        raise RuntimeError(
-            "a previous compaction died mid-write (in_progress marker set) "
-            "— run compact_streamed_index first (it recovers via a major "
-            "compaction); minor_compact over partial deltas would re-block "
-            "duplicated postings into clean-looking segments"
-        )
-    plan_path = os.path.join(index_path, "plan.json")
-    with open(plan_path) as f:
-        plan = json.load(f)
     cfg = EngineConfig.from_plan_config(plan["config"])
-    cur_name = plan.get("blocks_dir", "blocks")
-    blocks_dir = os.path.join(index_path, cur_name)
-    blocks = spark.read.parquet(blocks_dir)
+    blocks = spark.read.parquet(
+        os.path.join(index_path, plan.get("blocks_dir", "blocks"))
+    )
 
     # 1. overlap detection on metadata only
     w = Window.partitionBy("term", "bucket").orderBy(
@@ -828,8 +587,6 @@ def minor_compact(
         keep = marked.where(F.col("_redo").isNull()).drop("_redo")
         redo = marked.where(F.col("_redo")).drop("_redo")
         postings = blocks_to_postings(redo)
-        from colbert_jl_spark.plans.build import IndexReader
-
         # restrict the re-encode's dictionary view (collision probe + tid
         # join) to the overlapping groups' terms, bucket-pruned to the
         # term_buckets being rewritten — O(touched), never O(vocab)
@@ -850,68 +607,33 @@ def minor_compact(
         )
         fresh = with_term_partition(fresh, plan["term_partitions"])
         out = keep.unionByName(fresh.select(*keep.columns))
-
-        # 3. assemble the new VERSIONED blocks dir (reader-safe: nothing
-        # in the current version is touched until the plan repoint below)
-        import shutil
-
-        versions = [
-            int(e.split(".v", 1)[1])
-            for e in os.listdir(index_path)
-            if e.startswith("blocks.v") and not e.endswith(".tmp")
-        ]
-        new_name = f"blocks.v{max(versions, default=1) + 1}"
-        new_dir = os.path.join(index_path, new_name)
-        tmp = new_dir + ".tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        # repartition ON the partition column: a rewritten bucket lands as
-        # ONE consolidated file (the whole point of compaction), not one
+        # 3. repartition ON the partition column: a rewritten bucket lands
+        # as ONE consolidated file (the whole point of compaction), not one
         # file per upstream task; the sort keeps row-group `term` stats
         # tight for the reader's IN-filters
-        out.repartition("term_bucket").sortWithinPartitions(
-            "term", "bucket", "first_docid"
-        ).write.mode("overwrite").partitionBy("term_bucket").parquet(tmp)
-        shutil.rmtree(new_dir, ignore_errors=True)
-        os.makedirs(new_dir)
-        tbs_set = set(tbs)
-        for entry in os.listdir(blocks_dir):
-            if (
-                entry.startswith("term_bucket=")
-                and int(entry.split("=", 1)[1]) not in tbs_set
-            ):
-                link_tree(os.path.join(blocks_dir, entry), os.path.join(new_dir, entry))
-        for entry in os.listdir(tmp):
-            if entry.startswith("term_bucket="):
-                os.replace(os.path.join(tmp, entry), os.path.join(new_dir, entry))
-        shutil.rmtree(tmp, ignore_errors=True)
+        _new_version(
+            index_path, plan, "blocks",
+            out.repartition("term_bucket").sortWithinPartitions(
+                "term", "bucket", "first_docid"
+            ),
+            "term_bucket", tbs,
+        )
     finally:
         overlapping.unpersist()
 
-    # commit = plan repoint (+ minor_compactions counter so the pass is
-    # observable); live readers refresh onto the new version, the previous
-    # one stays for in-flight queries, and older versions are GC'd
-    plan["blocks_dir"] = new_name
+    # the minor_compactions counter makes the pass observable
     inc = plan.setdefault("incremental", {"epochs": 1, "min_enc_avgdl": plan["avgdl"]})
     inc["minor_compactions"] = int(inc.get("minor_compactions", 0)) + 1
-    write_plan(index_path, plan)
-    keep = {new_name, cur_name}
-    for entry in os.listdir(index_path):
-        if (
-            (entry == "blocks" or entry.startswith("blocks.v"))
-            and entry not in keep
-            and not entry.endswith(".tmp")
-        ):
-            shutil.rmtree(os.path.join(index_path, entry), ignore_errors=True)
+    _commit_plan(index_path, plan)
     out = {
         "mode": "minor",
         "groups": int(n_groups),
         "rewritten_term_buckets": tbs,
     }
     # fold the positional stage into the same pass (VERDICT r4 item 4):
-    # incremental epochs append per-bucket delta files to positions/ with
+    # incremental epochs append per-bucket delta files to positions with
     # no rewrite path of their own — minor compaction is the natural
-    # periodic hook (plan.json was just committed, so the helper sees the
-    # new blocks_dir)
+    # periodic hook
     if plan.get("positions"):
         out["positions"] = compact_positions(spark, index_path)
     return out
@@ -929,40 +651,21 @@ def compact_positions(
     open-cost tax on every phrase scan. This pass rewrites ONLY the
     buckets whose file count exceeds ``max_files_per_bucket`` (one file
     per bucket afterwards, rows sorted by (term, doc_id) so parquet
-    row-group min/max stats prune the reader's term IN-filters),
-    hardlinks every other bucket byte-identical, and commits a VERSIONED
-    ``positions.v{k}`` dir with a plan.json repoint — the same
-    reader-safe swap protocol as the dictionary/blocks stages (previous
-    version retained for in-flight readers, older versions GC'd). Pure
-    file consolidation: positional rows are one per (term, doc_id) with
+    row-group min/max stats prune the reader's term IN-filters), carries
+    every other bucket over byte-identical, and commits the new positions
+    version with one plan.json rename (snapshot.py). Pure file
+    consolidation: positional rows are one per (term, doc_id) with
     disjoint doc sets across epochs, so no merge logic is needed and
     phrase output is identical across the swap (gated in tests).
 
     Returns {mode, rewritten_term_buckets, max_files_seen}."""
-    import shutil
+    from colbert_jl_spark.plans.build import bucket_file_counts
 
-    from colbert_jl_spark.plans.build import write_plan
-
-    state = _load_compact_state(index_path)
-    if state is not None and state.get("in_progress"):
-        raise RuntimeError(
-            "a previous compaction died mid-write (in_progress marker set) "
-            "— run compact_streamed_index first (it recovers via a major "
-            "compaction)"
-        )
-    with open(os.path.join(index_path, "plan.json")) as f:
-        plan = json.load(f)
+    plan = snapshot.load(index_path, "plan.json")
     if not plan.get("positions"):
         return {"mode": "noop", "rewritten_term_buckets": [], "max_files_seen": 0}
-    cur_name = plan.get("positions_dir", "positions")
-    cur_dir = os.path.join(index_path, cur_name)
-    counts = {}
-    for entry in os.listdir(cur_dir):
-        if entry.startswith("term_bucket="):
-            d = os.path.join(cur_dir, entry)
-            counts[int(entry.split("=", 1)[1])] = sum(
-                1 for f in os.listdir(d) if f.startswith("part-")
-            )
+    cur_dir = os.path.join(index_path, plan.get("positions_dir", "positions"))
+    counts = bucket_file_counts(cur_dir)
     max_seen = max(counts.values(), default=0)
     crowded = sorted(b for b, c in counts.items() if c > max_files_per_bucket)
     if not crowded:
@@ -970,43 +673,17 @@ def compact_positions(
             "mode": "noop", "rewritten_term_buckets": [],
             "max_files_seen": max_seen,
         }
-
-    pos = spark.read.parquet(cur_dir).where(F.col("term_bucket").isin(crowded))
-    versions = [
-        int(e.split(".v", 1)[1])
-        for e in os.listdir(index_path)
-        if e.startswith("positions.v") and not e.endswith(".tmp")
-    ]
-    new_name = f"positions.v{max(versions, default=1) + 1}"
-    new_dir = os.path.join(index_path, new_name)
-    tmp = new_dir + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    (
-        # one shuffle keyed by term_bucket → exactly one file per
-        # rewritten bucket, rows sorted for row-group pruning
-        pos.repartition("term_bucket")
-        .sortWithinPartitions("term", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("term_bucket")
-        .parquet(tmp)
+    # one shuffle keyed by term_bucket → exactly one file per rewritten
+    # bucket, rows sorted for row-group pruning
+    _new_version(
+        index_path, plan, "positions",
+        spark.read.parquet(cur_dir)
+        .where(F.col("term_bucket").isin(crowded))
+        .repartition("term_bucket")
+        .sortWithinPartitions("term", "doc_id"),
+        "term_bucket", crowded,
     )
-    shutil.rmtree(new_dir, ignore_errors=True)
-    os.makedirs(new_dir)
-    crowded_set = set(crowded)
-    for entry in os.listdir(cur_dir):
-        if (
-            entry.startswith("term_bucket=")
-            and int(entry.split("=", 1)[1]) not in crowded_set
-        ):
-            link_tree(os.path.join(cur_dir, entry), os.path.join(new_dir, entry))
-    for entry in os.listdir(tmp):
-        if entry.startswith("term_bucket="):
-            os.replace(os.path.join(tmp, entry), os.path.join(new_dir, entry))
-    shutil.rmtree(tmp, ignore_errors=True)
-
-    plan["positions_dir"] = new_name
-    write_plan(index_path, plan)
-    _gc_positions_dirs(index_path, keep={new_name, cur_name})
+    _commit_plan(index_path, plan)
     return {
         "mode": "positions",
         "rewritten_term_buckets": crowded,

@@ -13,7 +13,12 @@ import pytest
 
 from colbert_jl_spark.config import EngineConfig
 from colbert_jl_spark.operators.bm25 import bm25_topk
-from colbert_jl_spark.plans.build import IndexBuilder, IndexReader, _load_stages
+from colbert_jl_spark.plans.build import (
+    IndexBuilder,
+    IndexReader,
+    _load_stages,
+    bucket_file_counts,
+)
 from colbert_jl_spark.queries import queries_df
 
 
@@ -276,7 +281,9 @@ def test_plan_with_other_block_format_refused(spark, docs001, index_dir):
     """Plans written while the packed/columnar block formats existed name
     their format in config: "varint" still loads, any other format is
     refused by name instead of being decoded with the varint codec."""
-    IndexBuilder(index_dir, EngineConfig(block_size=32)).build(docs001)
+    # one doc bucket: the query itself is one job (no ranking window)
+    cfg = EngineConfig(block_size=32, min_bucket_docs=1_000_000)
+    IndexBuilder(index_dir, cfg).build(docs001)
     plan_path = os.path.join(index_dir, "plan.json")
     with open(plan_path) as f:
         plan = json.load(f)
@@ -338,7 +345,7 @@ def test_validate_flags_fragmented_stage(spark, docs01, index_dir, tmp_path):
     # SAME rows: every other invariant (posting sums, doc counts) holds,
     # so any failure is attributable to fragmentation alone
     bdir = reader._stage_dir("blocks_dir", "blocks")
-    counts = reader._bucket_file_counts(bdir)
+    counts = bucket_file_counts(bdir)
     bucket = max(counts, key=counts.get)
     sub = os.path.join(bdir, f"term_bucket={bucket}")
     frag = str(tmp_path / "frag")
@@ -389,3 +396,26 @@ def test_stage_scan_survives_version_gc_race(spark, docs001, tmp_path):
     # the stale-plan scan path resolves through _stage_df's retry
     got = reader.search([(0, "spark table join")]).toPandas()
     pd.testing.assert_frame_equal(got, want, check_like=True)
+
+
+def test_term_stats_miss_runs_two_jobs(spark, docs001, index_dir):
+    """A warm reader builds each stage's DataFrame once per plan snapshot,
+    so a search whose terms it has not seen runs the dictionary lookup and
+    the query — 2 jobs — with no parquet schema-inference job before the
+    lookup (counted with statusTracker job groups on a hot one-bucket
+    reader, whose query is one job)."""
+    cfg = EngineConfig(block_size=32, min_bucket_docs=1_000_000)
+    IndexBuilder(index_dir, cfg).build(docs001)
+    reader = IndexReader(spark, index_dir).load_hot()
+    try:
+        vocab = sorted(r.term for r in reader.dictionary.select("term").collect())
+        reader.search([(0, vocab[0])]).collect()  # warm
+        sc = spark.sparkContext
+        sc.setJobGroup("term-stats-miss", "unseen terms")
+        try:
+            assert reader.search([(1, f"{vocab[1]} {vocab[2]}")]).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("term-stats-miss")) == 2
+    finally:
+        reader.release()

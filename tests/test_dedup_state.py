@@ -148,13 +148,57 @@ def test_orphan_wave_dirs_are_invisible(spark, tmp_path):
 
 
 def test_labels_versioned_swap_retains_current_and_previous(spark, tmp_path):
-    """The labels table follows the index's versioned-swap protocol:
-    after 3 waves, labels.v3 (current) and labels.v2 (previous, for
-    in-flight readers) exist; labels.v1 is GC'd."""
+    """Retention under the snapshot rule: state.json names exactly one
+    labels version, and a version it stopped naming stays on disk (a
+    reader that loaded the older state may still scan it) until it has
+    been retired for snapshot.GRACE_SEC; the next commit after that
+    reclaims it."""
+    import json
+
+    from colbert_jl_spark import snapshot
+
     path = str(tmp_path / "dedup")
-    _run_waves(spark, path)
-    entries = sorted(e for e in os.listdir(path) if e.startswith("labels.v"))
-    assert entries == ["labels.v2", "labels.v3"]
+    idx, _ = _run_waves(spark, path)
+
+    def versions():
+        return sorted(e for e in os.listdir(path) if e.startswith("labels.v"))
+
+    assert json.load(open(os.path.join(path, "state.json")))["labels_dir"] == "labels.v3"
+    assert versions() == ["labels.v1", "labels.v2", "labels.v3"]  # young
+    past = os.path.getmtime(os.path.join(path, "labels.v1")) - snapshot.GRACE_SEC - 60
+    for v in ("labels.v1", "labels.v2"):
+        os.utime(os.path.join(path, v), (past, past))
+    corpus = spark.createDataFrame(_ROWS, SCHEMA)
+    idx.update(spark, spark.createDataFrame([(7, "a brand new page")], SCHEMA), corpus)
+    # v3 was retired just now: it stays for its grace, like the new v4
+    assert versions() == ["labels.v3", "labels.v4"]
+    assert {r.doc_id for r in idx.labels(spark).collect()} == set(range(8))
+
+
+def test_pre_r7_unpartitioned_labels_refused(spark, tmp_path):
+    """A state from before partition-local labels (no label_parts or
+    n_labels in state.json, labels without lpart partitions) is refused
+    by update() with the layout named, and nothing is written."""
+    import json
+
+    from colbert_jl_spark.streaming.dedup_state import DedupIndex
+
+    path = str(tmp_path / "dedup")
+    idx = DedupIndex(path, n=3, threshold=0.7, cfg=CFG)
+    w1 = spark.createDataFrame(_ROWS[0:3], SCHEMA)
+    idx.update(spark, w1)
+    st = json.load(open(os.path.join(path, "state.json")))
+    labels = spark.read.parquet(os.path.join(path, st["labels_dir"]))
+    labels.select("doc_id", "component_id").write.parquet(os.path.join(path, "labels.v9"))
+    for k in ("label_parts", "n_labels"):
+        st.pop(k)
+    st["labels_dir"] = "labels.v9"
+    json.dump(st, open(os.path.join(path, "state.json"), "w"))
+
+    with pytest.raises(ValueError, match="pre-r7 unpartitioned labels layout"):
+        idx.update(spark, spark.createDataFrame(_ROWS[3:5], SCHEMA), w1)
+    assert json.load(open(os.path.join(path, "state.json"))) == st
+    assert not os.path.exists(os.path.join(path, "signatures", "wave=2"))
 
 
 def test_mismatched_parameters_refused(spark, tmp_path):

@@ -1,0 +1,360 @@
+"""The snapshot protocol (colbert_jl_spark/snapshot.py) under faults,
+concurrency and age: every mutable index and dedup state changes only by
+assembling immutable version dirs and renaming one manifest."""
+
+from __future__ import annotations
+
+import ast
+import json
+import os
+import random
+import threading
+from pathlib import Path
+
+import pytest
+from pyspark.sql import functions as F
+
+from colbert_jl_spark import snapshot
+from colbert_jl_spark.config import EngineConfig
+from colbert_jl_spark.operators.bm25 import bm25_topk
+from colbert_jl_spark.operators.phrase import phrase_matches
+from colbert_jl_spark.plans.build import IndexReader, bucket_file_counts
+from colbert_jl_spark.sources.pages import pages_from_documents
+from colbert_jl_spark.streaming.ingest import (
+    compact_positions,
+    compact_streamed_index,
+    minor_compact,
+    stream_pages_to_postings,
+)
+
+PKG = Path(__file__).resolve().parent.parent / "colbert_jl_spark"
+
+
+def _named(m):
+    return {m["dir"]}
+
+
+def test_gc_grace_runs_from_retirement(tmp_path):
+    """A dir the GC may reclaim ages from the commit that stopped naming
+    it, not from when it was written: an old dir retired just now survives
+    the next commit; once past the grace it is reclaimed. A dir no
+    manifest ever named (a crashed writer's) ages from its write."""
+    root = str(tmp_path)
+    for d in ("t.v1", "t.v2", "t.v3.tmp", "t.v9"):
+        os.makedirs(os.path.join(root, d))
+    long_ago = os.path.getmtime(root) - snapshot.GRACE_SEC - 60
+    for d in ("t.v1", "t.v3.tmp"):
+        os.utime(os.path.join(root, d), (long_ago, long_ago))
+    snapshot.commit(root, "m.json", {"dir": "t.v1"}, ("t",), _named)
+
+    snapshot.commit(root, "m.json", {"dir": "t.v2"}, ("t",), _named)
+    # t.v1 was written long ago but retired just now; the old orphan
+    # staging dir goes, the young orphan t.v9 stays
+    assert sorted(os.listdir(root)) == ["m.json", "t.v1", "t.v2", "t.v9"]
+    assert snapshot.staging(root, "t").endswith("t.v10.tmp")
+
+    os.utime(os.path.join(root, "t.v1"), (long_ago, long_ago))
+    snapshot.commit(root, "m.json", {"dir": "t.v2"}, ("t",), _named)
+    assert sorted(os.listdir(root)) == ["m.json", "t.v2", "t.v9"]
+    assert json.load(open(os.path.join(root, "m.json"))) == {"dir": "t.v2"}
+
+
+def test_assemble_carries_over_unreplaced_partitions(tmp_path):
+    root = str(tmp_path)
+    for part, name in (("p=1", "a"), ("p=2", "b"), ("p=3", "c")):
+        os.makedirs(os.path.join(root, "s", part))
+        Path(root, "s", part, name).write_text(name)
+    Path(root, "s", "_SUCCESS").write_text("")
+    tmp = snapshot.staging(root, "s")
+    os.makedirs(os.path.join(tmp, "p=2"))
+    os.makedirs(os.path.join(tmp, "p=4"))
+    Path(tmp, "p=2", "b2").write_text("b2")
+    Path(tmp, "p=4", "d").write_text("d")
+    Path(tmp, "_SUCCESS").write_text("")
+    assert snapshot.assemble(root, tmp, "s", replace={2}) == "s.v2"
+    got = sorted(
+        os.path.relpath(os.path.join(d, f), os.path.join(root, "s.v2"))
+        for d, _, fs in os.walk(os.path.join(root, "s.v2"))
+        for f in fs
+    )
+    assert got == ["_SUCCESS", "p=1/a", "p=2/b2", "p=3/c", "p=4/d"]
+    assert os.stat(os.path.join(root, "s.v2", "p=1", "a")).st_ino == os.stat(
+        os.path.join(root, "s", "p=1", "a")
+    ).st_ino
+    assert not os.path.exists(tmp)
+
+
+# modules (relative to the package) and functions allowed to move or
+# remove files themselves; everything else goes through snapshot.py
+_FILE_OPS = {
+    "os.rename", "os.replace", "shutil.rmtree", "os.link",
+    "link_tree", "link_or_copy",
+}
+_ALLOWED = {
+    "snapshot.py": None,  # the protocol itself
+    # the batch IndexBuilder's bare-stage staging (<stage>.tmp → <stage>)
+    # and its force=True restart; a batch build runs alone
+    "plans/build.py": {"_atomic_write", "IndexBuilder.build"},
+}
+
+
+def _file_op_calls(path: Path):
+    """(qualified function, called name) of every file-moving call."""
+    tree = ast.parse(path.read_text())
+    out = []
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = (
+                    f"{f.value.id}.{f.attr}"
+                    if isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name)
+                    else getattr(f, "id", getattr(f, "attr", ""))
+                )
+                if name in _FILE_OPS:
+                    out.append((scope, name))
+            visit(child, inner)
+
+    visit(tree, "")
+    return out
+
+
+def test_only_the_snapshot_module_moves_files():
+    """No module hand-rolls its own version/rename/GC protocol: every
+    os.rename / os.replace / shutil.rmtree / os.link / link helper call in
+    the package is in snapshot.py or on the explicit allowlist."""
+    stray = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        allowed = _ALLOWED.get(rel, set())
+        for scope, name in _file_op_calls(path):
+            if allowed is not None and scope not in allowed:
+                stray.append(f"{rel}:{scope or '<module>'} calls {name}")
+    assert not stray, stray
+    assert any(n == "os.rename" for _, n in _file_op_calls(PKG / "snapshot.py"))
+
+
+# ---- fault injection and concurrency over one streamed index ------------
+
+CFG = EngineConfig(block_size=8, min_bucket_docs=64, term_partitions=32)
+VOCAB = [f"w{i}" for i in range(60)]
+QUERIES = [(0, "w1 w2 w30"), (1, "w3"), (2, "w40 w41 w42"), (3, "w7 w8 w9")]
+PHRASES = [(0, "w1 w2"), (1, "w7 w8"), (2, "w50 w51")]
+
+
+def _docs(spark, n_waves=3, per_wave=60):
+    """Interleaved doc ids (wave w holds ids ≡ w mod n_waves). Wave 0
+    draws from the whole vocabulary, each later wave from its own
+    6-term slice, so later epochs touch few term buckets and overlap
+    wave 0's segments only there."""
+    rng = random.Random(11)
+    rows = []
+    for d in range(n_waves * per_wave):
+        w = d % n_waves
+        words = VOCAB if w == 0 else VOCAB[6 * (w - 1): 6 * w]
+        rows.append((d, " ".join(rng.choices(words, k=10)), "en"))
+    return spark.createDataFrame(rows, "doc_id long, text string, lang string"), n_waves
+
+
+class _Streamed:
+    """A streamed index with positional capture, fed one wave at a time."""
+
+    def __init__(self, spark, root, docs, n_waves):
+        self.spark, self.docs, self.n_waves = spark, docs, n_waves
+        self.pages = pages_from_documents(docs)
+        self.pages_dir, self.idx, self.ckpt = (
+            str(root / d) for d in ("pages", "idx", "ckpt")
+        )
+
+    def ingest(self, wave: int) -> None:
+        self.pages.where(F.col("doc_id") % self.n_waves == wave).write.mode(
+            "append"
+        ).parquet(self.pages_dir)
+        stream_pages_to_postings(
+            self.spark, self.pages_dir, self.idx, self.ckpt, CFG, positions=True
+        )
+
+    def served(self) -> dict:
+        """What a fresh reader serves: search, phrase, validate, plan."""
+        r = IndexReader(self.spark, self.idx)
+        return {
+            "search": _ranked(r.search(QUERIES)),
+            "phrase": sorted(map(tuple, r.phrase(PHRASES).collect())),
+            "ok": r.validate()["ok"],
+            "plan": r.plan,
+        }
+
+    def rows(self) -> dict:
+        """Every table of the committed snapshot, by content."""
+        r = IndexReader(self.spark, self.idx)
+        return {
+            "dictionary": sorted(map(tuple, r.dictionary.collect())),
+            "blocks": sorted(map(tuple, r.blocks.collect())),
+            "docstats": sorted(map(tuple, r.docstats.collect())),
+            "lineage": sorted(map(tuple, r.lineage.collect())),
+            "positions": sorted(
+                (x.term, x.doc_id, tuple(x.positions))
+                for x in r._stage_df("positions_dir", "positions").collect()
+            ),
+        }
+
+
+def _ranked(df) -> list:
+    return sorted(
+        (r.qid, r.rank, r.doc_id, round(r.score, 4)) for r in df.collect()
+    )
+
+
+STEPS = ("staging", "link_or_copy", "assemble", "gc", "write_json")
+
+
+def _abort_each_step(monkeypatch, run, check) -> None:
+    """Run ``run`` once per snapshot.py step with that step raising; the
+    step must have been reached, and ``check`` must hold after the
+    abort."""
+    for step in STEPS:
+        def boom(*a, _step=step, **kw):
+            raise RuntimeError(f"injected failure in {_step}")
+
+        with monkeypatch.context() as m:
+            m.setattr(snapshot, step, boom)
+            with pytest.raises(RuntimeError, match=f"injected failure in {step}"):
+                run()
+        check()
+
+
+def _strip(report):
+    """A report without the version dir names, which a retry advances."""
+    if isinstance(report, dict):
+        return {k: _strip(v) for k, v in report.items() if not k.endswith("_dir")}
+    return report
+
+
+def test_every_step_abort_leaves_the_old_snapshot(spark, tmp_path, monkeypatch):
+    """Each snapshot.py step raises in turn during an incremental
+    compaction, compact_positions, minor_compact and a DedupIndex wave.
+    After every abort a fresh reader sees exactly the old snapshot
+    (search, phrase, validate, plan; pairs and labels), and re-running the
+    operation then equals the same operation on an identical index that
+    never failed."""
+    docs, n_waves = _docs(spark)
+    faulty = _Streamed(spark, tmp_path / "faulty", docs, n_waves)
+    clean = _Streamed(spark, tmp_path / "clean", docs, n_waves)
+    for s in (faulty, clean):
+        for wave in range(n_waves - 1):
+            s.ingest(wave)
+            compact_streamed_index(spark, s.idx, CFG)
+        s.ingest(n_waves - 1)
+
+    def crowded_limit():
+        counts = bucket_file_counts(
+            os.path.join(faulty.idx, IndexReader(spark, faulty.idx).plan["positions_dir"])
+        )
+        assert len(set(counts.values())) > 1, counts
+        return min(counts.values())
+
+    ops = [
+        ("incremental", lambda s: compact_streamed_index(spark, s.idx, CFG)["compaction"]),
+        ("positions", lambda s: compact_positions(spark, s.idx, limit[0])),
+        ("minor", lambda s: minor_compact(spark, s.idx)),
+    ]
+    limit = [None]
+    for name, op in ops:
+        if name == "positions":
+            limit[0] = crowded_limit()
+        before = faulty.served()
+        _abort_each_step(
+            monkeypatch, lambda: op(faulty),
+            lambda: faulty.served() == before or pytest.fail(name),
+        )
+        got, want = op(faulty), op(clean)
+        assert got["mode"] == name, got
+        assert _strip(got) == _strip(want)
+        assert faulty.rows() == clean.rows()
+        assert _strip(faulty.served()) == _strip(clean.served())
+        assert faulty.served()["ok"]
+    # the whole history equals the from-scratch truth
+    served = faulty.served()
+    qdf = spark.createDataFrame(QUERIES, "qid long, query string")
+    assert served["search"] == _ranked(bm25_topk(docs, qdf, CFG))
+    assert served["phrase"] == sorted(map(tuple, phrase_matches(docs, PHRASES, CFG).collect()))
+
+    # the dedup state: a second wave aborted at every step
+    from colbert_jl_spark.streaming.dedup_state import DedupIndex
+    from tests.test_dedup_state import _ROWS, _WAVES, SCHEMA
+
+    states = [
+        DedupIndex(str(tmp_path / d), n=3, threshold=0.7, cfg=EngineConfig())
+        for d in ("dedup_faulty", "dedup_clean")
+    ]
+    w1 = spark.createDataFrame(_WAVES[0], SCHEMA)
+    w2 = spark.createDataFrame(_WAVES[1], SCHEMA)
+    for st in states:
+        st.update(spark, w1)
+
+    def result(st):
+        return (
+            sorted(map(tuple, st.pairs(spark).collect())),
+            sorted(map(tuple, st.labels(spark).collect())),
+            st._state(),
+        )
+
+    before = result(states[0])
+    _abort_each_step(
+        monkeypatch, lambda: states[0].update(spark, w2, w1),
+        lambda: result(states[0]) == before or pytest.fail("dedup"),
+    )
+    got, want = (st.update(spark, w2, w1) for st in states)
+    assert _strip(got) == _strip(want)
+    assert result(states[0])[:2] == result(states[1])[:2]
+    assert {r.doc_id for r in states[0].labels(spark).collect()} == {
+        r[0] for r in _ROWS[0:5]
+    }
+
+
+def test_reader_thread_sees_only_committed_snapshots(spark, tmp_path):
+    """A reader thread searches while the main thread runs three
+    incremental compactions, a compact_positions and a minor_compact. It
+    never raises, and every result it gets equals bm25_topk over the
+    documents of some committed snapshot."""
+    docs, n_waves = _docs(spark, n_waves=4, per_wave=40)
+    s = _Streamed(spark, tmp_path / "s", docs, n_waves)
+    s.ingest(0)
+    compact_streamed_index(spark, s.idx, CFG)
+    qdf = spark.createDataFrame(QUERIES, "qid long, query string")
+    truths = {
+        w: _ranked(bm25_topk(docs.where(F.col("doc_id") % n_waves <= w), qdf, CFG))
+        for w in range(n_waves)
+    }
+    assert len({tuple(t) for t in truths.values()}) == n_waves
+
+    results, errors, stop = [], [], threading.Event()
+
+    def read():
+        reader = IndexReader(spark, s.idx)
+        try:
+            while not stop.is_set():
+                results.append(_ranked(reader.search(QUERIES)))
+        except Exception as e:  # surfaced below
+            errors.append(e)
+
+    t = threading.Thread(target=read)
+    t.start()
+    try:
+        for wave in range(1, n_waves):
+            s.ingest(wave)
+            assert compact_streamed_index(spark, s.idx, CFG)["compaction"]["mode"] == "incremental"
+        assert compact_positions(spark, s.idx, 1)["mode"] == "positions"
+        assert minor_compact(spark, s.idx)["mode"] == "minor"
+    finally:
+        stop.set()
+        t.join()
+    assert not errors, errors
+    assert results
+    seen = {w for r in results for w, truth in truths.items() if r == truth}
+    assert all(r in truths.values() for r in results)
+    assert seen, "no result matched a snapshot"

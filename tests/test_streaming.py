@@ -88,12 +88,17 @@ def test_incremental_compaction_touches_only_new_postings(spark, docs01, tmp_pat
     stale_reader.search_local([(0, "spark table join")]).collect()
 
     def block_files():
+        """part files of the plan's blocks version, by path within it"""
+        plan = json.load(open(os.path.join(idx, "plan.json")))
+        top = os.path.join(idx, plan.get("blocks_dir", "blocks"))
         out = {}
-        for root, _, files in os.walk(os.path.join(idx, "blocks")):
+        for root, _, files in os.walk(top):
             for f in files:
                 if f.startswith("part-"):
                     p = os.path.join(root, f)
-                    out[p] = (os.path.getmtime(p), os.path.getsize(p))
+                    out[os.path.relpath(p, top)] = (
+                        os.stat(p).st_ino, os.path.getmtime(p), os.path.getsize(p)
+                    )
         return out
 
     old_files = block_files()
@@ -116,7 +121,8 @@ def test_incremental_compaction_touches_only_new_postings(spark, docs01, tmp_pat
     # (a) the job read exactly the new wave's postings, nothing more
     assert r2["compaction"]["postings_read"] == wave2_postings
     assert r2["compaction"]["docs_added"] == w2.count()
-    # (b) pure delta append: every pre-existing block file untouched
+    # (b) pure delta append: the new blocks version carries every
+    # pre-existing block file over untouched (same inode), plus the delta
     new_files = block_files()
     for p, sig in old_files.items():
         assert p in new_files and new_files[p] == sig, f"rewritten: {p}"
@@ -189,11 +195,19 @@ def test_incremental_compaction_touches_only_new_postings(spark, docs01, tmp_pat
     assert r3["compaction"]["mode"] == "noop"
 
     # and a MAJOR compaction (full=True) resets epochs + stays identical,
-    # clearing every versioned dictionary dir back to the canonical one
+    # naming the canonical dictionary dir again; the versioned dirs it
+    # retired are reclaimed by the GC once past its grace
+    from colbert_jl_spark import snapshot
+    from colbert_jl_spark.plans.build import PLAN_DIRS, plan_dirs
+
     r4 = compact_streamed_index(spark, idx, cfg, full=True)
     assert r4["compaction"]["mode"] == "full"
     assert "incremental" not in r4
     assert "dictionary_dir" not in r4
+    retired = [os.path.join(idx, d) for d in os.listdir(idx) if d.startswith("dictionary.v")]
+    assert retired
+    _age_past_grace(*retired)
+    snapshot.gc(idx, PLAN_DIRS, plan_dirs(r4))
     assert not [d for d in os.listdir(idx) if d.startswith("dictionary.v")]
     reader2 = IndexReader(spark, idx)
     got2 = (
@@ -440,17 +454,18 @@ def test_minor_compaction_restores_segment_disjointness(spark, docs01, tmp_path)
     assert compact_streamed_index(spark, idx, cfg)["compaction"]["mode"] == "noop"
 
 
-def test_crashed_incremental_compaction_recovers_via_full_rebuild(
+def test_crashed_incremental_compaction_retries_incrementally(
     spark, docs01, tmp_path
 ):
-    """A compaction killed mid-delta-write must not poison the index: the
-    in_progress write-ahead marker routes the next compaction through a
-    major (full) rebuild, which replaces every derived table wholesale —
-    duplicated partial deltas can't survive. Simulated by injecting a
-    failure after the docstats append (the first in-place delta write)."""
-    import json
-
+    """A compaction killed mid-write leaves the old snapshot whole: its
+    new docstats version was assembled but no plan names it, so a fresh
+    reader still serves the pre-compaction index, and the retry compacts
+    the same batches INCREMENTALLY to the same result as an uninterrupted
+    run (no duplicated delta rows). Simulated by failing the dictionary
+    merge, which runs after the docstats version is written."""
     from unittest import mock
+
+    import colbert_jl_spark.operators.postings as postings_mod
 
     cfg = EngineConfig(block_size=32, min_bucket_docs=64)
     pages_dir = str(tmp_path / "pages_in")
@@ -463,13 +478,13 @@ def test_crashed_incremental_compaction_recovers_via_full_rebuild(
     w1.write.mode("append").parquet(pages_dir)
     stream_pages_to_postings(spark, pages_dir, idx, ckpt, cfg)
     compact_streamed_index(spark, idx, cfg)
+    plan_before = json.load(open(os.path.join(idx, "plan.json")))
+    served_before = sorted(
+        map(tuple, IndexReader(spark, idx).search(queries_df(spark)).collect())
+    )
 
     w2.write.mode("append").parquet(pages_dir)
     stream_pages_to_postings(spark, pages_dir, idx, ckpt, cfg)
-    # die right after the first in-place delta write (docstats append):
-    # term_df is the next call in the incremental path
-    import colbert_jl_spark.operators.postings as postings_mod
-
     with mock.patch.object(
         postings_mod, "term_df",
         side_effect=RuntimeError("killed mid-compaction"),
@@ -477,12 +492,18 @@ def test_crashed_incremental_compaction_recovers_via_full_rebuild(
         with pytest.raises(RuntimeError, match="killed mid-compaction"):
             compact_streamed_index(spark, idx, cfg)
 
-    state = json.load(open(os.path.join(idx, "_COMPACT.json")))
-    assert state.get("in_progress"), "write-ahead marker must survive the crash"
-    # docstats already holds the (partial) delta — a naive incremental
-    # retry would append it AGAIN; the marker must force a full rebuild
+    # the delta's docstats were written, but only as an unnamed version
+    assert os.path.isdir(os.path.join(idx, "docstats.v2"))
+    assert json.load(open(os.path.join(idx, "plan.json"))) == plan_before
+    reader = IndexReader(spark, idx)
+    assert reader.validate()["ok"]
+    assert sorted(map(tuple, reader.search(queries_df(spark)).collect())) == (
+        served_before
+    )
+
     r = compact_streamed_index(spark, idx, cfg)
-    assert r["compaction"]["mode"] == "full"
+    assert r["compaction"]["mode"] == "incremental"
+    assert r["compaction"]["docs_added"] == w2.count()
     reader = IndexReader(spark, idx)
     assert reader.validate()["ok"], reader.validate()
     got = (
@@ -494,8 +515,30 @@ def test_crashed_incremental_compaction_recovers_via_full_rebuild(
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got, want, check_like=True)
-    # and the recovered state supports further incremental compactions
-    assert not json.load(open(os.path.join(idx, "_COMPACT.json"))).get("in_progress")
+
+
+def _streamed_with_positions(spark, docs, tmp_path, cfg):
+    """A streamed index of docs' even-crc pages with a batch-built
+    positions stage, and the odd-crc pages ingested WITHOUT a positional
+    capture, waiting for the next compaction → (idx, builder)."""
+    from colbert_jl_spark.plans.build import IndexBuilder
+    from colbert_jl_spark.sources.pages import docs_from_pages
+
+    pages_dir = str(tmp_path / "pages_in")
+    idx = str(tmp_path / "stream_idx")
+    ckpt = str(tmp_path / "ckpt")
+    pages = pages_from_documents(docs)
+    w1 = pages.where(F.crc32(F.col("url")) % 2 == 0)
+    w1.write.mode("append").parquet(pages_dir)
+    stream_pages_to_postings(spark, pages_dir, idx, ckpt, cfg)
+    compact_streamed_index(spark, idx, cfg)
+    builder = IndexBuilder(idx, cfg)
+    builder.build_positions(docs_from_pages(w1))
+    pages.where(F.crc32(F.col("url")) % 2 == 1).write.mode("append").parquet(
+        pages_dir
+    )
+    stream_pages_to_postings(spark, pages_dir, idx, ckpt, cfg)
+    return idx, builder
 
 
 def test_compaction_invalidates_stale_positions(spark, docs001, tmp_path):
@@ -535,7 +578,8 @@ def test_compaction_invalidates_stale_positions(spark, docs001, tmp_path):
     for r in (reader, IndexReader(spark, idx)):
         with pytest.raises(RuntimeError, match="positions stage"):
             r.phrase(phrases)
-    assert not os.path.exists(os.path.join(idx, "positions"))
+    plan = json.load(open(os.path.join(idx, "plan.json")))
+    assert "positions" not in plan and "positions_dir" not in plan
 
     # rebuilding over the full corpus restores exact service
     builder.build_positions(docs001)
@@ -869,159 +913,145 @@ def test_positions_compaction_bounds_files_and_preserves_phrase(
 
 
 def test_invalidate_positions_is_metadata_first(spark, docs001, tmp_path):
-    """ADVICE r4: invalidation must commit the metadata drop (stage
-    marker + plan keys) BEFORE touching the data directory, and move the
-    directory aside via atomic rename instead of rmtree-in-place — a
-    concurrent reader then refuses service with the intended RuntimeError
-    on refresh instead of hitting a raw FileNotFoundError mid-scan."""
-    from colbert_jl_spark.plans.build import IndexBuilder, IndexReader
-    from colbert_jl_spark.streaming.ingest import _invalidate_positions
+    """Commit order: a compaction that must drop the positions stage
+    (new docs without a positional capture) drops it only by committing
+    a plan that omits it. Until that rename the old snapshot, positions
+    included, is served unchanged; after it the refreshed reader refuses
+    phrase service with the rebuild instruction, while the retired
+    positions dir stays on disk for scans already running on it."""
+    from colbert_jl_spark import snapshot
 
     cfg = EngineConfig(block_size=32)
-    idx = str(tmp_path / "idx")
-    builder = IndexBuilder(idx, cfg)
-    builder.build(docs001)
-    builder.build_positions(docs001)
+    idx, _ = _streamed_with_positions(spark, docs001, tmp_path, cfg)
     reader = IndexReader(spark, idx)
-    assert reader.phrase([(0, "data table")]).count() > 0
+    phrases = [(0, "data table")]
+    want = sorted(map(tuple, reader.phrase(phrases).collect()))
+    assert want
 
-    _invalidate_positions(idx)
-    plan = json.loads(open(os.path.join(idx, "plan.json")).read())
+    def refuse(path, obj):
+        raise RuntimeError("plan commit refused")
+
+    real_write_json = snapshot.write_json
+    snapshot.write_json = refuse
+    try:
+        with pytest.raises(RuntimeError, match="plan commit refused"):
+            compact_streamed_index(spark, idx, cfg)
+    finally:
+        snapshot.write_json = real_write_json
+    assert json.load(open(os.path.join(idx, "plan.json")))["positions"] is True
+    assert sorted(map(tuple, reader.phrase(phrases).collect())) == want
+
+    compact_streamed_index(spark, idx, cfg)
+    plan = json.load(open(os.path.join(idx, "plan.json")))
     assert "positions" not in plan and "positions_dir" not in plan
-    assert not os.path.exists(os.path.join(idx, "positions"))
-    assert os.path.isdir(os.path.join(idx, "positions.trash.0"))
     with pytest.raises(RuntimeError, match="positions stage"):
-        reader.phrase([(0, "data table")])
+        reader.phrase(phrases)
+    assert os.path.isdir(os.path.join(idx, "positions"))
+
+
+def _batch_index_with_positions(spark, docs, tmp_path):
+    """A batch-built index with its positions stage → (idx, served),
+    served() being what a fresh reader's phrase query returns."""
+    from colbert_jl_spark.plans.build import IndexBuilder
+
+    idx = str(tmp_path / "idx")
+    builder = IndexBuilder(idx, EngineConfig(block_size=32))
+    builder.build(docs)
+    builder.build_positions(docs)
+
+    def served():
+        return {
+            (r.pid, r.doc_id): r.n_occurrences
+            for r in IndexReader(spark, idx).phrase([(0, "data table")]).collect()
+        }
+
+    return idx, served
+
+
+def _age_past_grace(*paths):
+    from colbert_jl_spark import snapshot
+
+    past = min(os.path.getmtime(p) for p in paths) - snapshot.GRACE_SEC - 60
+    for p in paths:
+        os.utime(p, (past, past))
 
 
 def test_positions_gc_reclaims_bare_dir_after_two_swaps(
     spark, docs001, tmp_path
 ):
-    """ADVICE r5 leak: the pre-versioning bare ``positions`` dir never
-    matched any GC prefix, so once two compactions repointed plan.json to
-    positions.v2 then v3 the original full copy leaked forever. With the
-    fix the bare dir is retained exactly while it is current-or-previous
-    and reclaimed one swap later; phrase output is identical across all
-    three versions."""
-    from colbert_jl_spark.plans.build import IndexBuilder, IndexReader
+    """The bare ``positions`` dir a batch build wrote is a version like
+    any other: once compact_positions commits positions.v2 it is retired,
+    and the first commit after its grace reclaims it — no full copy of
+    the stage leaks. Phrase output is identical throughout."""
     from colbert_jl_spark.streaming.ingest import compact_positions
 
-    cfg = EngineConfig(block_size=32)
-    idx = str(tmp_path / "idx")
-    builder = IndexBuilder(idx, cfg)
-    builder.build(docs001)
-    builder.build_positions(docs001)
-    want = {
-        (r.pid, r.doc_id): r.n_occurrences
-        for r in IndexReader(spark, idx).phrase([(0, "data table")]).collect()
-    }
+    idx, served = _batch_index_with_positions(spark, docs001, tmp_path)
+    want = served()
     assert want
-
-    # force a rewrite of every bucket twice (max_files_per_bucket=0)
-    r1 = compact_positions(spark, idx, max_files_per_bucket=0)
-    assert r1["mode"] == "positions"
-    # after swap #1 the bare dir is the PREVIOUS version — retained
-    assert os.path.isdir(os.path.join(idx, "positions"))
-    assert os.path.isdir(os.path.join(idx, "positions.v2"))
-    r2 = compact_positions(spark, idx, max_files_per_bucket=0)
-    assert r2["mode"] == "positions"
-    # after swap #2 it is two versions old — reclaimed, v2+v3 retained
-    assert not os.path.exists(os.path.join(idx, "positions"))
-    assert os.path.isdir(os.path.join(idx, "positions.v2"))
+    bare = os.path.join(idx, "positions")
+    # force a rewrite of every bucket (max_files_per_bucket=0)
+    assert compact_positions(spark, idx, max_files_per_bucket=0)["mode"] == "positions"
+    assert os.path.isdir(bare)  # retired just now: kept for its grace
+    assert served() == want
+    _age_past_grace(bare)
+    assert compact_positions(spark, idx, max_files_per_bucket=0)["mode"] == "positions"
+    assert not os.path.exists(bare)
+    assert os.path.isdir(os.path.join(idx, "positions.v2"))  # young
     assert os.path.isdir(os.path.join(idx, "positions.v3"))
-    got = {
-        (r.pid, r.doc_id): r.n_occurrences
-        for r in IndexReader(spark, idx).phrase([(0, "data table")]).collect()
-    }
-    assert got == want
+    assert served() == want
+
+
+def test_positions_trash_reclamation_is_age_gated(spark, docs001, tmp_path):
+    """Two commits in quick succession must NOT reclaim what the first
+    one retired (a reader may still be mid-scan on it): only dirs retired
+    more than snapshot.GRACE_SEC ago go, and version numbers continue
+    past every dir still on disk."""
+    from colbert_jl_spark.streaming.ingest import compact_positions
+
+    idx, served = _batch_index_with_positions(spark, docs001, tmp_path)
+    for _ in range(2):
+        compact_positions(spark, idx, max_files_per_bucket=0)
+    retired = [os.path.join(idx, d) for d in ("positions", "positions.v2")]
+    assert all(map(os.path.isdir, retired)), "young dir reclaimed under a reader"
+    _age_past_grace(*retired)
+    compact_positions(spark, idx, max_files_per_bucket=0)
+    assert not any(map(os.path.exists, retired))
+    assert IndexReader(spark, idx).plan["positions_dir"] == "positions.v4"
+    assert os.path.isdir(os.path.join(idx, "positions.v3"))
 
 
 def test_invalidate_positions_moves_previous_version_aside(
     spark, docs001, tmp_path
 ):
-    """ADVICE r5: invalidation used to rmtree the retained PREVIOUS
-    version inline while only renaming the current one — a reader
-    mid-scan on the previous version (resolved through the plan it
-    refreshed a moment ago) got a raw FileNotFoundError, contradicting
-    the {current, previous} retention contract. Now every live version
-    dir is renamed aside as positions.trash.N (atomic, handles survive)
-    and only trash from EARLIER invalidations is deleted."""
-    from colbert_jl_spark.plans.build import IndexBuilder, IndexReader
-    from colbert_jl_spark.streaming.ingest import (
-        _invalidate_positions,
-        compact_positions,
-    )
+    """Dropping the positions stage retires its current version without
+    removing it, and leaves the version retired before it alone too: a
+    reader that resolved either one through a plan loaded a moment ago
+    keeps reading real parquet data."""
+    from colbert_jl_spark.streaming.ingest import compact_positions
 
     cfg = EngineConfig(block_size=32)
-    idx = str(tmp_path / "idx")
-    builder = IndexBuilder(idx, cfg)
-    builder.build(docs001)
-    builder.build_positions(docs001)
-    assert IndexReader(spark, idx).phrase([(0, "data table")]).count() > 0
+    idx, _ = _streamed_with_positions(spark, docs001, tmp_path, cfg)
     r1 = compact_positions(spark, idx, max_files_per_bucket=0)
-    assert r1["mode"] == "positions"  # current = positions.v2, prev = bare
+    assert r1["mode"] == "positions"  # current = positions.v2, bare retired
 
-    _invalidate_positions(idx)
-    # current renamed to trash.0, previous (bare) to trash.1 — no rmtree
-    t0 = os.path.join(idx, "positions.trash.0")
-    t1 = os.path.join(idx, "positions.trash.1")
-    assert os.path.isdir(t0) and os.path.isdir(t1)
-    for t in (t0, t1):
-        # contents intact: the renamed dirs still hold real parquet data
+    compact_streamed_index(spark, idx, cfg)
+    assert not IndexReader(spark, idx).plan.get("positions")
+    for d in ("positions", "positions.v2"):
+        t = os.path.join(idx, d)
         assert any(
             f.startswith("part-")
             for b in os.listdir(t)
             if b.startswith("term_bucket=")
             for f in os.listdir(os.path.join(t, b))
-        )
-    assert not os.path.exists(os.path.join(idx, "positions"))
-    assert not os.path.exists(os.path.join(idx, "positions.v2"))
-
-
-def test_positions_trash_reclamation_is_age_gated(spark, docs001, tmp_path):
-    """ADVICE r6: two invalidations in quick succession must NOT reclaim
-    the first invalidation's trash (a reader may still be mid-scan on
-    it) — only trash older than POSITIONS_TRASH_GRACE_SEC goes; younger
-    dirs survive and the numbering continues past them."""
-    from colbert_jl_spark.plans.build import IndexBuilder
-    from colbert_jl_spark.streaming import ingest
-    from colbert_jl_spark.streaming.ingest import _invalidate_positions
-
-    cfg = EngineConfig(block_size=32)
-    idx = str(tmp_path / "idx")
-    builder = IndexBuilder(idx, cfg)
-    builder.build(docs001)
-    builder.build_positions(docs001)
-
-    _invalidate_positions(idx)
-    t0 = os.path.join(idx, "positions.trash.0")
-    assert os.path.isdir(t0)
-
-    # second invalidation IMMEDIATELY after: trash.0 is seconds old and
-    # must survive; the fresh positions dir lands as trash.1
-    builder.build_positions(docs001)
-    _invalidate_positions(idx)
-    t1 = os.path.join(idx, "positions.trash.1")
-    assert os.path.isdir(t0), "young trash was reclaimed under a reader"
-    assert os.path.isdir(t1)
-
-    # age both past the grace period: the next invalidation reclaims them
-    past = os.path.getmtime(t0) - ingest.POSITIONS_TRASH_GRACE_SEC - 60
-    for t in (t0, t1):
-        os.utime(t, (past, past))
-    builder.build_positions(docs001)
-    _invalidate_positions(idx)
-    assert os.path.isdir(t0)  # numbering restarted: the NEW trash
-    assert not os.path.exists(t1)
+        ), d
 
 
 def test_major_compaction_keeps_young_positions_trash(spark, docs001, tmp_path):
-    """Every site that reclaims positions trash is age-gated: a major
-    compaction run within the grace period of an invalidation keeps the
-    young trash dir (a reader may still be mid-scan on it) and reclaims
-    only trash past the grace period."""
-    from colbert_jl_spark.streaming import ingest
-    from colbert_jl_spark.streaming.ingest import _invalidate_positions
+    """A major compaction's clean-up goes through the same GC: a dir
+    retired within the grace period survives it (a reader may still be
+    mid-scan on it), while one retired longer ago is reclaimed."""
+    from colbert_jl_spark.plans.build import IndexBuilder
+    from colbert_jl_spark.streaming.ingest import compact_positions
 
     cfg = EngineConfig(block_size=32)
     pages_dir = str(tmp_path / "pages_in")
@@ -1029,15 +1059,41 @@ def test_major_compaction_keeps_young_positions_trash(spark, docs001, tmp_path):
     pages_from_documents(docs001).write.parquet(pages_dir)
     stream_pages_to_postings(spark, pages_dir, idx, str(tmp_path / "ckpt"), cfg)
     compact_streamed_index(spark, idx, cfg)
-
-    os.makedirs(os.path.join(idx, "positions"))  # a stage dir to invalidate
-    _invalidate_positions(idx)
-    young = os.path.join(idx, "positions.trash.0")
-    old = os.path.join(idx, "positions.trash.1")
-    os.makedirs(old)
-    past = os.path.getmtime(old) - ingest.POSITIONS_TRASH_GRACE_SEC - 60
-    os.utime(old, (past, past))
+    IndexBuilder(idx, cfg).build_positions(docs001)
+    compact_positions(spark, idx, max_files_per_bucket=0)  # retires bare
+    compact_positions(spark, idx, max_files_per_bucket=0)  # retires v2
+    old = os.path.join(idx, "positions")
+    _age_past_grace(old)
 
     compact_streamed_index(spark, idx, cfg, full=True)
-    assert os.path.isdir(young), "young trash was reclaimed under a reader"
+    assert os.path.isdir(os.path.join(idx, "positions.v2")), (
+        "young dir was reclaimed under a reader"
+    )
+    assert os.path.isdir(os.path.join(idx, "positions.v3"))  # retired now
     assert not os.path.exists(old)
+
+
+def test_pre_r4_flat_dictionary_refused(spark, docs001, tmp_path):
+    """An index whose dictionary predates term_bucket partitioning is
+    refused by the incremental compaction with the layout named; the
+    snapshot is left as it was."""
+    cfg = EngineConfig(block_size=32)
+    pages_dir = str(tmp_path / "pages_in")
+    idx = str(tmp_path / "stream_idx")
+    ckpt = str(tmp_path / "ckpt")
+    pages = pages_from_documents(docs001)
+    pages.where(F.crc32(F.col("url")) % 2 == 0).write.mode("append").parquet(pages_dir)
+    stream_pages_to_postings(spark, pages_dir, idx, ckpt, cfg)
+    compact_streamed_index(spark, idx, cfg)
+    # the pre-r4 layout: one flat (term, df, cf, idf) dictionary dir
+    flat = os.path.join(idx, "dictionary.v7")
+    IndexReader(spark, idx).dictionary.drop("term_bucket").write.parquet(flat)
+    plan = json.load(open(os.path.join(idx, "plan.json")))
+    plan["dictionary_dir"] = "dictionary.v7"
+    json.dump(plan, open(os.path.join(idx, "plan.json"), "w"))
+
+    pages.where(F.crc32(F.col("url")) % 2 == 1).write.mode("append").parquet(pages_dir)
+    stream_pages_to_postings(spark, pages_dir, idx, ckpt, cfg)
+    with pytest.raises(ValueError, match="pre-r4 flat layout"):
+        compact_streamed_index(spark, idx, cfg)
+    assert json.load(open(os.path.join(idx, "plan.json"))) == plan
