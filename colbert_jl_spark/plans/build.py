@@ -11,7 +11,11 @@ The analogue of the reference's top-level build driver ``index(indexer)``
                          over the corpus (at 100 TB this is the dominant
                          cost; re-tokenizing per stage would be a 4× blowup)
                          (reference encode_passages per chunk,
-                          checkpoint.jl:159-189)
+                          checkpoint.jl:159-189). A TRANSIENT checkpoint:
+                         no reader, validate() or query reads it, so
+                         build() removes it once lineage commits (the
+                         reference's index dir likewise holds only what its
+                         Searcher loads); its _STAGES.json mark stays
     stage "plan"       — exact corpus stats → plan.json
                          (reference setup(), collection_indexer.jl:115-139,
                           but EXACT instead of sampled), plus
@@ -43,9 +47,14 @@ _check_all_files_are_saved, indexing.jl:64-67 /
 collection_indexer.jl:299-340): every stage commits atomically
 (write to tmp dir → rename) and records itself in _STAGES.json; a re-run
 skips completed stages, so a build interrupted after "dictionary"
-restarts at "blocks" without recomputing stats. On Iceberg the same
-structure maps to snapshot checkpoints; the staged-commit protocol here is
-storage-agnostic.
+restarts at "blocks" from the postings checkpoint without recomputing
+stats. A build with all five marks returns its plan without a Spark job; a
+pending plan, dictionary or blocks stage needs the checkpoint, and once a
+finished build has removed it only force=True rebuilds (see
+IndexBuilder.build). On Iceberg the same structure maps to snapshot
+checkpoints; the staged-commit protocol here is storage-agnostic.
+
+Every table is written as zstd parquet through snapshot.write_parquet.
 
 ``validate()`` re-checks the cross-stage invariants the reference asserts
 at load time (sum(doclens) == num_embeddings, loaders.jl:85-87):
@@ -137,16 +146,14 @@ def write_plan(index_path: str, plan: dict) -> None:
 
 
 def _atomic_write(df: DataFrame, final_dir: str, partition_by: str | None = None) -> None:
-    """Write parquet to <dir>.tmp then rename — the poor man's snapshot
-    commit (Iceberg gives this transactionally; plain parquet needs the
-    rename protocol so a killed job never leaves a half-written stage)."""
+    """Write zstd parquet (snapshot.write_parquet) to <dir>.tmp then
+    rename — the poor man's snapshot commit (Iceberg gives this
+    transactionally; plain parquet needs the rename protocol so a killed
+    job never leaves a half-written stage)."""
     tmp = final_dir + ".tmp"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(tmp)
+    snapshot.write_parquet(df, tmp, partition_by)
     if os.path.exists(final_dir):
         shutil.rmtree(final_dir)
     os.replace(tmp, final_dir)
@@ -161,7 +168,7 @@ class IndexBuilder:
 
     ``sink`` is the table-commit seam: any callable
     ``(df, final_dir, partition_by=None)`` that durably materializes a
-    DataFrame. Defaults to ``_atomic_write`` (parquet tmp→rename); on an
+    DataFrame. Defaults to ``_atomic_write`` (zstd parquet tmp→rename); on an
     Iceberg catalog the same seam is ``df.writeTo(table).createOrReplace()``
     — stage ordering, the _STAGES.json ledger, and resume semantics are
     sink-agnostic (injection-gated in tests/test_build.py)."""
@@ -174,28 +181,41 @@ class IndexBuilder:
         (self.sink or _atomic_write)(df, final_dir, partition_by)
 
     def build(self, docs: DataFrame, force: bool = False) -> dict:
-        from colbert_jl_spark.operators.codec_blocks import (
-            posting_blocks,
-            term_postings_with_doclen,
-            with_term_partition,
-        )
-        from colbert_jl_spark.operators.postings import term_df
+        """Build the index from ``docs`` (doc_id, text[, lang]) and return
+        its plan.
+
+        The postings stage is a transient checkpoint: the later stages
+        derive from it, and it is removed once lineage commits, because no
+        reader, ``validate()`` or query reads it. Its ``_STAGES.json`` mark
+        stays. Resume contract (``force=False``):
+
+        * all five marks present: the plan is returned without a Spark job
+          (a ``postings/`` left by a crash between the lineage mark and
+          its removal is removed);
+        * otherwise the pending stages run; plan, dictionary and blocks
+          read the checkpoint, lineage reads only the blocks;
+        * a pending plan, dictionary or blocks stage whose checkpoint is
+          gone raises ValueError: rebuild with ``force=True``."""
+        from colbert_jl_spark.operators.codec_blocks import term_postings_with_doclen
 
         os.makedirs(self.index_path, exist_ok=True)
         if force:
-            for s in (*STAGES, "docstats"):
-                shutil.rmtree(os.path.join(self.index_path, s), ignore_errors=True)
+            snapshot.discard(self.index_path, (*STAGES, "docstats"))
             try:
                 os.remove(_stage_file(self.index_path))
             except FileNotFoundError:
                 pass
+        done = _load_stages(self.index_path)
+        if all(s in done for s in STAGES):
+            snapshot.discard(self.index_path, ["postings"])
+            return self.plan()
         spark = docs.sparkSession
 
         # -- stage: postings (THE tokenize pass — runs once) ----------------
         postings_dir = os.path.join(self.index_path, "postings")
         n_docs = None
         n_postings = None
-        if "postings" not in _load_stages(self.index_path):
+        if "postings" not in done:
             from pyspark.sql import Observation
 
             # corpus size AND posting-row count observed on the tokenize
@@ -213,12 +233,17 @@ class IndexBuilder:
             _mark_stage(self.index_path, "postings")
             n_docs = int(obs_docs.get["n_docs"])
             n_postings = int(obs_rows.get["n_postings"])
+        elif "plan" in done:
+            # a resume past the plan stage needs no corpus count job
+            n_docs = int(self.plan()["n_docs"])
 
-        return self.finish_from_postings(
+        plan = self.finish_from_postings(
             spark,
             n_docs_total=docs.count() if n_docs is None else n_docs,
             n_postings_hint=n_postings,
         )
+        snapshot.discard(self.index_path, ["postings"])
+        return plan
 
     def finish_from_postings(
         self,
@@ -241,7 +266,14 @@ class IndexBuilder:
         otherwise index a batch that the ingest log (and therefore
         n_docs_total and the compaction state) doesn't know about — that
         batch would then be re-read as "new" by the next incremental
-        compaction and double-counted."""
+        compaction and double-counted.
+
+        The postings checkpoint is read only while plan, dictionary or
+        blocks is pending; a lineage-only resume reads only the blocks. A
+        pending upstream stage whose checkpoint is gone raises ValueError.
+        This method never removes the checkpoint: ``build()`` does, and a
+        streamed index keeps its ``batch=`` captures for later
+        compactions."""
         from colbert_jl_spark.operators.codec_blocks import (
             lineage_by_bucket,
             posting_blocks,
@@ -249,10 +281,22 @@ class IndexBuilder:
         )
         from colbert_jl_spark.operators.postings import term_df
 
-        postings_dir = os.path.join(self.index_path, "postings")
-        postings = spark.read.parquet(postings_dir)
-        if batch_ids is not None:
-            postings = postings.where(F.col("batch").isin([int(b) for b in batch_ids]))
+        done = _load_stages(self.index_path)
+        pending = [s for s in ("plan", "dictionary", "blocks") if s not in done]
+        if pending:
+            postings_dir = os.path.join(self.index_path, "postings")
+            if not os.path.isdir(postings_dir):
+                raise ValueError(
+                    f"stages {pending} of the index at {self.index_path} are "
+                    "pending, but the postings checkpoint they are built from "
+                    "is gone (a finished build removes it); rebuild the index "
+                    "with build(docs, force=True)"
+                )
+            postings = spark.read.parquet(postings_dir)
+            if batch_ids is not None:
+                postings = postings.where(
+                    F.col("batch").isin([int(b) for b in batch_ids])
+                )
 
         # -- stages: plan + docstats ∥ dictionary ---------------------------
         # docstats = distinct (doc_id, doclen) from postings. Docs whose
@@ -338,7 +382,6 @@ class IndexBuilder:
                 dic, os.path.join(self.index_path, "dictionary"), "term_bucket"
             )
 
-        done = _load_stages(self.index_path)
         if (
             "plan" not in done
             and "dictionary" not in done

@@ -20,7 +20,11 @@ files, metadata swap and expire_snapshots, without the jar):
 
 A writer that dies before the manifest rename leaves the old snapshot
 whole, and a retry builds the same new one under fresh version names.
-One writer at a time is assumed.
+A writer that refuses or aborts an update removes what it staged with
+``discard`` before it re-raises. One writer at a time is assumed.
+
+``write_parquet`` is the one parquet writer of the engine: every index,
+ingest and dedup table is written through it, as zstd parquet.
 """
 
 from __future__ import annotations
@@ -32,6 +36,8 @@ import shutil
 import time
 from typing import Callable, Iterable
 
+from pyspark.sql import DataFrame
+
 # how long a retired dir outlives the commit that stopped naming it
 GRACE_SEC = 300.0
 
@@ -42,6 +48,28 @@ def _parse(entry: str) -> tuple[str, int]:
     """(stage, version) of a dir name; the bare stage dir is version 1."""
     m = _VERSION.match(entry)
     return m["stage"], int(m["k"] or 1)
+
+
+def write_parquet(df: DataFrame, path: str, partition_by: str | None = None) -> None:
+    """Write ``df`` as zstd parquet at ``path``, replacing what is there.
+    zstd rather than Spark's default snappy: the varint block payloads and
+    the small tf, doclen and position integers are redundant bytes that an
+    entropy coder packs and snappy mostly leaves as they are (about a
+    fifth of the index bytes on the benchmark corpora). Set per write, not
+    per session, so a caller's own writes keep their codec."""
+    w = df.write.mode("overwrite").option("compression", "zstd")
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(path)
+
+
+def discard(root: str, entries: Iterable[str]) -> None:
+    """Remove the dirs ``entries`` (paths relative to ``root``) that an
+    aborted or refused writer staged, or a finished build no longer needs.
+    No committed manifest names them, so no reader can be scanning them.
+    Missing entries are skipped."""
+    for e in entries:
+        shutil.rmtree(os.path.join(root, e), ignore_errors=True)
 
 
 def link_or_copy(src: str, dst: str) -> str:
@@ -62,7 +90,8 @@ def link_or_copy(src: str, dst: str) -> str:
 def staging(root: str, stage: str) -> str:
     """Path of a fresh staging dir ``<stage>.v{k}.tmp`` for the next
     version of ``stage``. k is above every version on disk (named, retired,
-    or left by a crash), so a version name is never reused."""
+    or left by a crash), so a name a manifest ever named is never reused;
+    only a number whose staging ``discard`` removed can come back."""
     k = max(
         (_parse(e)[1] for e in os.listdir(root) if _parse(e)[0] == stage),
         default=0,

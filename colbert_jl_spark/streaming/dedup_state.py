@@ -40,9 +40,11 @@ through it — the wave tables filtered to its committed wave ids, the
 labels through its ``labels_dir``. An update writes its wave dirs (which
 no reader trusts until committed) and assembles a new labels version
 beside the current one; a crash or refusal before the rename leaves the
-previous state exactly as it was, the retry overwrites the orphaned wave
-dirs, and a labels version the state stops naming is removed by the GC
-only after snapshot.GRACE_SEC.
+previous state exactly as it was. A refused or aborted update removes the
+wave dirs and labels dirs it staged before it re-raises (snapshot.discard);
+what a killed process leaves is overwritten by the retry or reclaimed by
+the GC. A labels version the state stops naming is removed by the GC only
+after snapshot.GRACE_SEC.
 
 Scale notes (100 TB): per-wave compute is O(|wave| shingles) for
 signatures + O(colliding-bucket rows) for the candidate join + the
@@ -223,6 +225,31 @@ class DedupIndex:
             )
         wave = (max(st["waves"]) + 1) if st["waves"] else 1
 
+        # a refused or aborted wave removes what it staged (its wave dirs
+        # and labels staging, which no manifest names) before re-raising
+        staged = [
+            os.path.join(sub, f"wave={wave}")
+            for sub in ("signatures", "bands", "pairs")
+        ]
+        try:
+            return self._apply_wave(spark, st, wave, wave_docs, corpus_docs, staged)
+        except BaseException:
+            committed = self._state()
+            if committed is None or wave not in committed["waves"]:
+                snapshot.discard(self.path, staged)
+            raise
+
+    def _apply_wave(
+        self,
+        spark: SparkSession,
+        st: dict,
+        wave: int,
+        wave_docs: DataFrame,
+        corpus_docs: DataFrame | None,
+        staged: list[str],
+    ) -> dict:
+        """The body of ``update`` for wave ``wave`` over the state ``st``.
+        Appends every labels dir it stages to ``staged``."""
         # ---- 1. delta signatures + bands (THE delta-bounded compute) ---
         # the wave's ROW count rides the same write (docs shorter than n
         # tokens produce no signature row yet still enter the label set,
@@ -400,9 +427,14 @@ class DedupIndex:
             )
             rewrite = untouched_aff.unionByName(sub_labels)
         tmp = snapshot.staging(self.path, "labels")
-        rewrite.withColumn("lpart", lpart).observe(
-            label_obs, F.count(F.lit(1)).alias("n")
-        ).write.mode("overwrite").partitionBy("lpart").parquet(tmp)
+        staged.append(os.path.basename(tmp))
+        snapshot.write_parquet(
+            rewrite.withColumn("lpart", lpart).observe(
+                label_obs, F.count(F.lit(1)).alias("n")
+            ),
+            tmp,
+            "lpart",
+        )
 
         # ---- re-ingestion guard (ADVICE r6): a wave whose doc_id already
         # exists in the prior labels would be silently relabeled (the doc
@@ -414,8 +446,8 @@ class DedupIndex:
         # affected-partition prior rows + wave docs (both observed on the
         # write itself), and any overlap strictly shrinks the distinct
         # sub_nodes union below that. On mismatch the update aborts before
-        # anything is assembled or committed: the staged labels and the
-        # wave dirs stay unnamed, invisible to readers.
+        # anything is assembled or committed, and update() removes the
+        # staged labels and the wave dirs, which no reader could see.
         rewritten = _count(label_obs)
         prior_aff = _count(prior_aff_obs) if prior_labels is not None else 0
         expected = prior_aff + n_wave
@@ -434,6 +466,7 @@ class DedupIndex:
         labels_dir = snapshot.assemble(
             self.path, tmp, st["labels_dir"], affected_parts
         )
+        staged.append(labels_dir)
         snapshot.commit(
             self.path,
             "state.json",
@@ -473,7 +506,6 @@ class DedupIndex:
         """Write one wave's rows as ``sub``/wave={wave}. Readers trust only
         the waves state.json lists, so a crashed try's dir is invisible,
         and the retry's overwrite replaces it."""
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(os.path.join(self.path, sub, f"wave={wave}"))
+        snapshot.write_parquet(
+            df, os.path.join(self.path, sub, f"wave={wave}"), partition_by
+        )

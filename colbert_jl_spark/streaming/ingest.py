@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from colbert_jl_spark import snapshot
@@ -83,21 +83,30 @@ def stream_pages_to_postings(
         n_docs = docs.count()
         if n_docs == 0:
             return
-        postings = term_postings_with_doclen(docs, cfg)
+        # the posting count rides the write (as build()'s posting_rows
+        # does): no read-back of the batch dir, no count job
+        obs = Observation()
+        postings = term_postings_with_doclen(docs, cfg).observe(
+            obs, F.count(F.lit(1)).alias("n")
+        )
         # idempotent append: each micro-batch owns its subdirectory, so a
         # checkpoint-replayed batch overwrites itself instead of doubling
-        out = os.path.join(index_path, "postings", f"batch={batch_id}")
-        postings.write.mode("overwrite").parquet(out)
+        snapshot.write_parquet(
+            postings, os.path.join(index_path, "postings", f"batch={batch_id}")
+        )
+        n_postings = int(obs.get["n"])
         if positions:
-            token_position_lists(docs, cfg).write.mode("overwrite").parquet(
-                os.path.join(index_path, "positions_raw", f"batch={batch_id}")
+            snapshot.write_parquet(
+                token_position_lists(docs, cfg),
+                os.path.join(index_path, "positions_raw", f"batch={batch_id}"),
             )
-        n_postings = batch_df.sparkSession.read.parquet(out).count()
-        log_dir = os.path.join(index_path, "ingest_log", f"batch={batch_id}")
-        batch_df.sparkSession.createDataFrame(
-            [(batch_id, n_docs, n_postings)],
-            "batch_id long, n_docs long, n_postings long",
-        ).write.mode("overwrite").parquet(log_dir)
+        snapshot.write_parquet(
+            batch_df.sparkSession.createDataFrame(
+                [(batch_id, n_docs, n_postings)],
+                "batch_id long, n_docs long, n_postings long",
+            ),
+            os.path.join(index_path, "ingest_log", f"batch={batch_id}"),
+        )
 
     writer = (
         pages.writeStream.foreachBatch(sink)
@@ -158,10 +167,7 @@ def _new_version(
     point ``plan`` at it. Readers see it once ``plan`` commits. Returns the
     new version's path."""
     tmp = snapshot.staging(index_path, stage)
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(tmp)
+    snapshot.write_parquet(df, tmp, partition_by)
     key = f"{stage}_dir"
     plan[key] = snapshot.assemble(index_path, tmp, plan.get(key, stage), replace)
     return os.path.join(index_path, plan[key])

@@ -14,6 +14,7 @@ import pytest
 from colbert_jl_spark.config import EngineConfig
 from colbert_jl_spark.operators.bm25 import bm25_topk
 from colbert_jl_spark.plans.build import (
+    STAGES,
     IndexBuilder,
     IndexReader,
     _load_stages,
@@ -25,6 +26,17 @@ from colbert_jl_spark.queries import queries_df
 @pytest.fixture()
 def index_dir(tmp_path):
     return str(tmp_path / "idx")
+
+
+def _jobs(spark, group: str, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("fmt", ["varint"])
@@ -39,6 +51,11 @@ def test_build_search_matches_oracle(spark, docs01, index_dir, fmt):
     builder = IndexBuilder(index_dir, cfg)
     plan = builder.build(docs01)
     assert plan["n_docs"] == docs01.count()
+    # the postings checkpoint is gone, its mark stays, and a re-build of
+    # the finished index runs no Spark job
+    assert not os.path.exists(os.path.join(index_dir, "postings"))
+    assert set(STAGES) <= set(_load_stages(index_dir))
+    assert _jobs(spark, "rebuild-noop", lambda: builder.build(docs01)) == (plan, 0)
     plan_path = os.path.join(index_dir, "plan.json")
     with open(plan_path) as f:
         on_disk = json.load(f)
@@ -83,26 +100,69 @@ def test_persisted_intersect_search(spark, docs01, index_dir):
 
 
 def test_build_is_idempotent_and_resumable(spark, docs01, index_dir):
+    """A build interrupted by a sink that raises on the blocks stage
+    resumes from the postings checkpoint: only blocks and lineage
+    re-commit, the dictionary is untouched, and the checkpoint is gone
+    once lineage commits. A finished build's re-run is a no-op."""
+    from colbert_jl_spark.plans.build import _atomic_write
+
+    calls, crashes = [], {"blocks": 1}
+
+    def sink(df, final_dir, partition_by=None):
+        calls.append(os.path.basename(final_dir))
+        if crashes.get(calls[-1]):
+            crashes[calls[-1]] -= 1
+            raise RuntimeError("killed before the blocks commit")
+        _atomic_write(df, final_dir, partition_by)
+
+    cfg = EngineConfig(block_size=32)
+    builder = IndexBuilder(index_dir, cfg, sink=sink)
+    with pytest.raises(RuntimeError, match="killed"):
+        builder.build(docs01)
+    assert set(_load_stages(index_dir)) == {"postings", "plan", "dictionary"}
+    assert os.path.isdir(os.path.join(index_dir, "postings"))
+    stamp_dict = os.path.getmtime(os.path.join(index_dir, "dictionary"))
+
+    calls.clear()
+    builder.build(docs01)  # resumes: rebuilds only blocks + lineage
+    assert calls == ["blocks", "lineage"], calls
+    assert os.path.getmtime(os.path.join(index_dir, "dictionary")) == stamp_dict
+    assert not os.path.exists(os.path.join(index_dir, "postings"))
+    assert IndexReader(spark, index_dir).validate()["ok"]
+
+    # second build skips everything (reference indexing.jl:64-67 guard)
+    stamp_blocks = os.path.getmtime(os.path.join(index_dir, "blocks"))
+    calls.clear()
+    builder.build(docs01)
+    assert calls == []
+    assert os.path.getmtime(os.path.join(index_dir, "blocks")) == stamp_blocks
+
+
+def test_checkpoint_leftover_removed_and_missing_checkpoint_refused(
+    spark, docs001, index_dir
+):
+    """A postings/ left by a crash between the lineage mark and its
+    removal goes on the next build (no job runs). A pending stage that
+    needs the removed checkpoint raises, naming force=True; force=True
+    then rebuilds."""
     cfg = EngineConfig(block_size=32)
     builder = IndexBuilder(index_dir, cfg)
-    builder.build(docs01)
-    stamp1 = os.path.getmtime(os.path.join(index_dir, "blocks"))
-    # second build skips everything (reference indexing.jl:64-67 guard)
-    builder.build(docs01)
-    assert os.path.getmtime(os.path.join(index_dir, "blocks")) == stamp1
+    plan = builder.build(docs001)
+    leftover = os.path.join(index_dir, "postings", "part-0.parquet")
+    os.makedirs(os.path.dirname(leftover))
+    open(leftover, "wb").close()
+    again, jobs = _jobs(spark, "leftover", lambda: builder.build(docs001))
+    assert (jobs, again) == (0, plan)
+    assert not os.path.exists(os.path.join(index_dir, "postings"))
 
-    # simulate a crash after "dictionary": drop blocks+lineage stage marks
     stages = _load_stages(index_dir)
-    for s in ("blocks", "lineage"):
-        stages.pop(s)
-        shutil.rmtree(os.path.join(index_dir, s), ignore_errors=True)
+    stages.pop("blocks")
     with open(os.path.join(index_dir, "_STAGES.json"), "w") as f:
         json.dump(stages, f)
-    stamp_dict = os.path.getmtime(os.path.join(index_dir, "dictionary"))
-    builder.build(docs01)  # resumes: rebuilds only blocks + lineage
-    assert os.path.getmtime(os.path.join(index_dir, "dictionary")) == stamp_dict
-    reader = IndexReader(spark, index_dir)
-    assert reader.validate()["ok"]
+    with pytest.raises(ValueError, match=r"force=True"):
+        builder.build(docs001)
+    assert builder.build(docs001, force=True) == plan
+    assert IndexReader(spark, index_dir).validate()["ok"]
 
 
 def test_sink_is_injectable(spark, docs01, index_dir):

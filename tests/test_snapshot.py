@@ -92,9 +92,9 @@ _FILE_OPS = {
 }
 _ALLOWED = {
     "snapshot.py": None,  # the protocol itself
-    # the batch IndexBuilder's bare-stage staging (<stage>.tmp → <stage>)
-    # and its force=True restart; a batch build runs alone
-    "plans/build.py": {"_atomic_write", "IndexBuilder.build"},
+    # the batch IndexBuilder's bare-stage staging (<stage>.tmp → <stage>);
+    # a batch build runs alone
+    "plans/build.py": {"_atomic_write"},
 }
 
 
@@ -136,6 +136,68 @@ def test_only_the_snapshot_module_moves_files():
                 stray.append(f"{rel}:{scope or '<module>'} calls {name}")
     assert not stray, stray
     assert any(n == "os.rename" for _, n in _file_op_calls(PKG / "snapshot.py"))
+
+
+def _parquet_writes(path: Path):
+    """(qualified function, line) of every ``.parquet(...)`` call on a
+    ``DataFrame.write`` chain: the chain itself (``df.write....parquet``)
+    or a name a function bound to one (``w = df.write...; w.parquet``)."""
+    tree = ast.parse(path.read_text())
+    out = []
+
+    def on_write(node, writers) -> bool:
+        while isinstance(node, (ast.Attribute, ast.Call)):
+            if isinstance(node, ast.Attribute) and node.attr == "write":
+                return True
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return isinstance(node, ast.Name) and node.id in writers
+
+    def visit(node, scope, writers):
+        for child in ast.iter_child_nodes(node):
+            inner, names = scope, writers
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+                names = set()
+            if isinstance(child, ast.Assign) and on_write(child.value, writers):
+                writers.update(t.id for t in child.targets if isinstance(t, ast.Name))
+            if (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr == "parquet"
+                and on_write(child.func.value, writers)
+            ):
+                out.append((scope, child.lineno))
+            visit(child, inner, names)
+
+    visit(tree, "", set())
+    return out
+
+
+def test_only_the_snapshot_module_writes_parquet(tmp_path):
+    """Every engine table is written by snapshot.write_parquet (one
+    writer, one codec): no other module of the package calls
+    ``.parquet(...)`` on a ``DataFrame.write`` chain. The scan itself is
+    checked on a sample with each pattern it must catch."""
+    stray = [
+        f"{path.relative_to(PKG).as_posix()}:{scope or '<module>'}:{line}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path.name != "snapshot.py"
+        for scope, line in _parquet_writes(path)
+    ]
+    assert not stray, stray
+    assert _parquet_writes(PKG / "snapshot.py")
+    sample = tmp_path / "sample.py"
+    sample.write_text(
+        "def a(df, p):\n"
+        "    df.write.mode('overwrite').partitionBy('x').parquet(p)\n"
+        "def b(df, p):\n"
+        "    w = df.write.mode('overwrite')\n"
+        "    w = w.partitionBy('x')\n"
+        "    w.parquet(p)\n"
+        "def c(spark, p):\n"
+        "    return spark.read.parquet(p), spark.readStream.parquet(p)\n"
+    )
+    assert [s for s, _ in _parquet_writes(sample)] == ["a", "b"]
 
 
 # ---- fault injection and concurrency over one streamed index ------------
@@ -232,6 +294,63 @@ def _strip(report):
     if isinstance(report, dict):
         return {k: _strip(v) for k, v in report.items() if not k.endswith("_dir")}
     return report
+
+
+def _codecs(root: str) -> dict[str, set]:
+    """Every parquet file under ``root`` (relative path) → the set of
+    column-chunk codecs its footer reports."""
+    import pyarrow.parquet as pq
+
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            if f.endswith(".parquet"):
+                meta = pq.ParquetFile(os.path.join(d, f)).metadata
+                out[os.path.relpath(os.path.join(d, f), root)] = {
+                    meta.row_group(g).column(c).compression
+                    for g in range(meta.num_row_groups)
+                    for c in range(meta.num_columns)
+                }
+    return out
+
+
+def test_every_engine_table_is_zstd(spark, docs001, tmp_path):
+    """Every parquet footer under a batch index (with positions), a
+    streamed index after a major and an incremental compaction (with its
+    postings, positions_raw and ingest_log captures), and a two-wave dedup
+    state reports ZSTD for every column chunk."""
+    from colbert_jl_spark.plans.build import IndexBuilder
+    from colbert_jl_spark.streaming.dedup_state import DedupIndex
+    from tests.test_dedup_state import _WAVES, SCHEMA
+
+    batch = str(tmp_path / "batch")
+    builder = IndexBuilder(batch, CFG)
+    builder.build(docs001)
+    builder.build_positions(docs001)
+
+    docs, n_waves = _docs(spark, n_waves=2, per_wave=40)
+    streamed = _Streamed(spark, tmp_path / "streamed", docs, n_waves)
+    for wave in range(n_waves):
+        streamed.ingest(wave)
+        compact_streamed_index(spark, streamed.idx, CFG)
+    assert IndexReader(spark, streamed.idx).plan["incremental"]["epochs"] == 2
+
+    dedup = DedupIndex(str(tmp_path / "dedup"), n=3, threshold=0.7, cfg=EngineConfig())
+    corpus = None
+    for w in _WAVES[:2]:
+        dedup.update(spark, spark.createDataFrame(w, SCHEMA), corpus)
+        corpus = spark.createDataFrame(w, SCHEMA)
+
+    for root, stages in (
+        (batch, ("dictionary", "blocks", "docstats", "lineage", "positions")),
+        (streamed.idx, ("postings", "positions_raw", "ingest_log", "blocks.v", "dictionary.v")),
+        (dedup.path, ("signatures", "bands", "pairs", "labels.v")),
+    ):
+        codecs = _codecs(root)
+        for stage in stages:
+            assert any(p.startswith(stage) for p in codecs), (root, stage)
+        bad = {p: c for p, c in codecs.items() if c and c != {"ZSTD"}}
+        assert not bad, bad
 
 
 def test_every_step_abort_leaves_the_old_snapshot(spark, tmp_path, monkeypatch):

@@ -663,6 +663,32 @@ def test_stream_resume_is_idempotent(spark, docs001, tmp_path):
     assert n1 == n2
 
 
+def test_stream_sink_counts_postings_on_the_write(spark, docs001, tmp_path):
+    """Each ingest-log n_postings is observed on its postings write and
+    equals the rows of its postings/batch=N; without the read-back count a
+    micro-batch runs 4 Spark jobs (7 when it re-read the batch dir to
+    count it), counted by the stream's job group (its run id)."""
+    cfg = EngineConfig(block_size=32)
+    pages_dir = str(tmp_path / "pages_in")
+    idx = str(tmp_path / "stream_idx")
+    ckpt = str(tmp_path / "ckpt")
+    pages = pages_from_documents(docs001)
+    tracker = spark.sparkContext.statusTracker()
+    for i in range(2):
+        pages.where(F.crc32(F.col("url")) % 2 == i).write.mode("append").parquet(
+            pages_dir
+        )
+        q = stream_pages_to_postings(spark, pages_dir, idx, ckpt, cfg)
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        assert len(batches) == 1, q.recentProgress
+        assert len(tracker.getJobIdsForGroup(str(q.runId))) <= 4
+    log = spark.read.parquet(os.path.join(idx, "ingest_log")).collect()
+    assert len(log) == 2
+    for row in log:
+        batch = os.path.join(idx, "postings", f"batch={row.batch_id}")
+        assert row.n_postings == spark.read.parquet(batch).count() > 0
+
+
 def test_windowed_event_counts(spark, tmp_path):
     """availableNow run over the events table as a file stream; result
     must equal the equivalent batch windowed aggregation."""
