@@ -59,3 +59,25 @@ def local_df(
         return spark.createDataFrame(pdf, schema=schema)
     except Exception:  # pragma: no cover - defensive fallback
         return spark.createDataFrame(rows, schema)
+
+
+# above this many distinct terms a driver-known term set stops being an
+# In(term, …) scan filter and becomes a broadcast left-semi join, so a bulk
+# batch never compiles a giant IN list into the scan. 32 covers every
+# interactive query; only bulk batched suites cross it.
+MAX_INLIST_TERMS = 32
+
+
+def term_cut(
+    df: DataFrame, terms: list[str], max_inlist_terms: int = MAX_INLIST_TERMS
+) -> DataFrame:
+    """``df``'s rows whose ``term`` is one of ``terms``: an In(term, …)
+    filter (pushed into the parquet reader, so row groups prune by min/max)
+    for up to ``max_inlist_terms`` terms, else a broadcast left-semi join
+    against the terms as a LocalRelation."""
+    from pyspark.sql import functions as F
+
+    if len(terms) <= max_inlist_terms:
+        return df.where(F.col("term").isin(list(terms)))
+    wanted = local_df(df.sparkSession, [(t,) for t in terms], "term string")
+    return df.join(F.broadcast(wanted), "term", "left_semi")

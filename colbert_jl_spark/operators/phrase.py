@@ -27,10 +27,11 @@ Two serving shapes share that matching core:
   PERSISTED path (VERDICT r3 item 1): positions grouped per (term,
   doc_id) into a sorted array, written partitioned by the index's
   term_bucket hash (plans/build.IndexBuilder.build_positions), served by
-  IndexReader.phrase() with term-IN + term_bucket directory pruning — a
-  phrase query then scans only its terms' slice of the corpus, the same
-  nprobe shape as the block-max WAND path (reference
-  src/search/ranking.jl:30-36).
+  IndexReader.phrase() with the term cut (smalldf.term_cut) + term_bucket
+  directory pruning — a phrase query then scans only its terms' slice of
+  the corpus, the same nprobe shape as the block-max WAND path (reference
+  src/search/ranking.jl:30-36). ``phrase_matches_local`` is the same
+  matching in pandas, over a collected slice (IndexReader.phrase_local).
 
 Scale shape: the only shuffle is the groupBy on (pid, doc_id, start),
 keyed by candidate occurrences — bounded by the phrase terms' posting
@@ -45,11 +46,15 @@ intersection — positional conjunction.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from colbert_jl_spark.config import EngineConfig
+from colbert_jl_spark.functions.smalldf import MAX_INLIST_TERMS, local_df
 from colbert_jl_spark.functions.tokenizer import py_tokens, tokens_col
+
+PHRASE_OUT_SCHEMA = "pid long, doc_id long, n_occurrences long"
 
 
 def token_positions(docs: DataFrame, cfg: EngineConfig = EngineConfig()) -> DataFrame:
@@ -89,18 +94,16 @@ def phrase_term_rows(phrases: list[tuple[int, str]]) -> list[tuple]:
     return rows
 
 
-def phrase_terms(
-    spark: SparkSession, phrases: list[tuple[int, str]]
-) -> DataFrame:
-    """(pid, term, off, plen) — the broadcastable phrase side (bulk
-    phrase sets; interactive calls use phrase_term_rows as a literal)."""
-    from colbert_jl_spark.functions.smalldf import local_df
-
-    return local_df(
-        spark,
-        phrase_term_rows(phrases),
-        "pid long, term string, off int, plen int",
-    )
+def phrase_side(
+    spark: SparkSession, pt: list[tuple], max_inlist_terms: int = MAX_INLIST_TERMS
+) -> list[tuple] | DataFrame:
+    """The phrase side _match_starts attaches: the phrase_term_rows
+    themselves (compiled as a literal map) for up to ``max_inlist_terms``
+    distinct terms, else a broadcastable (pid, term, off, plen)
+    LocalRelation for bulk phrase sets."""
+    if len({t for _, t, _, _ in pt}) <= max_inlist_terms:
+        return pt
+    return local_df(spark, pt, "pid long, term string, off int, plen int")
 
 
 def _match_starts(pos: DataFrame, pt: DataFrame, anchor=None) -> DataFrame:
@@ -121,7 +124,7 @@ def _match_starts(pos: DataFrame, pt: DataFrame, anchor=None) -> DataFrame:
 
     ``anchor`` = (anchor_docs (pid, doc_id), anchored_pids, all_anchored)
     — rarest-term-first pruning (VERDICT r4 item 3, built by
-    IndexReader._phrase_anchor): candidate starts are broadcast-SEMI-
+    IndexReader._phrase_plan): candidate starts are broadcast-SEMI-
     joined on (pid, doc_id) against each phrase's rarest term's doc set
     MAP-SIDE, before the one hash Exchange, so a head term contributes
     to the shuffle only inside docs that contain the phrase's rare term.
@@ -130,11 +133,11 @@ def _match_starts(pos: DataFrame, pt: DataFrame, anchor=None) -> DataFrame:
     anchor's set can never produce a match. Pids without an anchor
     (single-term / all-stopword phrases) bypass the semi-join."""
     if isinstance(pt, list):
-        # driver-known phrase rows, few distinct terms: compile the
-        # phrase side as a literal map expression — no BroadcastExchange
-        # and no broadcast-build job on the hot phrase path. Terms are
-        # [a-z0-9]+ by the frozen tokenizer, so the SQL rendering is
-        # quoting-safe.
+        # driver-known phrase rows, few distinct terms (phrase_side):
+        # compile the phrase side as a literal map expression — no
+        # BroadcastExchange and no broadcast-build job on the hot phrase
+        # path. Terms are [a-z0-9]+ by the frozen tokenizer, so the SQL
+        # rendering is quoting-safe.
         from collections import defaultdict
 
         per_term = defaultdict(list)
@@ -220,27 +223,37 @@ def _match_starts(pos: DataFrame, pt: DataFrame, anchor=None) -> DataFrame:
 
 
 def phrase_matches_from_positions(
-    positions: DataFrame,
-    phrases: list[tuple[int, str]],
-    spark: SparkSession,
-    anchor=None,
+    positions: DataFrame, pt, anchor=None
 ) -> DataFrame:
     """(pid, doc_id, n_occurrences) over a token_position_lists-format
-    frame (already pruned to the phrase terms by the caller — the reader
-    pushes term/term_bucket filters into the scan; ``anchor`` optionally
-    carries the rarest-term doc sets, see _match_starts). Identical
-    output to phrase_matches; gated in tests/test_phrase.py."""
-    if not any(py_tokens(text, None) for _, text in phrases):
-        from colbert_jl_spark.functions.smalldf import local_df
-
-        return local_df(spark, [], "pid long, doc_id long, n_occurrences long")
-    pt = phrase_term_rows(phrases)
-    if len({t for _, t, _, _ in pt}) > 32:
-        pt = phrase_terms(spark, phrases)  # bulk: broadcast join instead
+    frame (already cut to the phrase terms by the caller — the reader
+    pushes term/term_bucket filters into the scan). ``pt`` is the phrase
+    side (phrase_side) of at least one phrase term row; ``anchor``
+    optionally carries the rarest-term doc sets, see _match_starts.
+    Identical output to phrase_matches; gated in tests/test_phrase.py."""
     pos = positions.select(
         "doc_id", "term", F.explode("positions").alias("pos")
     )
     return _match_starts(pos, pt, anchor=anchor)
+
+
+def phrase_matches_local(positions: pd.DataFrame, pt: list[tuple]) -> list[tuple]:
+    """The driver-side matcher: the same start-offset matching as
+    _match_starts, in pandas, over collected (term, doc_id, positions)
+    rows and the phrase_term_rows ``pt`` → [(pid, doc_id,
+    n_occurrences)]."""
+    if not len(positions) or not pt:
+        return []
+    ex = positions.explode("positions").rename(columns={"positions": "pos"})
+    m = ex.merge(pd.DataFrame(pt, columns=["pid", "term", "off", "plen"]), on="term")
+    m["start"] = m["pos"].astype("int64") - m["off"]
+    m = m[m["start"] >= 0]
+    if not len(m):
+        return []
+    g = m.groupby(["pid", "plen", "doc_id", "start"]).size().reset_index(name="m")
+    g = g[g["m"] == g["plen"]]
+    out = g.groupby(["pid", "doc_id"]).size().reset_index(name="n")
+    return [(int(r.pid), int(r.doc_id), int(r.n)) for r in out.itertuples()]
 
 
 def phrase_matches(
@@ -261,11 +274,7 @@ def phrase_matches(
     phrase queries over a persisted index, build the positions stage and
     use IndexReader.phrase() instead (module docstring)."""
     spark = docs.sparkSession
-    if not any(py_tokens(text, None) for _, text in phrases):
-        from colbert_jl_spark.functions.smalldf import local_df
-
-        return local_df(spark, [], "pid long, doc_id long, n_occurrences long")
     pt = phrase_term_rows(phrases)
-    if len({t for _, t, _, _ in pt}) > 32:
-        pt = phrase_terms(spark, phrases)  # bulk: broadcast join instead
-    return _match_starts(token_positions(docs, cfg), pt)
+    if not pt:
+        return local_df(spark, [], PHRASE_OUT_SCHEMA)
+    return _match_starts(token_positions(docs, cfg), phrase_side(spark, pt))

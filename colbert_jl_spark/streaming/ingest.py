@@ -80,32 +80,33 @@ def stream_pages_to_postings(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         docs = docs_from_pages(batch_df)
-        n_docs = docs.count()
-        if n_docs == 0:
-            return
-        # the posting count rides the write (as build()'s posting_rows
-        # does): no read-back of the batch dir, no count job
-        obs = Observation()
-        postings = term_postings_with_doclen(docs, cfg).observe(
-            obs, F.count(F.lit(1)).alias("n")
-        )
+        # the doc and posting counts ride the write (as build()'s
+        # corpus_docs and posting_rows do): no count job re-running
+        # extraction and tokenization, no read-back of the batch dir
+        obs_docs, obs = Observation(), Observation()
+        postings = term_postings_with_doclen(
+            docs, cfg, count_obs=obs_docs
+        ).observe(obs, F.count(F.lit(1)).alias("n"))
         # idempotent append: each micro-batch owns its subdirectory, so a
         # checkpoint-replayed batch overwrites itself instead of doubling
-        snapshot.write_parquet(
-            postings, os.path.join(index_path, "postings", f"batch={batch_id}")
-        )
+        batch = f"batch={batch_id}"
+        snapshot.write_parquet(postings, os.path.join(index_path, "postings", batch))
+        n_docs = int(obs_docs.get["n_docs"])
+        if n_docs == 0:  # an empty micro-batch leaves nothing behind
+            snapshot.discard(os.path.join(index_path, "postings"), [batch])
+            return
         n_postings = int(obs.get["n"])
         if positions:
             snapshot.write_parquet(
                 token_position_lists(docs, cfg),
-                os.path.join(index_path, "positions_raw", f"batch={batch_id}"),
+                os.path.join(index_path, "positions_raw", batch),
             )
         snapshot.write_parquet(
             batch_df.sparkSession.createDataFrame(
                 [(batch_id, n_docs, n_postings)],
                 "batch_id long, n_docs long, n_postings long",
             ),
-            os.path.join(index_path, "ingest_log", f"batch={batch_id}"),
+            os.path.join(index_path, "ingest_log", batch),
         )
 
     writer = (

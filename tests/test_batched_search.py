@@ -87,9 +87,10 @@ def test_batched_search_rank_identical(spark, docs01, multi_idx, mode, hot, inli
 def test_search_local_identical_to_search_on_batches(spark, multi_idx, mode):
     reader = IndexReader(spark, multi_idx)
     want = _rows(reader.search(BATCH, mode=mode))
-    reader.search = lambda *a, **kw: pytest.fail("must not fall back")
-    got = _rows(reader.search_local(BATCH, mode=mode))
-    pd.testing.assert_frame_equal(got, want)
+    local = reader.search_local(BATCH, mode=mode)
+    plan = local._jdf.queryExecution().executedPlan().toString()
+    assert plan.startswith("LocalTableScan"), "must not fall back"
+    pd.testing.assert_frame_equal(_rows(local), want)
 
 
 def test_incremental_batches_rank_identical(spark, docs01, tmp_path):
@@ -154,7 +155,7 @@ def test_bucket_executor_decodes_each_block_once(spark, multi_idx, monkeypatch):
     # twenty copies of the query walk the same blocks: decoded once each
     assert len(decodes([(q, t, n) for q in range(20) for _, t, n in one])) == len(single)
 
-    batch = reader._query_rows(BATCH)
+    batch = reader._search_plan(BATCH, None, "topk", sized=False).qt_rows
     for mode in ("topk", "intersect"):
         got = decodes(batch, mode)
         assert len(got) == len(set(got))  # no block decoded twice

@@ -228,10 +228,18 @@ def test_search_local_matches_distributed(spark, docs01, index_dir):
     pd.testing.assert_frame_equal(got_i, want_i, check_like=True)
 
 
+def _on_driver(df) -> bool:
+    """True iff ``df`` is driver-computed rows (a LocalRelation), i.e. the
+    driver executor ran; the distributed executor returns a query DAG."""
+    return df._jdf.queryExecution().executedPlan().toString().startswith(
+        "LocalTableScan"
+    )
+
+
 def test_search_local_size_guard_falls_back(spark, docs01, index_dir):
     """VERDICT r3 item 5: search_local must estimate the pruned collect
     volume from the query terms' df (driver-side dictionary lookup) and
-    route head-term queries through the distributed search() instead of
+    run head-term queries through the distributed executor instead of
     collecting their block slice into the driver — with identical output."""
     import pandas as pd
 
@@ -244,22 +252,42 @@ def test_search_local_size_guard_falls_back(spark, docs01, index_dir):
     want = reader.search(q).toPandas().sort_values(key).reset_index(drop=True)
 
     reader.max_local_postings = 1  # any real term exceeds this
-    routed = []
-    orig = reader.search
-    reader.search = lambda *a, **kw: (routed.append(1), orig(*a, **kw))[1]
-    got = reader.search_local(q).toPandas().sort_values(key).reset_index(drop=True)
-    assert routed, "size guard must fall back to distributed search()"
+    routed = reader.search_local(q)
+    assert not _on_driver(routed), "size guard must run the distributed executor"
+    got = routed.toPandas().sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(got, want, check_like=True)
 
-    # under the threshold the driver-side path runs WITHOUT search() —
-    # and repeat queries reuse the cached term stats (no growth in cache)
+    # under the threshold the driver-side path runs — and repeat queries
+    # reuse the cached term stats (no growth in cache)
     reader2 = IndexReader(spark, index_dir)
-    reader2.search = lambda *a, **kw: pytest.fail("must not fall back")
-    got2 = reader2.search_local(q).toPandas().sort_values(key).reset_index(drop=True)
+    local = reader2.search_local(q)
+    assert _on_driver(local)
+    got2 = local.toPandas().sort_values(key).reset_index(drop=True)
     pd.testing.assert_frame_equal(got2, want, check_like=True)
     n_cached = len(reader2._term_stats)
     reader2.search_local(q).collect()
     assert len(reader2._term_stats) == n_cached
+
+
+def test_search_local_fallback_reuses_the_plan(spark, docs01, index_dir):
+    """search_local's size-guard fallback runs the distributed executor on
+    the plan it already built: with a DataFrame of queries (whose collect
+    is a job) it runs exactly the jobs search() runs — one query collect,
+    one dictionary lookup, the query DAG — not a second collect and plan."""
+    cfg = EngineConfig(block_size=32, min_bucket_docs=64)
+    IndexBuilder(index_dir, cfg).build(docs01)
+    qdf = spark.createDataFrame([(5, "data table")], "qid long, query string")
+
+    def jobs(entry: str) -> int:
+        reader = IndexReader(spark, index_dir)  # cold term-stats cache
+        reader.max_local_postings = 1
+        _ = (reader.dictionary, reader.blocks)  # stage scans built uncounted
+        run = getattr(reader, entry)
+        rows, n = _jobs(spark, f"fallback-{entry}", lambda: run(qdf).collect())
+        assert rows
+        return n
+
+    assert jobs("search_local") == jobs("search")
 
 
 def test_sink_crash_mid_stage_then_resume(spark, docs01, index_dir):

@@ -14,6 +14,13 @@ def _as_dict(df):
     return {(r.pid, r.doc_id): r.n_occurrences for r in df.collect()}
 
 
+def _on_driver(df) -> bool:
+    """True iff ``df`` is driver-computed rows (the driver executor)."""
+    return df._jdf.queryExecution().executedPlan().toString().startswith(
+        "LocalTableScan"
+    )
+
+
 def test_phrase_hand_computed(spark):
     docs = spark.createDataFrame(
         [
@@ -137,25 +144,30 @@ def test_persisted_phrase_index_matches_inline_and_prunes(
         IndexReader(spark, idx2).phrase(phrases)
 
     # driver-side latency mode: output-identical to the distributed path
-    got_local = _as_dict(reader.phrase_local(phrases))
-    assert got_local == want
+    local = reader.phrase_local(phrases[:2] + phrases[3:])  # no stopword
+    assert _on_driver(local)
+    assert _as_dict(local) == {k: v for k, v in want.items() if k[0] != 2}
 
-    # stopword-bearing phrases route to the distributed executor (their
+    # stopword-bearing phrases run the distributed executor (their
     # positions volume is invisible to the dictionary-df size guard), as
     # do head phrases over the size threshold — outputs stay identical
-    routed = []
-    orig = reader.phrase
-    reader.phrase = lambda *a, **kw: (routed.append(1), orig(*a, **kw))[1]
-    sw = [(0, "the data")]
-    got_sw = _as_dict(reader.phrase_local(sw))
-    assert routed, "stopword phrase must fall back"
-    assert got_sw == _as_dict(orig(sw))
-    routed.clear()
+    routed = reader.phrase_local(phrases)
+    assert not _on_driver(routed), "stopword phrase must fall back"
+    assert _as_dict(routed) == want
     reader.max_local_postings = 1
-    assert _as_dict(reader.phrase_local([(0, "fast table")])) == {
-        k: v for k, v in want.items() if k[0] == 0
-    }
-    assert routed, "over-threshold phrase must fall back"
+    routed = reader.phrase_local([(0, "fast table")])
+    assert not _on_driver(routed), "over-threshold phrase must fall back"
+    assert _as_dict(routed) == {k: v for k, v in want.items() if k[0] == 0}
+
+    # a phrase set above max_inlist_terms: the positions scan is cut by a
+    # broadcast semi-join instead of a giant In(term, …) list, and the
+    # phrase side broadcasts — same output
+    reader.max_inlist_terms = 2
+    spark.catalog.clearCache()
+    bulk = reader.phrase(phrases)
+    plan = bulk._jdf.queryExecution().executedPlan().toString()
+    assert "LeftSemi" in plan and "In(term," not in plan, plan
+    assert _as_dict(bulk) == want
 
 
 def test_phrase_anchor_prunes_by_rarest_term(spark, tmp_path):
@@ -192,12 +204,12 @@ def test_phrase_anchor_prunes_by_rarest_term(spark, tmp_path):
     # at this Σdf); the stopword-bearing phrase 1 and the df=0 phrase 3
     # anchor regardless (their volume is invisible / the kill is free)
     pos = reader._stage_df("positions_dir", "positions")
-    gated = reader._phrase_anchor(phrases, pos)
+    gated = reader._phrase_plan(phrases, sized=False).anchor()
     assert gated is not None and gated[1] == [1, 3]
 
     # force-anchor everything estimable for the pruning assertions below
     reader.anchor_min_candidate_postings = 0
-    anchor = reader._phrase_anchor(phrases, pos)
+    anchor = reader._phrase_plan(phrases, sized=False).anchor()
     assert anchor is not None
     anchor_docs, anchored_pids, all_anchored = anchor
     assert anchored_pids == [0, 1, 3] and not all_anchored
@@ -227,12 +239,13 @@ def test_phrase_anchor_prunes_by_rarest_term(spark, tmp_path):
     assert got == want == {(0, 200): 1, (0, 201): 1, (0, 202): 1}
     from colbert_jl_spark.operators.phrase import (
         phrase_matches_from_positions,
+        phrase_term_rows,
     )
 
     terms = sorted({t for _, tx in phrases for t in tx.split()})
     unpruned = _as_dict(
         phrase_matches_from_positions(
-            pos.where(F.col("term").isin(terms)), phrases, spark, anchor=None
+            pos.where(F.col("term").isin(terms)), phrase_term_rows(phrases)
         )
     )
     assert unpruned == want

@@ -16,6 +16,9 @@ bit-identical; these tests pin both the identity and the plan shape):
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 
 from colbert_jl_spark.config import EngineConfig
@@ -159,3 +162,56 @@ def test_queries_df_is_local_relation(spark):
     q = queries_df(spark)
     opt = q._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in opt and "ExistingRDD" not in opt
+
+
+# the driver-side tokenizers, and the IndexReader planners allowed to call
+# them: every search/phrase entry point prepares its call through one
+# planner, which tokenizes each query once
+_TOKENIZERS = {"py_terms", "py_tokens", "phrase_term_rows"}
+_PLANNERS = {"IndexReader._search_plan", "IndexReader._phrase_plan"}
+
+
+def _tokenize_calls(source: str) -> list[tuple[str, int]]:
+    """(qualified function, line) of every tokenizer call in ``source``."""
+    out = []
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                inner = f"{scope}.{child.name}" if scope else child.name
+            if isinstance(child, ast.Call):
+                f = child.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+                if name in _TOKENIZERS:
+                    out.append((scope or "<module>", child.lineno))
+            visit(child, inner)
+
+    visit(ast.parse(source), "")
+    return out
+
+
+def test_only_the_planners_tokenize_queries():
+    """plans/build.py tokenizes queries and phrases only inside the two
+    planners, at one call site each, so no entry point or fallback grows
+    its own prep path back. The scan itself is checked on a sample with
+    the shapes it must catch."""
+    build = Path(__file__).resolve().parent.parent / "colbert_jl_spark/plans/build.py"
+    calls = _tokenize_calls(build.read_text())
+    assert not [c for c in calls if c[0] not in _PLANNERS], calls
+    assert sorted(scope for scope, _ in calls) == sorted(_PLANNERS)
+    sample = (
+        "class IndexReader:\n"
+        "    def _query_rows(self, q):\n"
+        "        return [py_terms(t, None, s) for _, t in q]\n"
+        "    def phrase(self, ps):\n"
+        "        return {t for _, x in ps for t in tok.py_tokens(x, None)}\n"
+        "    def _phrase_plan(self, ps):\n"
+        "        def rows():\n"
+        "            return phrase_term_rows(ps)\n"
+        "        return rows()\n"
+    )
+    assert [s for s, _ in _tokenize_calls(sample)] == [
+        "IndexReader._query_rows", "IndexReader.phrase",
+        "IndexReader._phrase_plan.rows",
+    ]

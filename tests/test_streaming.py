@@ -664,10 +664,11 @@ def test_stream_resume_is_idempotent(spark, docs001, tmp_path):
 
 
 def test_stream_sink_counts_postings_on_the_write(spark, docs001, tmp_path):
-    """Each ingest-log n_postings is observed on its postings write and
-    equals the rows of its postings/batch=N; without the read-back count a
-    micro-batch runs 4 Spark jobs (7 when it re-read the batch dir to
-    count it), counted by the stream's job group (its run id)."""
+    """Each ingest-log n_docs and n_postings is observed on its postings
+    write and n_postings equals the rows of its postings/batch=N; with no
+    doc count job and no read-back count a micro-batch runs 3 Spark jobs
+    (4 with a separate docs.count(), 7 when it also re-read the batch dir
+    to count it), counted by the stream's job group (its run id)."""
     cfg = EngineConfig(block_size=32)
     pages_dir = str(tmp_path / "pages_in")
     idx = str(tmp_path / "stream_idx")
@@ -681,12 +682,35 @@ def test_stream_sink_counts_postings_on_the_write(spark, docs001, tmp_path):
         q = stream_pages_to_postings(spark, pages_dir, idx, ckpt, cfg)
         batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
         assert len(batches) == 1, q.recentProgress
-        assert len(tracker.getJobIdsForGroup(str(q.runId))) <= 4
+        assert len(tracker.getJobIdsForGroup(str(q.runId))) <= 3
     log = spark.read.parquet(os.path.join(idx, "ingest_log")).collect()
     assert len(log) == 2
+    assert sum(row.n_docs for row in log) == docs001.count()
     for row in log:
         batch = os.path.join(idx, "postings", f"batch={row.batch_id}")
         assert row.n_postings == spark.read.parquet(batch).count() > 0
+
+
+def test_stream_sink_empty_batch_leaves_nothing(spark, docs001, tmp_path, monkeypatch):
+    """A micro-batch with no documents (its doc count, observed on the
+    postings write, is 0) leaves no postings/batch=N and no ingest-log
+    row. The doc filter is data-dependent, so the optimizer cannot fold
+    the write away the way it could a literal false predicate."""
+    from colbert_jl_spark.sources import pages as pages_mod
+
+    real = pages_mod.docs_from_pages
+    monkeypatch.setattr(
+        pages_mod, "docs_from_pages", lambda df: real(df).where(F.col("doc_id") < 0)
+    )
+    pages_dir = str(tmp_path / "pages_in")
+    idx = str(tmp_path / "stream_idx")
+    pages_from_documents(docs001).write.parquet(pages_dir)
+    q = stream_pages_to_postings(
+        spark, pages_dir, idx, str(tmp_path / "ckpt"), EngineConfig()
+    )
+    assert [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert os.listdir(os.path.join(idx, "postings")) == []
+    assert os.listdir(os.path.join(idx, "ingest_log")) == []
 
 
 def test_windowed_event_counts(spark, tmp_path):
