@@ -13,7 +13,7 @@ The analogue of the reference's top-level build driver ``index(indexer)``
                          (reference encode_passages per chunk,
                           checkpoint.jl:159-189). A TRANSIENT checkpoint:
                          no reader, validate() or query reads it, so
-                         build() removes it once lineage commits (the
+                         build() removes it once the plan commits (the
                          reference's index dir likewise holds only what its
                          Searcher loads); its _STAGES.json mark stays
     stage "plan"       — exact corpus stats → plan.json
@@ -44,12 +44,18 @@ The analogue of the reference's top-level build driver ``index(indexer)``
 
 Resumability (north rule; analogue of the reference's isdir guard +
 _check_all_files_are_saved, indexing.jl:64-67 /
-collection_indexer.jl:299-340): every stage commits atomically
-(write to tmp dir → rename) and records itself in _STAGES.json; a re-run
-skips completed stages, so a build interrupted after "dictionary"
-restarts at "blocks" from the postings checkpoint without recomputing
-stats. A build with all five marks returns its plan without a Spark job; a
-pending plan, dictionary or blocks stage needs the checkpoint, and once a
+collection_indexer.jl:299-340): every stage writes a whole new version
+dir beside the live snapshot (snapshot.staging → write_parquet →
+assemble) and records itself in _STAGES.json. The postings mark carries
+the corpus and posting counts and the newest later mark the plan built
+so far, so a re-run skips completed stages: a build interrupted after
+"dictionary" restarts at "blocks" from the postings checkpoint without
+recomputing stats. plan.json changes once per build, by one
+snapshot.commit after every dir it names exists (the lineage mark
+follows it); until then readers serve the previous snapshot, and the
+commit retires the dirs only that snapshot named. A
+build with all five marks returns its plan without a Spark job; a pending
+plan, dictionary or blocks stage needs the checkpoint, and once a
 finished build has removed it only force=True rebuilds (see
 IndexBuilder.build). On Iceberg the same structure maps to snapshot
 checkpoints; the staged-commit protocol here is storage-agnostic.
@@ -65,8 +71,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import sys
 import time
 from dataclasses import dataclass
 from typing import Callable
@@ -88,8 +92,8 @@ STAGES = ("postings", "plan", "dictionary", "blocks", "lineage")
 FILES_PER_BUCKET_CEILING = 8
 
 # the data dirs a plan names, each by its "<stage>_dir" key or else as the
-# bare stage dir; streamed compactions commit new versions of them
-# through snapshot.py
+# bare stage dir; every writer commits new versions of them through
+# snapshot.py
 PLAN_DIRS = ("dictionary", "blocks", "docstats", "lineage", "positions")
 
 
@@ -101,6 +105,36 @@ def plan_dirs(plan: dict) -> set[str]:
         for s in PLAN_DIRS
         if s != "positions" or plan.get("positions")
     }
+
+
+def new_version(
+    index_path: str,
+    plan: dict,
+    stage: str,
+    df: DataFrame,
+    partition_by: str | None = None,
+    replace=(),
+    whole: bool = False,
+) -> str:
+    """Write ``df`` as the new files of ``stage``'s next version and point
+    ``plan`` at it. A ``whole`` version is ``df`` alone; otherwise the
+    plan's current version is carried over except its partitions in
+    ``replace`` (an empty ``replace`` appends). Readers see it once
+    ``plan`` commits (commit_plan). Returns the new version's path."""
+    tmp = snapshot.staging(index_path, stage)
+    snapshot.write_parquet(df, tmp, partition_by)
+    key = f"{stage}_dir"
+    current = None if whole else plan.get(key, stage)
+    plan[key] = snapshot.assemble(index_path, tmp, current, replace)
+    return os.path.join(index_path, plan[key])
+
+
+def commit_plan(index_path: str, plan: dict, previous: dict | None = None) -> None:
+    """Commit ``plan`` as the index's snapshot, the one way plan.json
+    changes: one rename makes every version it names visible at once and
+    retires the dirs only ``previous`` (default: the committed plan) named
+    (snapshot.commit)."""
+    snapshot.commit(index_path, "plan.json", plan, PLAN_DIRS, plan_dirs, previous)
 
 
 def bucket_file_counts(stage_dir: str) -> dict[int, int]:
@@ -131,33 +165,18 @@ def _load_stages(index_path: str) -> dict:
         return {}
 
 
-def _mark_stage(index_path: str, stage: str, meta: dict | None = None) -> None:
-    done = _load_stages(index_path)
-    done[stage] = meta or {}
-    done[stage]["completed_at"] = time.time()
+def _mark_stage(
+    index_path: str, stage: str, meta: dict | None = None, reset: bool = False
+) -> None:
+    """Record ``stage`` (with ``meta``) in the ledger; ``reset`` first
+    drops every other mark. Only the newest mark keeps a ``plan``: a
+    resume needs the plan built so far, and once the lineage mark lands
+    the committed plan.json is that plan."""
+    done = {} if reset else _load_stages(index_path)
+    for mark in done.values():
+        mark.pop("plan", None)
+    done[stage] = {**(meta or {}), "completed_at": time.time()}
     snapshot.write_json(_stage_file(index_path), done)
-
-
-def write_plan(index_path: str, plan: dict) -> None:
-    """Atomic plan.json write (tmp write + rename) for the batch build's
-    stages: a concurrent IndexReader.refresh() re-reads plan.json on every
-    search, and an in-place truncate-and-write would expose half-written
-    JSON. Streamed compactions commit through snapshot.commit instead."""
-    snapshot.write_json(os.path.join(index_path, "plan.json"), plan)
-
-
-def _atomic_write(df: DataFrame, final_dir: str, partition_by: str | None = None) -> None:
-    """Write zstd parquet (snapshot.write_parquet) to <dir>.tmp then
-    rename — the poor man's snapshot commit (Iceberg gives this
-    transactionally; plain parquet needs the rename protocol so a killed
-    job never leaves a half-written stage)."""
-    tmp = final_dir + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
-    snapshot.write_parquet(df, tmp, partition_by)
-    if os.path.exists(final_dir):
-        shutil.rmtree(final_dir)
-    os.replace(tmp, final_dir)
 
 
 @dataclass
@@ -165,28 +184,19 @@ class IndexBuilder:
     """Builds a persisted block index at ``index_path``.
 
     ``force=True`` rebuilds from scratch (clears the stage ledger) —
-    otherwise completed stages are skipped (resume semantics).
-
-    ``sink`` is the table-commit seam: any callable
-    ``(df, final_dir, partition_by=None)`` that durably materializes a
-    DataFrame. Defaults to ``_atomic_write`` (zstd parquet tmp→rename); on an
-    Iceberg catalog the same seam is ``df.writeTo(table).createOrReplace()``
-    — stage ordering, the _STAGES.json ledger, and resume semantics are
-    sink-agnostic (injection-gated in tests/test_build.py)."""
+    otherwise completed stages are skipped (resume semantics). Either way
+    the new snapshot is built beside the committed one and replaces it
+    with one plan.json commit."""
 
     index_path: str
     cfg: EngineConfig = EngineConfig()
-    sink: object = None
-
-    def _write(self, df: DataFrame, final_dir: str, partition_by: str | None = None) -> None:
-        (self.sink or _atomic_write)(df, final_dir, partition_by)
 
     def build(self, docs: DataFrame, force: bool = False) -> dict:
         """Build the index from ``docs`` (doc_id, text[, lang]) and return
         its plan.
 
         The postings stage is a transient checkpoint: the later stages
-        derive from it, and it is removed once lineage commits, because no
+        derive from it, and it is removed once the plan commits, because no
         reader, ``validate()`` or query reads it. Its ``_STAGES.json`` mark
         stays. Resume contract (``force=False``):
 
@@ -196,69 +206,69 @@ class IndexBuilder:
         * otherwise the pending stages run; plan, dictionary and blocks
           read the checkpoint, lineage reads only the blocks;
         * a pending plan, dictionary or blocks stage whose checkpoint is
-          gone raises ValueError: rebuild with ``force=True``."""
+          gone raises ValueError: rebuild with ``force=True``.
+
+        The commit retires every dir the previous snapshot named and the
+        new one does not: with ``force=True`` that is all of them,
+        positions included until ``build_positions`` runs again."""
         from colbert_jl_spark.operators.codec_blocks import term_postings_with_doclen
 
         os.makedirs(self.index_path, exist_ok=True)
-        if force:
-            snapshot.discard(self.index_path, (*STAGES, "docstats"))
-            try:
-                os.remove(_stage_file(self.index_path))
-            except FileNotFoundError:
-                pass
-        done = _load_stages(self.index_path)
-        if all(s in done for s in STAGES):
-            snapshot.discard(self.index_path, ["postings"])
-            return self.plan()
-        spark = docs.sparkSession
+        done = {} if force else _load_stages(self.index_path)
+        if not all(s in done for s in STAGES):
+            if "postings" not in done:
+                from pyspark.sql import Observation
 
-        # -- stage: postings (THE tokenize pass — runs once) ----------------
-        postings_dir = os.path.join(self.index_path, "postings")
-        n_docs = None
-        n_postings = None
-        if "postings" not in done:
-            from pyspark.sql import Observation
-
-            # corpus size AND posting-row count observed on the tokenize
-            # pass itself (no separate count jobs — every extra job is a
-            # cluster-wide scheduling barrier; the posting count known
-            # here is what lets the plan and dictionary stages run
-            # CONCURRENTLY below); n_docs includes all-stopword docs the
-            # postings drop
-            obs_docs = Observation("corpus_docs")
-            obs_rows = Observation("posting_rows")
-            pdl = term_postings_with_doclen(
-                docs, self.cfg, count_obs=obs_docs
-            ).observe(obs_rows, F.count(F.lit(1)).alias("n_postings"))
-            self._write(pdl, postings_dir)
-            _mark_stage(self.index_path, "postings")
-            n_docs = int(obs_docs.get["n_docs"])
-            n_postings = int(obs_rows.get["n_postings"])
-        elif "plan" in done:
-            # a resume past the plan stage needs no corpus count job
-            n_docs = int(self.plan()["n_docs"])
-
-        plan = self.finish_from_postings(
-            spark,
-            n_docs_total=docs.count() if n_docs is None else n_docs,
-            n_postings_hint=n_postings,
-        )
+                # corpus size AND posting-row count observed on the
+                # tokenize pass itself (no separate count jobs — every
+                # extra job is a cluster-wide scheduling barrier; the
+                # posting count known here is what lets the plan and
+                # dictionary stages run CONCURRENTLY); n_docs includes
+                # all-stopword docs the postings drop
+                obs_docs = Observation("corpus_docs")
+                obs_rows = Observation("posting_rows")
+                pdl = term_postings_with_doclen(
+                    docs, self.cfg, count_obs=obs_docs
+                ).observe(obs_rows, F.count(F.lit(1)).alias("n_postings"))
+                # a crashed or forced build's checkpoint goes first, so
+                # this one is version 1, the bare postings/ dir
+                snapshot.discard(self.index_path, ["postings", "postings.tmp"])
+                new_version(self.index_path, {}, "postings", pdl, whole=True)
+                _mark_stage(
+                    self.index_path, "postings",
+                    {
+                        "n_docs": int(obs_docs.get["n_docs"]),
+                        "n_postings": int(obs_rows.get["n_postings"]),
+                    },
+                    reset=True,
+                )
+                done = _load_stages(self.index_path)
+            plan = self.finish_from_postings(
+                docs.sparkSession,
+                done["postings"]["n_docs"],
+                done["postings"]["n_postings"],
+            )
+            commit_plan(self.index_path, plan)
+            _mark_stage(self.index_path, "lineage")
         snapshot.discard(self.index_path, ["postings"])
-        return plan
+        return self.plan()
 
     def finish_from_postings(
         self,
         spark: SparkSession,
         n_docs_total: int,
+        n_postings: int,
         batch_ids: list[int] | None = None,
-        n_postings_hint: int | None = None,
     ) -> dict:
-        """Run every stage downstream of the materialized postings table.
+        """Run every stage downstream of the materialized postings table
+        and return the plan naming their new versions, uncommitted: the
+        caller commits it (build(), or the streamed major compaction after
+        its positions stage), then marks lineage.
 
         Split out so the streaming ingest path (streaming/ingest.py), which
         appends postings incrementally via foreachBatch, can compact into a
-        queryable index without a docs DataFrame — it passes the doc count
-        accumulated in its ingest log instead.
+        queryable index without a docs DataFrame — it passes the doc and
+        posting counts accumulated in its ingest log instead.
 
         ``batch_ids`` restricts the scan to those ``batch=`` partitions of
         the postings dir (partition-pruned). The streaming path passes its
@@ -269,26 +279,39 @@ class IndexBuilder:
         batch would then be re-read as "new" by the next incremental
         compaction and double-counted.
 
-        The postings checkpoint is read only while plan, dictionary or
-        blocks is pending; a lineage-only resume reads only the blocks. A
-        pending upstream stage whose checkpoint is gone raises ValueError.
-        This method never removes the checkpoint: ``build()`` does, and a
-        streamed index keeps its ``batch=`` captures for later
-        compactions."""
+        Stages already marked are skipped, resuming from the plan the
+        newest mark carries. The postings checkpoint is read only while
+        plan, dictionary or blocks is pending; a lineage-only resume reads
+        only the blocks. A pending upstream stage whose checkpoint is gone
+        raises ValueError. This method never removes the checkpoint:
+        ``build()`` does, and a streamed index keeps its ``batch=``
+        captures for later compactions."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        from pyspark.sql import Observation
+
         from colbert_jl_spark.operators.codec_blocks import (
+            collision_free_tid_salt,
             lineage_by_bucket,
             posting_blocks,
             with_term_partition,
         )
         from colbert_jl_spark.operators.postings import term_df
 
-        done = _load_stages(self.index_path)
-        pending = [s for s in ("plan", "dictionary", "blocks") if s not in done]
-        if pending:
-            postings_dir = os.path.join(self.index_path, "postings")
+        idx = self.index_path
+        done = _load_stages(idx)
+        if "dictionary" in done:
+            # a lineage-only re-run of a committed build finds no mark's
+            # plan: the committed plan is the plan built so far
+            plan = done["blocks" if "blocks" in done else "dictionary"].get(
+                "plan"
+            ) or snapshot.load(idx, "plan.json")
+        if "blocks" not in done:
+            postings_dir = os.path.join(idx, "postings")
             if not os.path.isdir(postings_dir):
+                pending = [s for s in ("plan", "dictionary", "blocks") if s not in done]
                 raise ValueError(
-                    f"stages {pending} of the index at {self.index_path} are "
+                    f"stages {pending} of the index at {idx} are "
                     "pending, but the postings checkpoint they are built from "
                     "is gone (a finished build removes it); rebuild the index "
                     "with build(docs, force=True)"
@@ -300,149 +323,93 @@ class IndexBuilder:
                 )
 
         # -- stages: plan + docstats ∥ dictionary ---------------------------
-        # docstats = distinct (doc_id, doclen) from postings. Docs whose
-        # every token was stoplisted never reach postings; they are
-        # accounted for by n_empty_docs = docs.count() - docstats rows
-        # (a metadata-only count), keeping N/avgdl exact WITHOUT an
-        # anti-join shuffle over the corpus. The docstats aggregate rides
-        # the WRITE action as Observation metrics — no extra count or
-        # re-read jobs (every job is a cluster-wide scheduling barrier,
-        # and in the pinned scaling runs the fixed per-job floors land in
-        # both levels' wall time and compress the measured efficiency).
-        def _run_docstats(obs_n_postings: bool):
-            from pyspark.sql import Observation
-
-            obs_ds = Observation("docstats_agg")
-            seen = postings
-            obs_post = None
-            if obs_n_postings:
-                obs_post = Observation("postings_total")
-                seen = seen.observe(
-                    obs_post, F.count(F.lit(1)).alias("n_postings")
-                )
-            seen = (
-                seen.select("doc_id", "doclen")
-                .distinct()
-                .observe(
-                    obs_ds,
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum("doclen").alias("tot"),
-                )
-            )
-            self._write(seen, os.path.join(self.index_path, "docstats"))
-            row = obs_ds.get
-            return row["n"], row["tot"] or 0, (
-                int(obs_post.get["n_postings"]) if obs_post else None
-            )
-
-        def _plan_dict(n_seen: int, tot: int, n_postings: int) -> dict:
-            return {
-                "n_docs": n_docs_total,
-                "n_empty_docs": n_docs_total - n_seen,
-                "avgdl": tot / n_docs_total if n_docs_total else 0.0,
-                "total_tokens": tot,
-                "total_postings": int(n_postings),
-                "bucket_size": max(
-                    self.cfg.min_bucket_docs,
-                    -(-n_docs_total // self.cfg.num_index_partitions),
-                ),
-                "config": json.loads(self.cfg.to_json()),
-                "format_version": 1,
-            }
-
-        # size the term-hash directory partitioning to the data:
-        # ~2M postings per partition dir, clamped. A fixed large count
-        # explodes file counts at small scale (tasks × dirs files);
-        # too small a count kills query-time pruning. Shared by the
-        # dictionary and block tables; plan.json records the chosen
-        # value — the same rewrite-after-build pattern the reference
-        # uses (indexing.jl:125-132).
-        def _term_partitions_for(n_postings: int) -> int:
-            return int(
+        if "dictionary" not in done:
+            plan = {}
+            # size the term-hash directory partitioning to the data:
+            # ~2M postings per partition dir, clamped. A fixed large count
+            # explodes file counts at small scale (tasks × dirs files);
+            # too small a count kills query-time pruning. Shared by the
+            # dictionary and block tables; plan.json records the chosen
+            # value — the same rewrite-after-build pattern the reference
+            # uses (indexing.jl:125-132).
+            tp = int(
                 self.cfg.term_partitions
                 or min(4096, max(4, n_postings // 2_000_000))
             )
 
-        # (term, df, cf) only — NO idf (see module docstring: idf is a
-        # function of the moving N; computing it at read keeps untouched
-        # partitions byte-stable under incremental merges). The
-        # repartition is ON the partition column: term_df's output is
-        # hash-partitioned on term, so a bare partitionBy write would
-        # land up to n_tasks files in EVERY bucket dir. Dictionary rows
-        # are one per term — vocab-scale, bucket-balanced by the hash —
-        # so this extra shuffle is small and every bucket dir gets
-        # exactly one file (validate()'s FILES_PER_BUCKET_CEILING
-        # invariant).
-        def _run_dictionary(term_partitions: int) -> None:
-            dic = with_term_partition(
-                term_df(postings.select("term", "doc_id", "tf")),
-                term_partitions,
-            )
-            dic = dic.repartition("term_bucket").sortWithinPartitions("term")
-            self._write(
-                dic, os.path.join(self.index_path, "dictionary"), "term_bucket"
-            )
+            # docstats = distinct (doc_id, doclen) from postings. Docs whose
+            # every token was stoplisted never reach postings; they are
+            # accounted for by n_empty_docs = n_docs_total - docstats rows,
+            # keeping N/avgdl exact WITHOUT an anti-join shuffle over the
+            # corpus. The docstats aggregate rides the WRITE action as
+            # Observation metrics — no extra count or re-read jobs (every
+            # job is a cluster-wide scheduling barrier, and in the pinned
+            # scaling runs the fixed per-job floors land in both levels'
+            # wall time and compress the measured efficiency).
+            def _run_docstats():
+                obs_ds = Observation("docstats_agg")
+                seen = (
+                    postings.select("doc_id", "doclen")
+                    .distinct()
+                    .observe(
+                        obs_ds,
+                        F.count(F.lit(1)).alias("n"),
+                        F.sum("doclen").alias("tot"),
+                    )
+                )
+                new_version(idx, plan, "docstats", seen, whole=True)
+                row = obs_ds.get
+                return row["n"], row["tot"] or 0
 
-        if (
-            "plan" not in done
-            and "dictionary" not in done
-            and n_postings_hint is not None
-        ):
-            # FRESH-BUILD fast path: the postings write already observed
-            # the posting-row count, so the docstats write and the
-            # dictionary shuffle+write share NO data dependency — run
-            # them as two concurrent driver-thread jobs (Spark schedules
-            # both; the later job back-fills executors freed by the
-            # earlier one's tail). Stages are marked only after BOTH
-            # commit, in ledger order — a crash mid-pair re-runs both
-            # idempotent writes on resume.
-            from concurrent.futures import ThreadPoolExecutor
+            # (term, df, cf) only — NO idf (see module docstring: idf is a
+            # function of the moving N; computing it at read keeps
+            # untouched partitions byte-stable under incremental merges).
+            # The repartition is ON the partition column: term_df's output
+            # is hash-partitioned on term, so a bare partitionBy write
+            # would land up to n_tasks files in EVERY bucket dir.
+            # Dictionary rows are one per term — vocab-scale,
+            # bucket-balanced by the hash — so this extra shuffle is small
+            # and every bucket dir gets exactly one file (validate()'s
+            # FILES_PER_BUCKET_CEILING invariant).
+            def _run_dictionary() -> None:
+                dic = with_term_partition(
+                    term_df(postings.select("term", "doc_id", "tf")), tp
+                )
+                dic = dic.repartition("term_bucket").sortWithinPartitions("term")
+                new_version(idx, plan, "dictionary", dic, "term_bucket", whole=True)
 
-            tp = _term_partitions_for(n_postings_hint)
+            # the posting count is known before either stage runs, so the
+            # docstats write and the dictionary shuffle+write share NO
+            # data dependency — two concurrent driver-thread jobs (Spark
+            # schedules both; the later job back-fills executors freed by
+            # the earlier one's tail). Both stages are marked only after
+            # BOTH versions exist — a crash mid-pair re-runs both on
+            # resume, under fresh version names.
             with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_ds = pool.submit(_run_docstats, False)
-                fut_dic = pool.submit(_run_dictionary, tp)
-                n_seen, tot, _ = fut_ds.result()
+                fut_ds = pool.submit(_run_docstats)
+                fut_dic = pool.submit(_run_dictionary)
+                n_seen, tot = fut_ds.result()
                 fut_dic.result()
-            plan = _plan_dict(n_seen, tot, n_postings_hint)
-            plan["term_partitions"] = tp
-            write_plan(self.index_path, plan)
-            _mark_stage(self.index_path, "plan", {"n_docs": n_seen})
-            _mark_stage(self.index_path, "dictionary")
-        else:
-            # resume / streaming-compaction path: sequential stages with
-            # the posting count observed during the docstats write
-            if "plan" not in done:
-                n_seen, tot, n_post = _run_docstats(True)
-                plan = _plan_dict(n_seen, tot, n_post)
-                write_plan(self.index_path, plan)
-                _mark_stage(self.index_path, "plan", {"n_docs": n_seen})
-            plan = self.plan()
-            if "dictionary" not in _load_stages(self.index_path):
-                # n_postings == postings row count (one row per
-                # (term, doc)) — observed during the plan stage's
-                # docstats write; the count() fallback covers indexes
-                # resumed from a pre-r5 partial build whose plan lacks
-                # the key.
-                n_postings = plan.get("total_postings")
-                if n_postings is None:
-                    n_postings = postings.count()
-                    plan["total_postings"] = int(n_postings)
-                plan["term_partitions"] = _term_partitions_for(n_postings)
-                write_plan(self.index_path, plan)
-                _run_dictionary(plan["term_partitions"])
-                _mark_stage(self.index_path, "dictionary")
-        plan = self.plan()
+            plan.update(
+                n_docs=n_docs_total,
+                n_empty_docs=n_docs_total - n_seen,
+                avgdl=tot / n_docs_total if n_docs_total else 0.0,
+                total_tokens=tot,
+                total_postings=int(n_postings),
+                bucket_size=max(
+                    self.cfg.min_bucket_docs,
+                    -(-n_docs_total // self.cfg.num_index_partitions),
+                ),
+                config=json.loads(self.cfg.to_json()),
+                format_version=1,
+                term_partitions=tp,
+            )
+            _mark_stage(idx, "plan")
+            _mark_stage(idx, "dictionary", {"plan": plan})
 
         # -- stage: blocks ----------------------------------------------
-        if "blocks" not in _load_stages(self.index_path):
-            dic = spark.read.parquet(os.path.join(self.index_path, "dictionary"))
-            n_postings = plan.get("total_postings")
-            if n_postings is None:  # pre-r4 index resumed mid-build
-                n_postings = dic.agg(F.sum("df")).first()[0] or 0
-            term_partitions = plan.get("term_partitions") or _term_partitions_for(
-                n_postings
-            )
+        if "blocks" not in done:
+            dic = spark.read.parquet(os.path.join(idx, plan["dictionary_dir"]))
             # spill-aware shuffle sizing: the blocks exchange moves every
             # posting once; per-reducer sorts must fit in memory. Sized to
             # the DATA (~4M narrow posting rows ≈ 128 MB per partition),
@@ -452,7 +419,7 @@ class IndexBuilder:
             # sp = cores spills beyond ~2M docs on 128 GiB). AQE coalesces
             # over-splits, so erring high is cheap; restored after the stage.
             prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-            data_sp = max(int(prev_sp), -(-int(n_postings) // 4_000_000))
+            data_sp = max(int(prev_sp), -(-plan["total_postings"] // 4_000_000))
             # round UP to a whole number of task waves: 9 encode tasks on
             # 4 cores run as 3 ragged waves with idle slots in the last —
             # a pure scaling-efficiency leak at any core count (measured
@@ -462,12 +429,10 @@ class IndexBuilder:
             data_sp = par * -(-data_sp // par)
             spark.conf.set("spark.sql.shuffle.partitions", str(data_sp))
             # the try opens IMMEDIATELY after conf.set: encode() runs eager
-            # Spark jobs (the collision-salt probes) and the plan rewrite can
-            # raise — an exception anywhere before the write must not leak
-            # the inflated setting into the caller's session
+            # Spark jobs (the collision-salt probes) — an exception
+            # anywhere before the write must not leak the inflated setting
+            # into the caller's session
             try:
-                plan["term_partitions"] = term_partitions
-                write_plan(self.index_path, plan)
                 # tid-collision safety WITHOUT the up-front probe jobs:
                 # the check rides the blocks write itself. Two observed
                 # counts — block rows before and after the dictionary
@@ -477,13 +442,8 @@ class IndexBuilder:
                 # the colliding terms' postings would have been merged
                 # into corrupt blocks). On the astronomically rare
                 # mismatch (~1e-4 at web vocab for salt 0) the stage
-                # re-encodes once with an explicitly probed salt.
-                from pyspark.sql import Observation
-
-                from colbert_jl_spark.operators.codec_blocks import (
-                    collision_free_tid_salt,
-                )
-
+                # re-encodes once with an explicitly probed salt, as a
+                # fresh version; the GC reclaims the unnamed first one.
                 salt = 0
                 for attempt in range(2):
                     obs_pre = Observation(f"blocks_pre_join_{attempt}")
@@ -498,7 +458,7 @@ class IndexBuilder:
                         salt=salt,
                         count_obs=(obs_pre, obs_join),
                     )
-                    blocks = with_term_partition(blocks, term_partitions)
+                    blocks = with_term_partition(blocks, plan["term_partitions"])
                     # NO repartition before the partitionBy write: the
                     # encode output is already (term, bucket)-grouped, so
                     # rows of one term are contiguous within each task and
@@ -510,10 +470,8 @@ class IndexBuilder:
                     # recorded as the plan's policy below so validate()
                     # grades the index against what the build actually
                     # promises.
-                    self._write(
-                        blocks,
-                        os.path.join(self.index_path, "blocks"),
-                        "term_bucket",
+                    blocks_dir = new_version(
+                        idx, plan, "blocks", blocks, "term_bucket", whole=True
                     )
                     if int(obs_pre.get["n"]) == int(obs_join.get["n"]):
                         break
@@ -529,31 +487,24 @@ class IndexBuilder:
             # to data_sp files per bucket, so a fresh healthy index built
             # at high parallelism would otherwise fail validate()'s
             # default ceiling.
-            observed = bucket_file_counts(os.path.join(self.index_path, "blocks"))
+            observed = bucket_file_counts(blocks_dir)
             plan["max_files_per_bucket"] = max(
                 [FILES_PER_BUCKET_CEILING, *observed.values()]
             )
-            write_plan(self.index_path, plan)
-            _mark_stage(self.index_path, "blocks")
+            _mark_stage(idx, "blocks", {"plan": plan})
 
         # -- stage: lineage (per doc-bucket build metrics) -------------------
-        if "lineage" not in _load_stages(self.index_path):
-            blocks = spark.read.parquet(os.path.join(self.index_path, "blocks"))
-            from pyspark.sql import Observation
-
-            obs_lin = Observation("lineage_buckets")
-            lineage = lineage_by_bucket(blocks).observe(
-                obs_lin, F.count(F.lit(1)).alias("n_buckets")
-            )
-            self._write(lineage, os.path.join(self.index_path, "lineage"))
-            # record the doc-bucket count in the plan (one lineage row per
-            # bucket): IndexReader's fused-path gate reads it as metadata
-            # instead of running a lineage scan on the first query. The
-            # count is observed during the write — no read-back job.
-            plan["n_buckets"] = int(obs_lin.get["n_buckets"])
-            write_plan(self.index_path, plan)
-            _mark_stage(self.index_path, "lineage")
-
+        blocks = spark.read.parquet(os.path.join(idx, plan["blocks_dir"]))
+        obs_lin = Observation("lineage_buckets")
+        lineage = lineage_by_bucket(blocks).observe(
+            obs_lin, F.count(F.lit(1)).alias("n_buckets")
+        )
+        new_version(idx, plan, "lineage", lineage, whole=True)
+        # record the doc-bucket count in the plan (one lineage row per
+        # bucket): IndexReader's fused-path gate reads it as metadata
+        # instead of running a lineage scan on the first query. The
+        # count is observed during the write — no read-back job.
+        plan["n_buckets"] = int(obs_lin.get["n_buckets"])
         return plan
 
     def plan(self) -> dict:
@@ -571,9 +522,10 @@ class IndexBuilder:
         semantics keep stopword position slots.
 
         Run AFTER build() (needs plan.json's term_partitions); skipped while
-        the stage is marked and the plan names it. plan.json records
-        {"positions": true} so readers can gate without a filesystem
-        probe. Streamed indexes: ingest with ``positions=True``
+        the stage is marked and the plan names it. The stage is a new
+        version, committed with {"positions": true} in one plan.json
+        commit, so readers can gate without a filesystem probe. Streamed
+        indexes: ingest with ``positions=True``
         (streaming/ingest.stream_pages_to_postings) and the compactors
         MAINTAIN this stage (full rebuilds it from the per-batch raw
         captures, incremental appends the delta); an ingest WITHOUT the
@@ -588,11 +540,9 @@ class IndexBuilder:
         pl = with_term_partition(
             token_position_lists(docs, self.cfg), plan["term_partitions"]
         )
-        self._write(
-            pl, os.path.join(self.index_path, "positions"), "term_bucket"
-        )
+        new_version(self.index_path, plan, "positions", pl, "term_bucket", whole=True)
         plan["positions"] = True
-        write_plan(self.index_path, plan)
+        commit_plan(self.index_path, plan)
         _mark_stage(self.index_path, "positions")
 
 
@@ -650,14 +600,13 @@ class IndexReader:
 
     Snapshot rule (snapshot.py): plan.json names every data dir the reader
     reads — dictionary, blocks, docstats, lineage and positions — and the
-    reader resolves each one only through the plan it loaded. Streamed
-    compactions never change a dir a plan names: they assemble new version
-    dirs and commit a new plan with one rename, so a query sees exactly
-    one snapshot, old or new. A dir the committed plan stops naming stays
-    on disk for snapshot.GRACE_SEC, so a query (lazy DataFrames included)
-    whose plan was loaded before a commit finishes within that grace. The
-    exceptions run alone: the batch IndexBuilder and a major compaction
-    rewrite the bare stage dirs in place."""
+    reader resolves each one only through the plan it loaded. No writer
+    (build, build_positions, any compaction) changes a dir a plan names:
+    each assembles new version dirs and commits a new plan with one
+    rename, so a query sees exactly one snapshot, old or new. A dir the
+    committed plan stops naming stays on disk for snapshot.GRACE_SEC, so a
+    query (lazy DataFrames included) whose plan was loaded before a commit
+    finishes within that grace."""
 
     # above this many distinct terms in one call the term cut is a
     # broadcast semi-join, not an In(term, …) filter, and search() on a
@@ -697,6 +646,16 @@ class IndexReader:
         self.spark = spark
         self.index_path = index_path
         self._load_plan()
+        lacking = [
+            k for k in ("n_buckets", "term_partitions", "total_postings")
+            if k not in self.plan
+        ]
+        if lacking:
+            raise ValueError(
+                f"the plan of the index at {index_path} lacks {lacking} "
+                "(written before the build recorded them); rebuild it with "
+                "IndexBuilder.build(docs, force=True)"
+            )
         # parsed even when cfg is given: it refuses a plan whose blocks use
         # a format this engine cannot decode
         plan_cfg = EngineConfig.from_plan_config(self.plan["config"])
@@ -704,7 +663,7 @@ class IndexReader:
 
     def _plan_stamp(self) -> tuple:
         """Change stamp for plan.json: (inode, mtime_ns, size). Every plan
-        commit goes through write_plan's tmp+rename, so the inode changes
+        commit is snapshot.commit's tmp write + rename, so the inode changes
         on each rewrite — mtime alone can collide when two commits land
         within one filesystem timestamp granule (coarse-granularity NFS/
         HFS+ mounts), which would leave a reader permanently serving new
@@ -733,7 +692,7 @@ class IndexReader:
         outlives a compaction serves the new snapshot on its next call. A
         change (the (inode, mtime_ns, size) stamp, see _plan_stamp)
         reloads the plan and drops everything derived from the old one:
-        the stage DataFrames, _n_buckets, the term-stats cache, and the hot
+        the stage DataFrames, the term-stats cache, and the hot
         pins, which are re-pinned. Under the snapshot rule (class
         docstring) the old and new snapshots share no mutable dir, so a
         query never mixes them: data a compaction wrote appears only with
@@ -741,8 +700,6 @@ class IndexReader:
         if self._plan_stamp() == self._plan_stamp_seen:
             return self
         self._load_plan()
-        if hasattr(self, "_n_buckets"):
-            del self._n_buckets
         if hasattr(self, "_hot_blocks") or hasattr(self, "_hot_positions"):
             self.release()
             self.load_hot()
@@ -771,14 +728,10 @@ class IndexReader:
         return self._term_bucket_filter(dic, terms).select("term", "df", "idf")
 
     def release(self) -> "IndexReader":
-        """Drop the hot block cache (the load_hot pin). Call when retiring
-        a still-hot reader whose SparkSession lives on: the session cache
-        manager substitutes a cached plan into any matching scan of the
-        same files, so an undisposed pin from a retired reader can serve
-        pre-compaction block data to OTHER readers after a major
-        compaction rewrites the block dir. (A reader that is still being
-        queried needs no manual call — refresh() re-pins it when the plan
-        moves.)"""
+        """Drop the hot pins (load_hot). Call when retiring a still-hot
+        reader whose SparkSession lives on: the pins hold executor memory
+        until released. (A reader that is still being queried needs no
+        manual call — refresh() re-pins it when the plan moves.)"""
         if hasattr(self, "_hot_blocks"):
             hot = self._hot_blocks
             del self._hot_blocks
@@ -810,19 +763,17 @@ class IndexReader:
 
     @property
     def dictionary(self) -> DataFrame:
-        """(term, df, cf[, term_bucket], idf). r4-format dictionaries store
-        only (df, cf) partitioned by term_bucket — idf depends on the
+        """(term, df, cf, term_bucket, idf). The dictionary stores only
+        (df, cf) partitioned by term_bucket — idf depends on the
         corpus-wide N, so it is computed here from the CURRENT plan (a
         codegen scalar on a pruned scan), which is also what keeps
         untouched dictionary partitions byte-identical across incremental
-        compactions. Pre-r4 dictionaries carry a stored idf column and are
-        read as-is."""
-        d = self._stage_df("dictionary_dir", "dictionary")
-        if "idf" not in d.columns:
-            from colbert_jl_spark.operators.bm25 import idf_col
+        compactions."""
+        from colbert_jl_spark.operators.bm25 import idf_col
 
-            d = d.withColumn("idf", idf_col(F.col("df"), self.plan["n_docs"]))
-        return d
+        return self._stage_df("dictionary_dir", "dictionary").withColumn(
+            "idf", idf_col(F.col("df"), self.plan["n_docs"])
+        )
 
     @property
     def docstats(self) -> DataFrame:
@@ -937,21 +888,8 @@ class IndexReader:
         fused away (VERDICT r2 item 9). Decided from plan.json's
         ``n_buckets`` (recorded by the lineage stage) — NO Spark job, so
         search()'s no-pre-query-job guarantee holds even on the first
-        call. Indexes written before n_buckets existed fall back to one
-        lazy lineage count (cached on the reader); the plan-level
-        n_docs <= bucket_size shortcut alone would trust doc_ids to
-        start at 0, which url-derived ids do not promise."""
-        if not hasattr(self, "_n_buckets"):
-            nb = self.plan.get("n_buckets")
-            if nb is not None:
-                self._n_buckets = int(nb)
-            elif self.plan["n_docs"] > self.plan["bucket_size"]:
-                self._n_buckets = 2  # provably >1 without any job
-            else:
-                self._n_buckets = (
-                    self.lineage.select("bucket").distinct().count()
-                )
-        return self._n_buckets == 1
+        call."""
+        return int(self.plan["n_buckets"]) == 1
 
     def search_local(
         self,
@@ -1131,9 +1069,15 @@ class IndexReader:
         only in pytest. The ceiling defaults to plan's
         ``max_files_per_bucket`` if recorded, else
         ``FILES_PER_BUCKET_CEILING`` (compaction policy default 4 + slack
-        for a few uncompacted epochs)."""
-        stages = _load_stages(self.index_path)
-        missing = [s for s in STAGES if s not in stages]
+        for a few uncompacted epochs).
+
+        ``missing_stages`` lists the dirs the committed plan names that
+        are not on disk: the report judges the snapshot readers are
+        served, whatever an aborted build left in the stage ledger."""
+        missing = sorted(
+            d for d in plan_dirs(self.plan)
+            if not os.path.isdir(os.path.join(self.index_path, d))
+        )
         dic_postings = self.dictionary.agg(F.sum("df")).first()[0]
         blk_postings = self.blocks.agg(F.sum("n_docs")).first()[0]
         n_docs = self.docstats.count()

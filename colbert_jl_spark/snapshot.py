@@ -44,7 +44,7 @@ GRACE_SEC = 300.0
 _VERSION = re.compile(r"(?P<stage>.+?)(?:\.v(?P<k>\d+))?(?:\.tmp)?$")
 
 
-def _parse(entry: str) -> tuple[str, int]:
+def parse(entry: str) -> tuple[str, int]:
     """(stage, version) of a dir name; the bare stage dir is version 1."""
     m = _VERSION.match(entry)
     return m["stage"], int(m["k"] or 1)
@@ -88,15 +88,17 @@ def link_or_copy(src: str, dst: str) -> str:
 
 
 def staging(root: str, stage: str) -> str:
-    """Path of a fresh staging dir ``<stage>.v{k}.tmp`` for the next
-    version of ``stage``. k is above every version on disk (named, retired,
-    or left by a crash), so a name a manifest ever named is never reused;
-    only a number whose staging ``discard`` removed can come back."""
+    """Path of a fresh staging dir for the next version k of ``stage``:
+    ``<stage>.v{k}.tmp``, or ``<stage>.tmp`` for version 1, which
+    assembles into the bare ``<stage>`` dir. k is above every version on
+    disk (named, retired, or left by a crash), so a name a manifest ever
+    named is never reused; only a number whose staging ``discard``
+    removed can come back."""
     k = max(
-        (_parse(e)[1] for e in os.listdir(root) if _parse(e)[0] == stage),
+        (parse(e)[1] for e in os.listdir(root) if parse(e)[0] == stage),
         default=0,
     )
-    return os.path.join(root, f"{stage}.v{k + 1}.tmp")
+    return os.path.join(root, f"{stage}.v{k + 1}.tmp" if k else f"{stage}.tmp")
 
 
 def assemble(
@@ -180,7 +182,7 @@ def gc(root: str, stages: tuple, keep: set) -> None:
     now = time.time()
     for entry in os.listdir(root):
         path = os.path.join(root, entry)
-        if entry in keep or _parse(entry)[0] not in stages or not os.path.isdir(path):
+        if entry in keep or parse(entry)[0] not in stages or not os.path.isdir(path):
             continue
         if now - os.path.getmtime(path) > GRACE_SEC:
             shutil.rmtree(path)

@@ -21,8 +21,9 @@ joining its bands against the persisted band table with bucket pruning.
                                   prunes to its own colliding buckets
     pairs/wave={w}/             — verified (doc_a, doc_b, jaccard) pairs
                                   DISCOVERED by wave w (≥1 endpoint in w)
-    labels.v{k}/                — (doc_id, component_id) for the whole
+    labels/, labels.v{k}/       — (doc_id, component_id) for the whole
                                   corpus, one immutable version per wave
+                                  (the first is the bare dir)
 
 Why the union of per-wave pair tables equals a from-scratch run: LSH
 candidate generation is deterministic (same seeded permutations, same
@@ -474,7 +475,7 @@ class DedupIndex:
                 **st,
                 "waves": st["waves"] + [wave],
                 "labels_dir": labels_dir,
-                "labels_version": int(labels_dir.rsplit(".v", 1)[1]),
+                "labels_version": snapshot.parse(labels_dir)[1],
                 "n_labels": n_labels,
                 "label_parts": P,
                 "lsh": _lsh_params(),

@@ -35,6 +35,14 @@ from pyspark.sql import functions as F
 
 from colbert_jl_spark import snapshot
 from colbert_jl_spark.config import EngineConfig
+from colbert_jl_spark.plans.build import (
+    IndexBuilder,
+    IndexReader,
+    _mark_stage,
+    bucket_file_counts,
+    commit_plan,
+    new_version,
+)
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -146,34 +154,6 @@ def _delta_dictionary(
     )
 
 
-def _commit_plan(index_path: str, plan: dict, previous: dict | None = None) -> None:
-    """Commit ``plan`` as the index's snapshot: one plan.json rename makes
-    every new version it names visible at once (snapshot.commit)."""
-    from colbert_jl_spark.plans.build import PLAN_DIRS, plan_dirs
-
-    snapshot.commit(index_path, "plan.json", plan, PLAN_DIRS, plan_dirs, previous)
-
-
-def _new_version(
-    index_path: str,
-    plan: dict,
-    stage: str,
-    df: DataFrame,
-    partition_by: str | None = None,
-    replace=(),
-) -> str:
-    """Write ``df`` as the new files of ``stage``'s next version, assemble
-    that version over the plan's current one (the partitions not in
-    ``replace`` are carried over, so an empty ``replace`` appends), and
-    point ``plan`` at it. Readers see it once ``plan`` commits. Returns the
-    new version's path."""
-    tmp = snapshot.staging(index_path, stage)
-    snapshot.write_parquet(df, tmp, partition_by)
-    key = f"{stage}_dir"
-    plan[key] = snapshot.assemble(index_path, tmp, plan.get(key, stage), replace)
-    return os.path.join(index_path, plan[key])
-
-
 def _positions_raw_complete(index_path: str, batch_ids) -> bool:
     """True iff EVERY given batch has a persisted positions_raw dir (the
     ingest ran with positions=True for all of them) — the condition for
@@ -215,8 +195,11 @@ def compact_streamed_index(
     The FIRST compaction (or ``full=True`` — the "major compaction" a
     scheduler runs occasionally to restore per-segment block disjointness
     and reset statistics staleness) builds plan/dictionary/blocks/lineage
-    over all postings via the batch builder. A major compaction rewrites
-    the bare stage dirs in place, so it runs alone.
+    over all postings via the batch builder, as whole new versions beside
+    the live snapshot, committed with one plan.json rename like every
+    other compaction. Which one runs is decided from the committed plan
+    alone: an index with no plan, or one whose plan records no
+    ``last_batch_id`` (never compacted from a stream), gets a major one.
 
     Every later call is INCREMENTAL (VERDICT r2 item 2): it reads ONLY the
     ``batch=`` posting partitions newer than the plan's ``last_batch_id``
@@ -263,17 +246,11 @@ def compact_streamed_index(
         with_term_partition,
     )
     from colbert_jl_spark.operators.postings import term_df
-    from colbert_jl_spark.plans.build import _load_stages
 
     ingest = spark.read.parquet(os.path.join(index_path, "ingest_log"))
     batch_rows = {int(r.batch_id): r for r in ingest.collect()}
     plan = snapshot.load(index_path, "plan.json")
-    if (
-        full
-        or plan is None
-        or "last_batch_id" not in plan
-        or "blocks" not in _load_stages(index_path)
-    ):
+    if full or plan is None or "last_batch_id" not in plan:
         return _major_compaction(spark, index_path, cfg, batch_rows, plan)
 
     new_ids = sorted(b for b in batch_rows if b > plan["last_batch_id"])
@@ -307,7 +284,7 @@ def compact_streamed_index(
             F.count("*").alias("n"), F.sum("doclen").alias("tot")
         ).first()
         docs_added = int(sum(batch_rows[b].n_docs for b in new_ids))
-        _new_version(index_path, plan, "docstats", seen)
+        new_version(index_path, plan, "docstats", seen)
         plan["n_docs"] = int(plan["n_docs"]) + docs_added
         plan["n_empty_docs"] = int(plan["n_empty_docs"]) + docs_added - int(row["n"])
         plan["total_tokens"] = int(plan["total_tokens"]) + int(row["tot"] or 0)
@@ -338,7 +315,7 @@ def compact_streamed_index(
         )
         # one file per rewritten bucket (see the blocks delta write)
         dic = spark.read.parquet(
-            _new_version(
+            new_version(
                 index_path, plan, "dictionary",
                 merged.repartition("term_bucket").sortWithinPartitions("term"),
                 "term_bucket", replace,
@@ -381,7 +358,7 @@ def compact_streamed_index(
         # waves). The delta is O(delta)-small so this one extra shuffle is
         # bounded, and the within-partition sort keeps parquet row-group
         # min/max stats on `term` tight for the reader's IN-filters.
-        _new_version(
+        new_version(
             index_path, plan, "blocks",
             delta_blocks.repartition("term_bucket").sortWithinPartitions(
                 "term", "bucket"
@@ -393,7 +370,7 @@ def compact_streamed_index(
         # new docs may open new doc-range buckets, so the plan's bucket
         # count is refreshed (distinct over the generations) and the
         # reader's fused-path gate stays job-free
-        lineage = _new_version(
+        lineage = new_version(
             index_path, plan, "lineage", lineage_by_bucket(delta_blocks)
         )
         plan["n_buckets"] = (
@@ -410,7 +387,7 @@ def compact_streamed_index(
     # appending is exact), and the new snapshot otherwise omits it, so
     # phrase() fails loudly instead of silently missing the new documents
     if plan.get("positions") and _positions_raw_complete(index_path, new_ids):
-        _new_version(
+        new_version(
             index_path, plan, "positions",
             _raw_positions(spark, index_path, plan, new_ids)
             .repartition("term_bucket")
@@ -427,10 +404,9 @@ def compact_streamed_index(
         "epochs": int(inc["epochs"]) + 1,
         "min_enc_avgdl": min(float(inc["min_enc_avgdl"]), plan["avgdl"]),
     }
-    if "total_postings" in plan:
-        plan["total_postings"] = int(plan["total_postings"]) + postings_read
+    plan["total_postings"] = int(plan["total_postings"]) + postings_read
     plan["last_batch_id"] = max(batch_rows)
-    _commit_plan(index_path, plan)
+    commit_plan(index_path, plan)
     plan["compaction"] = {
         "mode": "incremental",
         "batches_compacted": new_ids,
@@ -453,49 +429,40 @@ def _major_compaction(
     previous: dict | None,
 ) -> dict:
     """The full rebuild behind compact_streamed_index: every derived stage
-    re-runs in the batch builder over all logged batches, writing the bare
-    stage dirs in place (so it runs alone). The positions stage is rebuilt
-    from positions_raw when every batch captured it. The commit retires
-    the dirs ``previous`` named, and the GC reclaims them after its
-    grace."""
-    from colbert_jl_spark.plans.build import (
-        IndexBuilder,
-        _atomic_write,
-        _load_stages,
-        _mark_stage,
-        _stage_file,
-    )
-
-    stages = _load_stages(index_path)
-    for s in ("plan", "dictionary", "blocks", "lineage", "positions"):
-        stages.pop(s, None)
-    snapshot.write_json(_stage_file(index_path), stages)
-    _mark_stage(index_path, "postings", {"streamed": True})
+    re-runs in the batch builder over all logged batches, each as a whole
+    new version beside the snapshot ``previous`` (the stage ledger is
+    reset, so a retry after a crash starts over under fresh version
+    names). The positions stage is rebuilt the same way from
+    positions_raw when every batch captured it. One plan.json commit then
+    retires the dirs ``previous`` named, and the GC reclaims them after
+    its grace; until it, readers serve ``previous`` whole."""
+    _mark_stage(index_path, "postings", {"streamed": True}, reset=True)
     batch_ids = sorted(batch_rows)
     n_docs = int(sum(r.n_docs for r in batch_rows.values()))
+    n_postings = int(sum(r.n_postings for r in batch_rows.values()))
     # index ONLY the logged batches: a batch whose postings landed but
     # whose log row hasn't (the sink writes postings first) must wait for
     # the next compaction, or it would be indexed now AND re-read as "new"
     # later — double-counted (see finish_from_postings)
     plan = IndexBuilder(index_path, cfg).finish_from_postings(
-        spark, n_docs_total=n_docs, batch_ids=batch_ids
+        spark, n_docs, n_postings, batch_ids
     )
     # phrase queries stay servable on streamed indexes across major
     # compactions when the ingest captured per-batch raw positions
     if _positions_raw_complete(index_path, batch_ids):
-        _atomic_write(
+        new_version(
+            index_path, plan, "positions",
             _raw_positions(spark, index_path, plan, batch_ids),
-            os.path.join(index_path, "positions"),
-            "term_bucket",
+            "term_bucket", whole=True,
         )
         plan["positions"] = True
-        _mark_stage(index_path, "positions")
     plan["last_batch_id"] = max(batch_rows, default=-1)
-    _commit_plan(index_path, plan, previous)
+    commit_plan(index_path, plan, previous)
+    _mark_stage(index_path, "lineage")
     plan["compaction"] = {
         "mode": "full",
         "batches_compacted": batch_ids,
-        "postings_read": int(sum(r.n_postings for r in batch_rows.values())),
+        "postings_read": n_postings,
         "docs_added": n_docs,
     }
     return plan
@@ -541,7 +508,6 @@ def minor_compact(
         posting_blocks,
         with_term_partition,
     )
-    from colbert_jl_spark.plans.build import IndexReader
 
     plan = snapshot.load(index_path, "plan.json")
     if plan is None or "last_batch_id" not in plan:
@@ -618,7 +584,7 @@ def minor_compact(
         # as ONE consolidated file (the whole point of compaction), not one
         # file per upstream task; the sort keeps row-group `term` stats
         # tight for the reader's IN-filters
-        _new_version(
+        new_version(
             index_path, plan, "blocks",
             out.repartition("term_bucket").sortWithinPartitions(
                 "term", "bucket", "first_docid"
@@ -631,7 +597,7 @@ def minor_compact(
     # the minor_compactions counter makes the pass observable
     inc = plan.setdefault("incremental", {"epochs": 1, "min_enc_avgdl": plan["avgdl"]})
     inc["minor_compactions"] = int(inc.get("minor_compactions", 0)) + 1
-    _commit_plan(index_path, plan)
+    commit_plan(index_path, plan)
     out = {
         "mode": "minor",
         "groups": int(n_groups),
@@ -666,8 +632,6 @@ def compact_positions(
     phrase output is identical across the swap (gated in tests).
 
     Returns {mode, rewritten_term_buckets, max_files_seen}."""
-    from colbert_jl_spark.plans.build import bucket_file_counts
-
     plan = snapshot.load(index_path, "plan.json")
     if not plan.get("positions"):
         return {"mode": "noop", "rewritten_term_buckets": [], "max_files_seen": 0}
@@ -682,7 +646,7 @@ def compact_positions(
         }
     # one shuffle keyed by term_bucket → exactly one file per rewritten
     # bucket, rows sorted for row-group pruning
-    _new_version(
+    new_version(
         index_path, plan, "positions",
         spark.read.parquet(cur_dir)
         .where(F.col("term_bucket").isin(crowded))
@@ -690,7 +654,7 @@ def compact_positions(
         .sortWithinPartitions("term", "doc_id"),
         "term_bucket", crowded,
     )
-    _commit_plan(index_path, plan)
+    commit_plan(index_path, plan)
     return {
         "mode": "positions",
         "rewritten_term_buckets": crowded,

@@ -11,6 +11,7 @@ import shutil
 
 import pytest
 
+from colbert_jl_spark import snapshot
 from colbert_jl_spark.config import EngineConfig
 from colbert_jl_spark.operators.bm25 import bm25_topk
 from colbert_jl_spark.plans.build import (
@@ -19,6 +20,8 @@ from colbert_jl_spark.plans.build import (
     IndexReader,
     _load_stages,
     bucket_file_counts,
+    commit_plan,
+    plan_dirs,
 )
 from colbert_jl_spark.queries import queries_df
 
@@ -99,43 +102,79 @@ def test_persisted_intersect_search(spark, docs01, index_dir):
     assert 1 not in set(got.qid) and 0 in set(got.qid)
 
 
-def test_build_is_idempotent_and_resumable(spark, docs01, index_dir):
-    """A build interrupted by a sink that raises on the blocks stage
-    resumes from the postings checkpoint: only blocks and lineage
-    re-commit, the dictionary is untouched, and the checkpoint is gone
-    once lineage commits. A finished build's re-run is a no-op."""
-    from colbert_jl_spark.plans.build import _atomic_write
+def _record_writes(monkeypatch, crash: dict | None = None) -> list:
+    """Record every snapshot.write_parquet call as (stage, partition_by),
+    the stage read off the staging dir's name. ``crash`` maps a stage to a
+    function ``(write, df, path, partition_by)``, given the real writer,
+    that runs in place of the stage's first write, which then raises."""
+    calls, real, crash = [], snapshot.write_parquet, dict(crash or {})
 
-    calls, crashes = [], {"blocks": 1}
+    def write(df, path, partition_by=None):
+        stage = snapshot.parse(os.path.basename(path))[0]
+        calls.append((stage, partition_by))
+        if stage in crash:
+            crash.pop(stage)(real, df, path, partition_by)
+            raise RuntimeError(f"killed while writing {stage}")
+        real(df, path, partition_by)
 
-    def sink(df, final_dir, partition_by=None):
-        calls.append(os.path.basename(final_dir))
-        if crashes.get(calls[-1]):
-            crashes[calls[-1]] -= 1
-            raise RuntimeError("killed before the blocks commit")
-        _atomic_write(df, final_dir, partition_by)
+    monkeypatch.setattr(snapshot, "write_parquet", write)
+    return calls
 
+
+def _without_dirs(plan: dict) -> dict:
+    """A plan without the version dir names, which a rebuild advances."""
+    return {k: v for k, v in plan.items() if not k.endswith("_dir")}
+
+
+def test_build_is_idempotent_and_resumable(spark, docs01, index_dir, monkeypatch):
+    """Stage order and layout, and resume at stage granularity. A build
+    killed before its blocks write has committed nothing; the resume
+    writes only blocks and lineage versions from the postings checkpoint
+    (the dictionary is untouched), commits the plan naming the same dirs
+    as a fresh build, and removes the checkpoint. A lineage-only resume
+    writes only a new lineage version, and a finished build's re-run
+    writes nothing."""
+    calls = _record_writes(monkeypatch, {"blocks": lambda *a: None})
     cfg = EngineConfig(block_size=32)
-    builder = IndexBuilder(index_dir, cfg, sink=sink)
-    with pytest.raises(RuntimeError, match="killed"):
+    builder = IndexBuilder(index_dir, cfg)
+    with pytest.raises(RuntimeError, match="killed while writing blocks"):
         builder.build(docs01)
+    # docstats and dictionary run concurrently; both are term_bucket-
+    # partitioned like the blocks except docstats
+    assert calls[0] == ("postings", None)
+    assert sorted(calls[1:3]) == [("dictionary", "term_bucket"), ("docstats", None)]
+    assert calls[3:] == [("blocks", "term_bucket")]
     assert set(_load_stages(index_dir)) == {"postings", "plan", "dictionary"}
+    assert not os.path.exists(os.path.join(index_dir, "plan.json"))
     assert os.path.isdir(os.path.join(index_dir, "postings"))
     stamp_dict = os.path.getmtime(os.path.join(index_dir, "dictionary"))
 
     calls.clear()
-    builder.build(docs01)  # resumes: rebuilds only blocks + lineage
-    assert calls == ["blocks", "lineage"], calls
+    plan = builder.build(docs01)  # resumes: writes only blocks + lineage
+    assert calls == [("blocks", "term_bucket"), ("lineage", None)], calls
     assert os.path.getmtime(os.path.join(index_dir, "dictionary")) == stamp_dict
     assert not os.path.exists(os.path.join(index_dir, "postings"))
+    assert plan_dirs(plan) == {"docstats", "dictionary", "blocks", "lineage"}
+    reader = IndexReader(spark, index_dir)
+    assert reader.validate()["ok"]
+    assert reader.search(queries_df(spark)).count() > 0
+
+    # a lineage-only resume reads only the blocks and commits a new
+    # lineage version
+    stages = _load_stages(index_dir)
+    stages.pop("lineage")
+    with open(os.path.join(index_dir, "_STAGES.json"), "w") as f:
+        json.dump(stages, f)
+    calls.clear()
+    again = builder.build(docs01)
+    assert calls == [("lineage", None)]
+    assert again == {**plan, "lineage_dir": "lineage.v2"}
     assert IndexReader(spark, index_dir).validate()["ok"]
 
-    # second build skips everything (reference indexing.jl:64-67 guard)
-    stamp_blocks = os.path.getmtime(os.path.join(index_dir, "blocks"))
+    # a finished build is skipped (reference indexing.jl:64-67 guard)
     calls.clear()
-    builder.build(docs01)
+    assert builder.build(docs01) == again
     assert calls == []
-    assert os.path.getmtime(os.path.join(index_dir, "blocks")) == stamp_blocks
 
 
 def test_checkpoint_leftover_removed_and_missing_checkpoint_refused(
@@ -161,44 +200,9 @@ def test_checkpoint_leftover_removed_and_missing_checkpoint_refused(
         json.dump(stages, f)
     with pytest.raises(ValueError, match=r"force=True"):
         builder.build(docs001)
-    assert builder.build(docs001, force=True) == plan
+    # the forced rebuild names new versions of the same stages
+    assert _without_dirs(builder.build(docs001, force=True)) == _without_dirs(plan)
     assert IndexReader(spark, index_dir).validate()["ok"]
-
-
-def test_sink_is_injectable(spark, docs01, index_dir):
-    """Stage commit/resume semantics must not depend on the tmp→rename
-    trick: a fake sink (direct parquet write, no rename; an Iceberg
-    ``writeTo`` would slot in the same way) produces a valid, resumable,
-    searchable index through the identical staged protocol."""
-    calls = []
-
-    def fake_sink(df, final_dir, partition_by=None):
-        calls.append((os.path.basename(final_dir), partition_by))
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(final_dir)
-
-    cfg = EngineConfig(block_size=32)
-    builder = IndexBuilder(index_dir, cfg, sink=fake_sink)
-    builder.build(docs01)
-    assert [c[0] for c in calls] == ["postings", "docstats", "dictionary", "blocks", "lineage"]
-    assert dict(calls)["blocks"] == "term_bucket"
-    # r4: the dictionary shares the block table's term_bucket partitioning
-    assert dict(calls)["dictionary"] == "term_bucket"
-
-    reader = IndexReader(spark, index_dir)
-    assert reader.validate()["ok"]
-    assert reader.search(queries_df(spark)).count() > 0
-
-    # resume goes through the SAME seam: only the dropped stage re-commits
-    stages = _load_stages(index_dir)
-    stages.pop("lineage")
-    with open(os.path.join(index_dir, "_STAGES.json"), "w") as f:
-        json.dump(stages, f)
-    calls.clear()
-    builder.build(docs01)
-    assert [c[0] for c in calls] == ["lineage"]
 
 
 def test_search_local_matches_distributed(spark, docs01, index_dir):
@@ -290,48 +294,34 @@ def test_search_local_fallback_reuses_the_plan(spark, docs01, index_dir):
     assert jobs("search_local") == jobs("search")
 
 
-def test_sink_crash_mid_stage_then_resume(spark, docs01, index_dir):
-    """Kill/resume at stage granularity through the injected sink
-    (VERDICT r2 item 7): a sink that dies mid-commit on the blocks stage
-    must leave the ledger WITHOUT a blocks mark (the commit never
-    happened), and the resumed build must re-drive ONLY the unfinished
-    stages through the same seam, ending rank-identical to the oracle."""
+def test_sink_crash_mid_stage_then_resume(spark, docs01, index_dir, monkeypatch):
+    """Kill/resume at stage granularity (VERDICT r2 item 7): a write that
+    dies mid-stage on the blocks stage, leaving part of its staging dir,
+    must leave the ledger WITHOUT a blocks mark and nothing committed; the
+    resumed build must write ONLY the unfinished stages, never name the
+    partial staging dir, and end rank-identical to the oracle."""
     import pandas as pd
 
-    crashes = {"blocks": 1}  # fail the first blocks commit
-    calls = []
+    def partial(write, df, path, partition_by):
+        # some files exist, but the version was never assembled
+        write(df.limit(1), path, partition_by)
 
-    def flaky_sink(df, final_dir, partition_by=None):
-        name = os.path.basename(final_dir)
-        calls.append(name)
-        if crashes.get(name, 0) > 0:
-            crashes[name] -= 1
-            # simulate a mid-commit kill: some files may exist, but the
-            # transactional rename/snapshot-commit never happened
-            w = df.limit(1).write.mode("overwrite")
-            if partition_by:
-                w = w.partitionBy(partition_by)
-            w.parquet(final_dir + ".tmp")
-            raise RuntimeError("sink died mid-commit")
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(final_dir)
-
+    calls = _record_writes(monkeypatch, {"blocks": partial})
     cfg = EngineConfig(block_size=32)
-    builder = IndexBuilder(index_dir, cfg, sink=flaky_sink)
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="sink died"):
+    builder = IndexBuilder(index_dir, cfg)
+    with pytest.raises(RuntimeError, match="killed while writing blocks"):
         builder.build(docs01)
     stages = _load_stages(index_dir)
     assert {"postings", "plan", "dictionary"} <= set(stages)
     assert "blocks" not in stages and "lineage" not in stages
+    assert os.path.isdir(os.path.join(index_dir, "blocks.tmp"))
+    assert not os.path.exists(os.path.join(index_dir, "plan.json"))
 
     calls.clear()
-    builder.build(docs01)  # resume
-    # only the unfinished stages re-commit — completed ones are never redone
-    assert calls == ["blocks", "lineage"], calls
+    plan = builder.build(docs01)  # resume
+    # only the unfinished stages are written — completed ones never redone
+    assert [c[0] for c in calls] == ["blocks", "lineage"], calls
+    assert plan["blocks_dir"] == "blocks.v2"
     reader = IndexReader(spark, index_dir)
     assert reader.validate()["ok"]
     q = queries_df(spark)
@@ -404,12 +394,11 @@ def test_blocks_stage_shuffle_sizing_restores_conf(spark, docs01, index_dir):
 
 
 def test_validate_detects_missing_stage(spark, docs01, index_dir):
+    """validate() judges the committed snapshot: a dir the plan names
+    that is gone is reported, whatever the stage ledger says."""
     cfg = EngineConfig(block_size=32)
     IndexBuilder(index_dir, cfg).build(docs01)
-    stages = _load_stages(index_dir)
-    stages.pop("lineage")
-    with open(os.path.join(index_dir, "_STAGES.json"), "w") as f:
-        json.dump(stages, f)
+    shutil.rmtree(os.path.join(index_dir, "lineage"))
     report = IndexReader(spark, index_dir).validate()
     assert not report["ok"]
     assert report["missing_stages"] == ["lineage"]
@@ -459,10 +448,8 @@ def test_stage_scan_survives_version_gc_race(spark, docs001, tmp_path):
     paused while compactions GC'd its stage-dir version must get ONE
     transparent refresh-and-retry at scan construction instead of a raw
     missing-path error. Simulated by renaming the blocks dir to a new
-    version + repointing plan.json AFTER the reader's refresh()."""
-    import json as _json
-    import shutil as _shutil
-
+    version + committing a plan naming it (snapshot.commit) AFTER the
+    reader's refresh()."""
     import pandas as pd
 
     cfg = EngineConfig(block_size=32)
@@ -473,13 +460,10 @@ def test_stage_scan_survives_version_gc_race(spark, docs001, tmp_path):
     reader.refresh()  # snapshot validated here...
 
     # ...then a compaction commits a new version and GC removes the old
-    _shutil.move(os.path.join(idx, "blocks"), os.path.join(idx, "blocks.v2"))
-    with open(os.path.join(idx, "plan.json")) as f:
-        plan = _json.load(f)
+    shutil.move(os.path.join(idx, "blocks"), os.path.join(idx, "blocks.v2"))
+    plan = snapshot.load(idx, "plan.json")
     plan["blocks_dir"] = "blocks.v2"
-    from colbert_jl_spark.plans.build import write_plan
-
-    write_plan(idx, plan)
+    commit_plan(idx, plan)
 
     # the stale-plan scan path resolves through _stage_df's retry
     got = reader.search([(0, "spark table join")]).toPandas()
@@ -507,3 +491,46 @@ def test_term_stats_miss_runs_two_jobs(spark, docs001, index_dir):
         assert len(sc.statusTracker().getJobIdsForGroup("term-stats-miss")) == 2
     finally:
         reader.release()
+
+
+def test_forced_rebuild_retires_the_old_snapshot(spark, docs001, index_dir, monkeypatch):
+    """build(force=True) builds the next snapshot beside the live one.
+    Its one commit retires every dir the old plan named, positions
+    included although the rebuild does not re-run build_positions; the
+    retired dirs stay for snapshot.GRACE_SEC (a reader may still scan
+    them), and the first commit past it reclaims them."""
+    import time
+
+    builder = IndexBuilder(index_dir, EngineConfig(block_size=32))
+    builder.build(docs001)
+    builder.build_positions(docs001)
+    old = plan_dirs(builder.plan())
+    assert old == {"docstats", "dictionary", "blocks", "lineage", "positions"}
+    t0 = time.time()
+    plan = builder.build(docs001, force=True)
+    assert "positions" not in plan
+    assert plan_dirs(plan) == {"docstats.v2", "dictionary.v2", "blocks.v2", "lineage.v2"}
+    for d in old:  # retired by the commit, kept for the grace
+        assert os.path.getmtime(os.path.join(index_dir, d)) >= t0 - 1, d
+    assert IndexReader(spark, index_dir).validate()["ok"]
+
+    monkeypatch.setattr(snapshot, "GRACE_SEC", 0.0)
+    time.sleep(0.05)
+    commit_plan(index_dir, plan)
+    assert sorted(os.listdir(index_dir)) == sorted(
+        plan_dirs(plan) | {"plan.json", "_STAGES.json"}
+    )
+
+
+def test_plan_without_build_counts_refused(spark, docs001, index_dir):
+    """A plan written before the build recorded n_buckets, term_partitions
+    and total_postings is refused by IndexReader, naming force=True."""
+    IndexBuilder(index_dir, EngineConfig(block_size=32)).build(docs001)
+    plan_path = os.path.join(index_dir, "plan.json")
+    with open(plan_path) as f:
+        plan = json.load(f)
+    for key in ("n_buckets", "term_partitions", "total_postings"):
+        with open(plan_path, "w") as f:
+            json.dump({k: v for k, v in plan.items() if k != key}, f)
+        with pytest.raises(ValueError, match=rf"{key}.*force=True"):
+            IndexReader(spark, index_dir)

@@ -161,12 +161,12 @@ def test_labels_versioned_swap_retains_current_and_previous(spark, tmp_path):
     idx, _ = _run_waves(spark, path)
 
     def versions():
-        return sorted(e for e in os.listdir(path) if e.startswith("labels.v"))
+        return sorted(e for e in os.listdir(path) if e.startswith("labels"))
 
     assert json.load(open(os.path.join(path, "state.json")))["labels_dir"] == "labels.v3"
-    assert versions() == ["labels.v1", "labels.v2", "labels.v3"]  # young
-    past = os.path.getmtime(os.path.join(path, "labels.v1")) - snapshot.GRACE_SEC - 60
-    for v in ("labels.v1", "labels.v2"):
+    assert versions() == ["labels", "labels.v2", "labels.v3"]  # young
+    past = os.path.getmtime(os.path.join(path, "labels")) - snapshot.GRACE_SEC - 60
+    for v in ("labels", "labels.v2"):
         os.utime(os.path.join(path, v), (past, past))
     corpus = spark.createDataFrame(_ROWS, SCHEMA)
     idx.update(spark, spark.createDataFrame([(7, "a brand new page")], SCHEMA), corpus)

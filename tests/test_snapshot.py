@@ -92,14 +92,13 @@ _FILE_OPS = {
 }
 _ALLOWED = {
     "snapshot.py": None,  # the protocol itself
-    # the batch IndexBuilder's bare-stage staging (<stage>.tmp → <stage>);
-    # a batch build runs alone
-    "plans/build.py": {"_atomic_write"},
 }
 
 
-def _file_op_calls(path: Path):
-    """(qualified function, called name) of every file-moving call."""
+def _file_op_calls(path: Path, names=_FILE_OPS, nodes: bool = False):
+    """(qualified function, called name) of every call of one of
+    ``names`` (default: the file-moving ones), with the call node when
+    ``nodes``."""
     tree = ast.parse(path.read_text())
     out = []
 
@@ -115,8 +114,8 @@ def _file_op_calls(path: Path):
                     if isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name)
                     else getattr(f, "id", getattr(f, "attr", ""))
                 )
-                if name in _FILE_OPS:
-                    out.append((scope, name))
+                if name in names:
+                    out.append((scope, name, child) if nodes else (scope, name))
             visit(child, inner)
 
     visit(tree, "")
@@ -136,6 +135,40 @@ def test_only_the_snapshot_module_moves_files():
                 stray.append(f"{rel}:{scope or '<module>'} calls {name}")
     assert not stray, stray
     assert any(n == "os.rename" for _, n in _file_op_calls(PKG / "snapshot.py"))
+
+
+def _opens_for_write(call: ast.Call) -> bool:
+    mode = call.args[1] if len(call.args) > 1 else next(
+        (k.value for k in call.keywords if k.arg == "mode"), None
+    )
+    if mode is None:  # open's default mode reads
+        return False
+    return not isinstance(mode, ast.Constant) or bool(set(mode.value) & set("wax+"))
+
+
+def test_plan_json_has_one_writer():
+    """plan.json changes only by snapshot.commit: the package's one
+    open-for-write is snapshot.write_json, whose only callers are
+    snapshot.commit and the stage ledger's _mark_stage, and the one
+    snapshot.commit naming plan.json is plans/build.py:commit_plan."""
+    sites: dict[str, set] = {}
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        names = {"open", "write_json", "snapshot.write_json", "commit", "snapshot.commit"}
+        for scope, name, call in _file_op_calls(path, names, nodes=True):
+            kind = name.rpartition(".")[2]
+            if kind == "open" and not _opens_for_write(call):
+                continue
+            if kind == "commit" and not any(
+                isinstance(a, ast.Constant) and a.value == "plan.json" for a in call.args
+            ):
+                continue
+            sites.setdefault(kind, set()).add(f"{rel}:{scope}")
+    assert sites == {
+        "open": {"snapshot.py:write_json"},
+        "write_json": {"snapshot.py:commit", "plans/build.py:_mark_stage"},
+        "commit": {"plans/build.py:commit_plan"},
+    }, sites
 
 
 def _parquet_writes(path: Path):
@@ -274,16 +307,16 @@ def _ranked(df) -> list:
 STEPS = ("staging", "link_or_copy", "assemble", "gc", "write_json")
 
 
-def _abort_each_step(monkeypatch, run, check) -> None:
-    """Run ``run`` once per snapshot.py step with that step raising; the
-    step must have been reached, and ``check`` must hold after the
-    abort."""
-    for step in STEPS:
+def _abort_each_step(monkeypatch, run, check, steps=STEPS, extra=()) -> None:
+    """Run ``run`` once per fault with that fault raising: each snapshot.py
+    step of ``steps``, then each (module, function) of ``extra``. The fault
+    must have been reached, and ``check`` must hold after the abort."""
+    for target, step in [(snapshot, s) for s in steps] + list(extra):
         def boom(*a, _step=step, **kw):
             raise RuntimeError(f"injected failure in {_step}")
 
         with monkeypatch.context() as m:
-            m.setattr(snapshot, step, boom)
+            m.setattr(target, step, boom)
             with pytest.raises(RuntimeError, match=f"injected failure in {step}"):
                 run()
         check()
@@ -355,11 +388,15 @@ def test_every_engine_table_is_zstd(spark, docs001, tmp_path):
 
 def test_every_step_abort_leaves_the_old_snapshot(spark, tmp_path, monkeypatch):
     """Each snapshot.py step raises in turn during an incremental
-    compaction, compact_positions, minor_compact and a DedupIndex wave.
-    After every abort a fresh reader sees exactly the old snapshot
-    (search, phrase, validate, plan; pairs and labels), and re-running the
-    operation then equals the same operation on an identical index that
-    never failed."""
+    compaction, compact_positions, minor_compact, a major (full=True)
+    compaction and a DedupIndex wave; the major compaction also fails in
+    its blocks stage (posting_blocks). A major compaction writes whole
+    versions, so it never reaches link_or_copy. After every abort a fresh
+    reader sees exactly the old snapshot (search, phrase, validate, plan;
+    pairs and labels), and re-running the operation then equals the same
+    operation on an identical index that never failed."""
+    from colbert_jl_spark.operators import codec_blocks
+
     docs, n_waves = _docs(spark)
     faulty = _Streamed(spark, tmp_path / "faulty", docs, n_waves)
     clean = _Streamed(spark, tmp_path / "clean", docs, n_waves)
@@ -380,15 +417,19 @@ def test_every_step_abort_leaves_the_old_snapshot(spark, tmp_path, monkeypatch):
         ("incremental", lambda s: compact_streamed_index(spark, s.idx, CFG)["compaction"]),
         ("positions", lambda s: compact_positions(spark, s.idx, limit[0])),
         ("minor", lambda s: minor_compact(spark, s.idx)),
+        ("full", lambda s: compact_streamed_index(spark, s.idx, CFG, full=True)["compaction"]),
     ]
     limit = [None]
     for name, op in ops:
         if name == "positions":
             limit[0] = crowded_limit()
         before = faulty.served()
+        full = name == "full"
         _abort_each_step(
             monkeypatch, lambda: op(faulty),
             lambda: faulty.served() == before or pytest.fail(name),
+            steps=tuple(s for s in STEPS if s != "link_or_copy") if full else STEPS,
+            extra=[(codec_blocks, "posting_blocks")] if full else (),
         )
         got, want = op(faulty), op(clean)
         assert got["mode"] == name, got
@@ -437,9 +478,10 @@ def test_every_step_abort_leaves_the_old_snapshot(spark, tmp_path, monkeypatch):
 
 def test_reader_thread_sees_only_committed_snapshots(spark, tmp_path):
     """A reader thread searches while the main thread runs three
-    incremental compactions, a compact_positions and a minor_compact. It
-    never raises, and every result it gets equals bm25_topk over the
-    documents of some committed snapshot."""
+    incremental compactions, a compact_positions, a minor_compact and a
+    major (full=True) compaction. It never raises, and every result it
+    gets equals bm25_topk over the documents of some committed
+    snapshot."""
     docs, n_waves = _docs(spark, n_waves=4, per_wave=40)
     s = _Streamed(spark, tmp_path / "s", docs, n_waves)
     s.ingest(0)
@@ -469,6 +511,8 @@ def test_reader_thread_sees_only_committed_snapshots(spark, tmp_path):
             assert compact_streamed_index(spark, s.idx, CFG)["compaction"]["mode"] == "incremental"
         assert compact_positions(spark, s.idx, 1)["mode"] == "positions"
         assert minor_compact(spark, s.idx)["mode"] == "minor"
+        full = compact_streamed_index(spark, s.idx, CFG, full=True)
+        assert full["compaction"]["mode"] == "full"
     finally:
         stop.set()
         t.join()

@@ -169,9 +169,7 @@ def test_incremental_compaction_touches_only_new_postings(spark, docs01, tmp_pat
         .toPandas().sort_values(["qid", "rank"]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(got_stale_local, want, check_like=True)
-    # retire the hot reader BEFORE the major compaction below: an
-    # undisposed pin would be plan-matched into other readers' scans of
-    # the rewritten block dir (see IndexReader.release docstring)
+    # retire the hot reader: its pins hold executor memory until released
     stale_reader.release()
 
     # conjunctive mode rides the same freshness overlay
@@ -194,21 +192,35 @@ def test_incremental_compaction_touches_only_new_postings(spark, docs01, tmp_pat
     r3 = compact_streamed_index(spark, idx, cfg)
     assert r3["compaction"]["mode"] == "noop"
 
-    # and a MAJOR compaction (full=True) resets epochs + stays identical,
-    # naming the canonical dictionary dir again; the versioned dirs it
-    # retired are reclaimed by the GC once past its grace
+    # and a MAJOR compaction (full=True) resets epochs + stays identical.
+    # It builds new versions beside the live snapshot: no file of a dir
+    # the previous plan named is modified, and the dirs it retired are
+    # reclaimed by the GC once past its grace
     from colbert_jl_spark import snapshot
     from colbert_jl_spark.plans.build import PLAN_DIRS, plan_dirs
 
+    def files(dirs):
+        return {
+            os.path.relpath(os.path.join(d, f), idx): (
+                os.stat(os.path.join(d, f)).st_ino,
+                os.stat(os.path.join(d, f)).st_mtime_ns,
+                os.path.getsize(os.path.join(d, f)),
+            )
+            for top in dirs
+            for d, _, fs in os.walk(os.path.join(idx, top))
+            for f in fs
+        }
+
+    prev_dirs = plan_dirs(json.load(open(os.path.join(idx, "plan.json"))))
+    prev_files = files(prev_dirs)
     r4 = compact_streamed_index(spark, idx, cfg, full=True)
     assert r4["compaction"]["mode"] == "full"
     assert "incremental" not in r4
-    assert "dictionary_dir" not in r4
-    retired = [os.path.join(idx, d) for d in os.listdir(idx) if d.startswith("dictionary.v")]
-    assert retired
-    _age_past_grace(*retired)
+    assert not prev_dirs & plan_dirs(r4)
+    assert files(prev_dirs) == prev_files
+    _age_past_grace(*(os.path.join(idx, d) for d in prev_dirs))
     snapshot.gc(idx, PLAN_DIRS, plan_dirs(r4))
-    assert not [d for d in os.listdir(idx) if d.startswith("dictionary.v")]
+    assert not any(os.path.exists(os.path.join(idx, d)) for d in prev_dirs)
     reader2 = IndexReader(spark, idx)
     got2 = (
         reader2.search(queries_df(spark))
