@@ -124,16 +124,22 @@ def term_postings_with_doclen(
     )
 
 
+def tid_col(salt: int):
+    """The int64 term id of the encoder's dictionary-encoded shuffle,
+    ``xxhash64(term, salt)``: the posting side and the dictionary side
+    join on it, so it must be injective over the vocabulary encoded."""
+    return F.xxhash64("term", F.lit(salt))
+
+
 def collision_free_tid_salt(dictionary: DataFrame, max_salt: int = 4) -> int:
-    """Smallest salt s such that ``xxhash64(term, s)`` is injective over the
-    dictionary's terms — the guard that makes dictionary-encoded shuffles
-    safe (a silent 64-bit collision would merge two terms' posting runs).
-    One vocab-scale aggregate per probe; at web vocab (~10^8 terms) the
-    first salt collides with probability ~10^-4, so this loop all but
-    always runs exactly once."""
+    """Smallest salt s such that ``tid_col(s)`` is injective over the
+    dictionary's terms (a silent 64-bit collision would merge two terms'
+    posting runs). One vocab-scale aggregate per probe; at web vocab
+    (~10^8 terms) the first salt collides with probability ~10^-4, so
+    this loop all but always runs exactly once."""
     for salt in range(max_salt):
         dup = (
-            dictionary.select(F.xxhash64("term", F.lit(salt)).alias("tid"), "term")
+            dictionary.select(tid_col(salt).alias("tid"), "term")
             .groupBy("tid")
             .agg(F.countDistinct("term").alias("nt"))
             .where(F.col("nt") > 1)
@@ -154,7 +160,7 @@ def _narrow_posting_rows(
     df + idf per posting); term/df/idf are re-attached AFTER the per-block
     aggregation, where row count is ~1/block_size of the posting count."""
     return postings_dl.select(
-        F.xxhash64("term", F.lit(salt)).alias("tid"),
+        tid_col(salt).alias("tid"),
         (F.col("doc_id") / F.lit(bucket_size)).cast("long").alias("bucket"),
         "doc_id",
         F.col("tf").cast("int").alias("tf"),
@@ -166,7 +172,7 @@ def _dict_tid(dictionary: DataFrame, n_docs: int, salt: int) -> DataFrame:
     from colbert_jl_spark.operators.bm25 import idf_col
 
     return dictionary.select(
-        F.xxhash64("term", F.lit(salt)).alias("tid"),
+        tid_col(salt).alias("tid"),
         "term",
         "df",
         idf_col(F.col("df"), n_docs).alias("idf"),
@@ -282,7 +288,8 @@ def posting_blocks(
     avgdl: float,
     cfg: EngineConfig = EngineConfig(),
     bucket_size: int | None = None,
-    salt: int | None = None,
+    *,
+    salt: int,
     count_obs: tuple | None = None,
 ) -> DataFrame:
     """postings (term, doc_id, tf, doclen) + dictionary (term, df) →
@@ -292,10 +299,13 @@ def posting_blocks(
     the plan-derived chunk sizing, analogue of setup()'s num_chunks math
     (reference src/indexing/collection_indexer.jl:130-133).
 
-    ``salt`` lets a driver that already verified the tid hash is
-    collision-free (collision_free_tid_salt) pass it in instead of
-    re-probing — the probe is up to 4 vocab-scale aggregates, which over
-    an UNmaterialized dictionary re-runs the whole tokenize pipeline.
+    ``salt`` is the tid salt (tid_col). The caller answers for its
+    injectivity over the dictionary's terms: plans/build.write_blocks
+    checks it on the write itself through ``count_obs``, a pair of
+    Observations that get the block-row counts before and after the
+    dictionary join (equal iff no two joined terms share a tid); a
+    caller that writes nothing (wand._inline_blocks) probes first
+    (collision_free_tid_salt).
 
     The per-posting shuffle into the encoder is dictionary-encoded: it
     carries (tid, bucket, doc_id, tf, doclen) only; term/df/idf join back
@@ -306,8 +316,6 @@ def posting_blocks(
         bucket_size = max(
             cfg.min_bucket_docs, -(-n_docs // cfg.num_index_partitions)
         )
-    if salt is None:
-        salt = collision_free_tid_salt(dictionary)
     encoded = (
         _narrow_posting_rows(postings_dl, bucket_size, salt)
         .repartition("tid", "bucket")
@@ -318,10 +326,6 @@ def posting_blocks(
         )
     )
     if count_obs is not None:
-        # ride-along collision evidence (see plans/build.py blocks stage):
-        # block-row counts before/after the dictionary join, observed
-        # during whatever action the caller runs — equal iff the tid hash
-        # is injective over this vocabulary
         encoded = encoded.observe(count_obs[0], F.count(F.lit(1)).alias("n"))
     out = encoded.join(_dict_tid(dictionary, n_docs, salt), "tid").select(
         "term", "df", "idf", "bucket", "block_id",

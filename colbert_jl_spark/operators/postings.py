@@ -217,10 +217,3 @@ def posting_lists(
         F.sort_array(F.flatten(F.col("runs"))).alias("postings"),
     )
 
-
-def build_postings(
-    docs: DataFrame, cfg: EngineConfig = EngineConfig()
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Convenience: (postings, dictionary, posting_lists) triple."""
-    p = term_postings(docs, cfg)
-    return p, term_df(p), posting_lists(p, cfg)

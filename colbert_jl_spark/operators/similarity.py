@@ -40,13 +40,6 @@ def _norm(a):
     )
 
 
-def with_cosine(pairs: DataFrame, left: str = "emb_a", right: str = "emb_b") -> DataFrame:
-    return pairs.withColumn(
-        "cosine",
-        _dot(F.col(left), F.col(right)) / (_norm(F.col(left)) * _norm(F.col(right))),
-    )
-
-
 def cosine_topk(
     embeddings: DataFrame,
     query_vecs: DataFrame,

@@ -656,8 +656,11 @@ def wand_topk(
 
 
 def _inline_blocks(docs: DataFrame, cfg: EngineConfig) -> tuple[DataFrame, float]:
-    """Build the block table in-flight → (blocks, avgdl)."""
+    """Build the block table in-flight → (blocks, avgdl). Nothing is
+    written, so there is no write for the tid collision check to ride:
+    the salt is probed up front (collision_free_tid_salt)."""
     from colbert_jl_spark.operators.codec_blocks import (
+        collision_free_tid_salt,
         posting_blocks,
         term_postings_with_doclen,
     )
@@ -670,7 +673,10 @@ def _inline_blocks(docs: DataFrame, cfg: EngineConfig) -> tuple[DataFrame, float
     # it every probe would re-run the whole tokenize pipeline (ADVICE r2)
     pdl = term_postings_with_doclen(docs, cfg).cache()
     dictionary = term_df(pdl.select("term", "doc_id", "tf")).cache()
-    blocks = posting_blocks(pdl, dictionary, stats["n_docs"], stats["avgdl"], cfg)
+    blocks = posting_blocks(
+        pdl, dictionary, stats["n_docs"], stats["avgdl"], cfg,
+        salt=collision_free_tid_salt(dictionary),
+    )
     return blocks, stats["avgdl"]
 
 

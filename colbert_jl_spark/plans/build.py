@@ -129,6 +129,93 @@ def new_version(
     return os.path.join(index_path, plan[key])
 
 
+def write_blocks(
+    index_path: str,
+    plan: dict,
+    postings: DataFrame,
+    dictionary: DataFrame,
+    cfg: EngineConfig,
+    whole: bool = False,
+    replace=(),
+    keep: DataFrame | None = None,
+) -> DataFrame:
+    """Encode ``postings`` (term, doc_id, tf, doclen) against
+    ``dictionary`` (term, df, every posting term's row) with the plan's
+    n_docs, avgdl and bucket_size, and write the block rows as the plan's
+    next blocks version (new_version: ``whole``, or the current version
+    carried over except its ``replace`` partitions). ``keep``: block rows
+    of the replaced partitions that are written again as they are.
+
+    The tid collision check rides the write: the encode runs with salt 0,
+    and two observed block-row counts, before and after the dictionary
+    join, must be equal. Two terms sharing a tid make both join every
+    block row of that tid, so the later count grows (and the pair's
+    postings were merged into corrupt blocks). On that rare mismatch
+    (~1e-4 at web vocabulary) the failed version is discarded, the plan
+    points at the blocks it named before, and the stage is encoded once
+    more with a probed salt (collision_free_tid_salt). The check covers
+    exactly the terms ``dictionary`` holds: a compaction passes the
+    delta's view (streaming/ingest._delta_dictionary); earlier blocks
+    carry term strings, never tids, so each write may use its own salt.
+
+    Layout: a whole version is written as the encode leaves it, (term,
+    bucket)-grouped per task, so row-group min/max on ``term`` stay
+    tight without a shuffle on term_bucket (that would move the whole
+    index once more, on a key of term_partitions values that skews at
+    high parallelism); the plan records the resulting files per bucket
+    as its ``max_files_per_bucket`` (validate()'s ceiling). A delta is repartitioned on term_bucket
+    into one file per rewritten bucket, sorted so row-group min/max on
+    ``term`` stay tight.
+
+    Returns the encoded rows (with term_bucket, without ``keep``); a
+    delta's are cached, and the caller unpersists them."""
+    from pyspark.sql import Observation
+
+    from colbert_jl_spark.operators.codec_blocks import (
+        collision_free_tid_salt,
+        posting_blocks,
+        with_term_partition,
+    )
+
+    current = plan.get("blocks_dir", "blocks")
+    salt = 0
+    for attempt in range(2):
+        counts = (Observation(), Observation())
+        blocks = with_term_partition(
+            posting_blocks(
+                postings, dictionary.select("term", "df"), plan["n_docs"],
+                plan["avgdl"], cfg, plan["bucket_size"],
+                salt=salt, count_obs=counts,
+            ),
+            plan["term_partitions"],
+        )
+        out = blocks
+        if not whole:
+            blocks = blocks.cache()
+            out = blocks if keep is None else keep.unionByName(blocks.select(*keep.columns))
+            out = out.repartition("term_bucket").sortWithinPartitions(
+                "term", "bucket", "first_docid"
+            )
+        try:
+            path = new_version(index_path, plan, "blocks", out, "term_bucket", replace, whole)
+        except BaseException:
+            blocks.unpersist()
+            raise
+        if counts[0].get["n"] == counts[1].get["n"]:
+            break
+        blocks.unpersist()
+        snapshot.discard(index_path, [plan["blocks_dir"]])
+        plan["blocks_dir"] = current
+        if attempt:  # a probed salt still colliding: impossible
+            raise RuntimeError("tid collision persists after salt probe")
+        salt = collision_free_tid_salt(dictionary)
+    if whole:
+        plan["max_files_per_bucket"] = max(
+            [FILES_PER_BUCKET_CEILING, *bucket_file_counts(path).values()]
+        )
+    return blocks
+
+
 def commit_plan(index_path: str, plan: dict, previous: dict | None = None) -> None:
     """Commit ``plan`` as the index's snapshot, the one way plan.json
     changes: one rename makes every version it names visible at once and
@@ -291,9 +378,7 @@ class IndexBuilder:
         from pyspark.sql import Observation
 
         from colbert_jl_spark.operators.codec_blocks import (
-            collision_free_tid_salt,
             lineage_by_bucket,
-            posting_blocks,
             with_term_partition,
         )
         from colbert_jl_spark.operators.postings import term_df
@@ -409,7 +494,6 @@ class IndexBuilder:
 
         # -- stage: blocks ----------------------------------------------
         if "blocks" not in done:
-            dic = spark.read.parquet(os.path.join(idx, plan["dictionary_dir"]))
             # spill-aware shuffle sizing: the blocks exchange moves every
             # posting once; per-reducer sorts must fit in memory. Sized to
             # the DATA (~4M narrow posting rows ≈ 128 MB per partition),
@@ -428,69 +512,17 @@ class IndexBuilder:
             par = max(1, spark.sparkContext.defaultParallelism)
             data_sp = par * -(-data_sp // par)
             spark.conf.set("spark.sql.shuffle.partitions", str(data_sp))
-            # the try opens IMMEDIATELY after conf.set: encode() runs eager
-            # Spark jobs (the collision-salt probes) — an exception
-            # anywhere before the write must not leak the inflated setting
+            # the try opens IMMEDIATELY after conf.set: an exception
+            # anywhere in the stage must not leak the inflated setting
             # into the caller's session
             try:
-                # tid-collision safety WITHOUT the up-front probe jobs:
-                # the check rides the blocks write itself. Two observed
-                # counts — block rows before and after the dictionary
-                # join — must be EQUAL: any xxhash64(term, salt) collision
-                # makes ≥2 dictionary terms join every block row of the
-                # shared tid, strictly inflating the post-join count (and
-                # the colliding terms' postings would have been merged
-                # into corrupt blocks). On the astronomically rare
-                # mismatch (~1e-4 at web vocab for salt 0) the stage
-                # re-encodes once with an explicitly probed salt, as a
-                # fresh version; the GC reclaims the unnamed first one.
-                salt = 0
-                for attempt in range(2):
-                    obs_pre = Observation(f"blocks_pre_join_{attempt}")
-                    obs_join = Observation(f"blocks_post_join_{attempt}")
-                    blocks = posting_blocks(
-                        postings,
-                        dic.select("term", "df"),
-                        plan["n_docs"],
-                        plan["avgdl"],
-                        self.cfg,
-                        bucket_size=plan["bucket_size"],
-                        salt=salt,
-                        count_obs=(obs_pre, obs_join),
-                    )
-                    blocks = with_term_partition(blocks, plan["term_partitions"])
-                    # NO repartition before the partitionBy write: the
-                    # encode output is already (term, bucket)-grouped, so
-                    # rows of one term are contiguous within each task and
-                    # parquet row-group min/max stats on `term` stay
-                    # tight; a repartition("term_bucket") here would add a
-                    # full shuffle of the entire index whose 64-key hash
-                    # skews badly at high parallelism. The files-per-
-                    # bucket consequence (≈ write tasks per bucket) is
-                    # recorded as the plan's policy below so validate()
-                    # grades the index against what the build actually
-                    # promises.
-                    blocks_dir = new_version(
-                        idx, plan, "blocks", blocks, "term_bucket", whole=True
-                    )
-                    if int(obs_pre.get["n"]) == int(obs_join.get["n"]):
-                        break
-                    if attempt:  # probed salt still colliding: impossible
-                        raise RuntimeError(
-                            "tid collision persists after salt probe"
-                        )
-                    salt = collision_free_tid_salt(dic)
+                write_blocks(
+                    idx, plan, postings,
+                    spark.read.parquet(os.path.join(idx, plan["dictionary_dir"])),
+                    self.cfg, whole=True,
+                )
             finally:
                 spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-            # record the batch write's actual small-file policy (ADVICE
-            # r6): without a per-bucket coalesce the blocks stage lands up
-            # to data_sp files per bucket, so a fresh healthy index built
-            # at high parallelism would otherwise fail validate()'s
-            # default ceiling.
-            observed = bucket_file_counts(blocks_dir)
-            plan["max_files_per_bucket"] = max(
-                [FILES_PER_BUCKET_CEILING, *observed.values()]
-            )
             _mark_stage(idx, "blocks", {"plan": plan})
 
         # -- stage: lineage (per doc-bucket build metrics) -------------------

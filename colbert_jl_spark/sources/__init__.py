@@ -1,4 +1,3 @@
-from colbert_jl_spark.sources.tables import load_table, load_documents
 from colbert_jl_spark.sources.pages import pages_from_documents, synth_pages
 
-__all__ = ["load_table", "load_documents", "pages_from_documents", "synth_pages"]
+__all__ = ["pages_from_documents", "synth_pages"]

@@ -3,7 +3,6 @@ from colbert_jl_spark.streaming.ingest import (
     compact_streamed_index,
     minor_compact,
     stream_pages_to_postings,
-    windowed_event_counts,
 )
 
 __all__ = [
@@ -11,5 +10,4 @@ __all__ = [
     "compact_streamed_index",
     "minor_compact",
     "stream_pages_to_postings",
-    "windowed_event_counts",
 ]

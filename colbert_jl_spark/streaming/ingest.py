@@ -15,9 +15,6 @@ periodic compaction rebuilds the queryable block index.
   (plan/dictionary/blocks/lineage) over the accumulated postings; doc
   count comes from the ingest log. After compaction the index is served
   by the same IndexReader/WAND path as a batch-built index.
-* ``windowed_event_counts`` — watermarked sliding-window aggregation over
-  the events table (ts, event_type, value): the late-data-tolerant
-  streaming agg pattern (10-minute watermark, 5-minute tumbling windows).
 
 foreachBatch (not a streaming sink) is deliberate: posting construction is
 a batch transformation per micro-batch, and idempotency comes from the
@@ -42,17 +39,12 @@ from colbert_jl_spark.plans.build import (
     bucket_file_counts,
     commit_plan,
     new_version,
+    write_blocks,
 )
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
-
-# incremental dictionary merge: above this fraction of term_bucket
-# partitions touched by a delta, the merge rewrites every partition
-# instead of carrying the untouched ones over (the threshold and the
-# chosen mode are recorded in the compaction report)
-HEAD_HEAVY_BUCKET_FRACTION = 0.5
 
 
 def stream_pages_to_postings(
@@ -136,16 +128,11 @@ def _delta_dictionary(
     dictionary is bucket-partitioned) and rows semi-joined to the
     ``delta_terms`` frame — an O(delta) view of an O(vocab) table.
 
-    This is what makes per-epoch tid-collision verification O(delta)
-    (VERDICT r4 item 2): the tid = xxhash64(term, salt) is ENCODE-
-    INTERNAL — persisted blocks carry term strings, never tids — and an
-    incremental/minor compaction groups and dictionary-joins only this
-    epoch's terms, so injectivity of the epoch's salt over THIS view is
-    the entire safety requirement. Pre-existing blocks never see the
-    epoch's tids, and each epoch is free to pick its own salt. (The
-    alternative — persisting per-term tids in the dictionary — would pin
-    one global salt forever and still need a format rev; restricting the
-    probe's domain removes the O(vocab) aggregate with no format change.)
+    It is the encoder's join domain in an incremental or minor
+    compaction (plans/build.write_blocks), so the tid collision check
+    that rides that write covers exactly the epoch's terms: persisted
+    blocks carry term strings, never tids, so injectivity over this view
+    is the whole requirement, and each epoch may use its own salt.
     """
     if affected is not None and "term_bucket" in dic.columns:
         dic = dic.where(F.col("term_bucket").isin(sorted(affected)))
@@ -208,14 +195,15 @@ def compact_streamed_index(
       * docstats, blocks and lineage each get a new version: the current
         version's files carried over by link, the delta's rows added;
         the delta blocks are encoded with the plan's frozen bucket_size /
-        term_partitions,
+        term_partitions by plans/build.write_blocks, whose tid collision
+        check rides the write,
       * the dictionary merges additively — df/cf are sums — into a new
         version that rewrites ONLY the term_bucket partitions containing
         delta terms (VERDICT r3 item 4) and carries the others over
-        byte-identical. idf is NOT stored (computed from plan.n_docs at
-        read), which is what makes untouched partitions byte-stable at
-        all. A head-heavy delta only widens the rewritten set to every
-        partition,
+        byte-identical, however many partitions the delta touches: a
+        link costs less than the scan, shuffle and write of a rewrite.
+        idf is NOT stored (computed from plan.n_docs at read), which is
+        what makes untouched partitions byte-stable at all,
       * the positions stage gets the delta's rows when every new batch
         captured them, and is otherwise dropped from the plan,
       * plan.json's running sums (n_docs / total_tokens / avgdl /
@@ -240,9 +228,7 @@ def compact_streamed_index(
     {mode, batches_compacted, postings_read, docs_added}.
     """
     from colbert_jl_spark.operators.codec_blocks import (
-        collision_free_tid_salt,
         lineage_by_bucket,
-        posting_blocks,
         with_term_partition,
     )
     from colbert_jl_spark.operators.postings import term_df
@@ -292,79 +278,39 @@ def compact_streamed_index(
             plan["total_tokens"] / plan["n_docs"] if plan["n_docs"] else 0.0
         )
 
-        # dictionary: additive df/cf merge of the buckets holding delta
-        # terms. Head-heavy delta (VERDICT r4 item 5): when the delta's
-        # vocabulary touches most buckets (coupon collector), carrying the
-        # few others over saves nothing, so every bucket is rewritten.
+        # dictionary: additive df/cf merge of ONLY the buckets holding
+        # delta terms; every other bucket is carried over by link
         delta_dic = term_df(new_postings.select("term", "doc_id", "tf"))
         delta_b = with_term_partition(delta_dic, tp)
         affected = {
             int(r.term_bucket)
             for r in delta_b.select("term_bucket").distinct().collect()
         }
-        head_heavy = len(affected) > HEAD_HEAVY_BUCKET_FRACTION * tp
-        replace = set(range(tp)) if head_heavy else affected
         merged = with_term_partition(
             spark.read.parquet(dic_dir)
-            .where(F.col("term_bucket").isin(sorted(replace)))
+            .where(F.col("term_bucket").isin(sorted(affected)))
             .select("term", "df", "cf")
             .unionByName(delta_b.select("term", "df", "cf"))
             .groupBy("term")
             .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")),
             tp,
         )
-        # one file per rewritten bucket (see the blocks delta write)
+        # one file per rewritten bucket (see write_blocks' delta layout)
         dic = spark.read.parquet(
             new_version(
                 index_path, plan, "dictionary",
                 merged.repartition("term_bucket").sortWithinPartitions("term"),
-                "term_bucket", replace,
+                "term_bucket", affected,
             )
         )
-        merge_report = {
-            "affected_buckets": len(affected),
-            "term_partitions": int(tp),
-            "head_heavy_threshold": HEAD_HEAVY_BUCKET_FRACTION,
-            "mode": "full-rewrite" if head_heavy else "bucket-local",
-        }
 
-        # O(delta) epoch vocabulary (VERDICT r4 item 2): both the tid
-        # collision probe and the encoder's dictionary join see only the
-        # delta terms' rows, read through a bucket-pruned scan of the
-        # merged dictionary — never a vocab-scale aggregate per epoch
-        # (see _delta_dictionary for why delta-restricted injectivity is
-        # the entire requirement)
-        dic_delta = _delta_dictionary(
-            dic, delta_dic.select("term"), affected
-        ).cache()
-        probe_terms = int(dic_delta.count())
-        delta_blocks = posting_blocks(
-            new_postings,
-            dic_delta.select("term", "df"),
-            plan["n_docs"],
-            plan["avgdl"],
-            cfg,
-            bucket_size=plan["bucket_size"],
-            salt=collision_free_tid_salt(dic_delta),
+        # the delta blocks, encoded with the merged df over the delta
+        # terms' rows only (O(delta), see _delta_dictionary)
+        delta_blocks = write_blocks(
+            index_path, plan, new_postings,
+            _delta_dictionary(dic, delta_dic.select("term"), affected), cfg,
         )
-        delta_blocks = with_term_partition(
-            delta_blocks, plan["term_partitions"]
-        ).cache()
         postings_read = int(new_postings.count())
-        # Repartition ON the partition column first: the encode output's
-        # task layout would otherwise land up to shuffle_partitions files
-        # per term_bucket per epoch (every future scan pays per-file open
-        # cost; validate()'s FILES_PER_BUCKET_CEILING would trip after two
-        # waves). The delta is O(delta)-small so this one extra shuffle is
-        # bounded, and the within-partition sort keeps parquet row-group
-        # min/max stats on `term` tight for the reader's IN-filters.
-        new_version(
-            index_path, plan, "blocks",
-            delta_blocks.repartition("term_bucket").sortWithinPartitions(
-                "term", "bucket"
-            ),
-            "term_bucket",
-        )
         # delta lineage rows (same shape as the batch stage, one generation
         # of rows per compaction — sums stay exact across generations);
         # new docs may open new doc-range buckets, so the plan's bucket
@@ -377,7 +323,6 @@ def compact_streamed_index(
             spark.read.parquet(lineage).select("bucket").distinct().count()
         )
         delta_blocks.unpersist()
-        dic_delta.unpersist()
     finally:
         new_postings.unpersist()
 
@@ -412,11 +357,6 @@ def compact_streamed_index(
         "batches_compacted": new_ids,
         "postings_read": postings_read,
         "docs_added": docs_added,
-        # O(delta) evidence: rows the collision probe / encoder join saw
-        # (== the delta vocabulary), and which dictionary merge path ran
-        "probe_terms": probe_terms,
-        "probe_buckets": len(affected),
-        "dictionary_merge": merge_report,
     }
     return plan
 
@@ -502,12 +442,7 @@ def minor_compact(
     Returns {mode, groups, rewritten_term_buckets}."""
     from pyspark.sql import Window
 
-    from colbert_jl_spark.operators.codec_blocks import (
-        blocks_to_postings,
-        collision_free_tid_salt,
-        posting_blocks,
-        with_term_partition,
-    )
+    from colbert_jl_spark.operators.codec_blocks import blocks_to_postings
 
     plan = snapshot.load(index_path, "plan.json")
     if plan is None or "last_batch_id" not in plan:
@@ -559,38 +494,19 @@ def minor_compact(
         )
         keep = marked.where(F.col("_redo").isNull()).drop("_redo")
         redo = marked.where(F.col("_redo")).drop("_redo")
-        postings = blocks_to_postings(redo)
-        # restrict the re-encode's dictionary view (collision probe + tid
-        # join) to the overlapping groups' terms, bucket-pruned to the
-        # term_buckets being rewritten — O(touched), never O(vocab)
-        # (see _delta_dictionary)
-        dic = _delta_dictionary(
-            IndexReader(spark, index_path).dictionary,
-            overlapping.select("term"),
-            set(tbs),
-        )
-        fresh = posting_blocks(
-            postings,
-            dic.select("term", "df"),
-            plan["n_docs"],
-            plan["avgdl"],
-            cfg,
-            bucket_size=plan["bucket_size"],
-            salt=collision_free_tid_salt(dic),
-        )
-        fresh = with_term_partition(fresh, plan["term_partitions"])
-        out = keep.unionByName(fresh.select(*keep.columns))
-        # 3. repartition ON the partition column: a rewritten bucket lands
-        # as ONE consolidated file (the whole point of compaction), not one
-        # file per upstream task; the sort keeps row-group `term` stats
-        # tight for the reader's IN-filters
-        new_version(
-            index_path, plan, "blocks",
-            out.repartition("term_bucket").sortWithinPartitions(
-                "term", "bucket", "first_docid"
+        # 3. re-encode them against the overlapping groups' terms only,
+        # bucket-pruned to the rewritten term_buckets — O(touched), never
+        # O(vocab) (see _delta_dictionary); each rewritten bucket lands as
+        # ONE consolidated file (write_blocks' delta layout)
+        write_blocks(
+            index_path, plan, blocks_to_postings(redo),
+            _delta_dictionary(
+                IndexReader(spark, index_path).dictionary,
+                overlapping.select("term"),
+                set(tbs),
             ),
-            "term_bucket", tbs,
-        )
+            cfg, replace=tbs, keep=keep,
+        ).unpersist()
     finally:
         overlapping.unpersist()
 
@@ -661,27 +577,3 @@ def compact_positions(
         "max_files_seen": max_seen,
     }
 
-
-def windowed_event_counts(
-    events_stream: DataFrame,
-    watermark: str = "10 minutes",
-    window: str = "5 minutes",
-) -> DataFrame:
-    """Watermarked tumbling-window counts per event_type — the standard
-    late-data-tolerant streaming aggregation. Input must be a streaming
-    DataFrame with (ts timestamp, event_type string, value double)."""
-    return (
-        events_stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )

@@ -95,9 +95,6 @@ def experiment_a(spark) -> dict:
             "major_recompact_sec": round(t_major, 2),
             "speedup_vs_major": round(t_major / t_inc, 2),
             "postings_read": rep["compaction"]["postings_read"],
-            # r5: the collision probe / encoder dictionary view is
-            # delta-scoped — this is the row count it actually saw
-            "probe_terms": rep["compaction"].get("probe_terms"),
         }
     finally:
         shutil.rmtree(work, ignore_errors=True)
@@ -174,10 +171,6 @@ def experiment_b(spark) -> dict:
             "term_partitions": 4096,
             "delta_docs": 50,
             "incremental_sec": round(t_inc, 2),
-            # r5 epoch-floor evidence: the probe saw only the delta's
-            # terms (r4 ran a full groupBy over vocab_terms per epoch)
-            "probe_terms": rep["compaction"].get("probe_terms"),
-            "probe_buckets": rep["compaction"].get("probe_buckets"),
             "buckets_total": len(new),
             "buckets_rewritten": rewritten,
             "buckets_hardlinked_byte_identical": linked,

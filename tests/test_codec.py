@@ -145,7 +145,7 @@ def test_block_encoder_matches_per_block_reference(spark):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
         got = posting_blocks(
-            postings, dictionary, n_docs, avgdl, cfg, bucket_size=bucket_size
+            postings, dictionary, n_docs, avgdl, cfg, bucket_size=bucket_size, salt=0
         ).collect()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)

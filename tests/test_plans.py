@@ -127,7 +127,7 @@ def test_blocks_shuffle_is_dictionary_encoded(spark, docs001):
     cfg = EngineConfig()
     pdl = term_postings_with_doclen(docs001, cfg)
     dic = term_df(pdl.select("term", "doc_id", "tf"))
-    plan = _plan(posting_blocks(pdl, dic, 500, 50.0, cfg, bucket_size=100))
+    plan = _plan(posting_blocks(pdl, dic, 500, 50.0, cfg, bucket_size=100, salt=0))
     assert "hashpartitioning(tid#" in plan, plan
     # the only term-keyed operations allowed are the block-level
     # dictionary join AFTER encoding (AQE may plan it as broadcast or

@@ -99,7 +99,7 @@ def test_semi_join_filter_identical_to_inlist_filter(spark, mode):
     stats = corpus_stats(doclens(docs, cfg))
     pdl = term_postings_with_doclen(docs, cfg).cache()
     dic = term_df(pdl.select("term", "doc_id", "tf")).cache()
-    blocks = posting_blocks(pdl, dic, stats["n_docs"], stats["avgdl"], cfg)
+    blocks = posting_blocks(pdl, dic, stats["n_docs"], stats["avgdl"], cfg, salt=0)
     qdf = spark.createDataFrame(QUERIES, "qid long, query string")
     qt_rows = [
         (int(r.qid), r.term, int(r.qtf)) for r in query_terms(qdf, cfg).collect()

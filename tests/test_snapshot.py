@@ -18,7 +18,7 @@ from colbert_jl_spark import snapshot
 from colbert_jl_spark.config import EngineConfig
 from colbert_jl_spark.operators.bm25 import bm25_topk
 from colbert_jl_spark.operators.phrase import phrase_matches
-from colbert_jl_spark.plans.build import IndexReader, bucket_file_counts
+from colbert_jl_spark.plans.build import IndexBuilder, IndexReader, bucket_file_counts
 from colbert_jl_spark.sources.pages import pages_from_documents
 from colbert_jl_spark.streaming.ingest import (
     compact_positions,
@@ -231,6 +231,26 @@ def test_only_the_snapshot_module_writes_parquet(tmp_path):
         "    return spark.read.parquet(p), spark.readStream.parquet(p)\n"
     )
     assert [s for s, _ in _parquet_writes(sample)] == ["a", "b"]
+
+
+def test_blocks_have_one_writer():
+    """Blocks are encoded and written only through plans/build.write_blocks,
+    whose tid collision check rides the write: inside the package
+    posting_blocks is called only by write_blocks and by the one path
+    that writes nothing, wand._inline_blocks; collision_free_tid_salt
+    only by write_blocks (its retry) and by that inline path (its
+    up-front probe)."""
+    names = {
+        f"{m}{f}" for m in ("", "codec_blocks.")
+        for f in ("posting_blocks", "collision_free_tid_salt")
+    }
+    sites: dict[str, set] = {}
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        for scope, name in _file_op_calls(path, names):
+            sites.setdefault(name.rpartition(".")[2], set()).add(f"{rel}:{scope}")
+    both = {"plans/build.py:write_blocks", "operators/wand.py:_inline_blocks"}
+    assert sites == {"posting_blocks": both, "collision_free_tid_salt": both}, sites
 
 
 # ---- fault injection and concurrency over one streamed index ------------
@@ -521,3 +541,66 @@ def test_reader_thread_sees_only_committed_snapshots(spark, tmp_path):
     seen = {w for r in results for w, truth in truths.items() if r == truth}
     assert all(r in truths.values() for r in results)
     assert seen, "no result matched a snapshot"
+
+
+def test_forced_tid_collision_reencodes_once(spark, tmp_path, monkeypatch):
+    """Two terms share a tid under salt 0. A batch build, an incremental
+    compaction and minor_compact each see it on their blocks write
+    (write_blocks), encode once more under the probed salt 1, and end
+    with the block rows (sorted, payloads included), the plan and the
+    blocks dirs on disk of the same operation on an identical index
+    without the collision: the failed version is neither named nor left
+    staged."""
+    from colbert_jl_spark.operators import codec_blocks
+
+    real_tid, real_encode = codec_blocks.tid_col, codec_blocks.posting_blocks
+    salts = []
+
+    def posting_blocks(*args, salt, **kw):
+        salts.append(salt)
+        return real_encode(*args, salt=salt, **kw)
+
+    def colliding_tid(salt):
+        # wave 1 draws from w0..w5, so both terms are in its delta
+        # vocabulary and in the segments its interleaved ids overlap
+        if salt:
+            return real_tid(salt)
+        return F.when(F.col("term") == "w1", F.xxhash64(F.lit("w2"), F.lit(0))).otherwise(
+            real_tid(0)
+        )
+
+    monkeypatch.setattr(codec_blocks, "posting_blocks", posting_blocks)
+    docs, n_waves = _docs(spark)
+    clean = _Streamed(spark, tmp_path / "clean", docs, n_waves)
+    hit = _Streamed(spark, tmp_path / "hit", docs, n_waves)
+
+    def blocks(idx):
+        r = IndexReader(spark, idx)
+        on_disk = sorted(e for e in os.listdir(idx) if snapshot.parse(e)[0] == "blocks")
+        return sorted(map(tuple, r.blocks.collect())), r.plan, on_disk
+
+    def build(s):
+        IndexBuilder(s.idx + "_batch", CFG).build(docs)
+        return s.idx + "_batch"
+
+    def incremental(s):
+        for wave, mode in enumerate(("full", "incremental")):
+            s.ingest(wave)
+            assert compact_streamed_index(spark, s.idx, CFG)["compaction"]["mode"] == mode
+        return s.idx
+
+    def minor(s):
+        assert minor_compact(spark, s.idx)["mode"] == "minor"
+        return s.idx
+
+    for op in (build, incremental, minor):
+        del salts[:]
+        want = blocks(op(clean))
+        assert set(salts) == {0}, (op.__name__, salts)
+        once = [0, 1] * len(salts)
+        del salts[:]
+        with monkeypatch.context() as m:
+            m.setattr(codec_blocks, "tid_col", colliding_tid)
+            got = blocks(op(hit))
+        assert salts == once, (op.__name__, salts)
+        assert got == want, op.__name__

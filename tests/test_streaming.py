@@ -1,6 +1,5 @@
 """Streaming ingest: file-arrival micro-batches → postings append →
-compaction → rank-identical search vs the batch-built index; plus the
-watermarked windowed aggregation over events."""
+compaction → rank-identical search vs the batch-built index."""
 
 from __future__ import annotations
 
@@ -20,9 +19,7 @@ from colbert_jl_spark.streaming.ingest import (
     compact_streamed_index,
     minor_compact,
     stream_pages_to_postings,
-    windowed_event_counts,
 )
-from tests.conftest import SF001
 
 
 def test_stream_ingest_compact_search(spark, docs001, tmp_path):
@@ -725,60 +722,17 @@ def test_stream_sink_empty_batch_leaves_nothing(spark, docs001, tmp_path, monkey
     assert os.listdir(os.path.join(idx, "ingest_log")) == []
 
 
-def test_windowed_event_counts(spark, tmp_path):
-    """availableNow run over the events table as a file stream; result
-    must equal the equivalent batch windowed aggregation."""
-    events_dir = str(tmp_path / "events_in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt_ev")
-    batch = spark.read.parquet(f"{SF001}/events.parquet")
-    batch.write.parquet(events_dir)
-
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    q = (
-        windowed_event_counts(stream)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.read.parquet(out_dir).toPandas()
-    # append mode only emits windows the final watermark has passed:
-    # window_end <= max(ts) - 10 min. Later windows are correctly withheld
-    # (they could still receive late data in a live stream).
-    max_ts = batch.agg(F.max("ts")).first()[0]
-    want = (
-        batch.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 6).alias("sum_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type", "n_events", "sum_value",
-        )
-        .where(F.col("window_end") <= F.lit(max_ts) - F.expr("INTERVAL 10 MINUTES"))
-        .toPandas()
-    )
-    assert len(got) > 0
-    key = ["window_start", "window_end", "event_type"]
-    got = got.sort_values(key).reset_index(drop=True)[want.columns]
-    want = want.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, want, check_like=True)
-
-
-def test_incremental_collision_probe_is_delta_scoped(spark, tmp_path):
+def test_incremental_collision_probe_is_delta_scoped(spark, tmp_path, monkeypatch):
     """VERDICT r4 item 2: an incremental epoch must never run a
-    vocab-scale aggregate — the tid collision probe and the encoder's
-    dictionary join see only the DELTA vocabulary, read through a
-    bucket-pruned scan of the merged dictionary. Big-vocab fixture
-    (per-doc unique terms, the web tail shape): the report's probe_terms
-    must equal the delta's vocabulary, not the corpus's, and the
-    _delta_dictionary view's physical plan must carry the term_bucket
-    partition filter."""
+    vocab-scale aggregate. The encoder's dictionary join, over which the
+    tid collision check rides the blocks write, sees only the DELTA
+    vocabulary, read through a bucket-pruned scan of the merged
+    dictionary. Big-vocab fixture (per-doc unique terms, the web tail
+    shape): the view write_blocks gets holds the delta's vocabulary, not
+    the corpus's, and the _delta_dictionary view's physical plan carries
+    the term_bucket partition filter."""
     from colbert_jl_spark.functions.tokenizer import py_terms
+    from colbert_jl_spark.streaming import ingest
     from colbert_jl_spark.streaming.ingest import _delta_dictionary
 
     cfg = EngineConfig(block_size=32, min_bucket_docs=64, term_partitions=64)
@@ -798,20 +752,28 @@ def test_incremental_collision_probe_is_delta_scoped(spark, tmp_path):
     stream_pages_to_postings(spark, pages_dir, idx, ckpt, cfg)
     compact_streamed_index(spark, idx, cfg)
 
+    views = []
+    real = ingest.write_blocks
+
+    def spy(index_path, plan, postings, dictionary, *a, **kw):
+        views.append(dictionary)
+        return real(index_path, plan, postings, dictionary, *a, **kw)
+
+    monkeypatch.setattr(ingest, "write_blocks", spy)
     pages_from_documents(w2).write.mode("append").parquet(pages_dir)
     stream_pages_to_postings(spark, pages_dir, idx, ckpt, cfg)
     r2 = compact_streamed_index(spark, idx, cfg)
     rep = r2["compaction"]
+    assert set(rep) == {"mode", "batches_compacted", "postings_read", "docs_added"}
     assert rep["mode"] == "incremental"
 
     delta_vocab = set()
     for r in w2.select("text").collect():
         delta_vocab.update(py_terms(r.text, cfg.doc_maxlen, cfg.stopwords))
     full_vocab = 300 * 8 + len(delta_vocab)  # ≥2400 distinct corpus terms
-    assert rep["probe_terms"] == len(delta_vocab) == 7
-    assert rep["probe_terms"] < full_vocab / 100
-    assert 0 < rep["probe_buckets"] <= len(delta_vocab) < 64
-    assert rep["dictionary_merge"]["mode"] == "bucket-local"
+    (view,) = views
+    assert {r.term for r in view.collect()} == delta_vocab
+    assert view.count() == len(delta_vocab) == 7 < full_vocab / 100
 
     # the delta view's scan is PARTITION-pruned, not just row-filtered
     reader = IndexReader(spark, idx)
@@ -830,13 +792,29 @@ def test_incremental_collision_probe_is_delta_scoped(spark, tmp_path):
     assert {r.doc_id for r in hits} == {1000 + i for i in range(5)}
 
 
-def test_head_heavy_delta_falls_back_to_full_merge(spark, docs001, tmp_path):
-    """VERDICT r4 item 5: when a delta's vocabulary touches most
-    term_bucket partitions (coupon collector — the 29-term fixture vocab
-    over 8 buckets), the bucket-local hardlink assembly does strictly
-    more work than a plain full merge — the merge must fall back to the
-    direct full rewrite, still committed as a reader-safe versioned dir,
-    with the chosen mode + threshold recorded in the compaction report."""
+def _inodes(stage_dir: str) -> dict[str, int]:
+    """relative path → inode of every data file under a stage dir."""
+    return {
+        os.path.relpath(os.path.join(d, f), stage_dir): os.stat(os.path.join(d, f)).st_ino
+        for d, _, files in os.walk(stage_dir)
+        for f in files
+        if f.startswith("part-")
+    }
+
+
+def test_head_heavy_delta_merges_bucket_local(spark, docs001, tmp_path):
+    """VERDICT r4 item 5: a delta whose vocabulary touches most
+    term_bucket partitions (coupon collector: the 29-term fixture vocab
+    over 8 buckets touches all 8) still merges bucket-local: the new
+    dictionary version rewrites exactly the delta's buckets and links
+    every other one, and the blocks, docstats and lineage versions link
+    every file of the previous version (each untouched file keeps its
+    inode). The index stays valid and rank-identical to the exhaustive
+    scorer over all the documents."""
+    from colbert_jl_spark.functions.hashing import spark_pmod_hash
+    from colbert_jl_spark.functions.tokenizer import py_terms
+    from colbert_jl_spark.sources.pages import docs_from_pages
+
     cfg = EngineConfig(block_size=32, term_partitions=8)
     pages_dir = str(tmp_path / "pages_in")
     idx = str(tmp_path / "stream_idx")
@@ -848,18 +826,31 @@ def test_head_heavy_delta_falls_back_to_full_merge(spark, docs001, tmp_path):
 
     w1.write.mode("append").parquet(pages_dir)
     stream_pages_to_postings(spark, pages_dir, idx, ckpt, cfg)
-    compact_streamed_index(spark, idx, cfg)
+    r1 = compact_streamed_index(spark, idx, cfg)
+    stages = ("dictionary", "blocks", "docstats", "lineage")
+    before = {s: _inodes(os.path.join(idx, r1.get(f"{s}_dir", s))) for s in stages}
 
     w2.write.mode("append").parquet(pages_dir)
     stream_pages_to_postings(spark, pages_dir, idx, ckpt, cfg)
     r2 = compact_streamed_index(spark, idx, cfg)
-    merge = r2["compaction"]["dictionary_merge"]
-    assert merge["mode"] == "full-rewrite"
-    assert merge["affected_buckets"] > merge["head_heavy_threshold"] * 8
-    assert r2["dictionary_dir"] == "dictionary.v2"
-    assert os.path.isdir(os.path.join(idx, "dictionary.v2"))
+    assert r2["compaction"]["mode"] == "incremental"
+    after = {s: _inodes(os.path.join(idx, r2[f"{s}_dir"])) for s in stages}
 
-    # rank identity vs the from-scratch oracle survives the fallback path
+    touched = {
+        f"term_bucket={spark_pmod_hash(t, 8)}"
+        for r in docs_from_pages(w2).collect()
+        for t in py_terms(r.text, cfg.doc_maxlen, cfg.stopwords)
+    }
+    assert len(touched) > 8 // 2
+    for s in stages:
+        kept = {
+            f: ino for f, ino in before[s].items()
+            if s != "dictionary" or f.split("/")[0] not in touched
+        }
+        assert kept.items() <= after[s].items(), s
+    rewritten = {f.split("/")[0] for f in set(after["dictionary"]) - set(before["dictionary"])}
+    assert rewritten == touched
+
     reader = IndexReader(spark, idx)
     assert reader.validate()["ok"]
     got = (
